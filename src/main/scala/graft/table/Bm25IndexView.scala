@@ -29,11 +29,10 @@ import org.apache.spark.sql.functions._
  * the whole postings table. In this layout a daily append commits
  * O(batch) rows; the pipeline's own curation deletes (span dedup,
  * fuzzy dedup, decontamination, SQL DELETE/UPDATE) land as
- * O(deleted-rows) deletion vectors; only a corpus-scale delete set
- * (past the broadcast gate) rewrites, by shuffled anti-join — all
- * inherited verbatim from [[RowLocalIndexView]], including the doc-id
- * bloom gate, watermark recovery, the concurrency fences, and the
- * crash-resume of a half-applied delete-bearing slice.
+ * O(deleted-rows) deletion vectors; only a delete of a state-rivaling
+ * fraction rewrites, by shuffled anti-join — all inherited from
+ * [[RowLocalIndexView]], including the doc-id bloom gate, and the
+ * watermark, fences and crash resume of the [[FoldCommit]] protocol.
  *
  * The postings are BORN clustered by `tok` (the property lands in the
  * init commit and governs its very first files; appends inherit it),
@@ -119,12 +118,9 @@ final class Bm25IndexView(spark: SparkSession, sourcePath: String,
     scalarsWalk(Some(stateVersion))
 
   private def scalarsWalk(atOrBelow: Option[Long]): (Long, Long) =
-    CdfNetting.commitMetas(state, "bm25 view", statePath, atOrBelow)
-      .collectFirst {
-        case m if ScalarsRe.findFirstMatchIn(m).isDefined =>
-          val g = ScalarsRe.findFirstMatchIn(m).get
-          (g.group(1).toLong, g.group(2).toLong)
-      }
+    FoldCommit.metaFirst(state, "bm25 view", statePath, atOrBelow)(
+      m => ScalarsRe.findFirstMatchIn(m)
+        .map(g => (g.group(1).toLong, g.group(2).toLong)))
       .getOrElse(throw new IllegalStateException(
         "no commit in the bm25 view state's history carries the corpus " +
           "scalars — was the state table created outside the view?"))

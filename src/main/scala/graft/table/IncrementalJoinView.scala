@@ -32,15 +32,13 @@ import org.apache.spark.sql.functions._
  *
  * THE WRITE SIDE IS O(TOUCHED GROUPS), like [[IncrementalAggView]]: a
  * fold whose touched-group set stays under
- * [[RowLocalIndexView.RewriteFractionPct]] of the state's rows
- * tombstones exactly the touched groups' rows (frame-keyed deletion
- * vectors, `pendingLeftVersion`/`pendingRightVersion` marker) and
- * APPENDs their recomputed rows — a per-customer mart at 10^9 groups
- * folds a small delta by writing O(touched groups) rows, not by
- * replacing 10^9. A crash between the two commits resumes exactly-once
- * (immutable feed ranges + the pre-delete state snapshot); a full-churn
- * fold takes the one-replace path. State is born range-clustered by
- * group key; [[maintain]] purges tombstones and folds the append tail.
+ * [[RowLocalIndexView.RewriteFractionPct]] of the state's rows lands as
+ * the [[FoldCommit]] tombstone-then-append shape (its pending marker
+ * names both sides' target versions) — a per-customer mart at 10^9
+ * groups folds a small delta by writing O(touched groups) rows, not by
+ * replacing 10^9; a full-churn fold takes the one-replace path. State
+ * is born range-clustered by group key; [[maintain]] purges tombstones
+ * and folds the append tail.
  *
  * Sums carry as `DECIMAL(28,6)` (exact under subtraction, like the
  * single-table view); groups whose count reaches zero leave the state.
@@ -49,12 +47,11 @@ import org.apache.spark.sql.functions._
  * watermark snapshots (each side semi-pruned by its own group columns
  * before the join), exactly the single-table view's rule lifted to a
  * join source; untouched groups carry their stored min/max unread.
- * Both watermark versions ride each state commit's `userMetadata`, so
- * refresh is idempotent and restart-safe, and every state commit's
- * `expectedPrevVersion` keeps racing refreshes from both landing. The
- * live row count rides replace folds' own `numOutputRows` and delta
- * folds' `stateRows` metadata — the fraction decision never scans the
- * state.
+ * Both watermark versions ride each fold's final commit (the kernel's
+ * `leftVersion`/`rightVersion` position), so refresh is idempotent and
+ * restart-safe; the kernel's fences keep racing refreshes from both
+ * landing, and the live row count rides the log — the fraction decision
+ * never scans the state.
  *
  * Non-key column names must be disjoint across the two sides (the
  * joined frame must resolve unambiguously) — checked loudly at
@@ -71,28 +68,27 @@ final class IncrementalJoinAggView(spark: SparkSession,
   extends SignedSliceView {
   require(joinKeys.nonEmpty, "IncrementalJoinAggView needs join keys")
 
+  require(groupCols.nonEmpty, "IncrementalJoinAggView needs group columns")
+
+  private[table] val kernel = new FoldCommit(spark, statePath, "join view",
+    Seq(leftPath, rightPath), "JOINVIEW", "DELTA")
+  private val alg = new GroupAlgebra(groupCols, sumCols, minMaxCols,
+    captureStateChangeData)
+
   // one-pass multi-view orchestrator plumbing ([[StandingViews]]): the
   // LEFT (fact) table is the shared source — the orchestrator hands
   // this view its pre-read left slice and the fold derives the right
-  // (dimension) side's range itself, exactly like [[refreshStream]]'s
-  // per-epoch folds. sourceVersion is the LEFT watermark.
-  def sourceVersion: Long = sourceVersions._1
-  private[table] def sourceTablePath: String = leftPath
-  private[table] def viewKind: String = "join view"
+  // (dimension) side's range itself. sourceVersion is the LEFT watermark.
   private[table] def neededSliceCols: Seq[String] = {
     val lCols = left.read.columns.toSet
     (joinKeys ++ (groupCols ++ sumCols ++ minMaxCols).filter(lCols)).distinct
   }
-  private[table] override def resumePendingSlice(): Unit = {
-    resumePending(); ()
-  }
-  private[table] def stateTxnVersion(appId: String): Option[Long] =
-    state.lastTxnVersion(appId)
-  private[table] def stateTable: ManagedTable = state
-  private[table] def foldRawSlice(slice: DataFrame, from: Long,
+  private[table] override def position(): FoldCommit.Pos =
+    kernel.resume(kernel.walk())(finish)
+  private[table] def foldRawSlice(slice: DataFrame, from: FoldCommit.Pos,
                                   latest: Long,
                                   txn: Option[(String, Long)]): Unit = {
-    refreshImpl(Some((slice, from, latest)), txn); ()
+    refreshImpl(Some((slice, from.version, latest)), txn); ()
   }
   // the DIMENSION side is an aux source: the orchestrator folds this
   // mart when only the right table moved (batch) and can open a
@@ -110,124 +106,22 @@ final class IncrementalJoinAggView(spark: SparkSession,
     // in flight on the other stream
     refreshImpl(None, None, rightOnly = true); ()
   }
-  require(groupCols.nonEmpty, "IncrementalJoinAggView needs group columns")
-
-  private val Dec = "decimal(28,6)"
-  private def meta(l: Long, r: Long) =
-    Some(s"""{"leftVersion":$l,"rightVersion":$r}""")
-  private def metaRows(l: Long, r: Long, rows: Long) =
-    Some(s"""{"leftVersion":$l,"rightVersion":$r,"stateRows":$rows}""")
-  // leading-quote anchors keep "pendingLeftVersion" from false-matching
-  private val MetaRe = """"leftVersion":(\d+),"rightVersion":(\d+)""".r
-  private val StateRowsRe = """"stateRows":(\d+)""".r
-  private val PendingRe =
-    """\{"pendingLeftVersion":(\d+),"pendingRightVersion":(\d+)\}""".r
 
   private def left = ManagedTable(spark, leftPath)
   private def right = ManagedTable(spark, rightPath)
-  private def state = ManagedTable(spark, statePath)
-
-  private def gCols = groupCols.map(c => col(s"`$c`"))
-  private def mmNames = minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c"))
-  private def mmAggs: Seq[Column] = minMaxCols.flatMap(c => Seq(
-    min(col(s"`$c`")).as(s"min_$c"), max(col(s"`$c`")).as(s"max_$c")))
-  private def addCols: Seq[Column] =
-    col("cnt") +: sumCols.map(c => col(s"`sum_$c`"))
+  private def state = kernel.state
 
   private def joined(l: DataFrame, r: DataFrame, sign: Column,
                      extra: Seq[Column] = Nil): DataFrame =
-    l.join(r, joinKeys)
-      .groupBy(gCols: _*)
-      .agg(sum(sign).as("cnt"),
-        (sumCols.map(c =>
-          sum(sign * col(s"`$c`").cast(Dec)).cast(Dec).as(s"sum_$c")) ++
-          extra): _*)
+    alg.grouped(l.join(r, joinKeys), sign, extra)
 
-  /** Null-safe LEFT SEMI restriction of `df` to the `touched` group
-    * set projected onto `cols` (NULL is a legal group key — a plain
-    * equi join would silently drop its rows). The scan side is
-    * PRE-FILTERED by the touched keys' min/max range
-    * ([[IncrementalAggView.keyRangePredicate]]) — a conservative
-    * superset the exact join then narrows, but one Catalyst pushes
-    * into the parquet scan (row-group pruning on the range-clustered
-    * state and the watermark snapshots), so the recompute reads
-    * O(touched range), not O(table). */
-  private def semiOnGroups(df: DataFrame, touched: DataFrame,
-                           cols: Seq[String]): DataFrame = {
-    val t = touched.select(cols.map(c => col(s"`$c`").as(s"__t_$c")): _*)
-      .distinct()
-    val cond = cols.map(c => col(s"`$c`") <=> col(s"`__t_$c`")).reduce(_ && _)
-    val base = IncrementalAggView
-      .keyRangePredicate(touched.select(cols.map(c => col(s"`$c`")): _*), cols)
-      .map(df.filter).getOrElse(df)
-    base.join(t, cond, "left_semi")
-  }
-
-  /** IN-list cap for the touched-group tombstone predicate — the
-    * single-table view's rule ([[IncrementalAggView]]): past it the
-    * driver collect stops being free and the frame form takes over. */
-  private val MaxInList = 1000
-
-  /** The touched-group set as a driver-side IN-list predicate when it
-    * has a driver-safe spelling (single group key, ≤ [[MaxInList]]
-    * values; NULL keys ride as an explicit IS NULL arm) — None past
-    * the cap or for composite keys. */
-  private def touchedPredicate(touched: DataFrame): Option[Column] = {
-    if (groupCols.size != 1) return None
-    val g = groupCols.head
-    val vals = touched.limit(MaxInList + 1).collect().map(_.get(0))
-    if (vals.length > MaxInList) return None
-    val nonNull = vals.filter(_ != null)
-    val base: Column =
-      if (nonNull.isEmpty) lit(false)
-      else col(s"`$g`").isin(nonNull.toIndexedSeq: _*)
-    Some(if (vals.contains(null)) base || col(s"`$g`").isNull else base)
-  }
-
-  /** Tombstone the touched groups' state rows: predicate-form DVs
-    * (per-VALUE dir-stat pruning) under the IN-list cap, frame-keyed
-    * DVs (key-RANGE dir pruning, keys never driver state) past it.
-    * State change capture is a deliberate choice, default off — see
-    * [[IncrementalAggView]]. */
-  private def tombstoneTouched(touched: DataFrame, meta: Option[String],
-                               fence: Option[Long]): ManagedTable.Commit =
-    touchedPredicate(touched) match {
-      case Some(pred) =>
-        state.deleteVectors(pred, captureChangeData = captureStateChangeData,
-          userMetadata = meta, expectedPrevVersion = fence)
-      case None =>
-        state.deleteVectorsMatching(touched, groupCols,
-          captureChangeData = captureStateChangeData, userMetadata = meta,
-          expectedPrevVersion = fence)
-    }
+  private def pair(p: FoldCommit.Pos): (Long, Long) = (p.mark(0), p.mark(1))
 
   /** The (leftVersion, rightVersion) pair folded into the state —
     * maintenance commits on the state table, and a half-applied fold's
     * pending delete commit, are transparent; RESTORE carries the
     * restored fold's own watermarks. */
-  def sourceVersions: (Long, Long) =
-    CdfNetting.commitMetas(state, "join view", statePath)
-      .collectFirst {
-        case m if MetaRe.findFirstMatchIn(m).isDefined =>
-          val g = MetaRe.findFirstMatchIn(m).get
-          (g.group(1).toLong, g.group(2).toLong)
-      }
-      .getOrElse(throw new IllegalStateException(
-        "no commit in the join view state's history carries version " +
-          "watermarks — was the state table created outside the view?"))
-
-  /** Live state rows (= group count) from the commit log, no state
-    * scan: delta folds carry it explicitly, replace folds' count is
-    * their own `numOutputRows`. */
-  private def stateRowCount: Long =
-    CdfNetting.commitWalk(state).collectFirst {
-      case c if c.userMetadata.exists(m =>
-          StateRowsRe.findFirstMatchIn(m).isDefined) =>
-        StateRowsRe.findFirstMatchIn(c.userMetadata.get).get.group(1).toLong
-      case c if c.userMetadata.exists(m =>
-          MetaRe.findFirstMatchIn(m).isDefined) =>
-        c.operationMetrics.getOrElse("numOutputRows", "0").toLong
-    }.getOrElse(0L)
+  def sourceVersions: (Long, Long) = pair(kernel.walk())
 
   /** Build the state from both CURRENT snapshots — the only
     * both-sides-full join in the view's lifetime. Born range-clustered
@@ -238,12 +132,9 @@ final class IncrementalJoinAggView(spark: SparkSession,
     val vr = right.latestVersion.getOrElse(throw new IllegalStateException(
       s"right table $rightPath does not exist"))
     checkDisjointColumns()
-    state.write(joined(left.read, right.read, lit(1L), mmAggs),
-      "JOINVIEW_INIT", "replace", meta(vl, vr),
-      propertiesOverride = Some(Map(
+    kernel.init(joined(left.read, right.read, lit(1L), alg.mmAggs),
+      Seq(vl, vr), kernel.mark(Seq(vl, vr)), Some(Map(
         ManagedTable.ClusterColumnsProp -> groupCols.mkString(","))))
-    left.setRetentionHold(statePath, vl)
-    right.setRetentionHold(statePath, vr)
     (vl, vr)
   }
 
@@ -268,17 +159,6 @@ final class IncrementalJoinAggView(spark: SparkSession,
         s"(__sign__, __sl__, __sr__, __src__, __t_*): ${reserved.mkString(", ")}")
   }
 
-  /** Signed change rows of a range, or None when the range is empty. */
-  private def signedDelta(t: ManagedTable, from: Long,
-                          to: Long): Option[DataFrame] = {
-    if (to <= from) return None
-    val cdf = CdfNetting.cdfSlice(t, from, to, "join view")
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), 1L)
-      .otherwise(-1L)
-    Some(cdf.withColumn("__sign__", sign)
-      .drop("_change_type", "_commit_version", "_commit_timestamp"))
-  }
-
   /** The other side's WATERMARK snapshot, semi-join pruned to the
     * delta's join keys — the big side is scanned once, narrow. The key
     * set broadcasts only under the family's driver gate: a routine
@@ -300,16 +180,12 @@ final class IncrementalJoinAggView(spark: SparkSession,
     base.join(gated, joinKeys, "left_semi")
   }
 
-  /** A pre-read raw slice in signed form — the orchestrator-handed
-    * left delta: sign from `_change_type`, stream/meta columns dropped
-    * (drop tolerates absent names, so batch and streaming slices both
-    * land here). */
-  private def signedOf(slice: DataFrame): DataFrame = {
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), 1L)
-      .otherwise(-1L)
-    slice.withColumn("__sign__", sign)
+  /** A raw slice in signed form: sign from `_change_type`, stream/meta
+    * columns dropped (drop tolerates absent names, so batch and
+    * streaming slices both land here). */
+  private def signedOf(slice: DataFrame): DataFrame =
+    slice.withColumn("__sign__", CdfNetting.sign)
       .drop("_change_type", "_commit_version", "_commit_timestamp")
-  }
 
   /** The grouped signed delta of the range (vl0,vr0] → (vl1,vr1] —
     * the three delta-join terms unioned — or None when both ranges are
@@ -319,12 +195,16 @@ final class IncrementalJoinAggView(spark: SparkSession,
   private def groupedDelta(vl0: Long, vr0: Long, vl1: Long, vr1: Long,
                            dLSlice: Option[DataFrame] = None)
       : Option[DataFrame] = {
+    def signed(t: ManagedTable, from: Long, to: Long) =
+      if (to <= from) None
+      else Some(signedOf(CdfNetting.cdfSlice(t, from, to, kernel.what))
+        .localCheckpoint())
     val dL = dLSlice match {
       case Some(s) =>
         if (vl1 > vl0) Some(signedOf(s).localCheckpoint()) else None
-      case None => signedDelta(left, vl0, vl1).map(_.localCheckpoint())
+      case None => signed(left, vl0, vl1)
     }
-    val dR = signedDelta(right, vr0, vr1).map(_.localCheckpoint())
+    val dR = signed(right, vr0, vr1)
     val parts = Seq(
       // dL ⋈ R0 — old right, pruned to dL's keys
       dL.map(d => joined(d, prunedSnapshot(right, vr0, d),
@@ -339,22 +219,9 @@ final class IncrementalJoinAggView(spark: SparkSession,
         col("__sl__") * col("__sr__"))
     ).flatten
     if (parts.isEmpty) return None
-    // net the three terms per group; zero-net groups drop ONLY for
-    // additive-only views (a coarse dir-rewrite feed marks every group
-    // of the rewritten dir — additively those fold to nothing, but with
-    // minMaxCols a zero-net group may still have reshaped the value
-    // multiset min/max are order statistics of, so it stays touched)
-    val net = parts.reduce(_ unionByName _)
-      .groupBy(gCols: _*)
-      .agg(sum(col("cnt")).as("cnt"),
-        sumCols.map(c => sum(col(s"`sum_$c`")).cast(Dec).as(s"sum_$c")): _*)
-    val kept =
-      if (minMaxCols.nonEmpty) net
-      else net.filter(sumCols
-        .map(c => coalesce(col(s"`sum_$c`"), lit(0).cast(Dec)) =!=
-          lit(0).cast(Dec))
-        .foldLeft(col("cnt") =!= 0L)(_ || _))
-    Some(kept.localCheckpoint())
+    // net the three terms per group ([[GroupAlgebra.dropZeroNet]])
+    Some(alg.dropZeroNet(alg.net(parts.reduce(_ unionByName _)))
+      .localCheckpoint())
   }
 
   /** MIN/MAX recomputed for exactly the touched groups over the NEW
@@ -368,123 +235,40 @@ final class IncrementalJoinAggView(spark: SparkSession,
                               vr1: Long): DataFrame = {
     val lCols = left.read.columns.toSet
     val rCols = right.read.columns.toSet
-    val gOnL = groupCols.filter(lCols.contains)
-    val gOnR = groupCols.filter(rCols.contains)
-    def prune(df: DataFrame, own: Seq[String]) =
-      if (own.isEmpty) df else semiOnGroups(df, touched, own)
-    semiOnGroups(
-      prune(left.readAt(vl1), gOnL).join(prune(right.readAt(vr1), gOnR),
-        joinKeys),
-      touched, groupCols)
-      .groupBy(gCols: _*).agg(mmAggs.head, mmAggs.tail: _*)
+    def semi(df: DataFrame, own: Seq[String]) =
+      if (own.isEmpty) df else alg.semiOn(touched, own, df.filter, df)
+    semi(
+      semi(left.readAt(vl1), groupCols.filter(lCols.contains))
+        .join(semi(right.readAt(vr1), groupCols.filter(rCols.contains)),
+          joinKeys),
+      groupCols)
+      .groupBy(alg.gCols: _*).agg(alg.mmAggs.head, alg.mmAggs.tail: _*)
   }
-
-  /** Sum additive columns of a (cur ∪ delta)-shaped frame. */
-  private def foldAdditive(df: DataFrame) =
-    df.groupBy(gCols: _*)
-      .agg(sum(col("cnt")).as("cnt"),
-        sumCols.map(c => sum(col(s"`sum_$c`")).cast(Dec).as(s"sum_$c")): _*)
-      .filter(col("cnt") > 0)
 
   /** Recomputed rows for EXACTLY the touched groups — the delta fold's
     * append payload. `cur` is the state the fold nets against (live
     * head, or the pre-delete snapshot on crash resume). */
   private def touchedRows(delta: DataFrame, touched: DataFrame,
                           cur: DataFrame, vl1: Long,
-                          vr1: Long): DataFrame = {
-    val curT = semiOnGroups(cur.select((gCols ++ addCols): _*),
-      touched, groupCols)
-    if (minMaxCols.isEmpty) foldAdditive(curT.unionByName(delta))
-    else {
-      val rec = recomputeMinMax(touched, vl1, vr1)
-      val tagged = curT.withColumn("__src__", lit("cur"))
-        .unionByName(delta.withColumn("__src__", lit("delta")),
-          allowMissingColumns = true)
-        .unionByName(rec.withColumn("__src__", lit("rec")),
-          allowMissingColumns = true)
-      val additive = col("__src__").isin("cur", "delta")
-      tagged.groupBy(gCols: _*)
-        .agg(sum(when(additive, col("cnt"))).as("cnt"),
-          (sumCols.map(c => sum(when(additive, col(s"`sum_$c`")))
-            .cast(Dec).as(s"sum_$c")) ++
-            minMaxCols.flatMap(c => Seq(
-              min(when(col("__src__") === "rec", col(s"`min_$c`")))
-                .as(s"min_$c"),
-              max(when(col("__src__") === "rec", col(s"`max_$c`")))
-                .as(s"max_$c")))): _*)
-        .filter(col("cnt") > 0)
-    }
-  }
+                          vr1: Long): DataFrame =
+    alg.touchedRows(alg.semiOn(touched, groupCols, cur.filter, cur), delta,
+      recomputeMinMax(touched, vl1, vr1))
 
-  /** The full-state merge — the replace fold's payload. */
-  private def mergedState(delta: DataFrame, touched: DataFrame, vl1: Long,
-                          vr1: Long): DataFrame = {
-    if (minMaxCols.isEmpty)
-      foldAdditive(state.read.select((gCols ++ addCols): _*)
-        .unionByName(delta))
-    else {
-      // min/max are NOT delta-maintainable under deletes/updates —
-      // recompute them for exactly the TOUCHED groups over the NEW
-      // watermark snapshots; untouched groups carry their stored
-      // min/max unread — the single-table view's tagged-union fold,
-      // with the recompute source being a JOIN instead of one fact
-      val rec = recomputeMinMax(touched, vl1, vr1)
-      val cur = state.read.select((gCols ++ addCols ++
-        mmNames.map(c => col(s"`$c`"))): _*)
-        .withColumn("__src__", lit("cur"))
-      val tagged = cur
-        .unionByName(delta.withColumn("__src__", lit("delta")),
-          allowMissingColumns = true)
-        .unionByName(rec.withColumn("__src__", lit("rec")),
-          allowMissingColumns = true)
-        .unionByName(touched.withColumn("__src__", lit("touch")),
-          allowMissingColumns = true)
-      val additive = col("__src__").isin("cur", "delta")
-      val isTouched = max(when(col("__src__") === "touch", 1).otherwise(0)) === 1
-      def pick(c: String, agg: Column => Column) =
-        when(isTouched, agg(when(col("__src__") === "rec", col(s"`$c`"))))
-          .otherwise(agg(when(col("__src__") === "cur", col(s"`$c`")))).as(c)
-      tagged.groupBy(gCols: _*)
-        .agg(sum(when(additive, col("cnt"))).as("cnt"),
-          (sumCols.map(c => sum(when(additive, col(s"`sum_$c`")))
-            .cast(Dec).as(s"sum_$c")) ++
-            minMaxCols.flatMap(c => Seq(
-              pick(s"min_$c", min), pick(s"max_$c", max)))): _*)
-        .filter(col("cnt") > 0)
-    }
+  /** The missing append of a half-applied delta fold: re-derive the
+    * immutable ranges, recompute the touched rows against the
+    * PRE-TOMBSTONE state snapshot. */
+  private def finish(pos: FoldCommit.Pos): (DataFrame, String) = {
+    val (dvc, to) = pos.pending.get
+    val (vl0, vr0) = pair(pos)
+    val delta = groupedDelta(vl0, vr0, to(0), to(1)).getOrElse(
+      throw new IllegalStateException(
+        "join view: a pending delete commit exists but the source " +
+          "ranges are empty — was a source table recreated?"))
+    val touched = delta.select(alg.gCols: _*).distinct().localCheckpoint()
+    val newRows = touchedRows(delta, touched, state.readAt(dvc.version - 1),
+      to(0), to(1)).localCheckpoint()
+    (newRows, kernel.markRows(to, pos.stateRows, dvc, newRows.count()))
   }
-
-  /** Finish a half-applied delta fold (crash between the frame-keyed
-    * delete and the append): re-derive the immutable ranges, recompute
-    * the touched rows against the PRE-DELETE state snapshot, land only
-    * the missing append. Returns the recovered watermark pair, or None
-    * when nothing was pending. */
-  private def resumePending(): Option[(Long, Long)] =
-    state.lastCommit
-      .filter(_.userMetadata.exists(m =>
-        PendingRe.findFirstMatchIn(m).isDefined))
-      .map { dvc =>
-        val g = PendingRe.findFirstMatchIn(dvc.userMetadata.get).get
-        val (pl, pr) = (g.group(1).toLong, g.group(2).toLong)
-        val (vl0, vr0) = sourceVersions // pending marker is transparent
-        val oldRows = stateRowCount
-        val delta = groupedDelta(vl0, vr0, pl, pr).getOrElse(
-          throw new IllegalStateException(
-            "join view: a pending delete commit exists but the source " +
-              "ranges are empty — was a source table recreated?"))
-        val touched = delta.select(gCols: _*).distinct().localCheckpoint()
-        val preDelete = state.readAt(dvc.version - 1)
-        val newRows = touchedRows(delta, touched, preDelete, pl, pr)
-          .localCheckpoint()
-        val newN = newRows.count()
-        val deleted = dvc.operationMetrics("numDeletedRows").toLong
-        state.write(newRows, "JOINVIEW_DELTA", "append",
-          metaRows(pl, pr, oldRows - deleted + newN), mergeSchema = true,
-          expectedPrevVersion = state.latestVersion)
-        left.setRetentionHold(statePath, pl)
-        right.setRetentionHold(statePath, pr)
-        (pl, pr)
-      }
 
   /** Fold both unprocessed ranges into the state. No-op (no commit)
     * when both sides are current. Returns the new watermark pair. */
@@ -497,24 +281,17 @@ final class IncrementalJoinAggView(spark: SparkSession,
     * folds ONLY the right range so the left watermark never moves
     * under a concurrently-streamed fact slice). `txn` rides the fold's
     * FINAL commit for the streaming orchestrator's exactly-once
-    * ledger. Synchronized: the dimension-trigger stream and the fact
-    * stream share this view instance in one driver, and interleaved
-    * folds would trip each other's state fences — cross-driver racers
-    * still surface as typed [[ManagedTable.ConcurrentCommitException]]
-    * fence conflicts, exactly as before. */
+    * ledger. Synchronized, and re-walking its own position under the
+    * lock: the dimension-trigger stream and the fact stream share this
+    * view instance in one driver, so a position read before the lock
+    * may be stale — cross-driver racers still surface as typed
+    * [[ManagedTable.ConcurrentCommitException]] fence conflicts. */
   private def refreshImpl(leftSlice: Option[(DataFrame, Long, Long)],
                           txn: Option[(String, Long)],
                           rightOnly: Boolean = false): (Long, Long) =
     synchronized {
-    resumePending()
-    // fence BEFORE the watermark read and every state.read below: a
-    // racing refresh that lands after this point fails the delete's or
-    // replace's expectedPrevVersion loudly instead of letting this fold
-    // land a delta computed against the pre-racer state (which would
-    // double-apply the overlapping range — the additive-fold race the
-    // row-local index views catch with id gates)
-    val fence = state.latestVersion
-    val (vl0, vr0) = sourceVersions
+    val pos = position()
+    val (vl0, vr0) = pair(pos)
     leftSlice.foreach { case (_, from, _) =>
       require(vl0 == from,
         s"join view state advanced from $from to $vl0 while the shared " +
@@ -545,40 +322,29 @@ final class IncrementalJoinAggView(spark: SparkSession,
     }
     checkDisjointColumns()
     val delta = groupedDelta(vl0, vr0, vl1, vr1, leftSlice.map(_._1)).get
-    val touched = delta.select(gCols: _*).distinct().localCheckpoint()
+    val touched = delta.select(alg.gCols: _*).distinct().localCheckpoint()
     val touchedN = touched.count()
-    val oldRows = stateRowCount
-    if (touchedN == 0L) {
-      // the ranges cancel per group — advance both watermarks with an
-      // empty append so the retention holds slide
-      state.write(delta.limit(0), "JOINVIEW_DELTA", "append",
-        metaRows(vl1, vr1, oldRows), mergeSchema = true,
-        expectedPrevVersion = fence, txnUpdate = txn)
-    } else if (touchedN * 100L >=
-        oldRows * RowLocalIndexView.RewriteFractionPct) {
+    val oldRows = pos.stateRows
+    val to = Seq(vl1, vr1)
+    if (touchedN == 0L)
+      // the ranges cancel per group: an empty append advances both watermarks
+      kernel.append(delta.limit(0), to, kernel.mark(to, "stateRows" -> oldRows),
+        pos.head, txn)
+    else if (touchedN * 100L >= oldRows * RowLocalIndexView.RewriteFractionPct)
       // full-churn fold (or tiny/empty state): one replace
-      state.write(mergedState(delta, touched, vl1, vr1),
-        "JOINVIEW_REFRESH", "replace", meta(vl1, vr1),
-        expectedPrevVersion = fence, txnUpdate = txn)
-    } else {
-      // O(touched groups) fold: recompute first (against the pre-delete
-      // state), then frame-keyed tombstones with the pending marker,
-      // then the append carrying the real watermark pair
+      kernel.replace(alg.mergedState(state.read, delta, touched,
+        recomputeMinMax(touched, vl1, vr1)), to, kernel.mark(to), pos.head, txn)
+    else {
+      // O(touched groups): recompute first (against the pre-tombstone
+      // state), then tombstone + append
       val newRows = touchedRows(delta, touched, state.read, vl1, vr1)
         .localCheckpoint()
       val newN = newRows.count()
-      val dv = tombstoneTouched(touched,
-        Some(s"""{"pendingLeftVersion":$vl1,"pendingRightVersion":$vr1}"""),
-        fence)
-      val deleted = dv.operationMetrics("numDeletedRows").toLong
-      state.write(newRows, "JOINVIEW_DELTA", "append",
-        metaRows(vl1, vr1, oldRows - deleted + newN), mergeSchema = true,
-        expectedPrevVersion = Some(dv.version), txnUpdate = txn)
+      kernel.tombstoneThenAppend(to, pos.head, txn)(
+        alg.tombstone(state, touched, _, _)) { dv =>
+        (newRows, kernel.markRows(to, oldRows, dv, newN))
+      }
     }
-    // slide both pins forward: the delta-join fold needs each side's
-    // watermark SNAPSHOT, so the hold sits at the watermark itself
-    left.setRetentionHold(statePath, vl1)
-    right.setRetentionHold(statePath, vr1)
     (vl1, vr1)
   }
 
@@ -592,15 +358,14 @@ final class IncrementalJoinAggView(spark: SparkSession,
     * the watermark pair re-reads per call, both-current epochs no-op
     * without a commit, a half-applied delta fold resumes through its
     * pending marker, and a replayed or racing epoch either re-derives
-    * an empty range or fails its `expectedPrevVersion` fence loudly.
-    * Caller drains/stops the returned query. */
+    * an empty range or fails its fence loudly. Caller drains/stops the
+    * returned query. */
   def refreshStream(checkpoint: String,
                     trigger: org.apache.spark.sql.streaming.Trigger =
                       org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val start = sourceVersions._1 + 1
     val stream = graft.streaming.StreamOps.streamTable(spark, leftPath,
-      startingVersion = Some(start), readChangeFeed = true)
+      startingVersion = Some(sourceVersion + 1), readChangeFeed = true)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (_: DataFrame, _: Long) => refresh(); () }
@@ -626,36 +391,13 @@ final class IncrementalJoinAggView(spark: SparkSession,
   /** The (leftVersion, rightVersion) pair the state at `stateVersion`
     * had folded — the watermark walk pinned at that version: the mart
     * at state version v describes exactly `L.readAt(l) ⋈ R.readAt(r)`
-    * for the returned pair. Pending delete commits are transparent. */
+    * for the returned pair. */
   def sourceVersionsAt(stateVersion: Long): (Long, Long) =
-    CdfNetting.commitMetas(state, "join view", statePath, Some(stateVersion))
-      .collectFirst {
-        case m if MetaRe.findFirstMatchIn(m).isDefined =>
-          val g = MetaRe.findFirstMatchIn(m).get
-          (g.group(1).toLong, g.group(2).toLong)
-      }
-      .getOrElse(throw new IllegalStateException(
-        s"no commit at or below state version $stateVersion carries " +
-          "version watermarks — is it before the view's initialize()?"))
+    pair(kernel.walk(Some(stateVersion)))
 
-  /** Retention clamped to the newest WATERMARK-BEARING commit — a head
-    * of [[maintain]]'s watermark-less commits must never let a
-    * count-based cut wedge the walks (the row-local family's rule). */
-  def vacuum(keepLast: Int): ManagedTable.VacuumStats = {
-    val wmV = state.metaHistory.collectFirst {
-      case c if c.userMetadata.exists(m =>
-        MetaRe.findFirstMatchIn(m).isDefined) => c.version
-    }
-    val keep = (for { w <- wmV; l <- state.latestVersion }
-      yield math.max(keepLast.toLong, l - w + 1).toInt).getOrElse(keepLast)
-    state.vacuum(keep)
-  }
-
-  // the retention policy routes through the mart's own clamp (its
-  // watermark meta key is the leftVersion/rightVersion pair, not the
-  // generic sourceVersion form)
-  private[table] override def vacuumState(keepLast: Int)
-      : ManagedTable.VacuumStats = vacuum(keepLast)
+  /** Retention clamped to the newest watermark-bearing commit
+    * ([[FoldCommit.vacuum]]). */
+  def vacuum(keepLast: Int): ManagedTable.VacuumStats = kernel.vacuum(keepLast)
 
   /** The maintained aggregate restricted by `predicate` with dir-stat
     * skipping — selective because the state is born clustered by group

@@ -40,43 +40,23 @@ import org.apache.spark.sql.functions._
  * 10^9 groups rewriting its whole state to fold a 10^5-row daily delta
  * is the same write amplification the row-local index views retired, one
  * level up. So a fold whose touched-group set stays under
- * [[RowLocalIndexView.RewriteFractionPct]] of the state's rows lands as
- *
- *   1. a FRAME-KEYED deletion-vector commit tombstoning exactly the
- *      touched groups' current rows ([[ManagedTable.deleteVectorsMatching]]
- *      — tombstones computed per-dir on executors, the group-key frame
- *      never driver state; the commit carries a `pendingSourceVersion`
- *      marker), then
- *   2. an APPEND of the touched groups' recomputed rows, carrying the
- *      real watermark (and the stream's txn high-water) — O(touched
- *      groups) rows written.
- *
- * A crash between the two resumes exactly-once: the change-feed range is
- * immutable, so the next refresh recomputes the touched rows against the
- * PRE-DELETE state snapshot (`readAt(delete version − 1)` — the rows the
- * tombstones hid) and lands only the missing append. Only a full-churn
- * fold (touched ≳ a third of the groups, where accumulated tombstones
- * would read-amplify every read until purge) takes the one-replace path,
- * priced as what it is. [[maintain]] purges accumulated tombstones and
- * folds the append tail; state is BORN clustered by group key
- * (write-time range clustering in the init commit's properties), so
- * group-keyed serving reads prune at row-group grain.
+ * [[RowLocalIndexView.RewriteFractionPct]] of the state's rows tombstones
+ * exactly the touched groups' rows and appends their recomputed rows —
+ * the [[FoldCommit]] tombstone-then-append shape, whose commits,
+ * watermark, pending marker, fence and crash resume are the kernel's.
+ * Only a full-churn fold (touched ≳ a third of the groups, where
+ * accumulated tombstones would read-amplify every read until purge)
+ * takes the one-replace path. [[maintain]] purges accumulated
+ * tombstones and folds the append tail; state is BORN clustered by
+ * group key, so group-keyed serving reads prune at row-group grain.
  *
  * Sums are carried as `DECIMAL(28,6)` — exact integer arithmetic in
  * 10⁻⁶ units, so subtraction round-trips to zero exactly (a double
  * accumulator would drift: (a + b) − b ≠ a in floats, and a view that is
  * refreshed thousands of times compounds it). Min/max keep the source
  * column's own type (they are order statistics, not accumulations).
- *
- * State lives in its own ManagedTable (time travel, history and
- * concurrency checks for free); the last folded source version rides on
- * each state commit's `userMetadata`, so refresh is idempotent and
- * restart-safe: a re-run reads the watermark from the state's own commit
- * log and processes `(watermark, latest]` or nothing. The live row
- * count needed by the replace-vs-delta decision is tracked without any
- * state scan: a replace fold's count IS its commit's `numOutputRows`,
- * and a delta fold carries `stateRows` (prior − tombstoned + appended)
- * on its append commit's metadata.
+ * The live row count needed by the replace-vs-delta decision rides the
+ * commit log ([[FoldCommit.Pos.stateRows]]) — no state scan.
  */
 final class IncrementalAggView(spark: SparkSession, sourcePath: String,
                                statePath: String, groupCols: Seq[String],
@@ -86,58 +66,207 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
   extends SignedSliceView {
   require(groupCols.nonEmpty, "IncrementalAggView needs group columns")
 
+  private[table] val kernel = new FoldCommit(spark, statePath, "agg view",
+    Seq(sourcePath), "VIEW", "DELTA")
+  private val alg = new GroupAlgebra(groupCols, sumCols, minMaxCols,
+    captureStateChangeData)
+
   // one-pass multi-view orchestrator plumbing ([[StandingViews]]): this
-  // family consumes the RAW signed slice (its algebra nets per GROUP),
-  // so it implements [[SignedSliceView]] — the orchestrator reads a
-  // shared corpus slice once and this view folds it through the exact
-  // [[refresh]] tail, gates and write choreography unchanged
-  private[table] def sourceTablePath: String = sourcePath
-  private[table] def viewKind: String = "agg view"
+  // family consumes the RAW signed slice (its algebra nets per GROUP)
   private[table] def neededSliceCols: Seq[String] =
     (groupCols ++ sumCols ++ minMaxCols).distinct
-  private[table] override def resumePendingSlice(): Unit = {
-    resumePending(); ()
-  }
-  private[table] def stateTxnVersion(appId: String): Option[Long] =
-    state.lastTxnVersion(appId)
-  private[table] def stateTable: ManagedTable = state
-  private[table] def foldRawSlice(slice: DataFrame, from: Long,
+  private[table] override def position(): FoldCommit.Pos =
+    kernel.resume(kernel.walk())(finish)
+  private[table] def foldRawSlice(slice: DataFrame, from: FoldCommit.Pos,
                                   latest: Long,
                                   txn: Option[(String, Long)]): Unit =
     foldDelta(slice, from, latest, txn)
 
-  private val Dec = "decimal(28,6)"
-  /** IN-list cap for the touched-group readWhere path: past this the
-    * predicate stops paying (and the driver collect stops being free) —
-    * the semi-join path takes over. */
-  private val MaxInList = 1000
-  private def meta(v: Long) = Some(s"""{"sourceVersion":$v}""")
-  private def metaRows(v: Long, rows: Long) =
-    Some(s"""{"sourceVersion":$v,"stateRows":$rows}""")
-  // leading-quote anchors keep "pendingSourceVersion" from false-matching
-  private val MetaRe = """"sourceVersion":(\d+)""".r
-  private val StateRowsRe = """"stateRows":(\d+)""".r
-  private val PendingRe = """\{"pendingSourceVersion":(\d+)\}""".r
-
   private def source = ManagedTable(spark, sourcePath)
-  private def state = ManagedTable(spark, statePath)
+  private def state = kernel.state
 
-  private def gCols = groupCols.map(c => col(s"`$c`"))
-  private def mmNames =
-    minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c"))
+  /** Build the state from the source's CURRENT snapshot (one full
+    * scan — the only O(table) step in the view's lifetime). The state
+    * is born range-clustered by group key, so delta folds' tombstone
+    * scans and group-keyed serving reads prune at row-group grain. */
+  def initialize(): Long = {
+    val v = source.latestVersion.getOrElse(throw new IllegalStateException(
+      s"source table $sourcePath does not exist"))
+    kernel.init(alg.grouped(source.read, lit(1L), alg.mmAggs), Seq(v),
+      kernel.mark(Seq(v)), Some(Map(
+        ManagedTable.ClusterColumnsProp -> groupCols.mkString(","))))
+    v
+  }
+
+  /** `reader` restricted to the touched groups: the IN-list predicate
+    * (dir-stat skipping via the caller's readWhere) when
+    * [[GroupAlgebra.touchedPredicate]] has one, else the null-safe
+    * range-pruned semi join ([[GroupAlgebra.semiOn]]). */
+  private def touchedSlice(touched: DataFrame,
+                           readWhere: Column => DataFrame,
+                           readAll: => DataFrame): DataFrame =
+    alg.touchedPredicate(touched) match {
+      case Some(pred) => readWhere(pred)
+      case None => alg.semiOn(touched, groupCols, readWhere, readAll)
+    }
+
+  /** MIN/MAX recomputed over the touched groups' fact rows. */
+  private def recomputeMinMax(touched: DataFrame): DataFrame =
+    touchedSlice(touched, source.readWhere, source.read)
+      .groupBy(alg.gCols: _*).agg(alg.mmAggs.head, alg.mmAggs.tail: _*)
+
+  /** The grouped signed delta of a raw slice and its touched groups. */
+  private def deltaOf(cdf: DataFrame): (DataFrame, DataFrame) = {
+    val delta = alg.dropZeroNet(alg.grouped(cdf, CdfNetting.sign))
+      .localCheckpoint()
+    (delta, delta.select(alg.gCols: _*).distinct().localCheckpoint())
+  }
+
+  /** Fold a change-feed slice into the state and advance the watermark
+    * to `to` — the delta algebra behind [[refresh]], [[refreshStream]]
+    * and the orchestrator. `pos` is where the slice was cut from; every
+    * shape fences on its head ([[FoldCommit]]), so the additive fold can
+    * never double-apply a slice. */
+  private def foldDelta(cdf: DataFrame, pos: FoldCommit.Pos, to: Long,
+                        txn: Option[(String, Long)]): Unit = {
+    val (delta, touched) = deltaOf(cdf)
+    val touchedN = touched.count()
+    val oldRows = pos.stateRows
+    val w = Seq(to)
+    if (touchedN == 0L)
+      // the slice cancels per group: an empty append advances the watermark
+      kernel.append(delta.limit(0), w, kernel.mark(w, "stateRows" -> oldRows),
+        pos.head, txn)
+    else if (touchedN * 100L >= oldRows * RowLocalIndexView.RewriteFractionPct)
+      // full-churn fold (or tiny/empty state): its numOutputRows is the count
+      kernel.replace(alg.mergedState(state.read, delta, touched,
+        recomputeMinMax(touched)), w, kernel.mark(w), pos.head, txn)
+    else {
+      // O(touched groups): recompute the touched rows FIRST (against the
+      // pre-tombstone state, materialized), then tombstone + append
+      val cur = touchedSlice(touched, state.readWhere, state.read)
+      val newRows = alg.touchedRows(cur, delta, recomputeMinMax(touched))
+        .localCheckpoint()
+      val newN = newRows.count()
+      kernel.tombstoneThenAppend(w, pos.head, txn)(
+        alg.tombstone(state, touched, _, _)) { dv =>
+        (newRows, kernel.markRows(w, oldRows, dv, newN))
+      }
+    }
+  }
+
+  /** The missing append of a half-applied delta fold: the change-feed
+    * range is immutable and the touched rows recompute against the
+    * PRE-TOMBSTONE snapshot (`readAt(tombstone − 1)`). */
+  private def finish(pos: FoldCommit.Pos): (DataFrame, String) = {
+    val (dvc, to) = pos.pending.get
+    val (delta, touched) = deltaOf(
+      CdfNetting.cdfSlice(source, pos.version, to.head, kernel.what))
+    val preDelete = state.readAt(dvc.version - 1)
+    val cur = touchedSlice(touched, preDelete.filter, preDelete)
+    val newRows = alg.touchedRows(cur, delta, recomputeMinMax(touched))
+      .localCheckpoint()
+    (newRows, kernel.markRows(to, pos.stateRows, dvc, newRows.count()))
+  }
+
+  /** Fold the unprocessed change-feed range into the state. No-op (and
+    * no new commit) when already current. Returns the new watermark. */
+  def refresh(): Long =
+    kernel.refresh(position())((cdf, pos, latest) =>
+      foldDelta(cdf, pos, latest, None))
+
+  /** STREAMING maintenance: the source's CDF stream folds into the
+    * state per micro-batch with the SAME delta algebra as [[refresh]],
+    * exactly-once through [[CdfNetting.startStream]] — the fold's FINAL
+    * commit carries the (checkpoint, epoch) transaction high-water, a
+    * half-applied fold resumes at the next epoch, and batch rows at or
+    * below the watermark drop, so batch [[refresh]] calls interleave
+    * safely with resumed and re-created checkpoints. Caller
+    * drains/stops the returned query. */
+  def refreshStream(checkpoint: String,
+                    trigger: org.apache.spark.sql.streaming.Trigger =
+                      org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CdfNetting.startStream(spark, this, checkpoint, trigger) {
+      (fresh, pos, maxV, txn) => foldDelta(fresh, pos, maxV, Some(txn))
+    }
+
+  /** ROUTINE state maintenance, O(tombstones + append tail): purge the
+    * deletion vectors delta folds accumulate and fold the append tail
+    * onto the group-key clustering ([[ManagedTable.maintainLayout]]).
+    * Watermark-less maintenance commits, transparent to the walk. */
+  def maintain(maxDirBytes: Long = 64L << 20): Unit = {
+    state.maintainLayout(maxDirBytes); ()
+  }
+
+  /** The maintained aggregate. */
+  def read: DataFrame = state.read
+
+  /** The aggregate AS OF a state version — reproducible marts for
+    * lineage, exactly the row-local family's contract. A version
+    * inside a half-applied fold's delete-append window reflects the
+    * tombstones only; pin the fold's FINAL commit. */
+  def readAt(stateVersion: Long): DataFrame = state.readAt(stateVersion)
+
+  /** The SOURCE version the state at `stateVersion` had folded — the
+    * watermark walk pinned at that version, so time travel on the VIEW
+    * names the matching time travel on the SOURCE: the aggregate at
+    * state version v describes exactly
+    * `source.readAt(sourceVersionAt(v))`. */
+  def sourceVersionAt(stateVersion: Long): Long =
+    kernel.walk(Some(stateVersion)).version
+
+  /** Retention for the view state, clamped to the newest
+    * watermark-bearing commit ([[FoldCommit.vacuum]]). */
+  def vacuum(keepLast: Int): ManagedTable.VacuumStats = kernel.vacuum(keepLast)
+
+  /** The maintained aggregate restricted by `predicate`, dir-stat
+    * skipping through the state's commit-log stats
+    * ([[ManagedTable.readWhere]]) — selective because the state is born
+    * clustered by group key and [[maintain]] keeps the tail folded. */
+  def readWhere(predicate: Column): DataFrame = state.readWhere(predicate)
+}
+
+/**
+ * The group algebra both aggregate views fold with
+ * ([[IncrementalAggView]], [[IncrementalJoinAggView]]): signed grouping
+ * into `cnt` + `DECIMAL(28,6)` sums, zero-net filtering, the
+ * touched-group set's predicate and tombstone forms, and the merges of
+ * stored rows, the signed delta and recomputed MIN/MAX. The views
+ * supply only where the delta and the recompute come from.
+ */
+private[table] final class GroupAlgebra(groupCols: Seq[String],
+                                        sumCols: Seq[String],
+                                        minMaxCols: Seq[String],
+                                        captureStateChangeData: Boolean) {
+  private val Dec = "decimal(28,6)"
+  /** IN-list cap for the touched-group predicate: past this the
+    * predicate stops paying (and the driver collect stops being free) —
+    * the frame forms take over. */
+  private val MaxInList = 1000
+
+  def gCols: Seq[Column] = groupCols.map(c => col(s"`$c`"))
   private def addCols: Seq[Column] =
     col("cnt") +: sumCols.map(c => col(s"`sum_$c`"))
+  def mmAggs: Seq[Column] = minMaxCols.flatMap(c => Seq(
+    min(col(s"`$c`")).as(s"min_$c"), max(col(s"`$c`")).as(s"max_$c")))
 
-  private def grouped(df: DataFrame, sign: Column,
-                      extra: Seq[Column] = Nil) =
+  /** Signed count + sums of `df` per group (plus `extra` aggregates). */
+  def grouped(df: DataFrame, sign: Column, extra: Seq[Column] = Nil): DataFrame =
     df.groupBy(gCols: _*)
       .agg(sum(sign).as("cnt"),
         (sumCols.map(c =>
           sum(sign * col(s"`$c`").cast(Dec)).cast(Dec).as(s"sum_$c")) ++
           extra): _*)
 
-  private def mmAggs: Seq[Column] = minMaxCols.flatMap(c => Seq(
-    min(col(s"`$c`")).as(s"min_$c"), max(col(s"`$c`")).as(s"max_$c")))
+  /** Sum the additive columns of a (cur ∪ delta)-shaped frame per group. */
+  def net(df: DataFrame): DataFrame =
+    df.groupBy(gCols: _*)
+      .agg(sum(col("cnt")).as("cnt"),
+        sumCols.map(c => sum(col(s"`sum_$c`")).cast(Dec).as(s"sum_$c")): _*)
+
+  private def foldAdditive(df: DataFrame): DataFrame =
+    net(df).filter(col("cnt") > 0)
 
   /** Drop zero-net delta groups — ONLY sound for additive-only views:
     * a group whose slice nets to cnt=0 and every sum=0 needs nothing
@@ -147,63 +276,11 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
     * STAY touched: a swap like (−5,−8,+6,+7) nets to zero counts and
     * sums but reshapes the value multiset min/max are order statistics
     * of. */
-  private def dropZeroNet(delta: DataFrame): DataFrame =
+  def dropZeroNet(delta: DataFrame): DataFrame =
     if (minMaxCols.nonEmpty) delta
     else delta.filter(sumCols
       .map(c => coalesce(col(s"`sum_$c`"), lit(0).cast(Dec)) =!= lit(0).cast(Dec))
       .foldLeft(col("cnt") =!= 0L)(_ || _))
-
-  /** Sum the additive columns of a (cur ∪ delta)-shaped frame. */
-  private def foldAdditive(df: DataFrame, extra: Seq[Column] = Nil) =
-    df.groupBy(gCols: _*)
-      .agg(sum(col("cnt")).as("cnt"),
-        (sumCols.map(c => sum(col(s"`sum_$c`")).cast(Dec).as(s"sum_$c")) ++
-          extra): _*)
-      .filter(col("cnt") > 0)
-
-  /** The last source version folded into the state (from the state
-    * table's own commit metadata). */
-  def sourceVersion: Long =
-    // most recent watermark-bearing commit: maintenance on the state
-    // table (OPTIMIZE/ANALYZE record no watermark), and a half-applied
-    // fold's pending delete commit, are transparent; RESTORE carries
-    // the restored fold's own watermark
-    CdfNetting.commitMetas(state, "agg view", statePath)
-      .collectFirst {
-        case m if MetaRe.findFirstMatchIn(m).isDefined =>
-          MetaRe.findFirstMatchIn(m).get.group(1).toLong
-      }
-      .getOrElse(throw new IllegalStateException(
-        "no commit in the agg view state's history carries a sourceVersion " +
-          "watermark — was the state table created outside the view?"))
-
-  /** Live state rows (= group count), tracked on the commit log with no
-    * state scan: a delta fold's append carries it explicitly; a
-    * replace fold's count is its own `numOutputRows`. Feeds the
-    * replace-vs-delta fraction decision. */
-  private def stateRowCount: Long =
-    CdfNetting.commitWalk(state).collectFirst {
-      case c if c.userMetadata.exists(m =>
-          StateRowsRe.findFirstMatchIn(m).isDefined) =>
-        StateRowsRe.findFirstMatchIn(c.userMetadata.get).get.group(1).toLong
-      case c if c.userMetadata.exists(m =>
-          MetaRe.findFirstMatchIn(m).isDefined) =>
-        c.operationMetrics.getOrElse("numOutputRows", "0").toLong
-    }.getOrElse(0L)
-
-  /** Build the state from the source's CURRENT snapshot (one full
-    * scan — the only O(table) step in the view's lifetime). The state
-    * is born range-clustered by group key, so delta folds' tombstone
-    * scans and group-keyed serving reads prune at row-group grain. */
-  def initialize(): Long = {
-    val v = source.latestVersion.getOrElse(throw new IllegalStateException(
-      s"source table $sourcePath does not exist"))
-    state.write(grouped(source.read, lit(1L), mmAggs), "VIEW_INIT",
-      "replace", meta(v), propertiesOverride = Some(Map(
-        ManagedTable.ClusterColumnsProp -> groupCols.mkString(","))))
-    source.setRetentionHold(statePath, v)
-    v
-  }
 
   /** The touched-group set as a driver-side IN-list predicate, when it
     * HAS a driver-safe spelling: a single group key with at most
@@ -213,7 +290,7 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
     * consumers use SQL match semantics — only TRUE matches — so the
     * IN-list alone would silently skip the NULL group). None past the
     * cap or for composite keys — consumers fall to frame form. */
-  private def touchedPredicate(touched: DataFrame): Option[Column] = {
+  def touchedPredicate(touched: DataFrame): Option[Column] = {
     if (groupCols.size != 1) return None
     val g = groupCols.head
     val vals = touched.limit(MaxInList + 1).collect().map(_.get(0))
@@ -225,42 +302,33 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
     Some(if (vals.contains(null)) base || col(s"`$g`").isNull else base)
   }
 
-  /** `reader` restricted to the touched groups: the IN-list predicate
-    * (dir-stat skipping via the caller's readWhere) when
-    * [[touchedPredicate]] has one, else a group-keyed null-safe LEFT
-    * SEMI join (NULL is a legal group key; a plain equi join would
-    * silently drop its rows) over a scan PRE-FILTERED by the touched
-    * keys' min/max range ([[IncrementalAggView.keyRangePredicate]] —
-    * dir-stat skipping through readWhere, so the composite-key fold's
-    * recompute read is O(touched dirs) against a range-clustered
-    * state, not O(state)). */
-  private def touchedSlice(touched: DataFrame,
-                           readWhere: Column => DataFrame,
-                           readAll: => DataFrame): DataFrame =
-    touchedPredicate(touched) match {
-      case Some(pred) => readWhere(pred)
-      case None =>
-        val t = touched
-          .select(groupCols.map(c => col(s"`$c`").as(s"__t_$c")): _*)
-        val cond = groupCols.map(c => col(s"`$c`") <=> col(s"`__t_$c`"))
-          .reduce(_ && _)
-        val base = IncrementalAggView.keyRangePredicate(touched, groupCols)
-          .map(readWhere).getOrElse(readAll)
-        base.join(t, cond, "left_semi")
-    }
+  /** A read restricted to the rows whose `cols` match a touched group:
+    * a null-safe LEFT SEMI join (NULL is a legal group key; a plain equi
+    * join would silently drop its rows) over a scan PRE-FILTERED by the
+    * touched keys' min/max range
+    * ([[IncrementalAggView.keyRangePredicate]] — dir-stat skipping
+    * through `readWhere`, so the read is O(touched range), not O(table)). */
+  def semiOn(touched: DataFrame, cols: Seq[String],
+             readWhere: Column => DataFrame,
+             readAll: => DataFrame): DataFrame = {
+    val t = touched.select(cols.map(c => col(s"`$c`").as(s"__t_$c")): _*)
+    val cond = cols.map(c => col(s"`$c`") <=> col(s"`__t_$c`")).reduce(_ && _)
+    IncrementalAggView.keyRangePredicate(touched, cols)
+      .map(readWhere).getOrElse(readAll)
+      .join(t, cond, "left_semi")
+  }
 
-  /** Tombstone the touched groups' current state rows, routed by the
-    * same rule as the reads: the IN-list predicate form when the
-    * touched set has one (dir-stat pruning per VALUE —
-    * [[ManagedTable.deleteVectors]]), else the frame-keyed form
-    * (key-RANGE dir pruning, the key frame never driver state —
-    * [[ManagedTable.deleteVectorsMatching]]). Change capture on the
-    * STATE table is a deliberate choice (`captureStateChangeData`,
+  /** Tombstone the touched groups' current state rows: predicate-form
+    * deletion vectors (per-VALUE dir-stat pruning —
+    * [[ManagedTable.deleteVectors]]) under the IN-list cap, frame-keyed
+    * ones (key-RANGE dir pruning, the key frame never driver state —
+    * [[ManagedTable.deleteVectorsMatching]]) past it. Change capture on
+    * the STATE table is a deliberate choice (`captureStateChangeData`,
     * default off): nothing consumes the state's own change feed unless
     * the caller chains views, and capture forces the tombstone scan to
     * full row width. */
-  private def tombstoneTouched(touched: DataFrame, meta: Option[String],
-                               fence: Option[Long]): ManagedTable.Commit =
+  def tombstone(state: ManagedTable, touched: DataFrame, meta: Option[String],
+                fence: Option[Long]): ManagedTable.Commit =
     touchedPredicate(touched) match {
       case Some(pred) =>
         state.deleteVectors(pred, captureChangeData = captureStateChangeData,
@@ -271,33 +339,19 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
           expectedPrevVersion = fence)
     }
 
-  private def touchedFact(touched: DataFrame): DataFrame =
-    touchedSlice(touched, source.readWhere, source.read)
-
   /** The recomputed state rows for EXACTLY the touched groups — the
-    * delta-fold append's payload: stored additive columns of the
-    * touched groups plus the signed delta, min/max (when maintained)
-    * recomputed over the touched groups' fact rows. `curTouched` is the
-    * state ALREADY RESTRICTED to the touched groups (the live head
-    * through [[touchedSlice]], or the pre-delete snapshot on crash
-    * resume) — an unrestricted state here would append every untouched
-    * group a duplicate row. */
-  private def touchedRows(delta: DataFrame, touched: DataFrame,
-                          curTouched: DataFrame): DataFrame = {
-    val cur = curTouched
-    if (minMaxCols.isEmpty)
-      foldAdditive(cur.select((gCols ++ addCols): _*).unionByName(delta))
+    * delta fold's append payload. `cur` is the stored state ALREADY
+    * RESTRICTED to the touched groups (an unrestricted state would
+    * append every untouched group a duplicate row); `rec` the touched
+    * groups' recomputed MIN/MAX. Every output group is touched, so the
+    * tagged-union fold simplifies: additive columns sum over cur+delta,
+    * min/max come from the recompute alone. */
+  def touchedRows(cur: DataFrame, delta: DataFrame,
+                  rec: => DataFrame): DataFrame = {
+    val curT = cur.select((gCols ++ addCols): _*)
+    if (minMaxCols.isEmpty) foldAdditive(curT.unionByName(delta))
     else {
-      // every output group is touched by construction, so the
-      // tagged-union fold simplifies: additive columns sum over
-      // cur+delta, min/max come from the recompute alone (rec covers
-      // exactly the touched groups with surviving fact rows; a group
-      // emptied later converges when its own commits re-touch it)
-      val rec = touchedFact(touched).groupBy(gCols: _*)
-        .agg(mmAggs.head, mmAggs.tail: _*)
-      val curT = cur.select((gCols ++ addCols): _*)
-        .withColumn("__src__", lit("cur"))
-      val tagged = curT
+      val tagged = curT.withColumn("__src__", lit("cur"))
         .unionByName(delta.withColumn("__src__", lit("delta")),
           allowMissingColumns = true)
         .unionByName(rec.withColumn("__src__", lit("rec")),
@@ -316,26 +370,23 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
     }
   }
 
-  /** The full-state merge — the REPLACE fold's payload (touched groups
-    * rival the state, or the state is empty/tiny). */
-  private def mergedState(delta: DataFrame, touched: DataFrame): DataFrame = {
+  /** The full-state merge — the REPLACE fold's payload. NULL group keys
+    * are legal groups, so the merge avoids equi joins (NULL never equals
+    * NULL there) and instead tags four row streams and folds them in ONE
+    * null-safe groupBy:
+    *   cur   — the stored state (additive + old min/max),
+    *   delta — the signed change-feed aggregate,
+    *   rec   — min/max recomputed over touched groups,
+    *   touch — membership markers for the touched-group set.
+    * Additive columns sum over cur+delta; min/max take rec's value when
+    * the group was touched, else carry cur's — one shuffle total. */
+  def mergedState(state: DataFrame, delta: DataFrame, touched: DataFrame,
+                  rec: => DataFrame): DataFrame = {
     if (minMaxCols.isEmpty)
-      foldAdditive(state.read.select((gCols ++ addCols): _*)
-        .unionByName(delta))
+      foldAdditive(state.select((gCols ++ addCols): _*).unionByName(delta))
     else {
-      // NULL group keys are legal groups, so the merge avoids equi
-      // joins (NULL never equals NULL there) and instead tags four
-      // row streams and folds them in ONE null-safe groupBy:
-      //   cur   — the stored state (additive + old min/max),
-      //   delta — the signed change-feed aggregate,
-      //   rec   — min/max recomputed over touched groups' fact rows,
-      //   touch — membership markers for the touched-group set.
-      // Additive columns sum over cur+delta; min/max take rec's value
-      // when the group was touched, else carry cur's — conditional
-      // aggregates over the source tag, one shuffle total.
-      val rec = touchedFact(touched).groupBy(gCols: _*)
-        .agg(mmAggs.head, mmAggs.tail: _*)
-      val cur = state.read.select((gCols ++ addCols ++
+      val mmNames = minMaxCols.flatMap(c => Seq(s"min_$c", s"max_$c"))
+      val cur = state.select((gCols ++ addCols ++
         mmNames.map(c => col(s"`$c`"))): _*)
         .withColumn("__src__", lit("cur"))
       val tagged = cur
@@ -359,235 +410,6 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
         .filter(col("cnt") > 0)
     }
   }
-
-  /** Fold a change-feed slice into the state and advance the watermark
-    * to `newWatermark` — the shared delta algebra behind [[refresh]]
-    * (batch range) and [[refreshStream]] (micro-batch). Race-safe
-    * WITHOUT id gates (this fold has none — counts just move): the
-    * fence is captured BEFORE the standing state is read, and the
-    * watermark re-checks under that fence against `from` (the
-    * watermark the slice was netted from), so a racing refresh that
-    * already folded the whole range turns this call into a no-op, one
-    * that folded a DIFFERENT range refuses loudly, and one landing
-    * after the fence makes the delete/replace fail its
-    * `expectedPrevVersion` — the additive fold can never double-apply
-    * a slice. */
-  private def foldDelta(cdf: DataFrame, from: Long, newWatermark: Long,
-                        txn: Option[(String, Long)] = None): Unit = {
-    val fence = state.latestVersion
-    val w = sourceVersion
-    if (w >= newWatermark) return
-    require(w == from,
-      s"view state advanced from $from to $w while this refresh netted " +
-        "its slice — a concurrent refresh interleaved; re-run refresh()")
-    val sign = when(col("_change_type").isin("insert", "update_postimage"), 1L)
-      .otherwise(-1L)
-    val delta = dropZeroNet(grouped(cdf, sign)).localCheckpoint()
-    val touched = delta.select(gCols: _*).distinct().localCheckpoint()
-    val touchedN = touched.count()
-    val oldRows = stateRowCount
-    if (touchedN == 0L) {
-      // the slice cancels per group — advance the watermark with an
-      // empty append so the retention hold slides
-      state.write(delta.limit(0), "VIEW_DELTA", "append",
-        metaRows(newWatermark, oldRows), mergeSchema = true,
-        expectedPrevVersion = fence, txnUpdate = txn)
-    } else if (touchedN * 100L >=
-        oldRows * RowLocalIndexView.RewriteFractionPct) {
-      // full-churn fold (or tiny/empty state): one replace — its own
-      // numOutputRows is the new live row count
-      state.write(mergedState(delta, touched), "VIEW_REFRESH", "replace",
-        meta(newWatermark), expectedPrevVersion = fence, txnUpdate = txn)
-    } else {
-      // O(touched groups) fold: recompute the touched groups' rows
-      // FIRST (against the pre-delete state — materialized, so the
-      // append below cannot observe the tombstones), then the two-commit
-      // DV+APPEND choreography of the row-local family: frame-keyed
-      // tombstones with a pending marker, append with the watermark
-      val curTouched = touchedSlice(touched, state.readWhere, state.read)
-      val newRows = touchedRows(delta, touched, curTouched).localCheckpoint()
-      val newN = newRows.count()
-      val dv = tombstoneTouched(touched,
-        Some(s"""{"pendingSourceVersion":$newWatermark}"""), fence)
-      val deleted = dv.operationMetrics("numDeletedRows").toLong
-      state.write(newRows, "VIEW_DELTA", "append",
-        metaRows(newWatermark, oldRows - deleted + newN),
-        mergeSchema = true, expectedPrevVersion = Some(dv.version),
-        txnUpdate = txn)
-    }
-    // pin the new watermark against source vacuum (slides forward as
-    // slices fold; a crashed fold keeps the older, SAFER pin)
-    source.setRetentionHold(statePath, newWatermark)
-  }
-
-  /** Finish a half-applied delta fold: the frame-keyed delete commit
-    * landed with a pending marker but the append did not (crash between
-    * the two). The change-feed range is immutable and the touched rows
-    * recompute against the PRE-DELETE state snapshot (the rows the
-    * tombstones hid — `readAt(delete − 1)`), so landing only the
-    * missing append is exactly-once. Returns the recovered watermark,
-    * or None when nothing was pending. */
-  private def resumePending(): Option[Long] =
-    state.lastCommit
-      .filter(_.userMetadata.exists(m =>
-        PendingRe.findFirstMatchIn(m).isDefined))
-      .map { dvc =>
-        val p = PendingRe.findFirstMatchIn(dvc.userMetadata.get)
-          .get.group(1).toLong
-        val w = sourceVersion // the pending marker is transparent to this
-        val oldRows = stateRowCount
-        val sign = when(
-          col("_change_type").isin("insert", "update_postimage"), 1L)
-          .otherwise(-1L)
-        val cdf = CdfNetting.cdfSlice(source, w, p, "agg view")
-        val delta = dropZeroNet(grouped(cdf, sign)).localCheckpoint()
-        val touched = delta.select(gCols: _*).distinct().localCheckpoint()
-        val preDelete = state.readAt(dvc.version - 1)
-        val cur = touchedSlice(touched, pr => preDelete.filter(pr), preDelete)
-        val newRows = touchedRows(delta, touched, cur).localCheckpoint()
-        val newN = newRows.count()
-        val deleted = dvc.operationMetrics("numDeletedRows").toLong
-        state.write(newRows, "VIEW_DELTA", "append",
-          metaRows(p, oldRows - deleted + newN), mergeSchema = true,
-          expectedPrevVersion = state.latestVersion)
-        source.setRetentionHold(statePath, p)
-        p
-      }
-
-  /** Fold the unprocessed change-feed range into the state. No-op (and
-    * no new commit) when already current. Returns the new watermark. */
-  def refresh(): Long = {
-    val resumed = resumePending()
-    val last = resumed.getOrElse(sourceVersion)
-    val latest = source.latestVersion.getOrElse(throw new IllegalStateException(
-      s"source table $sourcePath does not exist"))
-    require(latest >= last,
-      s"source went backwards: watermark $last, latest $latest — was the " +
-        "source table recreated? Re-initialize the view.")
-    if (latest == last) return last
-    foldDelta(CdfNetting.cdfSlice(source, last, latest, "agg view"),
-      last, latest)
-    latest
-  }
-
-  /** STREAMING maintenance: the source's CDF stream
-    * (`format("graft-table")`, `readChangeFeed=true`) folds into the
-    * state per micro-batch with the SAME delta algebra as [[refresh]].
-    * Exactly-once: the fold's FINAL commit carries the (checkpoint,
-    * epoch) transaction high-water, so a crash-replayed micro-batch is
-    * recognized and skipped; a crash inside the DV+APPEND window
-    * resumes through the pending marker at the next epoch; each fold
-    * also advances the `sourceVersion` watermark to the batch's max
-    * `_commit_version` and drops batch rows at or below it — so batch
-    * [[refresh]] calls interleave safely with BOTH a resumed checkpoint
-    * (whose replayed WAL offsets overlap the refreshed range) and a
-    * re-created one. Caller drains/stops the returned query. */
-  def refreshStream(checkpoint: String,
-                    trigger: org.apache.spark.sql.streaming.Trigger =
-                      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val appId = s"graft-view:$checkpoint"
-    val start = sourceVersion + 1
-    val stream = graft.streaming.StreamOps.streamTable(spark, sourcePath,
-      startingVersion = Some(start), readChangeFeed = true)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state.lastTxnVersion(appId).exists(_ >= epochId)) {
-          // A genuinely replayed epoch re-delivers only commits the
-          // watermark already covers. If this "replayed" epoch holds
-          // NEWER commits, the checkpoint was DELETED and its path
-          // reused: the fresh query restarted epochs at 0, this guard
-          // would silently drop unseen data, and the advancing offsets
-          // would lose it forever — refuse instead.
-          val last = sourceVersion
-          if (!batch.filter(col("_commit_version") > last).isEmpty)
-            throw new IllegalStateException(
-              s"view stream checkpoint '$checkpoint' was re-created: " +
-                s"epoch $epochId is at or below the recorded high-water " +
-                "but carries commits beyond the watermark. Use a FRESH " +
-                "checkpoint path (epoch high-waters are keyed by path).")
-        } else {
-          // a crash between a fold's delete and append commits resumes
-          // here, BEFORE the watermark read — the row-local family's
-          // beforeFold, verbatim
-          resumePending()
-          // drop rows at or below the watermark: on a RESUMED checkpoint
-          // after an interleaved batch refresh(), the source replays
-          // from its own WAL offset — commits the batch refresh already
-          // folded would otherwise double-apply. localCheckpoint so the
-          // slice is read once (max + fold are two actions).
-          val last = sourceVersion
-          val fresh = batch.filter(col("_commit_version") > last)
-            .localCheckpoint()
-          val maxV = fresh.agg(max(col("_commit_version"))).head()
-          if (!maxV.isNullAt(0))
-            foldDelta(fresh, last, maxV.getLong(0), Some((appId, epochId)))
-        }
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
-
-  /** ROUTINE state maintenance, O(tombstones + append tail): purge the
-    * deletion vectors delta folds accumulate and fold the append tail
-    * onto the group-key clustering ([[ManagedTable.maintainLayout]]).
-    * Watermark-less maintenance commits, transparent to the walk. */
-  def maintain(maxDirBytes: Long = 64L << 20): Unit = {
-    state.maintainLayout(maxDirBytes); ()
-  }
-
-  /** The maintained aggregate. */
-  def read: DataFrame = state.read
-
-  /** The aggregate AS OF a state version — reproducible marts for
-    * lineage, exactly the row-local family's contract. A version
-    * inside a half-applied fold's delete-append window reflects the
-    * tombstones only; pin the fold's FINAL commit. */
-  def readAt(stateVersion: Long): DataFrame = state.readAt(stateVersion)
-
-  /** The SOURCE version the state at `stateVersion` had folded — the
-    * watermark walk pinned at that version, so time travel on the VIEW
-    * names the matching time travel on the SOURCE: the aggregate at
-    * state version v describes exactly
-    * `source.readAt(sourceVersionAt(v))`. Pending delete commits are
-    * transparent, like the live walk. */
-  def sourceVersionAt(stateVersion: Long): Long =
-    CdfNetting.commitMetas(state, "agg view", statePath, Some(stateVersion))
-      .collectFirst {
-        case m if MetaRe.findFirstMatchIn(m).isDefined =>
-          MetaRe.findFirstMatchIn(m).get.group(1).toLong
-      }
-      .getOrElse(throw new IllegalStateException(
-        s"no commit at or below state version $stateVersion carries a " +
-          "sourceVersion watermark — is it before the view's initialize()?"))
-
-  /** Retention for the view state, clamped to the newest
-    * WATERMARK-BEARING commit: [[maintain]] lands watermark-less
-    * commits above the last fold, and a purely count-based cut could
-    * prune every watermarked commit and wedge the view's walks (the
-    * row-local family's vacuum rule). */
-  def vacuum(keepLast: Int): ManagedTable.VacuumStats = {
-    val wmV = state.metaHistory.collectFirst {
-      case c if c.userMetadata.exists(m =>
-        MetaRe.findFirstMatchIn(m).isDefined) => c.version
-    }
-    val keep = (for { w <- wmV; l <- state.latestVersion }
-      yield math.max(keepLast.toLong, l - w + 1).toInt).getOrElse(keepLast)
-    state.vacuum(keep)
-  }
-
-  // the retention policy routes through the mart's own clamp (its
-  // watermark meta key differs from the generic sourceVersion form)
-  private[table] override def vacuumState(keepLast: Int)
-      : ManagedTable.VacuumStats = vacuum(keepLast)
-
-  /** The maintained aggregate restricted by `predicate`, dir-stat
-    * skipping through the state's commit-log stats
-    * ([[ManagedTable.readWhere]]) — selective because the state is born
-    * clustered by group key and [[maintain]] keeps the tail folded. */
-  def readWhere(predicate: Column): DataFrame = state.readWhere(predicate)
 }
 
 object IncrementalAggView {

@@ -13,6 +13,12 @@ import org.apache.spark.sql.functions._
  */
 private[table] object CdfNetting {
 
+  /** A change row's sign: +1 for insert/update_postimage, −1 for
+    * delete/update_preimage. */
+  def sign: org.apache.spark.sql.Column =
+    when(col("_change_type").isin("insert", "update_postimage"), 1L)
+      .otherwise(-1L)
+
   /** Net `cdf` per (`idCol`, `payloadCols`) with sign +1 for
     * insert/update_postimage and −1 for delete/update_preimage, so a
     * dir-rewrite commit's coarse feed (all old dir rows − / survivors
@@ -23,9 +29,6 @@ private[table] object CdfNetting {
     * cannot index. */
   def net(cdf: DataFrame, idCol: String, payloadCols: Seq[String],
           what: String): (DataFrame, DataFrame) = {
-    val sign = when(
-      col("_change_type").isin("insert", "update_postimage"), 1L)
-      .otherwise(-1L)
     val cols = col(s"`$idCol`") +: payloadCols.map(c => col(s"`$c`"))
     val netted = cdf.select(cols :+ sign.as("__sign__"): _*)
       .groupBy(cols: _*)
@@ -118,37 +121,33 @@ private[table] object CdfNetting {
         "inserts must be new or paired with a delete")
   }
 
-  /** The shared `foreachBatch` choreography of every view family
-    * member's `refreshStream` — exactly-once via a (checkpoint, epoch)
+  /** The shared `foreachBatch` choreography of every view's
+    * `refreshStream` — exactly-once via a (checkpoint, epoch)
     * transaction high-water on each fold's final commit, watermark
     * filtering so batch refreshes and resumed checkpoints interleave
     * safely, and a loud refusal when a checkpoint path is deleted and
     * reused (replayed epoch numbers with commits BEYOND the watermark).
-    * `beforeFold` runs first in every live epoch (the row-local family
-    * resumes a half-applied DV slice there); `fold` applies one netted
-    * slice `(ins, del, from, to, txn)` — `from` is the watermark the
-    * slice was filtered against (the additive folds re-check it under
-    * their fence) — and must land the txn on its final commit. */
-  def startStream(spark: SparkSession, sourcePath: String,
-                  state: () => ManagedTable, checkpoint: String,
-                  trigger: org.apache.spark.sql.streaming.Trigger,
-                  idCol: String, payloadCols: Seq[String], what: String,
-                  sourceVersion: () => Long, beforeFold: () => Unit,
-                  fold: (DataFrame, DataFrame, Long, Long, (String, Long)) => Unit)
+    * Every live epoch first takes the view's [[StandingView.position]]
+    * (finishing a half-applied fold), then `fold` applies the raw slice
+    * above it `(slice, position, maxVersion, txn)` and must land the
+    * txn on its final commit. */
+  def startStream(spark: SparkSession, view: StandingView, checkpoint: String,
+                  trigger: org.apache.spark.sql.streaming.Trigger)(
+      fold: (DataFrame, FoldCommit.Pos, Long, (String, Long)) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val appId = s"graft-view:$checkpoint"
-    val start = sourceVersion() + 1
-    val stream = graft.streaming.StreamOps.streamTable(spark, sourcePath,
-      startingVersion = Some(start), readChangeFeed = true)
+    val stream = graft.streaming.StreamOps.streamTable(spark,
+      view.sourceTablePath, startingVersion = Some(view.sourceVersion + 1),
+      readChangeFeed = true)
     stream.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (state().lastTxnVersion(appId).exists(_ >= epochId)) {
+        if (view.stateTxnVersion(appId).exists(_ >= epochId)) {
           // A genuinely replayed epoch re-delivers only commits the
           // watermark already covers; if it holds NEWER commits the
           // checkpoint path was deleted and reused — refuse instead of
           // silently dropping unseen data (epochs restarted at 0)
-          val last = sourceVersion()
+          val last = view.sourceVersion
           if (!batch.filter(col("_commit_version") > last).isEmpty)
             throw new IllegalStateException(
               s"view stream checkpoint '$checkpoint' was re-created: " +
@@ -156,18 +155,14 @@ private[table] object CdfNetting {
                 "but carries commits beyond the watermark. Use a FRESH " +
                 "checkpoint path (epoch high-waters are keyed by path).")
         } else {
-          beforeFold()
-          val last = sourceVersion()
-          val fresh = batch.filter(col("_commit_version") > last)
+          val pos = view.position()
+          // localCheckpoint so the slice is read once (max + fold are
+          // two actions)
+          val fresh = batch.filter(col("_commit_version") > pos.version)
             .localCheckpoint()
           val maxV = fresh.agg(max(col("_commit_version"))).head()
-          if (!maxV.isNullAt(0)) {
-            val (ins, del) = CdfNetting.net(fresh, idCol, payloadCols, what)
-            // a slice netting to nothing lands no commit — a replay
-            // nets to nothing again, so skipping stays idempotent
-            if (!ins.isEmpty || !del.isEmpty)
-              fold(ins, del, last, maxV.getLong(0), (appId, epochId))
-          }
+          if (!maxV.isNullAt(0))
+            fold(fresh, pos, maxV.getLong(0), (appId, epochId))
         }
         ()
       }
@@ -192,104 +187,8 @@ private[table] object CdfNetting {
     }
     source.readChangeFeed(from + 1, Some(to))
   }
-
-  /** Commit metadata strings of a view STATE table, newest first,
-    * after checking the state exists — the watermark readers walk this
-    * list for their most recent matching entry, so MAINTENANCE commits
-    * on the state (OPTIMIZE/ANALYZE/CLUSTER, which record no
-    * watermark) are transparent instead of stranding the view, and a
-    * RESTORE finds the restored commit's own carried watermark first.
-    *
-    * RESTORE commits confine the rest of the walk: a restore TO a
-    * watermark-less maintenance commit carries no metadata itself, and
-    * the commits between the restore target and the restore (the
-    * rolled-back refreshes) describe data the table no longer holds —
-    * walking into them would pair the OLD restored fold with a NEWER
-    * superseded watermark, silently never folding the range between.
-    * So on meeting `RESTORE(version=V)` the walk jumps to V and
-    * continues down from there, exactly the history the restored data
-    * came from (nested restores compose — each one can only lower the
-    * cap). */
-  def commitMetas(state: ManagedTable, what: String, statePath: String,
-                  atOrBelow: Option[Long] = None): Iterator[String] = {
-    require(state.exists,
-      s"$what state $statePath does not exist — call initialize() first")
-    commitWalk(state, atOrBelow).flatMap(_.userMetadata)
-  }
-
-  /** The restore-confined commit walk behind [[commitMetas]], exposed
-    * at COMMIT grain for readers that pair a commit's metadata with its
-    * operation metrics (the aggregate views derive their live row count
-    * from a replace fold's own `numOutputRows`). Same semantics: an
-    * AS-OF read walks from its pinned version down — the RESTORE cap
-    * and the time-travel cap are the same mechanism. LAZY
-    * ([[ManagedTable.metaHistory]] — raw entries, no delta-chain
-    * resolution): every caller collectFirsts its newest match, and the
-    * watermark almost always rides the newest commit, so the walk that
-    * runs per refresh / per search / per streaming micro-batch reads
-    * O(one log batch), not a years-old view's entire commit history. */
-  def commitWalk(state: ManagedTable,
-                 atOrBelow: Option[Long] = None): Iterator[ManagedTable.Commit] = {
-    var cap = atOrBelow.getOrElse(Long.MaxValue)
-    state.metaHistory.flatMap { c =>
-      if (c.version <= cap) {
-        c.operationMetrics.get("restoredVersion")
-          .foreach(v => cap = math.min(cap, v.toLong))
-        Some(c)
-      } else None
-    }
-  }
 }
 
-/**
- * The shared lifecycle of every ROW-LOCAL standing-index view — an
- * index whose rows are a function of ONE source row (positions, BM25
- * postings, MinHash signatures, PQ codes, cell assignments, benchmark
- * shingles), so maintenance never moves a cross-document statistic:
- *
- *   - [[initialize]]: (optional per-view training hook), doc-id bloom
- *     written FIRST (a crash between bloom and state can only
- *     over-approximate, never under-cover), then one replace commit of
- *     the full index;
- *   - [[refresh]]: the unprocessed change-feed range nets per
- *     (id, payload) ([[CdfNetting.net]] — coarse dir-rewrite feeds
- *     cancel to the minimal delta); a PURE-INSERT slice lands as an
- *     APPEND commit of the batch's own rows (the standing index is not
- *     even read — O(batch) per day); a slice with deletes lands as
- *     merge-on-read DELETION VECTORS (O(deleted rows) — the index is
- *     STILL never rewritten) followed by an append of the entering
- *     rows; past the broadcast gate the DVs go FRAME-KEYED
- *     ([[ManagedTable.deleteVectorsMatching]] — tombstones computed
- *     per-dir on executors, the id set never driver state), so even a
- *     corpus-scale curation delete is an O(deleted rows) commit; only
- *     a delete above [[RowLocalIndexView.RewriteFractionPct]] of the
- *     state's rows rewrites, by SHUFFLED anti-join (read-amplification
- *     honesty). Updates are the (−pre, +post) pair. Insert-id collisions are bloom-gated against
- *     the surviving index; deletes must describe index rows the state
- *     holds — gated on the ids of the delta's own [[buildRows]] output,
- *     so a doc whose payload indexes to NOTHING (empty text, text
- *     shorter than the shingle width) deletes as a legal no-op instead
- *     of wedging the view.
- *
- * Exactly-once: the folded source version rides each state commit's
- * metadata; every slice's commits carry `expectedPrevVersion` captured
- * at the watermark read, so racing refreshes cannot both land. The DV
- * path is two commits (delete, then the insert append) — the delete
- * carries a `pendingSourceVersion` marker instead of the watermark, so
- * a crash between the two resumes: the next [[refresh]] re-nets the
- * SAME immutable change-feed range and lands only the missing append,
- * stamped with the full watermark. The doc-id bloom lives in its own
- * [[ManagedTable]] (atomic replace via the commit log — no
- * delete-then-write window where a crash leaves NO bloom), written
- * BEFORE the state commits so any crash order only over-approximates.
- *
- * State-table housekeeping composes: [[purge]] materializes the
- * accumulated deletion vectors ([[ManagedTable.purgeDeletes]]) as a
- * watermark-less maintenance commit, transparent to the walk.
- * Subclasses supply only [[buildRows]] (the indexing function), names,
- * and optional training/layout/metadata hooks — the contract and its
- * tests are shared, not stamped.
- */
 /**
  * Base contract of the one-pass multi-view orchestrator
  * ([[StandingViews]]): anything that maintains itself from a source
@@ -305,18 +204,22 @@ private[table] object CdfNetting {
  * localCheckpoint'd), and fans it out to both shapes.
  */
 trait StandingView {
+  /** The fold-commit kernel of the view's state table. */
+  private[table] def kernel: FoldCommit
   /** The last source version fully folded into the state. */
-  def sourceVersion: Long
-  private[table] def sourceTablePath: String
-  private[table] def viewKind: String
+  def sourceVersion: Long = kernel.walk().version
+  private[table] def sourceTablePath: String = kernel.sources.head
+  private[table] def viewKind: String = kernel.what
   /** Columns this view needs from a shared change-feed slice (the
     * `_change_type` / `_commit_version` metadata rides implicitly). */
   private[table] def neededSliceCols: Seq[String]
-  /** Finish any half-applied two-commit slice before folding. */
-  private[table] def resumePendingSlice(): Unit = ()
-  private[table] def stateTxnVersion(appId: String): Option[Long]
+  /** Where the state stands before a fold: the walk, after finishing any
+    * half-applied two-commit fold (families that write one override). */
+  private[table] def position(): FoldCommit.Pos = kernel.walk()
+  private[table] def stateTxnVersion(appId: String): Option[Long] =
+    stateTable.lastTxnVersion(appId)
   /** The view's STATE table — what layout maintenance rewrites. */
-  private[table] def stateTable: ManagedTable
+  private[table] def stateTable: ManagedTable = kernel.state
 
   /** Routine state-layout maintenance as POLICY
     * ([[ManagedTable.maintainLayoutIfNeeded]]): every DV+APPEND fold
@@ -371,23 +274,10 @@ trait StandingView {
     else None
   }
 
-  /** Family-clamped state retention: the cut keeps at least back to the
-    * newest commit whose metadata carries a `sourceVersion` watermark —
-    * maintenance commits are watermark-less, and a purely count-based
-    * cut under a head run of them would prune every watermarked commit
-    * and wedge the family's walks. Families with stronger lineage
-    * obligations (the row-local family's quantizer version holds, the
-    * marts' watermark-pair metas) override with their own vacuum. */
-  private[table] def vacuumState(keepLast: Int): ManagedTable.VacuumStats = {
-    val t = stateTable
-    val wmV = t.metaHistory.collectFirst {
-      case c if c.userMetadata.exists(_.contains("\"sourceVersion\":")) =>
-        c.version
-    }
-    val keep = (for { w <- wmV; l <- t.latestVersion }
-      yield math.max(keepLast.toLong, l - w + 1).toInt).getOrElse(keepLast)
-    t.vacuum(keep)
-  }
+  /** Family-clamped state retention ([[FoldCommit.vacuum]]); the
+    * row-local family also prunes its sidecar tables. */
+  private[table] def vacuumState(keepLast: Int): ManagedTable.VacuumStats =
+    kernel.vacuum(keepLast)
 }
 
 /**
@@ -407,13 +297,35 @@ trait CdfMaintainedView extends StandingView {
   private[table] def netPayloadCols: Seq[String]
   private[table] final def neededSliceCols: Seq[String] =
     netIdCol +: netPayloadCols
-  /** Apply one slice netted FROM `from`, advancing the watermark to
-    * `latest`; a nets-to-nothing slice still advances the watermark
-    * (empty commit) so the retention hold slides. The slice's FINAL
-    * commit must carry `txn`. */
+  /** Apply one slice netted from position `from`, advancing the
+    * watermark to `latest`; a nets-to-nothing slice still advances the
+    * watermark (empty commit) so the retention hold slides. The slice's
+    * FINAL commit must carry `txn`. */
   private[table] def foldNetted(ins: DataFrame, del: DataFrame,
-                                from: Long, latest: Long,
+                                from: FoldCommit.Pos, latest: Long,
                                 txn: Option[(String, Long)]): Unit
+
+  /** Batch refresh through the kernel's template: net the unprocessed
+    * range and fold it. */
+  private[table] final def refreshNetted(): Long =
+    kernel.refresh(position()) { (cdf, pos, latest) =>
+      val (ins, del) = CdfNetting.net(cdf, netIdCol, netPayloadCols, viewKind)
+      foldNetted(ins, del, pos, latest, None)
+    }
+
+  /** Streaming refresh ([[CdfNetting.startStream]]) of a netted view: a
+    * slice netting to nothing lands no commit — a replay nets to
+    * nothing again, so skipping stays idempotent. */
+  private[table] final def streamNetted(spark: SparkSession,
+                                        checkpoint: String,
+                                        trigger: org.apache.spark.sql.streaming.Trigger)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    CdfNetting.startStream(spark, this, checkpoint, trigger) {
+      (fresh, pos, maxV, txn) =>
+        val (ins, del) = CdfNetting.net(fresh, netIdCol, netPayloadCols, viewKind)
+        if (!ins.isEmpty || !del.isEmpty)
+          foldNetted(ins, del, pos, maxV, Some(txn))
+    }
 }
 
 /**
@@ -431,46 +343,96 @@ trait SignedSliceView extends StandingView {
     * streaming form also carries `_commit_version`) covering
     * `(from, latest]`, advancing the watermark to `latest`. The fold's
     * FINAL commit must carry `txn` when given. */
-  private[table] def foldRawSlice(slice: DataFrame, from: Long,
+  private[table] def foldRawSlice(slice: DataFrame, from: FoldCommit.Pos,
                                   latest: Long,
                                   txn: Option[(String, Long)]): Unit
 }
 
+/**
+ * The shared lifecycle of every ROW-LOCAL standing-index view — an
+ * index whose rows are a function of ONE source row (positions, BM25
+ * postings, MinHash signatures, PQ codes, cell assignments, benchmark
+ * shingles), so maintenance never moves a cross-document statistic:
+ *
+ *   - [[initialize]]: (optional per-view training hook), doc-id bloom
+ *     written FIRST (a crash between bloom and state can only
+ *     over-approximate, never under-cover), then one replace commit of
+ *     the full index;
+ *   - [[refresh]]: the unprocessed change-feed range nets per
+ *     (id, payload) ([[CdfNetting.net]] — coarse dir-rewrite feeds
+ *     cancel to the minimal delta); a PURE-INSERT slice lands as an
+ *     APPEND commit of the batch's own rows (the standing index is not
+ *     even read — O(batch) per day); a slice with deletes lands as
+ *     merge-on-read DELETION VECTORS (O(deleted rows) — the index is
+ *     STILL never rewritten) followed by an append of the entering
+ *     rows; past the broadcast gate the DVs go FRAME-KEYED
+ *     ([[ManagedTable.deleteVectorsMatching]] — tombstones computed
+ *     per-dir on executors, the id set never driver state), so even a
+ *     corpus-scale curation delete is an O(deleted rows) commit; only
+ *     a delete above [[RowLocalIndexView.RewriteFractionPct]] of the
+ *     state's rows rewrites, by SHUFFLED anti-join (read-amplification
+ *     honesty). Updates are the (−pre, +post) pair. Insert-id
+ *     collisions are bloom-gated against the surviving index; deletes
+ *     must describe index rows the state holds — gated on the ids of
+ *     the delta's own [[buildRows]] output, so a doc whose payload
+ *     indexes to NOTHING (empty text, text shorter than the shingle
+ *     width) deletes as a legal no-op instead of wedging the view.
+ *
+ * Exactly-once is the [[FoldCommit]] protocol: the folded source
+ * version rides each slice's final commit, every slice fences on the
+ * head its watermark was read under, and the DV path is its
+ * tombstone-then-append shape — a crash between the two resumes by
+ * re-netting the SAME immutable change-feed range and landing only the
+ * missing append. The doc-id bloom lives in its own [[ManagedTable]]
+ * (atomic replace via the commit log — no delete-then-write window
+ * where a crash leaves NO bloom), written BEFORE the state commits so
+ * any crash order only over-approximates.
+ *
+ * State-table housekeeping composes: [[purge]] materializes the
+ * accumulated deletion vectors ([[ManagedTable.purgeDeletes]]) as a
+ * watermark-less maintenance commit, transparent to the walk.
+ * Subclasses supply only [[buildRows]] (the indexing function), names,
+ * and optional training/layout/metadata hooks — the contract and its
+ * tests are shared, not stamped.
+ */
 abstract class RowLocalIndexView(
     spark: SparkSession, sourcePath: String, statePath: String,
     idCol: String, payloadCols: Seq[String],
     what: String, opPrefix: String, expectedIds: Long)
   extends CdfMaintainedView {
 
+  private[table] final val kernel =
+    new FoldCommit(spark, statePath, what, Seq(sourcePath), opPrefix)
+
   // one-pass multi-view refresh plumbing ([[StandingViews.refreshAll]]):
   // the orchestrator groups views by source/watermark/payload signature,
   // nets each signature ONCE, and hands every view its pre-netted slice
-  private[table] final def sourceTablePath: String = sourcePath
   private[table] final def netIdCol: String = idCol
   private[table] final def netPayloadCols: Seq[String] = payloadCols
-  private[table] final def viewKind: String = what
-  private[table] final override def resumePendingSlice(): Unit = {
-    resumePending(); ()
-  }
-  private[table] final def stateTxnVersion(appId: String): Option[Long] =
-    state.lastTxnVersion(appId)
-  private[table] final def stateTable: ManagedTable = state
+
+  /** The walk, after landing a half-applied slice's missing append: the
+    * change-feed range is immutable and the netting deterministic, so
+    * re-netting `(watermark, pending]` rebuilds exactly that append. */
+  private[table] final override def position(): FoldCommit.Pos =
+    kernel.resume(kernel.walk()) { pos =>
+      val p = pos.pending.get._2.head
+      val (ins, del) = CdfNetting.net(
+        CdfNetting.cdfSlice(source, pos.version, p, what), idCol, payloadCols,
+        what)
+      (buildRows(ins), refreshMeta(p, ins, del))
+    }
 
   /** Apply one pre-netted slice `(ins, del)` and advance the watermark
     * to `latest` — [[refresh]]'s tail, split out so the multi-view
     * orchestrator can net once and fold many ([[CdfMaintainedView]]).
-    * `from` is re-derived by this family's own gates, so it is not
-    * consulted here. */
+    * Every commit fences on the head `from` was read under. */
   private[table] final def foldNetted(ins: DataFrame, del: DataFrame,
-                                      from: Long, latest: Long,
-                                      txn: Option[(String, Long)]): Unit = {
-    if (ins.isEmpty && del.isEmpty) {
-      state.write(buildRows(ins), s"${opPrefix}_REFRESH", "append",
-        Some(refreshMeta(latest, ins, del)), mergeSchema = true,
-        expectedPrevVersion = state.latestVersion, txnUpdate = txn)
-      source.setRetentionHold(statePath, latest)
-    } else foldSlice(ins, del, latest, txn)
-  }
+                                      from: FoldCommit.Pos, latest: Long,
+                                      txn: Option[(String, Long)]): Unit =
+    if (ins.isEmpty && del.isEmpty)
+      kernel.append(buildRows(ins), Seq(latest),
+        refreshMeta(latest, ins, del), from.head, txn)
+    else foldSlice(ins, del, from.head, latest, txn)
 
   /** Index rows for a set of source rows — must be a per-row-local
     * function (a doc's index rows depend on that doc alone). */
@@ -518,15 +480,13 @@ abstract class RowLocalIndexView(
     * version. Subclasses that chain views off the state opt in. */
   protected def captureStateChangeData: Boolean = false
 
-  private val WatermarkRe = """"sourceVersion":(\d+)""".r
-  private val PendingRe = """\{"pendingSourceVersion":(\d+)\}""".r
   private val ReplaceMarkerRe = """"stateReplace":true""".r
   // leading-quote anchored like the agg family's — an absolute
   // live-row anchor planted by past-the-gate DV folds
   private val StateRowsRe = """"stateRows":(\d+)""".r
 
   protected final def source: ManagedTable = ManagedTable(spark, sourcePath)
-  protected final def state: ManagedTable = ManagedTable(spark, statePath)
+  protected final def state: ManagedTable = kernel.state
   private val bloomPath = statePath.stripSuffix("/") + "_bloom"
   private def bloomTable: ManagedTable = ManagedTable(spark, bloomPath)
 
@@ -553,7 +513,7 @@ abstract class RowLocalIndexView(
     * anchor), the INIT commit, or a marked full-churn replace (whose
     * `numOutputRows` IS the live count at that version). Maintenance commits
     * (purge/compact/cluster/analyze) preserve live rows and are
-    * neutral; RESTORE is neutral because [[CdfNetting.commitWalk]]
+    * neutral; RESTORE is neutral because [[FoldCommit.commits]]
     * already continues the walk below the restore target — exactly the
     * history the restored rows came from. An operation the walk cannot
     * classify answers None and the caller falls back to one narrow
@@ -563,7 +523,7 @@ abstract class RowLocalIndexView(
     val refreshOp = s"${opPrefix}_REFRESH"
     val initOp = s"${opPrefix}_INIT"
     var acc = 0L
-    CdfNetting.commitWalk(state).foreach { c =>
+    FoldCommit.commits(state).foreach { c =>
       def out = c.operationMetrics.getOrElse("numOutputRows", "0").toLong
       val anchor = c.userMetadata.flatMap(m =>
         StateRowsRe.findFirstMatchIn(m).map(_.group(1).toLong))
@@ -587,20 +547,6 @@ abstract class RowLocalIndexView(
     None
   }
 
-  /** The last source version FULLY folded into the index (the most
-    * recent watermark-bearing state commit — maintenance commits on
-    * the state table, and a half-applied slice's pending delete
-    * commit, are transparent). */
-  final def sourceVersion: Long =
-    CdfNetting.commitMetas(state, what, statePath)
-      .collectFirst {
-        case m if WatermarkRe.findFirstMatchIn(m).isDefined =>
-          WatermarkRe.findFirstMatchIn(m).get.group(1).toLong
-      }
-      .getOrElse(throw new IllegalStateException(
-        s"no commit in the $what state's history carries a sourceVersion " +
-          "watermark — was the state table created outside the view?"))
-
   /** Build from the source table's CURRENT snapshot. */
   final def initialize(): Long = {
     val v = source.latestVersion.getOrElse(throw new IllegalStateException(
@@ -611,53 +557,31 @@ abstract class RowLocalIndexView(
       bloomTable.write(
         Retrieval.bm25IndexBloom(snapshot.select(col(s"`$idCol`").as("doc_id")),
           expectedIds), s"${opPrefix}_BLOOM", "replace")
-      state.write(buildRows(snapshot), s"${opPrefix}_INIT", "replace",
-        Some(initMeta(v, snapshot)), propertiesOverride = initProperties)
-      // pin the watermark against source vacuum — routine retention can
-      // then never strand this view into an O(corpus) re-initialize; a
-      // refresh slides the pin forward, releasing folded history
-      source.setRetentionHold(statePath, v)
+      // the init pins the watermark against source vacuum — routine
+      // retention can then never strand this view into an O(corpus)
+      // re-initialize; a refresh slides the pin forward
+      kernel.init(buildRows(snapshot), Seq(v), initMeta(v, snapshot),
+        initProperties)
       v
     } finally afterInitialize()
   }
 
-  /** Fold the unprocessed change-feed range. No-op (no commit) when
-    * already current or the range nets to nothing. */
-  final def refresh(): Long = {
-    val resumed = resumePending()
-    val last = resumed.getOrElse(sourceVersion)
-    val latest = source.latestVersion.getOrElse(throw new IllegalStateException(
-      s"source table $sourcePath does not exist"))
-    require(latest >= last,
-      s"source went backwards: watermark $last, latest $latest — was the " +
-        "source table recreated? Re-initialize the view.")
-    if (latest == last) return last
-    val cdf = CdfNetting.cdfSlice(source, last, latest, what)
-    // a range netting to NOTHING (pure source compaction: coarse
-    // add/remove feeds that cancel) still advances the watermark with
-    // an empty commit inside foldNetted, so the retention hold slides —
-    // otherwise a source that only ever compacts pins its whole history
-    // against vacuum forever
-    val (ins, del) = CdfNetting.net(cdf, idCol, payloadCols, what)
-    foldNetted(ins, del, last, latest, None)
-    latest
-  }
+  /** Fold the unprocessed change-feed range. A range netting to NOTHING
+    * (pure source compaction: coarse add/remove feeds that cancel)
+    * still advances the watermark with an empty commit, so the
+    * retention hold slides — otherwise a source that only ever compacts
+    * pins its whole history against vacuum forever. No-op (no commit)
+    * when already current. */
+  final def refresh(): Long = refreshNetted()
 
   /** Apply one netted slice and advance the watermark to `latest` —
     * the shared write choreography behind [[refresh]] (batch range)
-    * and [[refreshStream]] (micro-batch). The slice's FINAL commit
-    * carries the watermark (and the stream's txn high-water). */
-  private def foldSlice(ins: DataFrame, del: DataFrame, latest: Long,
-                        txn: Option[(String, Long)]): Unit = {
-    foldSliceInner(ins, del, latest, txn)
-    // only after the slice's final commit landed: a crashed fold keeps
-    // the OLD (lower) pin, which holds MORE history — never less
-    source.setRetentionHold(statePath, latest)
-  }
-
-  private def foldSliceInner(ins: DataFrame, del: DataFrame, latest: Long,
-                             txn: Option[(String, Long)]): Unit = {
-    val fence = state.latestVersion
+    * and [[refreshStream]] (micro-batch), fenced on `fence`. The
+    * slice's FINAL commit carries the watermark (and the stream's txn
+    * high-water). */
+  private def foldSlice(ins: DataFrame, del: DataFrame, fence: Long,
+                        latest: Long, txn: Option[(String, Long)]): Unit = {
+    val w = Seq(latest)
     val (bloomBytes, _, _) = Retrieval.bm25BloomFrom(bloomTable.read)
     val insIds = ins.select(col(s"`$idCol`").as("doc_id"))
     val delIds = del.select(col(s"`$idCol`").as("doc_id"))
@@ -682,13 +606,8 @@ abstract class RowLocalIndexView(
       bloomTable.write(Retrieval.bm25BloomAdd(bloomTable.read, ins, idCol),
         s"${opPrefix}_BLOOM", "replace")
     if (del.isEmpty)
-      // mergeSchema: names and types are fixed by buildRows, but
-      // NULLABILITY can legitimately differ from the state's (a
-      // compaction pass reads-and-rewrites, widening NOT NULL away) —
-      // exact-DDL matching would refuse the append for that alone
-      state.write(buildRows(ins), s"${opPrefix}_REFRESH", "append",
-        Some(refreshMeta(latest, ins, del)), mergeSchema = true,
-        expectedPrevVersion = fence, txnUpdate = txn)
+      kernel.append(buildRows(ins), w, refreshMeta(latest, ins, del), fence,
+        txn)
     else {
       // gate on the ids the state actually HOLDS rows for — the ids of
       // the delta's own index rows, not every deleted source id (a
@@ -729,15 +648,16 @@ abstract class RowLocalIndexView(
       // cost amortizes: walks happen only on past-the-gate deletes, and
       // every such fold plants a fresh anchor one commit from the head
       var walkedOld: Option[Long] = None
-      val dvDelete
-          : Option[(Option[String], Option[(String, Long)]) => ManagedTable.Commit] =
+      type Tombstone = (Option[String], Option[(String, Long)]) =>
+        ManagedTable.Commit
+      val dvDelete: Option[Tombstone] =
         if (Similarity.fitsDriver(delStateIds, maxBroadcastIds)) {
           val ids = delStateIds.collect().map(r => String.valueOf(r.get(0)))
           val pred = col(s"`$stateIdColumn`").cast("string")
             .isin(ids.toIndexedSeq: _*)
           Some((meta, t) => state.deleteVectors(pred,
             captureChangeData = captureStateChangeData, userMetadata = meta,
-            expectedPrevVersion = fence, txnUpdate = t))
+            expectedPrevVersion = Some(fence), txnUpdate = t))
         } else {
           val old = liveStateRows.getOrElse {
             RowLocalIndexView.tierCountScans.incrementAndGet()
@@ -750,36 +670,31 @@ abstract class RowLocalIndexView(
             Some((meta, t) => state.deleteVectorsMatching(keys,
               Seq(stateIdColumn), captureChangeData = captureStateChangeData,
               userMetadata = meta,
-              expectedPrevVersion = fence, txnUpdate = t))
+              expectedPrevVersion = Some(fence), txnUpdate = t))
           } else None
         }
       dvDelete match {
         case Some(tombstone) =>
           // merge-on-read path: tombstone the deleted docs' rows —
-          // O(deleted rows), the standing index is never rewritten. Two
-          // commits when rows also enter; the delete carries a PENDING
-          // marker (not the watermark) so a crash between them resumes
+          // O(deleted rows), the standing index is never rewritten. One
+          // DV commit carrying the watermark when nothing enters, else
+          // the kernel's tombstone-then-append
           if (ins.isEmpty) {
-            tombstone(Some(refreshMeta(latest, ins, del)), txn); ()
-          } else {
-            val dvc = tombstone(
-              Some(s"""{"pendingSourceVersion":$latest}"""), None)
-            val (insRows, meta) = walkedOld match {
+            tombstone(Some(refreshMeta(latest, ins, del)), txn)
+            kernel.hold(w)
+          } else kernel.tombstoneThenAppend(w, fence, txn)(
+              (meta, _) => tombstone(meta, None)) { dvc =>
+            walkedOld match {
               case Some(old) =>
                 // the walk already priced the live count — spend one
                 // count of the batch-scale insert rows to anchor it on
                 // this commit (future walks stop here, not at INIT)
                 val rows = buildRows(ins).localCheckpoint()
-                val n = old -
-                  dvc.operationMetrics("numDeletedRows").toLong +
-                  rows.count()
+                val n = old - FoldCommit.deletedRows(dvc) + rows.count()
                 (rows, refreshMeta(latest, ins, del)
                   .replaceFirst("\\{", s"""{"stateRows":$n,"""))
               case None => (buildRows(ins), refreshMeta(latest, ins, del))
             }
-            state.write(insRows, s"${opPrefix}_REFRESH", "append",
-              Some(meta), mergeSchema = true,
-              expectedPrevVersion = state.latestVersion, txnUpdate = txn)
           }
         case None =>
           // corpus-scale delete of a state-rivaling FRACTION (a
@@ -789,10 +704,8 @@ abstract class RowLocalIndexView(
             .join(delStateIds.toDF("__del__"),
               col(s"`$stateIdColumn`").cast("string") ===
                 col("__del__").cast("string"), "anti")
-          state.write(survivors.unionByName(buildRows(ins)),
-            s"${opPrefix}_REFRESH", "replace",
-            Some(markReplace(refreshMeta(latest, ins, del))),
-            expectedPrevVersion = fence, txnUpdate = txn)
+          kernel.replace(survivors.unionByName(buildRows(ins)), w,
+            markReplace(refreshMeta(latest, ins, del)), fence, txn)
       }
     }
   }
@@ -800,44 +713,16 @@ abstract class RowLocalIndexView(
   /** STREAMING maintenance: the source's CDF stream folds into the
     * index per micro-batch with the SAME netting, gates, and write
     * choreography as [[refresh]] — a streaming curation pipeline's
-    * indexes stay current without a batch CALL. Exactly-once mirrors
-    * [[IncrementalView.refreshStream]]: the slice's final commit
-    * carries the (checkpoint, epoch) transaction high-water so a
-    * crash-replayed micro-batch is recognized; each fold advances the
-    * `sourceVersion` watermark to the batch's max `_commit_version`
-    * and drops batch rows at or below it, so batch [[refresh]] calls
-    * interleave safely with a resumed checkpoint; a half-applied DV
-    * slice (crash between the delete and the insert append) resumes
-    * through the same pending-marker recovery. Caller drains/stops the
-    * returned query. */
+    * indexes stay current without a batch CALL. Exactly-once is
+    * [[CdfNetting.startStream]]'s: the slice's final commit carries the
+    * (checkpoint, epoch) transaction high-water, batch rows at or below
+    * the watermark drop, and a half-applied DV slice resumes first.
+    * Caller drains/stops the returned query. */
   final def refreshStream(checkpoint: String,
                           trigger: org.apache.spark.sql.streaming.Trigger =
                             org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    CdfNetting.startStream(spark, sourcePath, () => state, checkpoint,
-      trigger, idCol, payloadCols, what, () => sourceVersion,
-      () => { resumePending(); () },
-      (ins, del, _, maxV, txn) => foldSlice(ins, del, maxV, Some(txn)))
-
-  /** Finish a half-applied delete-bearing slice: the DV delete commit
-    * landed with a pending marker but the insert append did not (crash
-    * between the two). The change-feed range is immutable and the
-    * netting deterministic, so re-deriving the slice and landing only
-    * the missing append is exactly-once. Returns the recovered
-    * watermark, or None when nothing was pending. */
-  private def resumePending(): Option[Long] =
-    state.lastCommit.flatMap(_.userMetadata)
-      .flatMap(m => PendingRe.findFirstMatchIn(m).map(_.group(1).toLong))
-      .map { p =>
-        val w = sourceVersion // pending markers are transparent to this
-        val cdf = CdfNetting.cdfSlice(source, w, p, what)
-        val (ins, del) = CdfNetting.net(cdf, idCol, payloadCols, what)
-        state.write(buildRows(ins), s"${opPrefix}_REFRESH", "append",
-          Some(refreshMeta(p, ins, del)), mergeSchema = true,
-          expectedPrevVersion = state.latestVersion)
-        source.setRetentionHold(statePath, p)
-        p
-      }
+    streamNetted(spark, checkpoint, trigger)
 
   /** Materialize the deletion vectors the DV refresh path accumulates
     * — [[ManagedTable.purgeDeletes]] as the view's own maintenance
@@ -863,18 +748,8 @@ abstract class RowLocalIndexView(
     * AS-OF reads older than the horizon are gone by policy, exactly
     * like table time travel after vacuum. */
   final def vacuum(keepLast: Int): ManagedTable.VacuumStats = {
-    // clamp to the newest WATERMARK-BEARING commit: when the head is a
-    // run of watermark-less maintenance commits (OPTIMIZE/CLUSTER land
-    // above the last refresh), a count-based cut could prune every
-    // watermarked commit and wedge the view's walks — keep at least
-    // back to the newest one
-    val wmV = state.metaHistory.collectFirst {
-      case c if c.userMetadata.exists(m =>
-        WatermarkRe.findFirstMatchIn(m).isDefined) => c.version
-    }
-    val keep = (for { w <- wmV; l <- state.latestVersion }
-      yield math.max(keepLast.toLong, l - w + 1).toInt).getOrElse(keepLast)
-    val stats = state.vacuum(keep)
+    // clamped to the newest watermark-bearing commit (FoldCommit.vacuum)
+    val stats = kernel.vacuum(keepLast)
     if (bloomTable.exists) { bloomTable.vacuum(1); () }
     afterVacuum()
     stats
@@ -957,15 +832,7 @@ abstract class RowLocalIndexView(
     * sourceVersionAt(v))`. A pending half-applied delete commit at the
     * pin is transparent, exactly like the live walk. */
   final def sourceVersionAt(stateVersion: Long): Long =
-    CdfNetting.commitMetas(state, what, statePath, Some(stateVersion))
-      .collectFirst {
-        case m if WatermarkRe.findFirstMatchIn(m).isDefined =>
-          WatermarkRe.findFirstMatchIn(m).get.group(1).toLong
-      }
-      .getOrElse(throw new IllegalStateException(
-        s"no commit at or below state version $stateVersion carries a " +
-          s"sourceVersion watermark — is $stateVersion before the $what's " +
-          "initialize()?"))
+    kernel.walk(Some(stateVersion)).version
 
   /** The maintained index. */
   final def read: DataFrame = state.read
@@ -1020,20 +887,20 @@ object StandingViews {
     // two sources' fold chains (guide §2.6)
     inParallel(views.groupBy(_.sourceTablePath).toSeq.map {
       case (srcPath, group) => () =>
-      // finish any half-applied DV slice first (its pending range is
-      // already tombstoned; the watermark must reflect the completed
-      // fold before this pass nets from it)
-      group.foreach(_.resumePendingSlice())
+      // each view's position, after finishing any half-applied DV
+      // slice (its pending range is already tombstoned; the watermark
+      // must reflect the completed fold before this pass nets from it)
+      val at = group.map(v => v -> v.position())
       val source = ManagedTable(spark, srcPath)
       val latest = source.latestVersion.getOrElse(
         throw new IllegalStateException(
           s"source table $srcPath does not exist"))
-      group.groupBy(_.sourceVersion).foreach { case (wm, g) =>
+      at.groupBy(_._2.version).foreach { case (wm, g) =>
         require(latest >= wm,
           s"source went backwards: watermark $wm, latest $latest — was " +
             "the source table recreated? Re-initialize the views.")
         if (latest != wm) {
-          val needed = g.flatMap(_.neededSliceCols).distinct
+          val needed = g.flatMap(_._1.neededSliceCols).distinct
           val slice = CdfNetting
             .cdfSlice(source, wm, latest, "multi-view refresh")
             .select((needed.map(c => col(s"`$c`")) :+ col("_change_type")): _*)
@@ -1048,15 +915,15 @@ object StandingViews {
           // — only the cross-VIEW ordering (which nothing observes:
           // each state table is independent and exactly-once on its own
           // fence) becomes concurrent.
-          val netFolds = g.collect { case v: CdfMaintainedView => v }
-            .groupBy(v => (v.netIdCol, v.netPayloadCols)).toSeq.flatMap {
+          val netFolds = g.collect { case (v: CdfMaintainedView, p) => (v, p) }
+            .groupBy(vp => (vp._1.netIdCol, vp._1.netPayloadCols)).toSeq.flatMap {
               case ((id, pay), vs) =>
                 val (ins, del) = CdfNetting.net(slice, id, pay,
-                  s"multi-view refresh (${vs.map(_.viewKind).mkString(", ")})")
-                vs.map(v => () => v.foldNetted(ins, del, wm, latest, None))
+                  s"multi-view refresh (${vs.map(_._1.viewKind).mkString(", ")})")
+                vs.map { case (v, p) => () => v.foldNetted(ins, del, p, latest, None) }
             }
-          val rawFolds = g.collect { case v: SignedSliceView => v }
-            .map(v => () => v.foldRawSlice(slice, wm, latest, None))
+          val rawFolds = g.collect { case (v: SignedSliceView, p) =>
+            () => v.foldRawSlice(slice, p, latest, None) }
           StandingViews.inParallel(netFolds ++ rawFolds)
         }
       }
@@ -1118,14 +985,6 @@ object StandingViews {
     }
   }
 
-  /** STREAMING form: ONE CDF stream over the shared source drives every
-    * view's fold per micro-batch — netted once per (watermark, payload
-    * signature) from the checkpointed batch. Exactly-once PER VIEW: each
-    * fold's final commit carries the (checkpoint, epoch) transaction
-    * high-water on that view's own state, so a crash after view k folded
-    * but view k+1 did not replays the epoch folding only the k+1 tail;
-    * the re-created-checkpoint refusal is per view too. Caller
-    * drains/stops the returned query. */
   /** Multi-SOURCE streaming form: one CDF stream per source table,
     * each under its own DETERMINISTIC checkpoint subdirectory of
     * `checkpoint` (keyed by a content hash of the source path, so a
@@ -1188,6 +1047,14 @@ object StandingViews {
     base ++ auxOnly
   }
 
+  /** STREAMING form: ONE CDF stream over the shared source drives every
+    * view's fold per micro-batch — netted once per (watermark, payload
+    * signature) from the checkpointed batch. Exactly-once PER VIEW: each
+    * fold's final commit carries the (checkpoint, epoch) transaction
+    * high-water on that view's own state, so a crash after view k folded
+    * but view k+1 did not replays the epoch folding only the k+1 tail;
+    * the re-created-checkpoint refusal is per view too. Caller
+    * drains/stops the returned query. */
   def refreshStreamAll(spark: SparkSession, views: Seq[StandingView],
                        checkpoint: String,
                        trigger: org.apache.spark.sql.streaming.Trigger =
@@ -1223,26 +1090,26 @@ object StandingViews {
                 "high-water but carries commits beyond the watermark. Use " +
                 "a FRESH checkpoint path.")
         } else {
-          live.foreach(_.resumePendingSlice())
+          val at = live.map(v => v -> v.position())
           val needed = live.flatMap(_.neededSliceCols).distinct
           val slice = batch.select((needed.map(c => col(s"`$c`")) :+
             col("_change_type") :+ col("_commit_version")): _*)
             .localCheckpoint()
-          live.groupBy(_.sourceVersion).foreach { case (wm, group) =>
+          val txn = Some((appId, epochId))
+          at.groupBy(_._2.version).foreach { case (wm, group) =>
             val fresh = slice.filter(col("_commit_version") > wm)
             val maxV = fresh.agg(max(col("_commit_version"))).head()
             if (!maxV.isNullAt(0)) {
-              group.collect { case v: CdfMaintainedView => v }
-                .groupBy(v => (v.netIdCol, v.netPayloadCols)).foreach {
+              group.collect { case (v: CdfMaintainedView, p) => (v, p) }
+                .groupBy(vp => (vp._1.netIdCol, vp._1.netPayloadCols)).foreach {
                   case ((id, pay), vs) =>
                     val (ins, del) = CdfNetting.net(fresh, id, pay,
-                      s"multi-view stream (${vs.map(_.viewKind).mkString(", ")})")
-                    vs.foreach(_.foldNetted(ins, del, wm, maxV.getLong(0),
-                      Some((appId, epochId))))
+                      s"multi-view stream (${vs.map(_._1.viewKind).mkString(", ")})")
+                    vs.foreach { case (v, p) =>
+                      v.foldNetted(ins, del, p, maxV.getLong(0), txn) }
                 }
-              group.collect { case v: SignedSliceView => v }
-                .foreach(_.foldRawSlice(fresh, wm, maxV.getLong(0),
-                  Some((appId, epochId))))
+              group.collect { case (v: SignedSliceView, p) =>
+                v.foldRawSlice(fresh, p, maxV.getLong(0), txn) }
             }
           }
           // continuous pipelines accrue ~2 read-overhead dirs per fold;
@@ -1460,9 +1327,8 @@ final class SemanticIndexView(spark: SparkSession, sourcePath: String,
     // the OLD quantizer
     val walked =
       if (state.exists)
-        CdfNetting.commitMetas(state, "semantic view", statePath, atOrBelow)
-          .collectFirst { case m if CentsRe.findFirstMatchIn(m).isDefined =>
-            CentsRe.findFirstMatchIn(m).get.group(1).toLong }
+        FoldCommit.metaFirst(state, "semantic view", statePath, atOrBelow)(
+          m => CentsRe.findFirstMatchIn(m).map(_.group(1).toLong))
       else None
     walked.getOrElse(throw new IllegalStateException(
       "no commit in the semantic view state's history names a quantizer " +
@@ -1600,10 +1466,9 @@ final class AnnIndexView(spark: SparkSession, sourcePath: String,
     // OLD codes under the OLD quantizer pair
     val walked =
       if (state.exists)
-        CdfNetting.commitMetas(state, "ann index view", statePath, atOrBelow)
-          .collectFirst { case m if QuantRe.findFirstMatchIn(m).isDefined =>
-            val g = QuantRe.findFirstMatchIn(m).get
-            (g.group(1).toLong, g.group(2).toLong) }
+        FoldCommit.metaFirst(state, "ann index view", statePath, atOrBelow)(
+          m => QuantRe.findFirstMatchIn(m)
+            .map(g => (g.group(1).toLong, g.group(2).toLong)))
       else None
     walked.getOrElse(throw new IllegalStateException(
       "no commit in the ann view state's history names quantizer " +
@@ -1776,8 +1641,8 @@ final class AnnIndexView(spark: SparkSession, sourcePath: String,
  * is the honest, simple plan; there is no 10^10-row frame anywhere).
  * A negative folded count (deleting occurrences that were never added
  * — a feed that does not describe this corpus) refuses loudly before
- * the commit. Watermarks, restart recovery, and the concurrency fence
- * are the family's, verbatim.
+ * the commit. Watermark, restart recovery and the concurrency fence
+ * are the [[FoldCommit]] kernel's.
  */
 final class CorpusLmView(spark: SparkSession, sourcePath: String,
                          statePath: String,
@@ -1785,104 +1650,58 @@ final class CorpusLmView(spark: SparkSession, sourcePath: String,
                          idCol: String = "doc_id")
   extends CdfMaintainedView {
 
-  private def meta(v: Long) = Some(s"""{"sourceVersion":$v}""")
-  private val MetaRe = """\{"sourceVersion":(\d+)\}""".r
-
+  private[table] val kernel =
+    new FoldCommit(spark, statePath, "lm view", Seq(sourcePath), "LM")
   private def source = ManagedTable(spark, sourcePath)
-  private def state = ManagedTable(spark, statePath)
+  private def state = kernel.state
 
   // one-pass family refresh plumbing: the LM nets per (doc_id, text) —
   // the SAME signature as the text index views, so the orchestrator
   // tokenizes the shared slice's netting once for all of them
-  private[table] def sourceTablePath: String = sourcePath
   private[table] def netIdCol: String = idCol
   private[table] def netPayloadCols: Seq[String] = Seq(textCol)
-  private[table] def viewKind: String = "lm view"
-  private[table] def stateTxnVersion(appId: String): Option[Long] =
-    state.lastTxnVersion(appId)
-  private[table] def stateTable: ManagedTable = state
 
+  /** Apply one netted slice onto the standing model and advance the
+    * watermark to `latest`: one replace, fenced on the head the slice's
+    * watermark was read under ([[FoldCommit]]) — the additive fold can
+    * never land twice (a double-fold would silently double every count
+    * in the slice, the quiet corruption the row-local family's id gates
+    * catch structurally). A slice netting to nothing (pure compaction)
+    * lands an EMPTY append (never an O(vocab) rewrite) so the retention
+    * hold slides. */
   private[table] def foldNetted(ins: DataFrame, del: DataFrame,
-                                from: Long, latest: Long,
+                                from: FoldCommit.Pos, latest: Long,
                                 txn: Option[(String, Long)]): Unit = {
-    if (ins.isEmpty && del.isEmpty) {
-      // nets to nothing (pure compaction): advance the watermark with an
-      // EMPTY append (zero rows — never an O(vocab) rewrite) so the
-      // retention hold slides
-      state.write(state.read.limit(0), "LM_REFRESH", "append", meta(latest),
-        expectedPrevVersion = state.latestVersion, txnUpdate = txn)
-      source.setRetentionHold(statePath, latest)
-    } else foldSlice(ins, del, from, latest, txn)
+    val w = Seq(latest)
+    if (ins.isEmpty && del.isEmpty)
+      kernel.append(state.read.limit(0), w, kernel.mark(w), from.head, txn)
+    else {
+      val lm = graft.llm.TextOps.unigramModel(_: DataFrame, textCol, idCol)
+      val delta = lm(ins).select(col("tok"), col("freq"))
+        .unionByName(lm(del).select(col("tok"), (-col("freq")).as("freq")))
+      val merged = state.read.select("tok", "freq").unionByName(delta)
+        .groupBy("tok").agg(sum("freq").as("freq"))
+        .localCheckpoint()
+      require(merged.filter(col("freq") < 0L).isEmpty,
+        "lm view: the folded model went NEGATIVE for some token — the " +
+          "slice subtracts occurrences this corpus never added; re-initialize")
+      kernel.replace(merged.filter(col("freq") > 0L), w, kernel.mark(w),
+        from.head, txn)
+    }
   }
-
-  /** The last source version folded into the model (maintenance
-    * commits on the state table are transparent). */
-  def sourceVersion: Long =
-    CdfNetting.commitMetas(state, "lm view", statePath)
-      .collectFirst { case MetaRe(v) => v.toLong }
-      .getOrElse(throw new IllegalStateException(
-        "no commit in the lm view state's history carries a sourceVersion " +
-          "watermark — was the state table created outside the view?"))
 
   /** Build the model from the corpus's CURRENT snapshot. */
   def initialize(): Long = {
     val v = source.latestVersion.getOrElse(throw new IllegalStateException(
       s"source table $sourcePath does not exist"))
-    state.write(graft.llm.TextOps.unigramModel(source.read, textCol, idCol),
-      "LM_INIT", "replace", meta(v))
-    source.setRetentionHold(statePath, v)
+    kernel.init(graft.llm.TextOps.unigramModel(source.read, textCol, idCol),
+      Seq(v), kernel.mark(Seq(v)))
     v
   }
 
   /** Fold the unprocessed change-feed range. No-op (no commit) when
-    * already current or the range nets to nothing. */
-  def refresh(): Long = {
-    val last = sourceVersion
-    val latest = source.latestVersion.getOrElse(throw new IllegalStateException(
-      s"source table $sourcePath does not exist"))
-    require(latest >= last,
-      s"source went backwards: watermark $last, latest $latest — was the " +
-        "corpus table recreated? Re-initialize the view.")
-    if (latest == last) return last
-    val cdf = CdfNetting.cdfSlice(source, last, latest, "lm view")
-    val (ins, del) = CdfNetting.net(cdf, idCol, Seq(textCol), "lm view")
-    foldNetted(ins, del, last, latest, None)
-    latest
-  }
-
-  /** Apply one netted slice onto the standing model and advance the
-    * watermark to `latest`. Race-safe WITHOUT id gates (this fold has
-    * none — counts just move): the fence is captured BEFORE the
-    * standing model is read, and the watermark re-checks under that
-    * fence, so a racing refresh that already folded this range turns
-    * this call into a no-op, and one that lands AFTER the fence makes
-    * the replace fail its `expectedPrevVersion` loudly — the additive
-    * fold can never land twice (a double-fold would silently double
-    * every count in the slice, the quiet corruption the row-local
-    * family's id gates catch structurally). */
-  private def foldSlice(ins: DataFrame, del: DataFrame, from: Long,
-                        latest: Long,
-                        txn: Option[(String, Long)]): Unit = {
-    val fence = state.latestVersion
-    val w = sourceVersion
-    if (w >= latest) return
-    require(w == from,
-      s"lm view watermark advanced from $from to $w while this refresh " +
-        "netted its slice — a concurrent refresh interleaved; re-run")
-    val lm = graft.llm.TextOps.unigramModel(_: DataFrame, textCol, idCol)
-    val delta = lm(ins).select(col("tok"), col("freq"))
-      .unionByName(lm(del).select(col("tok"), (-col("freq")).as("freq")))
-    val merged = state.read.select("tok", "freq").unionByName(delta)
-      .groupBy("tok").agg(sum("freq").as("freq"))
-      .localCheckpoint()
-    require(merged.filter(col("freq") < 0L).isEmpty,
-      "lm view: the folded model went NEGATIVE for some token — the slice " +
-        "subtracts occurrences this corpus never added; re-initialize")
-    state.write(merged.filter(col("freq") > 0L), "LM_REFRESH", "replace",
-      meta(latest), expectedPrevVersion = fence, txnUpdate = txn)
-    source.setRetentionHold(statePath, latest)
-    ()
-  }
+    * already current. */
+  def refresh(): Long = refreshNetted()
 
   /** STREAMING maintenance — the corpus's CDF stream folds into the
     * standing model per micro-batch with the same netting and
@@ -1895,10 +1714,7 @@ final class CorpusLmView(spark: SparkSession, sourcePath: String,
                     trigger: org.apache.spark.sql.streaming.Trigger =
                       org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    CdfNetting.startStream(spark, sourcePath, () => state, checkpoint,
-      trigger, idCol, Seq(textCol), "lm view", () => sourceVersion,
-      () => (),
-      (ins, del, from, maxV, txn) => foldSlice(ins, del, from, maxV, Some(txn)))
+    streamNetted(spark, checkpoint, trigger)
 
   /** The maintained `(tok, freq)` model — feed straight into
     * [[graft.llm.TextOps.rareTokenScoreWith]] /
@@ -1931,50 +1747,34 @@ final class ClassifierModelView(spark: SparkSession, sourcePath: String,
   extends CdfMaintainedView {
   import graft.llm.QualityClassifier
 
+  private[table] val kernel = new FoldCommit(spark, statePath,
+    "classifier view", Seq(sourcePath), "NB")
+  private def source = ManagedTable(spark, sourcePath)
+  private def state = kernel.state
+
   // one-pass family refresh plumbing — the classifier nets per
   // (doc_id, text, label), its own payload signature
-  private[table] def sourceTablePath: String = sourcePath
   private[table] def netIdCol: String = idCol
   private[table] def netPayloadCols: Seq[String] = Seq(textCol, labelCol)
-  private[table] def viewKind: String = "classifier view"
-  private[table] def stateTxnVersion(appId: String): Option[Long] =
-    ManagedTable(spark, statePath).lastTxnVersion(appId)
-  private[table] def stateTable: ManagedTable = ManagedTable(spark, statePath)
-
-  private[table] def foldNetted(ins: DataFrame, del: DataFrame,
-                                from: Long, latest: Long,
-                                txn: Option[(String, Long)]): Unit = {
-    if (ins.isEmpty && del.isEmpty) {
-      // nets to nothing (pure compaction): advance the watermark with an
-      // EMPTY append (zero rows — never an O(vocab) rewrite) so the
-      // retention hold slides; priors carry over unchanged
-      val (_, dp, dn) = watermark
-      val st = ManagedTable(spark, statePath)
-      st.write(st.read.limit(0), "NB_REFRESH", "append",
-        meta(latest, dp, dn), expectedPrevVersion = st.latestVersion,
-        txnUpdate = txn)
-      ManagedTable(spark, sourcePath).setRetentionHold(statePath, latest)
-    } else foldSlice(ins, del, from, latest, txn)
-  }
 
   private def meta(v: Long, dPos: Long, dNeg: Long) =
-    Some(s"""{"sourceVersion":$v,"dPos":$dPos,"dNeg":$dNeg}""")
-  private val MetaRe =
-    """\{"sourceVersion":(\d+),"dPos":(\d+),"dNeg":(\d+)\}""".r
+    kernel.mark(Seq(v), "dPos" -> dPos, "dNeg" -> dNeg)
+  private val PriorsRe = """"dPos":(\d+),"dNeg":(\d+)""".r
 
-  private def source = ManagedTable(spark, sourcePath)
-  private def state = ManagedTable(spark, statePath)
+  /** The doc-count priors riding the watermark commit of `pos`. */
+  private def priors(pos: FoldCommit.Pos): (Long, Long) =
+    pos.at.userMetadata.flatMap(PriorsRe.findFirstMatchIn)
+      .map(g => (g.group(1).toLong, g.group(2).toLong))
+      .getOrElse(throw new IllegalStateException(
+        s"classifier view state commit ${pos.at.version} carries no priors"))
 
   /** (folded source version, positive-doc prior, negative-doc prior)
     * — maintenance commits on the state table are transparent. */
-  def watermark: (Long, Long, Long) =
-    CdfNetting.commitMetas(state, "classifier view", statePath)
-      .collectFirst { case MetaRe(v, p, n) => (v.toLong, p.toLong, n.toLong) }
-      .getOrElse(throw new IllegalStateException(
-        "no commit in the classifier view state's history carries a " +
-          "watermark — was the state table created outside the view?"))
-
-  def sourceVersion: Long = watermark._1
+  def watermark: (Long, Long, Long) = {
+    val pos = kernel.walk()
+    val (dp, dn) = priors(pos)
+    (pos.version, dp, dn)
+  }
 
   private def priorsOf(docs: DataFrame): (Long, Long) = {
     // coalesce: sum() over an empty side (e.g. a delete-less slice) is NULL
@@ -1990,65 +1790,46 @@ final class ClassifierModelView(spark: SparkSession, sourcePath: String,
       s"source table $sourcePath does not exist"))
     val snapshot = source.read
     val (dp, dn) = priorsOf(snapshot)
-    state.write(QualityClassifier.train(snapshot, textCol, labelCol),
-      "NB_INIT", "replace", meta(v, dp, dn))
-    source.setRetentionHold(statePath, v)
+    kernel.init(QualityClassifier.train(snapshot, textCol, labelCol), Seq(v),
+      meta(v, dp, dn))
     v
   }
 
   /** Fold the unprocessed change-feed range. No-op (no commit) when
-    * already current or the range nets to nothing. */
-  def refresh(): Long = {
-    val last = sourceVersion
-    val latest = source.latestVersion.getOrElse(throw new IllegalStateException(
-      s"source table $sourcePath does not exist"))
-    require(latest >= last,
-      s"source went backwards: watermark $last, latest $latest — was the " +
-        "corpus table recreated? Re-initialize the view.")
-    if (latest == last) return last
-    val cdf = CdfNetting.cdfSlice(source, last, latest, "classifier view")
-    val (ins, del) = CdfNetting.net(cdf, idCol, Seq(textCol, labelCol),
-      "classifier view")
-    foldNetted(ins, del, last, latest, None)
-    latest
-  }
+    * already current. */
+  def refresh(): Long = refreshNetted()
 
   /** Apply one netted slice onto the standing model and advance the
-    * watermark to `latest` — fence captured BEFORE the standing model
-    * (and the priors it pairs with) is read, watermark re-checked
-    * under that fence, so the additive fold can never land twice
-    * (same contract as [[CorpusLmView]]'s fold; a double-fold would
-    * silently double the slice's counts AND move the priors twice). */
-  private def foldSlice(ins: DataFrame, del: DataFrame, from: Long,
-                        latest: Long,
-                        txn: Option[(String, Long)]): Unit = {
-    val fence = state.latestVersion
-    val (last, dp0, dn0) = watermark
-    if (last >= latest) return
-    require(last == from,
-      s"classifier view watermark advanced from $from to $last while this " +
-        "refresh netted its slice — a concurrent refresh interleaved; re-run")
-    val train = QualityClassifier.train(_: DataFrame, textCol, labelCol)
-    val delta = train(ins)
-      .unionByName(train(del).select(col("token"),
-        (-col("n_pos")).as("n_pos"), (-col("n_neg")).as("n_neg")))
-    val merged = state.read.select("token", "n_pos", "n_neg")
-      .unionByName(delta)
-      .groupBy("token")
-      .agg(sum("n_pos").as("n_pos"), sum("n_neg").as("n_neg"))
-      .localCheckpoint()
-    require(merged.filter(col("n_pos") < 0L || col("n_neg") < 0L).isEmpty,
-      "classifier view: the folded model went NEGATIVE for some token — " +
-        "the slice subtracts counts this corpus never added; re-initialize")
-    val (dpi, dni) = priorsOf(ins)
-    val (dpd, dnd) = priorsOf(del)
-    state.write(
-      merged.filter(col("n_pos") > 0L || col("n_neg") > 0L),
-      "NB_REFRESH", "replace",
-      meta(latest, dp0 + dpi - dpd, dn0 + dni - dnd),
-      expectedPrevVersion = fence, txnUpdate = txn)
-    source.setRetentionHold(statePath, latest)
-    ()
+    * watermark to `latest` — the same contract as [[CorpusLmView]]'s
+    * fold (a double-fold would silently double the slice's counts AND
+    * move the priors twice); the priors carry over unchanged through a
+    * slice netting to nothing. */
+  private[table] def foldNetted(ins: DataFrame, del: DataFrame,
+                                from: FoldCommit.Pos, latest: Long,
+                                txn: Option[(String, Long)]): Unit = {
+    val (dp0, dn0) = priors(from)
+    val w = Seq(latest)
+    if (ins.isEmpty && del.isEmpty)
+      kernel.append(state.read.limit(0), w, meta(latest, dp0, dn0), from.head,
+        txn)
+    else {
+      val train = QualityClassifier.train(_: DataFrame, textCol, labelCol)
+      val delta = train(ins)
+        .unionByName(train(del).select(col("token"),
+          (-col("n_pos")).as("n_pos"), (-col("n_neg")).as("n_neg")))
+      val merged = state.read.select("token", "n_pos", "n_neg")
+        .unionByName(delta)
+        .groupBy("token")
+        .agg(sum("n_pos").as("n_pos"), sum("n_neg").as("n_neg"))
+        .localCheckpoint()
+      require(merged.filter(col("n_pos") < 0L || col("n_neg") < 0L).isEmpty,
+        "classifier view: the folded model went NEGATIVE for some token — " +
+          "the slice subtracts counts this corpus never added; re-initialize")
+      val (dpi, dni) = priorsOf(ins)
+      val (dpd, dnd) = priorsOf(del)
+      kernel.replace(merged.filter(col("n_pos") > 0L || col("n_neg") > 0L), w,
+        meta(latest, dp0 + dpi - dpd, dn0 + dni - dnd), from.head, txn)
+    }
   }
 
   /** STREAMING maintenance — the labeled corpus's CDF stream folds
@@ -2061,10 +1842,7 @@ final class ClassifierModelView(spark: SparkSession, sourcePath: String,
                     trigger: org.apache.spark.sql.streaming.Trigger =
                       org.apache.spark.sql.streaming.Trigger.AvailableNow())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    CdfNetting.startStream(spark, sourcePath, () => state, checkpoint,
-      trigger, idCol, Seq(textCol, labelCol), "classifier view",
-      () => sourceVersion, () => (),
-      (ins, del, from, maxV, txn) => foldSlice(ins, del, from, maxV, Some(txn)))
+    streamNetted(spark, checkpoint, trigger)
 
   /** The maintained `(token, n_pos, n_neg)` model. */
   def read: DataFrame = state.read

@@ -379,4 +379,73 @@ class Bm25IndexViewSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] { view.refresh() }
     assert(e.getMessage.contains("went backwards"))
   }
+
+  test("a maintenance commit on top of a pending tombstone does not hide " +
+      "it: the next refresh still lands the missing append") {
+    val src = tmpDir("bm25v_crashm")
+    val st = tmpDir("bm25v_crashms")
+    val t = ManagedTable(spark, src)
+    t.write(corpus, "APPEND", "append")
+    val view = new Bm25IndexView(spark, src, st, expectedDocs = 1000)
+    view.initialize()
+    t.delete(col("doc_id") === 2L)
+    val ins = Seq((8L, "stream stream merge")).toDF("doc_id", "text")
+    t.write(ins, "APPEND", "append")
+    val bloom = ManagedTable(spark, st.stripSuffix("/") + "_bloom")
+    bloom.write(Retrieval.bm25BloomAdd(bloom.read, ins, "doc_id"),
+      "BM25_BLOOM", "replace")
+    val s = ManagedTable(spark, st)
+    s.deleteVectors(col("doc_id").cast("string").isin("2"),
+      userMetadata = Some("""{"pendingSourceVersion":2}"""))
+    view.purge()
+    assert(view.refresh() === 2L)
+    val rebuilt = Retrieval.bm25Postings(t.read)
+    assert(view.read.exceptAll(rebuilt).isEmpty &&
+      rebuilt.exceptAll(view.read).isEmpty)
+  }
+
+  test("on-disk format: each row-local fold shape writes its exact " +
+      "operation and metadata") {
+    val src = tmpDir("bm25v_fmt")
+    val st = tmpDir("bm25v_fmts")
+    val t = ManagedTable(spark, src)
+    t.write(corpus, "APPEND", "append")
+    // cap 1: a two-id delete takes the past-the-gate tiers
+    val view = new Bm25IndexView(spark, src, st, expectedDocs = 1000,
+      deleteBroadcastCap = 1)
+    view.initialize()
+    // nets to nothing: empty append
+    t.update(Map("text" -> col("text")), col("doc_id") === 1L,
+      captureChangeData = true)
+    view.refresh()
+    // pure insert: append
+    t.write(Seq((8L, "merge stream")).toDF("doc_id", "text"), "APPEND",
+      "append")
+    view.refresh()
+    // one id deleted, one entering: tombstone-then-append
+    t.delete(col("doc_id") === 5L)
+    t.write(Seq((9L, "spark window")).toDF("doc_id", "text"), "APPEND",
+      "append")
+    view.refresh()
+    // a small past-the-gate delete with an insert: the append plants
+    // the live-row anchor
+    t.delete(col("doc_id").isin(2L, 9L))
+    t.write(Seq((10L, "table")).toDF("doc_id", "text"), "APPEND", "append")
+    view.refresh()
+    // most of the state leaves: replace
+    t.delete(col("doc_id").isin(1L, 3L, 4L, 6L))
+    view.refresh()
+    assert(ManagedTable(spark, st).history.reverse
+        .map(c => (c.operation, c.userMetadata.orNull)) === Seq(
+      ("BM25_INIT", """{"sourceVersion":0,"nDocs":7,"totalLen":23}"""),
+      ("BM25_REFRESH", """{"sourceVersion":1,"nDocs":7,"totalLen":23}"""),
+      ("BM25_REFRESH", """{"sourceVersion":2,"nDocs":8,"totalLen":25}"""),
+      ("DELETE VECTORS", """{"pendingSourceVersion":4}"""),
+      ("BM25_REFRESH", """{"sourceVersion":4,"nDocs":8,"totalLen":26}"""),
+      ("DELETE VECTORS", """{"pendingSourceVersion":6}"""),
+      ("BM25_REFRESH",
+        """{"stateRows":14,"sourceVersion":6,"nDocs":7,"totalLen":23}"""),
+      ("BM25_REFRESH",
+        """{"stateReplace":true,"sourceVersion":7,"nDocs":3,"totalLen":6}""")))
+  }
 }

@@ -312,4 +312,59 @@ class IncrementalJoinViewSpec extends SparkSpec {
     view.refresh()
     assert(ManagedTable(spark, sp).latestVersion === vBefore)
   }
+
+  test("a maintenance commit on top of a pending tombstone does not hide " +
+      "it: the next refresh still lands the missing append") {
+    val lp = tmpDir("jv_crm_l"); val rp = tmpDir("jv_crm_r")
+    val sp = tmpDir("jv_crm_s")
+    val l = ManagedTable(spark, lp); val r = ManagedTable(spark, rp)
+    l.write((1 to 50).map(i => (i % 5, s"d$i", i * 1.0))
+      .toDF("k", "d", "x"), "APPEND", "append")
+    r.write((0 until 5).map(k => (k, s"w$k")).toDF("k", "w"),
+      "APPEND", "append")
+    val view = new IncrementalJoinAggView(spark, lp, rp, sp,
+      joinKeys = Seq("k"), groupCols = Seq("d"), sumCols = Seq("x"))
+    view.initialize()
+    l.update(Map("x" -> (col("x") + 100)), col("d").isin("d3", "d5"),
+      captureChangeData = true)
+    l.write(Seq((1, "d51", 7.0)).toDF("k", "d", "x"), "APPEND", "append")
+    val s = ManagedTable(spark, sp)
+    s.deleteVectorsMatching(Seq("d3", "d5").toDF("d"), Seq("d"),
+      userMetadata = Some(
+        """{"pendingLeftVersion":2,"pendingRightVersion":0}"""))
+    s.purgeDeletes()
+    assert(view.refresh() === ((2L, 0L)))
+    check(view, l, r)
+  }
+
+  test("on-disk format: each join fold shape writes its exact operation " +
+      "and metadata") {
+    val lp = tmpDir("jv_fmt_l"); val rp = tmpDir("jv_fmt_r")
+    val sp = tmpDir("jv_fmt_s")
+    val l = ManagedTable(spark, lp); val r = ManagedTable(spark, rp)
+    l.write((1 to 20).map(i => (i % 5, s"d$i", i * 1.0))
+      .toDF("k", "d", "x"), "APPEND", "append")
+    r.write((0 until 5).map(k => (k, s"w$k")).toDF("k", "w"),
+      "APPEND", "append")
+    val view = new IncrementalJoinAggView(spark, lp, rp, sp,
+      joinKeys = Seq("k"), groupCols = Seq("d"), sumCols = Seq("x"))
+    view.initialize()
+    l.update(Map("x" -> col("x")), col("d") === "d1", captureChangeData = true)
+    view.refresh()
+    l.write(Seq((1, "d21", 1.0)).toDF("k", "d", "x"), "APPEND", "append")
+    l.delete(col("d") === "d2")
+    view.refresh()
+    l.update(Map("x" -> (col("x") * 2)), lit(true))
+    view.refresh()
+    assert(ManagedTable(spark, sp).history.reverse
+        .map(c => (c.operation, c.userMetadata.orNull)) === Seq(
+      ("JOINVIEW_INIT", """{"leftVersion":0,"rightVersion":0}"""),
+      ("JOINVIEW_DELTA",
+        """{"leftVersion":1,"rightVersion":0,"stateRows":20}"""),
+      ("DELETE VECTORS",
+        """{"pendingLeftVersion":3,"pendingRightVersion":0}"""),
+      ("JOINVIEW_DELTA",
+        """{"leftVersion":3,"rightVersion":0,"stateRows":20}"""),
+      ("JOINVIEW_REFRESH", """{"leftVersion":4,"rightVersion":0}""")))
+  }
 }

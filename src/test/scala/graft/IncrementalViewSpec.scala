@@ -540,4 +540,56 @@ class IncrementalViewSpec extends SparkSpec {
     view.refresh()
     assert(view.read.select("g").as[String].collect().toSeq === Seq("keep"))
   }
+
+  test("a maintenance commit on top of a pending tombstone does not hide " +
+      "it: the next refresh still lands the missing append") {
+    val src = tmpDir("iv_crashm_src"); val st = tmpDir("iv_crashm_st")
+    val t = ManagedTable(spark, src)
+    t.write((1 to 100).map(i => (i.toLong, i * 1.0)).toDF("id", "v"),
+      "APPEND", "append")
+    val view = new IncrementalAggView(spark, src, st, Seq("id"), Seq("v"))
+    view.initialize()
+    t.update(Map("v" -> (col("v") + 100)), col("id").isin(3L, 5L),
+      captureChangeData = true)
+    t.write(Seq((101L, 7.0)).toDF("id", "v"), "APPEND", "append")
+    val s = ManagedTable(spark, st)
+    s.deleteVectorsMatching(Seq(3L, 5L).toDF("id"), Seq("id"),
+      userMetadata = Some("""{"pendingSourceVersion":2}"""))
+    // a purge lands ABOVE the half-applied fold before anyone resumes
+    s.purgeDeletes()
+    assert(view.refresh() === 2L)
+    assert(view.sourceVersion === 2L)
+    val got = view.read.select("id", "cnt", "sum_v")
+    val want = t.read.groupBy("id").agg(sum(lit(1L)).as("cnt"),
+      sum(col("v").cast("decimal(28,6)")).cast("decimal(28,6)").as("sum_v"))
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
+      "groups 3 and 5 must be re-appended, not lost under the purge")
+  }
+
+  test("on-disk format: each agg fold shape writes its exact operation " +
+      "and metadata") {
+    val src = tmpDir("iv_fmt_src"); val st = tmpDir("iv_fmt_st")
+    val t = ManagedTable(spark, src)
+    t.write((1 to 20).map(i => (i.toLong, i * 1.0)).toDF("id", "v"),
+      "APPEND", "append")
+    val view = new IncrementalAggView(spark, src, st, Seq("id"), Seq("v"))
+    view.initialize()
+    // a no-op update nets to nothing: empty append
+    t.update(Map("v" -> col("v")), col("id") === 1L, captureChangeData = true)
+    view.refresh()
+    // 2 of 20 groups touched: tombstone-then-append
+    t.write(Seq((21L, 1.0)).toDF("id", "v"), "APPEND", "append")
+    t.delete(col("id") === 2L)
+    view.refresh()
+    // every group touched: replace
+    t.update(Map("v" -> (col("v") * 2)), lit(true))
+    view.refresh()
+    assert(ManagedTable(spark, st).history.reverse
+        .map(c => (c.operation, c.userMetadata.orNull)) === Seq(
+      ("VIEW_INIT", """{"sourceVersion":0}"""),
+      ("VIEW_DELTA", """{"sourceVersion":1,"stateRows":20}"""),
+      ("DELETE VECTORS", """{"pendingSourceVersion":3}"""),
+      ("VIEW_DELTA", """{"sourceVersion":3,"stateRows":20}"""),
+      ("VIEW_REFRESH", """{"sourceVersion":4}""")))
+  }
 }

@@ -669,4 +669,80 @@ class IndexViewsSpec extends SparkSpec {
       .head().getLong(0) === 1L)
     assert(ManagedTable(spark, ast).read.count() === 40L)
   }
+
+  test("a resume racing a tombstone-then-append fold: the append fenced " +
+      "on the tombstone loses, no doc is indexed twice") {
+    val src = tmpDir("pv_race_src"); val st = tmpDir("pv_race_st")
+    val t = ManagedTable(spark, src)
+    t.write((1L to 20L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
+      "APPEND", "append")
+    new IndexViewsSpec.HookedView(spark, src, st).initialize()
+    t.update(Map("text" -> lit("changed")), col("doc_id") === 5L)
+    // between the tombstone and the append, a second instance resumes
+    // the half-applied fold
+    IndexViewsSpec.hook = Some(() => {
+      new IndexViewsSpec.HookedView(spark, src, st).refresh(); ()
+    })
+    intercept[ManagedTable.ConcurrentCommitException] {
+      new IndexViewsSpec.HookedView(spark, src, st).refresh()
+    }
+    val view = new IndexViewsSpec.HookedView(spark, src, st)
+    assert(view.sourceVersion === 1L)
+    assert(view.read.count() === 20L)
+    val want = t.read.select(col("doc_id"), length(col("text")).as("len"))
+    assert(view.read.exceptAll(want).isEmpty && want.exceptAll(view.read).isEmpty)
+  }
+
+  test("on-disk format: LM and classifier folds write their exact " +
+      "operation and metadata") {
+    import graft.table.{ClassifierModelView, CorpusLmView}
+    val src = tmpDir("fmt_src")
+    val t = ManagedTable(spark, src)
+    t.write(Seq((1L, "good clean prose", 1), (2L, "spam junk", 0))
+      .toDF("doc_id", "text", "weak_label"), "APPEND", "append")
+    val lmSt = tmpDir("fmt_lm"); val nbSt = tmpDir("fmt_nb")
+    val lm = new CorpusLmView(spark, src, lmSt)
+    val nb = new ClassifierModelView(spark, src, nbSt)
+    lm.initialize(); nb.initialize()
+    t.write(Seq((3L, "clean words", 1)).toDF("doc_id", "text", "weak_label"),
+      "APPEND", "append")
+    lm.refresh(); nb.refresh()
+    // a no-op update nets to nothing: empty append
+    t.update(Map("text" -> col("text")), col("doc_id") === 1L,
+      captureChangeData = true)
+    lm.refresh(); nb.refresh()
+    def shapes(p: String) = ManagedTable(spark, p).history.reverse
+      .map(c => (c.operation, c.userMetadata.orNull))
+    assert(shapes(lmSt) === Seq(
+      ("LM_INIT", """{"sourceVersion":0}"""),
+      ("LM_REFRESH", """{"sourceVersion":1}"""),
+      ("LM_REFRESH", """{"sourceVersion":2}""")))
+    assert(shapes(nbSt) === Seq(
+      ("NB_INIT", """{"sourceVersion":0,"dPos":1,"dNeg":1}"""),
+      ("NB_REFRESH", """{"sourceVersion":1,"dPos":2,"dNeg":1}"""),
+      ("NB_REFRESH", """{"sourceVersion":2,"dPos":2,"dNeg":1}""")))
+  }
+}
+
+object IndexViewsSpec {
+  /** One-shot hook run inside the next [[HookedView]] fold's final-commit
+    * metadata — i.e. between a tombstone and its append. */
+  @volatile var hook: Option[() => Unit] = None
+
+  /** A minimal row-local view: one `(doc_id, len)` row per document. */
+  final class HookedView(spark: org.apache.spark.sql.SparkSession,
+                         src: String, st: String)
+    extends graft.table.RowLocalIndexView(spark, src, st, "doc_id",
+      Seq("text"), "hooked view", "HOOKED", 1000L) {
+    override protected def buildRows(docs: org.apache.spark.sql.DataFrame) =
+      docs.select(col("doc_id"), length(col("text")).as("len"))
+    override protected def refreshMeta(v: Long,
+                                       ins: org.apache.spark.sql.DataFrame,
+                                       del: org.apache.spark.sql.DataFrame) = {
+      val h = hook
+      hook = None
+      h.foreach(_())
+      super.refreshMeta(v, ins, del)
+    }
+  }
 }
