@@ -32,7 +32,10 @@ final case class WriteOptions(
     fixDuplicatesByKey: Boolean = false,
     // accept several source rows matching one target row (emitting one
     // updated row per match) instead of raising like Delta MERGE does —
-    // for callers that pre-dedupe and want to skip the guard's window
+    // for callers that pre-dedupe and want to skip the guard: a source
+    // window on the join's own exchange for the SCD patterns' key-equality
+    // conditions, two extra shuffles for conditions that relate the sides
+    // otherwise
     allowDuplicateMatches: Boolean = false,
     persistDataset: Boolean = false,
     stageResults: Boolean = false,
@@ -303,12 +306,16 @@ object WritePatterns {
         .drop("rnk")
     }
 
-    // -- merge-key split + single merge (write.py:962-991)
-    val closers = flagged.filter(col("flag") === "UI" || col("flag") === "U")
-      .withColumn("merge_key", col(n.keyHash))
-    val inserters = flagged.filter(col("flag") === "UI" || col("flag") === "I")
-      .withColumn("merge_key", lit(null).cast("string"))
-    val mergeSource = withGenerated(closers.unionByName(inserters), opts)
+    // -- merge-key split + single merge (write.py:962-991): one pass over
+    //    `flagged` (a union of closers and inserters would plan its
+    //    change-detection join once per branch) — U closes, I inserts,
+    //    UI explodes into one row of each
+    val noKey = lit(null).cast("string")
+    val mergeSource = withGenerated(flagged.filter(col("flag") =!= "D")
+      .withColumn("merge_key", explode(
+        when(col("flag") === "UI", array(col(n.keyHash), noKey))
+          .when(col("flag") === "U", array(col(n.keyHash)))
+          .otherwise(array(noKey)))), opts)
 
     val mergeCond = (extraMergeConjuncts(opts, keys) ++ Seq(
       tgt(n.keyHash) === col("source.merge_key"),

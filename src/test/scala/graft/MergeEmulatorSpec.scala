@@ -1,8 +1,11 @@
 package graft
 
-import graft.write.MergeEmulator
+import graft.write.{MergeEmulator, WriteOptions, Writers}
 import graft.write.MergeEmulator.MatchedUpdate
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import scala.util.{Failure, Success, Try}
 
 /** MERGE INTO emulation semantics (mirrors Delta MERGE as used by
   * reference write.py:510-523, :985-991, :278-294). */
@@ -137,5 +140,104 @@ class MergeEmulatorSpec extends SparkSpec {
       Map("id" -> col("source.id"), "v" -> col("source.v")))
     assert(out.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       target.schema.fields.map(f => (f.name, f.dataType)).toSeq)
+  }
+
+  /** Raise-or-rows outcome of a merge: the sorted output rows, or None
+    * when the cardinality guard raised. */
+  private def outcome(out: DataFrame): Option[Seq[String]] = {
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    Try(out.collect()) match {
+      case Success(rows) => Some(rows.toSeq.map(_.toString).sorted)
+      case Failure(e) if msgs(e).exists(_.contains("MERGE cardinality violation")) => None
+      case Failure(e) => throw e
+    }
+  }
+
+  test("property: the source-keyed guard agrees with the general guard") {
+    // small domains so keys, whole target rows and source rows repeat;
+    // NULL ids exercise `<=>`, inactive rows a target-only residual
+    val idGen = Gen.frequency(5 -> Gen.chooseNum(1, 4).map(Option(_)), 1 -> Gen.const(None))
+    val tRow = for { id <- idGen; v <- Gen.oneOf("a", "b"); act <- Gen.oneOf("Y", "Y", "N") }
+      yield (id, v, act)
+    val sRow = for { id <- idGen; v <- Gen.oneOf("a", "b", "c"); x <- Gen.chooseNum(0, 3) }
+      yield (id, v, x)
+    val t = (c: String) => col(s"target.$c")
+    val s = (c: String) => col(s"source.$c")
+    val conds: Seq[(String, Column)] = Seq(
+      "=" -> (t("id") === s("id")),
+      "<=>" -> (t("id") <=> s("id")),
+      "= and target-only" -> (t("id") === s("id") && t("act") === "Y"),
+      "<=> and source-only" -> (t("id") <=> s("id") && s("x") > 1),
+      "swapped = and both residuals" -> (s("id") === t("id") && t("act") === "Y" && s("x") =!= 0))
+    // always true, references both sides, and Catalyst cannot fold it
+    val mixedTrue = length(concat_ws("", t("v"), s("v"))) >= 0
+    val scenario = for {
+      tr <- Gen.listOfN(6, tRow)
+      sr <- Gen.choose(0, 4).flatMap(Gen.listOfN(_, sRow))
+      c <- Gen.oneOf(conds)
+    } yield (tr, sr, c)
+    val prop = Prop.forAll(scenario) { case (tr, sr, (_, cond)) =>
+      val tgt = tr.toDF("id", "v", "act")
+      val src = sr.toDF("id", "v", "x")
+      def run(c: Column) = MergeEmulator.merge(tgt, src, c,
+        Seq(MatchedUpdate(Some(t("v") =!= s("v")), Map("v" -> s("v"), "act" -> lit("U")))),
+        Map("id" -> s("id"), "v" -> s("v"), "act" -> lit("I")))
+      val keyed = run(cond)
+      val general = run(cond && mixedTrue)
+      // each side really took its path
+      val keyedPlan = keyed.queryExecution.analyzed.toString
+      val generalPlan = general.queryExecution.analyzed.toString
+      keyedPlan.contains("__graft_s_cnt__") && !keyedPlan.contains("__graft_t_cnt__") &&
+        generalPlan.contains("__graft_t_cnt__") &&
+        outcome(keyed) == outcome(general)
+    }
+    val result = SCTest.check(prop)(_.withMinSuccessfulTests(30).withWorkers(1))
+    assert(result.passed, result.status.toString)
+  }
+
+  test("a `<=>` key raises on duplicate NULL source keys that match a NULL target key") {
+    val tgt = Seq((Option.empty[Int], "a"), (Some(1), "b")).toDF("id", "v")
+    val src = Seq((Option.empty[Int], "x"), (Option.empty[Int], "y")).toDF("id", "v")
+    def run(c: Column) = outcome(MergeEmulator.merge(tgt, src, c,
+      Seq(MatchedUpdate(None, Map("v" -> col("source.v")))),
+      Map("id" -> col("source.id"), "v" -> col("source.v"))))
+    assert(run(col("target.id") <=> col("source.id")).isEmpty)
+    // under `=` NULL keys never match: both source rows insert
+    assert(run(col("target.id") === col("source.id")).exists(_.size == 4))
+  }
+
+  /** Jobs `op` starts, counted through a job group. */
+  private def jobsOf(op: => Any): Int = {
+    val sc = spark.sparkContext
+    val group = s"merge-jobs-${java.util.UUID.randomUUID()}"
+    sc.setJobGroup(group, "merge job count")
+    try op finally sc.clearJobGroup()
+    sc.statusTracker.getJobIdsForGroup(group).length
+  }
+
+  test("job counts: SCD merges into a single-dir target check cardinality on the join's exchange") {
+    val base = (1 to 40).map(i => (i, s"k$i", s"v$i", i % 3)).toDF("id", "sk", "v", "c")
+    val batch = (30 to 45).map(i => (i, s"k$i", s"w$i", i % 4)).toDF("id", "sk", "v", "c")
+    /** Jobs of the second merge, after a first one leaves one dir. */
+    def second(merge: (String, DataFrame) => Any): Int = {
+      val path = tmpDir("mergejobs")
+      merge(path, base)
+      jobsOf(merge(path, batch))
+    }
+    val scd1 = second((p, d) => Writers.scd1(spark, p, d, Seq("id")))
+    val scd2 = second((p, d) => Writers.scd2(spark, p, d, Seq("id")))
+    val scd3 = second((p, d) => Writers.scd3(spark, p, d, Seq("id"), Seq("c")))
+    assert(scd1 <= 3, s"scd1 started $scd1 jobs")
+    assert(scd2 <= 4, s"scd2 started $scd2 jobs")
+    assert(scd3 <= 3, s"scd3 started $scd3 jobs")
+    // `<=>` key conjuncts: a window over the raw key columns instead of
+    // the planner's coalesce/isnull keys would cost its own exchange.
+    // `id` is non-nullable in the batch, `sk` nullable.
+    val useKeys = WriteOptions(useKeyAttributesInMerge = true)
+    val byId = second((p, d) => Writers.scd1(spark, p, d, Seq("id"), useKeys))
+    val bySk = second((p, d) => Writers.scd1(spark, p, d, Seq("sk"), useKeys))
+    assert(byId <= scd1 && bySk <= scd1,
+      s"use_key_attributes_in_merge scd1 started $byId / $bySk jobs, plain $scd1")
   }
 }

@@ -233,6 +233,34 @@ class SqlTablesSpec extends SparkSpec {
       Seq((1L, "a"), (2L, "B2"), (4L, "d")))
   }
 
+  test("MERGE INTO with a residual over both sides counts only rows that pass it") {
+    // `s.v > tgt.v` mixes the sides, so a per-key count of source rows
+    // would over-approximate: the guard must see the residual
+    val path = tmpDir("sqlmerge_mixed")
+    val t = ManagedTable(spark, path)
+    import spark.implicits._
+    t.write(Seq((1L, 10), (2L, 20)).toDF("id", "v"), "APPEND", "append")
+    def merge(src: Seq[(Long, Int)]): Unit = {
+      src.toDF("id", "v").createOrReplaceTempView("merge_src_mixed")
+      spark.sql(
+        s"""MERGE INTO ${quoted(path)} tgt USING merge_src_mixed s
+           |ON tgt.id = s.id AND s.v > tgt.v
+           |WHEN MATCHED THEN UPDATE SET v = s.v
+           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      ()
+    }
+    // (1, 5) fails the residual and inserts; (1, 15) alone updates
+    merge(Seq((1L, 5), (1L, 15)))
+    assert(t.read.orderBy("id", "v").as[(Long, Int)].collect().toSeq ==
+      Seq((1L, 5), (1L, 15), (2L, 20)))
+    val e = intercept[Exception](merge(Seq((2L, 30), (2L, 40))))
+    def msgs(x: Throwable): Seq[String] =
+      if (x == null) Nil else Option(x.getMessage).toSeq ++ msgs(x.getCause)
+    assert(msgs(e).exists(_.contains("MERGE cardinality violation")))
+    assert(t.read.orderBy("id", "v").as[(Long, Int)].collect().toSeq ==
+      Seq((1L, 5), (1L, 15), (2L, 20)))
+  }
+
   test("MERGE rejects unsupported clauses loudly") {
     val path = tmpDir("sqlmerge3")
     val t = ManagedTable(spark, path)
