@@ -323,17 +323,14 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // view family the metadata is the fold watermark, and the restored
     // state IS that commit's state — a restore without it would strand
     // the view between a newer recorded watermark and older data
-    val commit = Commit(cur.version + 1L, s"RESTORE(version=$version)",
-      System.currentTimeMillis(), target.dirs,
+    commitNext(cur, s"RESTORE(version=$version)",
       Map("restoredVersion" -> version.toString,
-        "numRestoredDirs" -> target.dirs.size.toString),
-      target.userMetadata, target.schemaDdl, cur.version,
-      partitionBy = target.partitionBy,
-      dirStats = target.dirStats, txn = cur.txn, dvDirs = target.dvDirs,
-      columnMap = target.columnMap, constraints = target.constraints,
-      properties = target.properties)
-    writeCommit(commit, Some(cur))
-    commit
+        "numRestoredDirs" -> target.dirs.size.toString))(
+      _.copy(dirs = target.dirs, userMetadata = target.userMetadata,
+        schemaDdl = target.schemaDdl, partitionBy = target.partitionBy,
+        dirStats = target.dirStats, dvDirs = target.dvDirs,
+        columnMap = target.columnMap, constraints = target.constraints,
+        properties = target.properties))
   }
 
   /**
@@ -415,16 +412,16 @@ final class ManagedTable(spark: SparkSession, root: String) {
           src.dirBytes.map { case (d, b) => remap.getOrElse(d, d) -> b },
           src.dvDirs.map(remap))
       }
-    val commit = Commit(0L,
+    val commit = Commit.Genesis.next(
       s"CLONE(source=$root, version=$v, ${if (deep) "deep" else "shallow"})",
-      System.currentTimeMillis(), dirs,
+      System.currentTimeMillis(),
       Map("sourceVersion" -> v.toString,
         "numClonedDirs" -> dirs.size.toString,
-        "cloneMode" -> (if (deep) "deep" else "shallow")),
-      None, src.schemaDdl, -1L, partitionBy = src.partitionBy,
-      dirStats = stats, dirBytes = bytes, dvDirs = dvDirs,
-      columnMap = src.columnMap, constraints = src.constraints,
-      properties = src.properties)
+        "cloneMode" -> (if (deep) "deep" else "shallow")))
+      .copy(dirs = dirs, schemaDdl = src.schemaDdl, partitionBy = src.partitionBy,
+        dirStats = stats, dirBytes = bytes, dvDirs = dvDirs,
+        columnMap = src.columnMap, constraints = src.constraints,
+        properties = src.properties)
     target.writeCommit(commit)
     commit
   }
@@ -731,20 +728,8 @@ final class ManagedTable(spark: SparkSession, root: String) {
   def readWhere(predicate: org.apache.spark.sql.Column): DataFrame = {
     val c = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
-    val schema = StructType.fromDDL(c.schemaDdl)
-    // recover the Catalyst expression through public API only: a Filter
-    // over an empty frame carries `predicate` as its (unanalyzed) condition
-    val predExpr = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .filter(predicate).queryExecution.logical
-      .collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-    val kept = c.dirs.filter { d =>
-      (for (stats <- c.dirStats.get(d); e <- predExpr)
-        yield DataSkipping.mayMatch(stats, schema, e)).getOrElse(true)
-    }
-    readDirsDv(kept, schema, c.partitionBy.nonEmpty, c.dvDirs, c.columnMap)
+    readDirsDv(splitDirsMayMatch(c, predicate)._1, StructType.fromDDL(c.schemaDdl),
+        c.partitionBy.nonEmpty, c.dvDirs, c.columnMap)
       .filter(predicate)
   }
 
@@ -887,11 +872,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // against a specific version (the view family's watermark reads)
     // refuse to publish over an advanced head instead of silently
     // deleting rows the intervening commit may have re-shaped
-    expectedPrevVersion.filter(_ != c.version).foreach { v =>
-      throw new ConcurrentCommitException(
-        s"table $root advanced from version $v to ${c.version} while a " +
-          "delete was computing")
-    }
+    fence(expectedPrevVersion, Some(c), "a delete").foreach(e => throw e)
     val schema = StructType.fromDDL(c.schemaDdl)
     sel.foreach { case (_, kcols) =>
       require(kcols.nonEmpty, "deleteVectorsMatching needs key columns")
@@ -912,17 +893,9 @@ final class ManagedTable(spark: SparkSession, root: String) {
     ManagedTable.dvLiveDirs.addAndGet(c.dirs.size.toLong)
     val version = c.version + 1L
     val tsMs = System.currentTimeMillis()
-    def noop(): Commit = {
-      val commit = Commit(version, "DELETE VECTORS", tsMs, c.dirs,
-        Map("numDeletedRows" -> "0",
-          "numDeletionVectors" -> c.dvDirs.size.toString),
-        userMetadata, c.schemaDdl, c.version, partitionBy = c.partitionBy,
-        dirStats = c.dirStats, txn = c.txn ++ txnUpdate, dvDirs = c.dvDirs,
-        columnMap = c.columnMap, constraints = c.constraints,
-      properties = c.properties)
-      writeCommit(commit, Some(c))
-      commit
-    }
+    def noop(): Commit = commitNext(c, "DELETE VECTORS", Map("numDeletedRows" -> "0",
+        "numDeletionVectors" -> c.dvDirs.size.toString))(
+      _.copy(userMetadata = userMetadata, txn = c.txn ++ txnUpdate))
     if (affected.isEmpty) return noop()
     // scan WIDTH: the tombstone itself needs only (match columns, file,
     // pos). With change capture the matched rows also become full-width
@@ -934,17 +907,9 @@ final class ManagedTable(spark: SparkSession, root: String) {
         val keep: Option[Seq[String]] = sel match {
           case Right((_, kcols)) => Some(kcols)
           case Left(p) =>
-            // conservative reference extraction (same empty-frame trick
-            // as [[splitDirsMayMatch]] — Spark 4's Column hides its
-            // expression): any shape that could name columns beyond
-            // plain attributes keeps full width
-            val predExpr = spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-              .filter(p).queryExecution.logical
-              .collectFirst {
-                case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-                  f.condition
-              }
+            // conservative reference extraction: any shape that could
+            // name columns beyond plain attributes keeps full width
+            val predExpr = predicateExpr(schema, p)
             val opaque = predExpr.forall(_.exists {
               case _: org.apache.spark.sql.catalyst.analysis.UnresolvedStar => true
               case _: org.apache.spark.sql.catalyst.analysis.UnresolvedRegex => true
@@ -995,8 +960,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
           .map(r => alive.filter(coalesce(r, lit(false)))).getOrElse(alive)
         base.join(k, cond, "left_semi")
     }).localCheckpoint()
-    val dvDir = new Path(new Path(rootPath, "data"),
-      f"$version%012d-dv-${UUID.randomUUID().toString.take(8)}").toString
+    val dvDir = freshDir("data", version, "dv-")
     val obs = org.apache.spark.sql.Observation(
       s"graft_dv_$version-${UUID.randomUUID()}")
     matched.select(col("__graft_dv_file__").as("file"),
@@ -1017,44 +981,19 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // simply were not in the deleted snapshot (the delete serializes
     // BEFORE the append). A racer that removed/rewrote a scanned dir,
     // changed tombstones, schema, mapping, or constraints surfaces the
-    // conflict instead. Change rows re-stamp per attempt (their
-    // _commit_version rides the parquet).
-    var base = c
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val v2 = base.version + 1L
-      val changeDir = changeRows.map(writeChangeData(v2, tsMs, _))
-      val commit = Commit(v2, "DELETE VECTORS", tsMs, base.dirs,
-        Map("numDeletedRows" -> n.toString,
-          "numDeletionVectors" -> (base.dvDirs.size + 1).toString,
-          "numRewrittenDirs" -> "0") ++
-          (if (attempts > 1) Map("numCommitRetries" -> (attempts - 1).toString)
-           else Map.empty),
-        userMetadata, base.schemaDdl, base.version, changeDir,
-        changeFormat = if (changeDir.isDefined) STAMPED_CHANGE_FORMAT else 0,
-        partitionBy = base.partitionBy, dirStats = base.dirStats,
-        txn = base.txn ++ txnUpdate, dvDirs = base.dvDirs :+ dvDir,
-        columnMap = base.columnMap, constraints = base.constraints,
-      properties = base.properties)
-      try { writeCommit(commit, Some(base)); return commit }
-      catch {
-        case e: ConcurrentCommitException =>
-          changeDir.foreach(d => fs.delete(new Path(d), true))
-          val head = lastCommit.getOrElse(throw e)
-          val commutes = attempts < 10 &&
-            c.dirs.forall(head.dirs.contains) && head.dvDirs == c.dvDirs &&
-            head.schemaDdl == c.schemaDdl && head.columnMap == c.columnMap &&
-            head.constraints == c.constraints && head.properties == c.properties
-          if (!commutes) { fs.delete(new Path(dvDir), true); throw e }
-          base = head
-        case e: Throwable =>
-          changeDir.foreach(d => fs.delete(new Path(d), true))
-          fs.delete(new Path(dvDir), true)
-          throw e
-      }
+    // conflict instead.
+    publish(c, Seq(dvDir), changeRows, retry = (head, attempts) =>
+      attempts < 10 &&
+        c.dirs.forall(head.dirs.contains) && head.dvDirs == c.dvDirs &&
+        head.schemaDdl == c.schemaDdl && head.columnMap == c.columnMap &&
+        head.constraints == c.constraints && head.properties == c.properties) {
+      (b, attempt) =>
+        b.next("DELETE VECTORS", tsMs, Map("numDeletedRows" -> n.toString,
+            "numDeletionVectors" -> (b.dvDirs.size + 1).toString,
+            "numRewrittenDirs" -> "0") ++ retried(attempt))
+          .copy(userMetadata = userMetadata, txn = b.txn ++ txnUpdate,
+            dvDirs = b.dvDirs :+ dvDir)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /**
@@ -1068,12 +1007,10 @@ final class ManagedTable(spark: SparkSession, root: String) {
    * deletion vectors.
    */
   def purgeDeletes(): Option[Commit] = synchronized {
-    import org.apache.spark.sql.functions.{col, count, lit, split}
+    import org.apache.spark.sql.functions.{col, split}
     val c = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
     if (c.dvDirs.isEmpty) return None
-    val schema = StructType.fromDDL(c.schemaDdl)
-    val version = c.version + 1L
     val tsMs = System.currentTimeMillis()
     // tombstone keys start with the data-dir root segment — the
     // distinct first segments (bounded by the dir count) name the
@@ -1083,47 +1020,20 @@ final class ManagedTable(spark: SparkSession, root: String) {
       .collect().map(_.getString(0)).toSet
     val (affected, untouched) = c.dirs.partition(d =>
       roots.contains(new Path(ManagedTable.dataDirRoot(d)).getName))
-    if (affected.isEmpty) {
-      // every tombstone references files no longer in the composition —
-      // inert; dropping them is metadata-only
-      val commit = Commit(version, "PURGE DELETES", tsMs, c.dirs,
-        Map("numRewrittenDirs" -> "0",
-          "numPurgedDvDirs" -> c.dvDirs.size.toString),
-        None, c.schemaDdl, c.version, partitionBy = c.partitionBy,
-        dirStats = c.dirStats, txn = c.txn, dvDirs = Nil,
-        columnMap = c.columnMap, constraints = c.constraints,
-      properties = c.properties)
-      writeCommit(commit, Some(c))
-      return Some(commit)
-    }
-    val src = readDirsDv(affected, schema, c.partitionBy.nonEmpty, c.dvDirs,
-      c.columnMap)
-    val obs = org.apache.spark.sql.Observation(
-      s"graft_purge_$version-${UUID.randomUUID()}")
-    val aggs = count(lit(1)).as("rows") +: DataSkipping.statAggs(schema)
-    val dataDir = new Path(new Path(rootPath, "data"),
-      f"$version%012d-${UUID.randomUUID().toString.take(8)}").toString
-    val writer = toPhysical(src.observe(obs, aggs.head, aggs.tail: _*),
-      c.columnMap).write.mode("overwrite")
-      .options(ManagedTable.bloomWriteOptions(c.properties, c.columnMap))
-    (if (c.partitionBy.nonEmpty) writer.partitionBy(c.partitionBy: _*)
-     else writer).parquet(dataDir)
-    val observed = obs.get
-    val outRows = observed("rows").asInstanceOf[Long]
-    val dirs = if (outRows == 0) untouched else untouched :+ dataDir
-    val untouchedStats = c.dirStats.view.filterKeys(untouched.contains).toMap
-    val dirStats =
-      if (outRows == 0) untouchedStats
-      else untouchedStats + (dataDir -> DataSkipping.statsOf(schema, observed))
-    val commit = Commit(version, "PURGE DELETES", tsMs, dirs,
-      Map("numRewrittenDirs" -> affected.size.toString,
-        "numPurgedDvDirs" -> c.dvDirs.size.toString),
-      None, c.schemaDdl, c.version, partitionBy = c.partitionBy,
-      dirStats = dirStats, txn = c.txn, dvDirs = Nil,
-      columnMap = c.columnMap, constraints = c.constraints,
-      properties = c.properties)
-    writeCommit(commit, Some(c))
-    Some(commit)
+    val metrics = Map("numRewrittenDirs" -> affected.size.toString,
+      "numPurgedDvDirs" -> c.dvDirs.size.toString)
+    // every tombstone references files no longer in the composition —
+    // inert; dropping them is metadata-only
+    if (affected.isEmpty)
+      return Some(commitNext(c, "PURGE DELETES", metrics)(_.copy(dvDirs = Nil)))
+    val (dataDir, outRows, added) = writeDataDir(
+      readDirsDv(affected, StructType.fromDDL(c.schemaDdl), c.partitionBy.nonEmpty,
+        c.dvDirs, c.columnMap),
+      c.next("PURGE DELETES", tsMs, Map.empty))
+    Some(publish(c, Seq(dataDir)) { (b, _) =>
+      composed(b.next("PURGE DELETES", tsMs, metrics).copy(dvDirs = Nil),
+        untouched, if (outRows == 0) Nil else added)
+    })
   }
 
   /** Shared dir-scoped rewrite for row-level DML: stats-prune to the
@@ -1142,87 +1052,39 @@ final class ManagedTable(spark: SparkSession, root: String) {
       val c = lastCommit.getOrElse(
         throw new IllegalStateException(s"managed table $root does not exist"))
       val schema = StructType.fromDDL(c.schemaDdl)
-      val predExpr = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .filter(predicate).queryExecution.logical
-        .collectFirst {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-        }
-      val (affected, untouched) = c.dirs.partition { d =>
-        (for (stats <- c.dirStats.get(d); e <- predExpr)
-          yield DataSkipping.mayMatch(stats, schema, e)).getOrElse(true)
-      }
-      val version = c.version + 1L
+      val (affected, untouched) = splitDirsMayMatch(c, predicate)
+      if (affected.isEmpty)
+        return commitNext(c, operation,
+          Map("numAffectedRows" -> "0", "numRewrittenDirs" -> "0"))(identity)
       val tsMs = System.currentTimeMillis()
-
-      if (affected.isEmpty) {
-        val commit = Commit(version, operation, tsMs, c.dirs,
-          Map("numAffectedRows" -> "0", "numRewrittenDirs" -> "0"),
-          None, c.schemaDdl, c.version, partitionBy = c.partitionBy,
-          dirStats = c.dirStats, txn = c.txn, dvDirs = c.dvDirs,
-          columnMap = c.columnMap, constraints = c.constraints,
-      properties = c.properties)
-        writeCommit(commit, Some(c))
-        return commit
-      }
+      val layout = c.next(operation, tsMs, Map.empty)
 
       // DV-aware source read: a rewrite of a dir with live tombstones
       // must not resurrect its deleted rows (the rewrite MATERIALIZES
       // those deletes — tombstones for rewritten files go inert)
-      val src = readDirsDv(affected, schema, c.partitionBy.nonEmpty, c.dvDirs,
+      def src = readDirsDv(affected, schema, c.partitionBy.nonEmpty, c.dvDirs,
         c.columnMap)
       // affected-row count observed above the transform, output rows +
       // skipping stats below it — one write job, no extra passes
       val obsIn = org.apache.spark.sql.Observation(
-        s"graft_dml_in_$version-${UUID.randomUUID()}")
-      val obsOut = org.apache.spark.sql.Observation(
-        s"graft_dml_out_$version-${UUID.randomUUID()}")
+        s"graft_dml_in_${layout.version}-${UUID.randomUUID()}")
       val withIn = src.observe(obsIn,
         count(lit(1)).as("scanned"),
         count(whenF(predicate, 1)).as("matched"))
-      val result = transform(withIn, predicate)
-      val outAggs = (count(lit(1)).as("rows") +: DataSkipping.statAggs(schema)) ++
-        constraintAggs(c.constraints)
-      val dataDir = new Path(new Path(rootPath, "data"),
-        f"$version%012d-${UUID.randomUUID().toString.take(8)}").toString
-      val writer = toPhysical(
-          result.observe(obsOut, outAggs.head, outAggs.tail: _*), c.columnMap)
-        .write.mode("overwrite")
-        .options(ManagedTable.bloomWriteOptions(c.properties, c.columnMap))
-      (if (c.partitionBy.nonEmpty) writer.partitionBy(c.partitionBy: _*)
-       else writer).parquet(dataDir)
-
-      val outObserved = obsOut.get
-      enforceConstraints(c.constraints, outObserved, Seq(dataDir))
-      val outRows = outObserved("rows").asInstanceOf[Long]
+      val (dataDir, outRows, added) = writeDataDir(transform(withIn, predicate), layout)
       val matched = obsIn.get("matched").asInstanceOf[Long]
       // optional minimal CDF: exactly the touched rows (delete /
       // update pre+post images), stamped + stored so readChangeFeed
       // serves this version from the change parquet instead of the
       // coarse dir-diff (which would claim every affected dir's row
       // rewritten). One extra job over the affected dirs — opt-in.
-      val changeDir = changeRows.map { build =>
-        writeChangeData(version, tsMs,
-          build(readDirsDv(affected, schema, c.partitionBy.nonEmpty, c.dvDirs,
-            c.columnMap), predicate))
+      // Carried dvDirs stay live for the untouched dirs; entries pointing
+      // at the rewritten files are inert (those files left the composition)
+      publish(c, Seq(dataDir), changeRows.map(_(src, predicate))) { (b, _) =>
+        composed(b.next(operation, tsMs, Map("numAffectedRows" -> matched.toString,
+          "numRewrittenDirs" -> affected.size.toString)),
+          untouched, if (outRows == 0) Nil else added)
       }
-      val untouchedStats = c.dirStats.view.filterKeys(untouched.contains).toMap
-      val dirs = if (outRows == 0) untouched else untouched :+ dataDir
-      val dirStats =
-        if (outRows == 0) untouchedStats
-        else untouchedStats + (dataDir -> DataSkipping.statsOf(schema, outObserved))
-      val commit = Commit(version, operation, tsMs, dirs,
-        Map("numAffectedRows" -> matched.toString,
-          "numRewrittenDirs" -> affected.size.toString),
-        None, c.schemaDdl, c.version, changeDir,
-        changeFormat = if (changeDir.isDefined) STAMPED_CHANGE_FORMAT else 0,
-        partitionBy = c.partitionBy, dirStats = dirStats, txn = c.txn,
-        // carried for the untouched dirs; entries pointing at the
-        // rewritten files are inert (those files left the composition)
-        dvDirs = c.dvDirs, columnMap = c.columnMap, constraints = c.constraints,
-      properties = c.properties)
-      writeCommit(commit, Some(c))
-      commit
     }
 
   /** Stats-based dir split for merge file-skipping: dirs that MAY
@@ -1241,17 +1103,23 @@ final class ManagedTable(spark: SparkSession, root: String) {
   private[graft] def splitDirsMayMatch(c: Commit,
       predicate: org.apache.spark.sql.Column): (Seq[String], Seq[String]) = {
     val schema = StructType.fromDDL(c.schemaDdl)
-    val predExpr = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .filter(predicate).queryExecution.logical
-      .collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
+    val predExpr = predicateExpr(schema, predicate)
     c.dirs.partition { d =>
       (for (stats <- c.dirStats.get(d); e <- predExpr)
         yield DataSkipping.mayMatch(stats, schema, e)).getOrElse(true)
     }
   }
+
+  /** `predicate`'s (unanalyzed) Catalyst expression, recovered through
+    * public API only — Spark 4's Column hides it, but a Filter over an
+    * empty frame of `schema` carries it as its condition. */
+  private def predicateExpr(schema: StructType, predicate: org.apache.spark.sql.Column)
+      : Option[org.apache.spark.sql.catalyst.expressions.Expression] =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .filter(predicate).queryExecution.logical
+      .collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }
 
   /** Dirs that MAY hold a row matching the frame-keyed delete's key set
     * — the frame form's analogue of [[splitDirsMayMatch]]. The keys
@@ -1402,30 +1270,15 @@ final class ManagedTable(spark: SparkSession, root: String) {
       rebase: Option[Commit => Option[Seq[String]]] = None,
       txnUpdate: Option[(String, Long)] = None,
       groupedLayout: Boolean = false): Commit = synchronized {
-    import org.apache.spark.sql.functions.{col, count, lit}
     val entry = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
-    def conflict(v: Long): ConcurrentCommitException =
-      new ConcurrentCommitException(
-        s"table $root advanced from version $v to ${lastCommit.map(_.version).getOrElse(-1L)} " +
-          "while a scoped merge was computing — its carried-dir composition is stale")
     // entry-time staleness: resolve BEFORE paying the data write
-    val (base0, carried0) = expectedPrevVersion.filter(_ != entry.version) match {
-      case Some(v) =>
-        rebase.flatMap(_(entry)) match {
-          case Some(c2) => (entry, c2)
-          case None => throw conflict(v)
-        }
-      case None => (entry, carried)
-    }
-    val stale = carried0.filterNot(base0.dirs.contains)
+    var carry = fence(expectedPrevVersion, Some(entry), "a scoped merge")
+      .fold(carried)(e => rebase.flatMap(_(entry)).getOrElse(throw e))
+    val stale = carry.filterNot(entry.dirs.contains)
     require(stale.isEmpty,
       s"carried dirs are not part of the current version of $root: ${stale.mkString(", ")}")
     val tsMs = System.currentTimeMillis()
-    // the data dir is written ONCE — publication retries rebase the
-    // carried composition around it, never re-run the merge plan
-    val dataDir = new Path(new Path(rootPath, "data"),
-      f"${base0.version + 1L}%012d-${UUID.randomUUID().toString.take(8)}").toString
     // `groupedLayout`: `df` carries [[CLUSTER_COL]] (a STABLE per-row
     // group assignment — e.g. a literal per union branch) and lands one
     // subdir PER GROUP, each with its own skipping stats — so a fold of
@@ -1435,93 +1288,22 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val dataSchema =
       if (groupedLayout) StructType(df.schema.filterNot(_.name == CLUSTER_COL))
       else df.schema
-    val (numRows: Long, newDirs: Seq[String],
-         newDirStats: Map[String, Map[String, DataSkipping.ColMinMax]]) =
-      if (groupedLayout) {
-        require(base0.partitionBy.isEmpty,
-          "groupedLayout composes with unpartitioned tables only")
-        val aggs = (count(lit(1)).as("rows") +: DataSkipping.statAggs(dataSchema)) ++
-          constraintAggs(base0.constraints)
-        val groupRows = df.groupBy(col(CLUSTER_COL)).agg(aggs.head, aggs.tail: _*)
-          .collect()
-        // per-group violation sums total to the batch count
-        enforceConstraints(base0.constraints,
-          base0.constraints.keys.map(n => s"cons:$n" -> (groupRows.map(r =>
-            Option(r.getAs[Any](s"cons:$n")).map(_.asInstanceOf[Long])
-              .getOrElse(0L)).sum: Any)).toMap,
-          Nil)
-        val perGroup: Map[Int, (Long, Map[String, DataSkipping.ColMinMax])] =
-          groupRows.map { r =>
-              val vals = r.getValuesMap[Any](r.schema.fieldNames)
-              r.getInt(r.fieldIndex(CLUSTER_COL)) ->
-                (r.getLong(r.fieldIndex("rows")), DataSkipping.statsOf(dataSchema, vals))
-            }.toMap
-        toPhysical(df, base0.columnMap)
-          .write.mode("overwrite")
-          .options(ManagedTable.bloomWriteOptions(base0.properties, base0.columnMap))
-          .partitionBy(CLUSTER_COL).parquet(dataDir)
-        val ds = perGroup.keys.toSeq.sorted.map(g => s"$dataDir/$CLUSTER_COL=$g")
-        (perGroup.values.map(_._1).sum, ds,
-          perGroup.map { case (g, (_, st)) => s"$dataDir/$CLUSTER_COL=$g" -> st })
-      } else {
-        val obs = org.apache.spark.sql.Observation(
-          s"graft_fsm_${base0.version + 1L}-${UUID.randomUUID()}")
-        val aggs = (count(lit(1)).as("rows") +: DataSkipping.statAggs(df.schema)) ++
-          constraintAggs(base0.constraints)
-        val writer = toPhysical(df.observe(obs, aggs.head, aggs.tail: _*),
-          base0.columnMap).write.mode("overwrite")
-          .options(ManagedTable.bloomWriteOptions(base0.properties, base0.columnMap))
-        (if (base0.partitionBy.nonEmpty) writer.partitionBy(base0.partitionBy: _*)
-         else writer).parquet(dataDir)
-        val observed = obs.get
-        enforceConstraints(base0.constraints, observed, Seq(dataDir))
-        val rows = observed("rows").asInstanceOf[Long]
-        (rows, Seq(dataDir), Map(dataDir -> DataSkipping.statsOf(df.schema, observed)))
-      }
-
-    var base = base0
-    var carry = carried0
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val version = base.version + 1L
-      val carriedStats = base.dirStats.view.filterKeys(carry.contains).toMap
-      val dirs = if (numRows == 0) carry else carry ++ newDirs
-      val dirStats =
-        if (numRows == 0) carriedStats else carriedStats ++ newDirStats
+    // the data dir is written ONCE — publication retries rebase the
+    // carried composition around it, never re-run the merge plan
+    val (dataDir, numRows, added) =
+      writeDataDir(df, entry.next(operation, tsMs, Map.empty), groupedLayout)
+    publish(entry, Seq(dataDir), changeData, retry = (head, n) =>
+      n < 10 && rebase.flatMap(_(head)).filter(_.forall(head.dirs.contains))
+        .map(c2 => carry = c2).isDefined) { (b, n) =>
       // rebase can change the carried count — keep the caller's metric honest
       val metrics = Map("numOutputRows" -> numRows.toString) ++ extraMetrics ++
         (if (extraMetrics.contains("numCarriedDirs"))
            Map("numCarriedDirs" -> carry.size.toString) else Map.empty) ++
-        (if (attempts > 1) Map("numCommitRetries" -> (attempts - 1).toString)
-         else Map.empty)
-      // the change parquet carries `_commit_version` stamped into its rows —
-      // written per attempt with that attempt's version (see write())
-      val changeDir = changeData.map(writeChangeData(version, tsMs, _))
-      val commit = Commit(version, operation, tsMs, dirs, metrics,
-        userMetadata, dataSchema.toDDL, base.version, changeDir,
-        changeFormat = if (changeDir.isDefined) STAMPED_CHANGE_FORMAT else 0,
-        partitionBy = base.partitionBy, dirStats = dirStats,
-        txn = base.txn ++ txnUpdate.toMap, dvDirs = base.dvDirs,
-        columnMap = base.columnMap, constraints = base.constraints,
-      properties = base.properties)
-      try { writeCommit(commit, Some(base)); return commit }
-      catch {
-        case e: ConcurrentCommitException =>
-          changeDir.foreach(d => fs.delete(new Path(d), true))
-          if (attempts >= 10) throw e
-          val head = lastCommit.getOrElse(throw e)
-          rebase.flatMap(_(head)) match {
-            case Some(c2) if c2.forall(head.dirs.contains) =>
-              base = head; carry = c2
-            case _ => throw e
-          }
-        case e: Throwable =>
-          changeDir.foreach(d => fs.delete(new Path(d), true))
-          throw e
-      }
+        retried(n)
+      composed(b.next(operation, tsMs, metrics).copy(userMetadata = userMetadata,
+        schemaDdl = dataSchema.toDDL, txn = b.txn ++ txnUpdate),
+        carry, if (numRows == 0) Nil else added)
     }
-    throw new IllegalStateException("unreachable")
   }
 
   /** Read if present, else an empty frame with the given schema. */
@@ -1533,8 +1315,8 @@ final class ManagedTable(spark: SparkSession, root: String) {
     * pre-step analogue, reference: core/utils/delta.py:83-132). */
   def createIfNotExists(schema: StructType): Unit = synchronized {
     if (!exists)
-      writeCommit(Commit(0L, "CREATE TABLE", System.currentTimeMillis(), Nil,
-        Map.empty, None, schema.toDDL, -1L))
+      writeCommit(Commit.Genesis.next("CREATE TABLE", System.currentTimeMillis(), Map.empty)
+        .copy(schemaDdl = schema.toDDL))
   }
 
   /**
@@ -1569,20 +1351,19 @@ final class ManagedTable(spark: SparkSession, root: String) {
       expectedPrevVersion: Option[Long] = None,
       txnUpdate: Option[(String, Long)] = None,
       propertiesOverride: Option[Map[String, String]] = None): Commit = synchronized {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.col
+    if (mode != "append" && mode != "replace")
+      throw new IllegalArgumentException(s"mode $mode")
+    val append = mode == "append"
     val prev = lastCommit
     // merge callers pass the version their result was COMPUTED against:
     // replacing over a different head would silently erase the
     // intervening commit's data (appends never pass it — they are
     // commutative and retry instead)
-    expectedPrevVersion.filter(v => prev.map(_.version).getOrElse(-1L) != v)
-      .foreach { v =>
-        throw new ConcurrentCommitException(
-          s"table $root advanced from version $v to " +
-            s"${prev.map(_.version).getOrElse(-1L)} while a merge was computing")
-      }
+    fence(expectedPrevVersion, prev, "a merge").foreach(e => throw e)
+    val base = prev.getOrElse(Commit.Genesis)
     val tableSchema: StructType = prev match {
-      case Some(p) if mode == "append" && p.dirs.nonEmpty =>
+      case Some(p) if append && p.dirs.nonEmpty =>
         val old = StructType.fromDDL(p.schemaDdl)
         if (old.toDDL == df.schema.toDDL) df.schema
         else if (!mergeSchema)
@@ -1624,8 +1405,6 @@ final class ManagedTable(spark: SparkSession, root: String) {
         }
       case _ => df.schema
     }
-    val readVersion = prev.map(_.version).getOrElse(-1L)
-    val version = readVersion + 1L
     val tsMs = System.currentTimeMillis()
     // column mapping: a replace starts fresh files under the logical
     // names (map resets); an append writes the previous map's PHYSICAL
@@ -1634,18 +1413,30 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // (of a renamed or dropped column still present in old files) gets
     // a fresh generated physical name — reading old bytes under the
     // reused name would silently resurrect the old column's data.
-    val commitMap: Map[String, String] = {
-      val prevMap = prev.map(_.columnMap).getOrElse(Map.empty)
-      if (mode != "append" || prevMap.isEmpty) Map.empty
+    val commitMap: Map[String, String] =
+      if (!append || base.columnMap.isEmpty) Map.empty
       else {
-        val used = prevMap.values.toSet
-        prevMap ++ df.schema.fieldNames
-          .filter(n => !prevMap.contains(n) && used.contains(n))
+        val used = base.columnMap.values.toSet
+        base.columnMap ++ df.schema.fieldNames
+          .filter(n => !base.columnMap.contains(n) && used.contains(n))
           .map(n => n -> s"c_${UUID.randomUUID().toString.take(8)}")
       }
-    }
-    val dataDir = new Path(new Path(rootPath, "data"),
-      f"$version%012d-${UUID.randomUUID().toString.take(8)}").toString
+    // `propertiesOverride` (REPLACE TABLE AS SELECT): the DECLARED
+    // property set both lands in this one commit (no separate
+    // setProperties commit to crash between) and governs this very
+    // write's layout knobs (clustering, bloom filters) — the first
+    // files of the replaced table are born under the new properties
+    def build(b: Commit, metrics: Map[String, String]): Commit =
+      b.next(operation, tsMs, metrics).copy(userMetadata = userMetadata,
+        schemaDdl = tableSchema.toDDL, partitionBy = partitionBy,
+        txn = b.txn ++ txnUpdate,
+        // a replace starts a fresh composition (all tombstoned files
+        // leave it); an append keeps the previous snapshot's dirs and
+        // with them its live tombstones
+        dvDirs = if (append) b.dvDirs else Nil,
+        columnMap = commitMap, constraints = base.constraints,
+        properties = propertiesOverride.getOrElse(b.properties))
+    val layout = build(base, Map.empty)
     // write-time clustering (`cluster.columns` property — the liquid-
     // clustering intent): range-partition + sort the batch on the
     // declared columns so every written FILE covers a disjoint value
@@ -1653,14 +1444,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // still records the whole batch, but the scan's pushed filters now
     // prune at row-group grain inside the dirs — data is BORN clustered
     // instead of waiting for a clusterByRange/Z maintenance pass.
-    // `propertiesOverride` (REPLACE TABLE AS SELECT): the DECLARED
-    // property set both lands in this one commit (no separate
-    // setProperties commit to crash between) and governs this very
-    // write's layout knobs (clustering, bloom filters) — the first
-    // files of the replaced table are born under the new properties
-    val effectiveProps = propertiesOverride
-      .getOrElse(prev.map(_.properties).getOrElse(Map.empty))
-    val clusterCols = effectiveProps
+    val clusterCols = layout.properties
       .get(ManagedTable.ClusterColumnsProp).toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
       .filter(df.columns.contains)
@@ -1668,85 +1452,163 @@ final class ManagedTable(spark: SparkSession, root: String) {
       if (clusterCols.isEmpty) df
       else df.repartitionByRange(clusterCols.map(c => col(s"`$c`")): _*)
         .sortWithinPartitions(clusterCols.map(c => col(s"`$c`")): _*)
-    // row count + per-column min/max observed on the write job itself —
-    // no second pass; the stats feed [[readWhere]]'s dir-level skipping
-    val obs = org.apache.spark.sql.Observation(s"graft_write_$version-${UUID.randomUUID()}")
-    val cons = prev.map(_.constraints).getOrElse(Map.empty)
-    val aggs = (count(lit(1)).as("rows") +: DataSkipping.statAggs(df.schema)) ++
-      constraintAggs(cons)
-    val writer = toPhysical(df1.observe(obs, aggs.head, aggs.tail: _*), commitMap)
-      .write.mode("overwrite")
-      .options(ManagedTable.bloomWriteOptions(effectiveProps, commitMap))
-    (if (partitionBy.nonEmpty) writer.partitionBy(partitionBy: _*) else writer)
-      .parquet(dataDir)
-    val observed = obs.get
-    enforceConstraints(cons, observed, Seq(dataDir))
-    val numRows = observed("rows").asInstanceOf[Long]
-    val dataDirStats = DataSkipping.statsOf(df.schema, observed)
-    // The change parquet carries `_commit_version` stamped INTO its rows, so
-    // it must be written PER ATTEMPT with that attempt's version: a retry
-    // that re-published a pre-stamped dir under a new commit version would
-    // attribute the change rows to the conflicting writer's commit. A stale
-    // attempt's dir is deleted before the next one is stamped.
-    def attempt(base: Option[Commit]): Commit = {
-      val rv = base.map(_.version).getOrElse(-1L)
-      val dirs = mode match {
-        case "append"  => base.map(_.dirs).getOrElse(Nil) :+ dataDir
-        case "replace" => Seq(dataDir)
-        case other     => throw new IllegalArgumentException(s"mode $other")
-      }
-      val dirStats = mode match {
-        case "append" => base.map(_.dirStats).getOrElse(Map.empty) +
-          (dataDir -> dataDirStats)
-        case _ => Map(dataDir -> dataDirStats)
-      }
-      val changeDir = changeData.map(writeChangeData(rv + 1L, tsMs, _))
-      val c = Commit(rv + 1L, operation, tsMs, dirs,
-        Map("numOutputRows" -> numRows.toString), userMetadata,
-        tableSchema.toDDL, rv, changeDir,
-        changeFormat = if (changeDir.isDefined) STAMPED_CHANGE_FORMAT else 0,
-        partitionBy = partitionBy, dirStats = dirStats,
-        txn = base.map(_.txn).getOrElse(Map.empty) ++ txnUpdate.toMap,
-        // a replace starts a fresh composition (all tombstoned files
-        // leave it); an append keeps the previous snapshot's dirs and
-        // with them its live tombstones
-        dvDirs = if (mode == "append") base.map(_.dvDirs).getOrElse(Nil) else Nil,
-        columnMap = commitMap, constraints = cons,
-        properties = propertiesOverride
-          .getOrElse(base.map(_.properties).getOrElse(Map.empty)))
-      try writeCommit(c, base)
-      catch { case e: Throwable =>
-        changeDir.foreach(d => fs.delete(new Path(d), true))
-        throw e
-      }
-      c
-    }
-    try attempt(prev)
-    catch {
-      case e: ConcurrentCommitException if mode == "append" =>
-        // optimistic retry, Delta-style: an APPEND is commutative with any
-        // concurrent commit — recompute the composition against the new
-        // latest and re-publish the already-written data dir (the dir
-        // name keeps the attempt's version stamp; only the log matters).
-        // Non-commutative modes (replace/merge) must surface the conflict.
-        var attempts = 0
-        var done: Commit = null
-        var lastErr: ConcurrentCommitException = e
-        while (done == null && attempts < 10) {
-          attempts += 1
-          try done = attempt(lastCommit)
-          catch { case e2: ConcurrentCommitException => lastErr = e2 }
-        }
-        if (done == null) throw lastErr
-        done
+    val (dataDir, numRows, added) = writeDataDir(df1, layout)
+    // optimistic retry, Delta-style: an APPEND is commutative with any
+    // concurrent commit — recompose against the new head and re-publish
+    // the already-written data dir (the dir name keeps the first
+    // attempt's version stamp; only the log matters). A replace/merge
+    // must surface the conflict.
+    publish(base, Seq(dataDir), changeData, (_, n) => append && n <= 10) { (b, _) =>
+      val c = build(b, Map("numOutputRows" -> numRows.toString))
+      if (append) c.copy(dirs = b.dirs :+ dataDir, dirStats = b.dirStats ++ added)
+      else composed(c, Nil, added)
     }
   }
+
+  // --------------------------- commit kernel ---------------------------
+  // Every commit path ends here: it builds its entry as the base's
+  // `Commit.next`, writes its data dir through `writeDataDir`, checks the
+  // version fence through `fence`, and publishes through `publish`.
+
+  /** A fresh dir name for an entry of `version` under `area`. */
+  private def freshDir(area: String, version: Long, tag: String = ""): String =
+    new Path(new Path(rootPath, area),
+      f"$version%012d-$tag${UUID.randomUUID().toString.take(8)}").toString
+
+  /** The version fence: a result computed against version `expected`
+    * must not publish over a head that moved since — that would
+    * silently erase the intervening commit. Some(conflict) when it
+    * moved. */
+  private def fence(expected: Option[Long], head: Option[Commit],
+                    what: String): Option[ConcurrentCommitException] = {
+    val h = head.fold(-1L)(_.version)
+    expected.filter(_ != h).map(v => new ConcurrentCommitException(
+      s"table $root advanced from version $v to $h while $what was computing"))
+  }
+
+  /**
+   * The one data-dir writer: `df` lands as one fresh dir for `layout`
+   * (the commit it is written for: its version names the dir, and its
+   * column mapping, bloom properties, partitioning and constraints
+   * govern the files) — or, `grouped`, one subdir per [[CLUSTER_COL]]
+   * group. Row count, skipping stats and constraint violation counts
+   * ride the write job's Observation (grouped: one aggregate pass per
+   * group, since an Observation is global-only); a batch violating a
+   * constraint deletes the dir and throws before anything publishes.
+   * Returns the dir, the row count and the new composition entries
+   * (the dir, or its group subdirs in group order) with their stats.
+   */
+  private def writeDataDir(df: DataFrame, layout: Commit, grouped: Boolean = false)
+      : (String, Long, Seq[(String, Map[String, DataSkipping.ColMinMax])]) = {
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val dir = freshDir("data", layout.version)
+    val schema =
+      if (grouped) StructType(df.schema.filterNot(_.name == CLUSTER_COL)) else df.schema
+    val aggs = (count(lit(1)).as("rows") +: DataSkipping.statAggs(schema)) ++
+      constraintAggs(layout.constraints)
+    val obs = org.apache.spark.sql.Observation(
+      s"graft_write_${layout.version}-${UUID.randomUUID()}")
+    val groups: Seq[(String, Map[String, Any])] =
+      if (!grouped) Nil
+      else {
+        require(layout.partitionBy.isEmpty,
+          "groupedLayout composes with unpartitioned tables only")
+        df.groupBy(col(CLUSTER_COL)).agg(aggs.head, aggs.tail: _*).collect().toSeq
+          .map(r => r.getInt(r.fieldIndex(CLUSTER_COL)) -> r.getValuesMap[Any](r.schema.fieldNames))
+          .sortBy(_._1).map { case (g, vals) => s"$dir/$CLUSTER_COL=$g" -> vals }
+      }
+    val writer = toPhysical(if (grouped) df else df.observe(obs, aggs.head, aggs.tail: _*),
+        layout.columnMap).write.mode("overwrite")
+      .options(ManagedTable.bloomWriteOptions(layout.properties, layout.columnMap))
+    val parts = if (grouped) Seq(CLUSTER_COL) else layout.partitionBy
+    (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer).parquet(dir)
+    val observed = if (grouped) groups else Seq(dir -> obs.get)
+    // empty batches observe NULL sums (no rows → no violations)
+    layout.constraints.toSeq.sortBy(_._1).foreach { case (name, dsl) =>
+      val v = observed.flatMap(o => Option(o._2.getOrElse(s"cons:$name", null)))
+        .map(_.asInstanceOf[Long]).sum
+      if (v > 0L) {
+        fs.delete(new Path(dir), true)
+        throw new graft.write.WriteTableConstraintError(
+          s"batch violates table constraint '$name' ($dsl) on $root: " +
+            s"$v violating rows — write rolled back")
+      }
+    }
+    (dir, observed.map(_._2("rows").asInstanceOf[Long]).sum,
+      observed.map { case (d, vals) => d -> DataSkipping.statsOf(schema, vals) })
+  }
+
+  /** `c` recomposed as `carry` (dirs of its base, by reference, with
+    * their stats) plus the `added` entries. */
+  private def composed(c: Commit, carry: Seq[String],
+      added: Seq[(String, Map[String, DataSkipping.ColMinMax])]): Commit =
+    c.copy(dirs = carry ++ added.map(_._1),
+      dirStats = c.dirStats.view.filterKeys(carry.contains).toMap ++ added)
+
+  /** `numCommitRetries` for a path that reports its publication retries. */
+  private def retried(attempt: Int): Map[String, String] =
+    if (attempt > 1) Map("numCommitRetries" -> (attempt - 1).toString) else Map.empty
+
+  /**
+   * The one publication loop. `build(base, attempt)` makes the entry
+   * published over `base`; each attempt stamps `changeData` with its own
+   * version (the `_commit_version` rides the parquet, so a pre-stamped
+   * dir must never re-publish under another version). An attempt that
+   * loses the race asks `retry(newHead, attempts)` whether the result
+   * still holds over the new head — yes re-publishes over it (the data
+   * dirs are written once and reused), no surfaces the conflict. When
+   * the loop gives up, or anything else fails before the entry
+   * publishes, it deletes what this call wrote: the attempt's change dir
+   * and the `written` data/DV dirs — never anything a published entry
+   * references ([[writeCommit]] only throws before publication). A
+   * published entry that drops a written dir (an empty result) deletes
+   * that dir too.
+   */
+  private def publish(base: Commit, written: Seq[String] = Nil,
+                      changeData: Option[DataFrame] = None,
+                      retry: (Commit, Int) => Boolean = (_, _) => false)(
+                      build: (Commit, Int) => Commit): Commit = {
+    var b = base
+    var attempt = 1
+    while (true) {
+      var changeDir: Option[String] = None
+      try {
+        val c0 = build(b, attempt)
+        changeDir = changeData.map(writeChangeData(c0.version, c0.timestampMs, _))
+        val c = c0.copy(changeDir = changeDir,
+          changeFormat = if (changeDir.isDefined) STAMPED_CHANGE_FORMAT else 0)
+        writeCommit(c, Some(b))
+        val referenced = c.dirs.map(ManagedTable.dataDirRoot).toSet ++ c.dvDirs
+        written.filterNot(referenced).foreach(d => fs.delete(new Path(d), true))
+        return c
+      } catch {
+        case e: Throwable =>
+          changeDir.foreach(d => fs.delete(new Path(d), true))
+          val head = e match {
+            case _: ConcurrentCommitException => lastCommit.filter(retry(_, attempt))
+            case _ => None
+          }
+          if (head.isEmpty) {
+            written.foreach(d => fs.delete(new Path(d), true))
+            throw e
+          }
+          b = head.get
+          attempt += 1
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** Publish one metadata-only successor of `c` (`f` changes its
+    * fields); a lost race surfaces. */
+  private def commitNext(c: Commit, operation: String,
+                         metrics: Map[String, String])(f: Commit => Commit): Commit =
+    publish(c)((b, _) => f(b.next(operation, System.currentTimeMillis(), metrics)))
 
   /** Stamp + persist a per-row change set for a commit (see [[write]]). */
   private def writeChangeData(version: Long, tsMs: Long, cd: DataFrame): String = {
     import org.apache.spark.sql.functions.lit
-    val dir = new Path(new Path(rootPath, "_change_data"),
-      f"$version%012d-${UUID.randomUUID().toString.take(8)}").toString
+    val dir = freshDir("_change_data", version)
     cd.withColumn("_commit_version", lit(version))
       .withColumn("_commit_timestamp", lit(new java.sql.Timestamp(tsMs)))
       .write.mode("overwrite").parquet(dir)
@@ -1782,33 +1644,16 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val prev = lastCommit
     // see write(): a partition-scoped merge result computed against an
     // older head must not replace a partition a concurrent commit wrote
-    expectedPrevVersion.filter(v => prev.map(_.version).getOrElse(-1L) != v)
-      .foreach { v =>
-        throw new ConcurrentCommitException(
-          s"table $root advanced from version $v to " +
-            s"${prev.map(_.version).getOrElse(-1L)} while a merge was computing")
-      }
-    val readVersion = prev.map(_.version).getOrElse(-1L)
-    val version = readVersion + 1L
+    fence(expectedPrevVersion, prev, "a merge").foreach(e => throw e)
+    val base = prev.getOrElse(Commit.Genesis)
     val tsMs = System.currentTimeMillis()
-    val dataDir = new Path(new Path(rootPath, "data"),
-      f"$version%012d-${UUID.randomUUID().toString.take(8)}")
-    val obs = org.apache.spark.sql.Observation(s"graft_sow_$version-${UUID.randomUUID()}")
-    val consSow = prev.map(_.constraints).getOrElse(Map.empty)
-    val aggs = (org.apache.spark.sql.functions.count(
-      org.apache.spark.sql.functions.lit(1)).as("rows") +:
-      DataSkipping.statAggs(df.schema)) ++ constraintAggs(consSow)
-    toPhysical(df.observe(obs, aggs.head, aggs.tail: _*),
-        prev.map(_.columnMap).getOrElse(Map.empty))
-      .write.mode("overwrite")
-      .options(ManagedTable.bloomWriteOptions(
-        prev.map(_.properties).getOrElse(Map.empty),
-        prev.map(_.columnMap).getOrElse(Map.empty)))
-      .partitionBy(partitionBy: _*).parquet(dataDir.toString)
+    val layout = base.next(operation, tsMs, Map.empty).copy(partitionBy = partitionBy)
+    // every new subdir carries the incoming batch's whole-frame stats —
+    // a conservative superset of the subdir's true interval
+    val (dataDir, numRows, Seq((_, newStats))) = writeDataDir(df, layout)
 
     def partitionSubdirs(base: Path): Seq[String] =
       partitionSubdirsOf(base, partitionBy.size)
-    val replaced = partitionSubdirs(dataDir).toSet
     // partition-layout sanity: every relative path must be col=value
     // segments for exactly the declared partition columns, in order —
     // otherwise the replace silently matches nothing and appends a second
@@ -1820,56 +1665,40 @@ final class ManagedTable(spark: SparkSession, root: String) {
         s"selectiveOverwrite(partitionBy=${partitionBy.mkString(",")}) does not " +
           s"match the $origin partition layout '$rel'")
     }
-    replaced.foreach(checkLayout(_, "incoming batch"))
-    val newDirs = replaced.toSeq.sorted.map(r => s"$dataDir/$r")
-
-    // previous composition, decomposed to partition granularity, minus
-    // the replaced partitions; dirs may be whole data dirs (decompose) or
-    // partition subdirs from an earlier selective overwrite (compare the
-    // relative partition path directly). Kept dirs inherit their origin
-    // dir's skipping stats — a whole root's interval is a superset of any
-    // of its partition subdirs', so inheritance stays conservative.
-    val prevStats = prev.map(_.dirStats).getOrElse(Map.empty)
-    val keptPairs = prev.map(_.dirs).getOrElse(Nil).flatMap { d =>
-      val base = ManagedTable.dataDirRoot(d)
-      if (base == d) {
-        val subs = partitionSubdirs(new Path(d))
-        if (subs.isEmpty)
-          throw new IllegalStateException(
-            s"selectiveOverwrite needs a table partitioned by ${partitionBy.mkString(",")}; " +
-              s"dir $d has no matching partition layout")
-        subs.foreach(checkLayout(_, "existing table"))
-        subs.filterNot(replaced.contains).map(r => s"$d/$r" -> prevStats.get(d))
-      } else {
-        val rel = d.stripPrefix(base).stripPrefix("/")
-        checkLayout(rel, "existing table")
-        if (replaced.contains(rel)) Nil else Seq(d -> prevStats.get(d))
+    publish(base, Seq(dataDir), changeData) { (b, _) =>
+      val replaced = partitionSubdirs(new Path(dataDir)).toSet
+      replaced.foreach(checkLayout(_, "incoming batch"))
+      val newDirs = replaced.toSeq.sorted.map(r => s"$dataDir/$r")
+      // previous composition, decomposed to partition granularity, minus
+      // the replaced partitions; dirs may be whole data dirs (decompose) or
+      // partition subdirs from an earlier selective overwrite (compare the
+      // relative partition path directly). Kept dirs inherit their origin
+      // dir's skipping stats — a whole root's interval is a superset of any
+      // of its partition subdirs', so inheritance stays conservative.
+      val keptPairs = b.dirs.flatMap { d =>
+        val root = ManagedTable.dataDirRoot(d)
+        if (root == d) {
+          val subs = partitionSubdirs(new Path(d))
+          if (subs.isEmpty)
+            throw new IllegalStateException(
+              s"selectiveOverwrite needs a table partitioned by ${partitionBy.mkString(",")}; " +
+                s"dir $d has no matching partition layout")
+          subs.foreach(checkLayout(_, "existing table"))
+          subs.filterNot(replaced.contains).map(r => s"$d/$r" -> b.dirStats.get(d))
+        } else {
+          val rel = d.stripPrefix(root).stripPrefix("/")
+          checkLayout(rel, "existing table")
+          if (replaced.contains(rel)) Nil else Seq(d -> b.dirStats.get(d))
+        }
       }
+      b.next(operation, tsMs, Map("numOutputRows" -> numRows.toString,
+          "replacedPartitions" -> replaced.size.toString))
+        .copy(dirs = keptPairs.map(_._1) ++ newDirs,
+          dirStats = keptPairs.collect { case (d, Some(st)) => d -> st }.toMap ++
+            newDirs.map(_ -> newStats),
+          userMetadata = userMetadata, schemaDdl = df.schema.toDDL,
+          partitionBy = partitionBy, txn = b.txn ++ txnUpdate)
     }
-    val kept = keptPairs.map(_._1)
-
-    val observed = obs.get
-    enforceConstraints(consSow, observed, Seq(dataDir.toString))
-    val numRows = observed("rows").asInstanceOf[Long]
-    // every new subdir carries the incoming batch's whole-frame stats —
-    // again a conservative superset of the subdir's true interval
-    val newStats = DataSkipping.statsOf(df.schema, observed)
-    val dirStats = keptPairs.collect { case (d, Some(s)) => d -> s }.toMap ++
-      newDirs.map(_ -> newStats)
-    val changeDir = changeData.map(writeChangeData(version, tsMs, _))
-    val commit = Commit(version, operation, tsMs,
-      kept ++ newDirs, Map("numOutputRows" -> numRows.toString,
-        "replacedPartitions" -> replaced.size.toString),
-      userMetadata, df.schema.toDDL, readVersion, changeDir,
-      changeFormat = if (changeDir.isDefined) STAMPED_CHANGE_FORMAT else 0,
-      partitionBy = partitionBy, dirStats = dirStats,
-      txn = prev.map(_.txn).getOrElse(Map.empty) ++ txnUpdate.toMap,
-      dvDirs = prev.map(_.dvDirs).getOrElse(Nil),
-      columnMap = prev.map(_.columnMap).getOrElse(Map.empty),
-      constraints = consSow,
-      properties = prev.map(_.properties).getOrElse(Map.empty))
-    writeCommit(commit, prev)
-    commit
   }
 
   /** Parsed violation-count aggregates for the table's persistent
@@ -1884,24 +1713,6 @@ final class ManagedTable(spark: SparkSession, root: String) {
             .cast("long").as(s"cons:$name")
         case rs => throw new IllegalStateException(
           s"constraint $name of $root holds ${rs.size} rules — corrupt log")
-      }
-    }
-
-  /** Check the observed violation counts; on any violation delete the
-    * just-written (uncommitted) dirs and throw — the commit never
-    * publishes, so the table is untouched. Empty batches observe NULL
-    * sums (no rows → no violations). */
-  private def enforceConstraints(cons: Map[String, String],
-                                 observed: Map[String, Any],
-                                 cleanup: Seq[String]): Unit =
-    cons.toSeq.sortBy(_._1).foreach { case (name, dsl) =>
-      val v = Option(observed.getOrElse(s"cons:$name", null))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (v > 0L) {
-        cleanup.foreach(d => fs.delete(new Path(d), true))
-        throw new graft.write.WriteTableConstraintError(
-          s"batch violates table constraint '$name' ($dsl) on $root: " +
-            s"$v violating rows — write rolled back")
       }
     }
 
@@ -1924,16 +1735,9 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val c = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
     val schema = StructType.fromDDL(c.schemaDdl)
-    val version = c.version + 1L
-    if (c.dirs.isEmpty) {
-      val commit = Commit(version, "ANALYZE", System.currentTimeMillis(),
-        c.dirs, Map("numAnalyzedDirs" -> "0"), None, c.schemaDdl, c.version,
-        partitionBy = c.partitionBy, dirStats = Map.empty, txn = c.txn,
-        dvDirs = c.dvDirs, columnMap = c.columnMap, constraints = c.constraints,
-      properties = c.properties)
-      writeCommit(commit, Some(c))
-      return commit
-    }
+    if (c.dirs.isEmpty)
+      return commitNext(c, "ANALYZE", Map("numAnalyzedDirs" -> "0"))(
+        _.copy(dirStats = Map.empty))
     // composition entries by their table-relative key (path after data/)
     val byKey: Map[String, String] = c.dirs.map { d =>
       val root = ManagedTable.dataDirRoot(d)
@@ -1970,13 +1774,8 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val merged = c.dirs.map(d =>
       d -> dirStats.getOrElse(d, c.dirStats.getOrElse(d, Map.empty)))
       .filter(_._2.nonEmpty).toMap
-    val commit = Commit(version, "ANALYZE", System.currentTimeMillis(), c.dirs,
-      Map("numAnalyzedDirs" -> dirStats.size.toString), None, c.schemaDdl,
-      c.version, partitionBy = c.partitionBy, dirStats = merged, txn = c.txn,
-      dvDirs = c.dvDirs, columnMap = c.columnMap, constraints = c.constraints,
-      properties = c.properties)
-    writeCommit(commit, Some(c))
-    commit
+    commitNext(c, "ANALYZE", Map("numAnalyzedDirs" -> dirStats.size.toString))(
+      _.copy(dirStats = merged))
   }
 
   /**
@@ -2013,14 +1812,8 @@ final class ManagedTable(spark: SparkSession, root: String) {
       .filter(org.apache.spark.sql.functions.col("passed") === 0).count()
     require(bad == 0L,
       s"existing rows of $root violate '$name' ($rule) — constraint not added")
-    val commit = Commit(c.version + 1L, s"ADD CONSTRAINT($name)",
-      System.currentTimeMillis(), c.dirs, Map("constraint" -> rule),
-      None, c.schemaDdl, c.version, partitionBy = c.partitionBy,
-      dirStats = c.dirStats, txn = c.txn, dvDirs = c.dvDirs,
-      columnMap = c.columnMap, constraints = c.constraints + (name -> rule),
-      properties = c.properties)
-    writeCommit(commit, Some(c))
-    commit
+    commitNext(c, s"ADD CONSTRAINT($name)", Map("constraint" -> rule))(
+      _.copy(constraints = c.constraints + (name -> rule)))
   }
 
   /**
@@ -2056,30 +1849,16 @@ final class ManagedTable(spark: SparkSession, root: String) {
       require(missing.isEmpty,
         s"bloom.columns names absent from the schema: ${missing.mkString(", ")}")
     }
-    val commit = Commit(c.version + 1L, "SET TBLPROPERTIES",
-      System.currentTimeMillis(), c.dirs,
-      props.map { case (k, v) => s"property:$k" -> v },
-      None, c.schemaDdl, c.version, partitionBy = c.partitionBy,
-      dirStats = c.dirStats, txn = c.txn, dvDirs = c.dvDirs,
-      columnMap = c.columnMap, constraints = c.constraints,
-      properties = merged)
-    writeCommit(commit, Some(c))
-    commit
+    commitNext(c, "SET TBLPROPERTIES", props.map { case (k, v) => s"property:$k" -> v })(
+      _.copy(properties = merged))
   }
 
   /** UNSET TBLPROPERTIES — metadata-only commit dropping `keys`. */
   def unsetProperties(keys: Seq[String]): Commit = synchronized {
     val c = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
-    val commit = Commit(c.version + 1L, "UNSET TBLPROPERTIES",
-      System.currentTimeMillis(), c.dirs,
-      Map("unsetProperties" -> keys.mkString(",")),
-      None, c.schemaDdl, c.version, partitionBy = c.partitionBy,
-      dirStats = c.dirStats, txn = c.txn, dvDirs = c.dvDirs,
-      columnMap = c.columnMap, constraints = c.constraints,
-      properties = c.properties -- keys)
-    writeCommit(commit, Some(c))
-    commit
+    commitNext(c, "UNSET TBLPROPERTIES", Map("unsetProperties" -> keys.mkString(",")))(
+      _.copy(properties = c.properties -- keys))
   }
 
   /** DROP a persistent constraint — metadata only. */
@@ -2087,14 +1866,8 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val c = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
     require(c.constraints.contains(name), s"no constraint $name on $root")
-    val commit = Commit(c.version + 1L, s"DROP CONSTRAINT($name)",
-      System.currentTimeMillis(), c.dirs, Map("droppedConstraint" -> name),
-      None, c.schemaDdl, c.version, partitionBy = c.partitionBy,
-      dirStats = c.dirStats, txn = c.txn, dvDirs = c.dvDirs,
-      columnMap = c.columnMap, constraints = c.constraints - name,
-      properties = c.properties)
-    writeCommit(commit, Some(c))
-    commit
+    commitNext(c, s"DROP CONSTRAINT($name)", Map("droppedConstraint" -> name))(
+      _.copy(constraints = c.constraints - name))
   }
 
   /**
@@ -2138,26 +1911,11 @@ final class ManagedTable(spark: SparkSession, root: String) {
       (if (phys == newName) Map.empty[String, String] else Map(newName -> phys))
     val newStats = c.dirStats.view.mapValues(m =>
       m.map { case (k, v) => (if (k == oldName) newName else k) -> v }).toMap
-    val commit = Commit(c.version + 1L, s"RENAME COLUMN($oldName -> $newName)",
-      System.currentTimeMillis(), c.dirs,
-      Map("renamedFrom" -> oldName, "renamedTo" -> newName),
-      None, newSchema.toDDL, c.version, partitionBy = c.partitionBy,
-      dirStats = newStats, txn = c.txn, dvDirs = c.dvDirs, columnMap = newMap,
-      constraints = c.constraints,
-      properties = c.properties)
-    writeCommit(commit, Some(c))
-    commit
+    commitNext(c, s"RENAME COLUMN($oldName -> $newName)",
+      Map("renamedFrom" -> oldName, "renamedTo" -> newName))(
+      _.copy(schemaDdl = newSchema.toDDL, dirStats = newStats, columnMap = newMap))
   }
 
-  /**
-   * DROP COLUMN as METADATA ONLY: the logical schema loses the field;
-   * the physical bytes stay in the files (reads simply never request
-   * them — column pruning makes them free) until the next full
-   * rewrite. The dropped column's PHYSICAL name is retained in the
-   * mapping under a reserved tombstone key so a later `mergeSchema`
-   * append re-adding the same logical name gets a FRESH physical name
-   * instead of silently resurrecting the dropped column's old bytes.
-   */
   /**
    * ADD COLUMN — metadata only, zero file rewrites (Delta's schema
    * evolution): the commit schema gains a NULLABLE column at the end;
@@ -2181,17 +1939,20 @@ final class ManagedTable(spark: SparkSession, root: String) {
           "resurrect the old stored values; pick another name or rewrite")
       val newSchema = StructType(schema.fields :+
         org.apache.spark.sql.types.StructField(name, dataType, nullable = true))
-      val commit = Commit(c.version + 1L, s"ADD COLUMN($name)",
-        System.currentTimeMillis(), c.dirs,
-        Map("addedColumn" -> name, "addedType" -> dataType.sql),
-        None, newSchema.toDDL, c.version, partitionBy = c.partitionBy,
-        dirStats = c.dirStats, txn = c.txn, dvDirs = c.dvDirs,
-        columnMap = c.columnMap, constraints = c.constraints,
-        properties = c.properties)
-      writeCommit(commit, Some(c))
-      commit
+      commitNext(c, s"ADD COLUMN($name)",
+        Map("addedColumn" -> name, "addedType" -> dataType.sql))(
+        _.copy(schemaDdl = newSchema.toDDL))
     }
 
+  /**
+   * DROP COLUMN as METADATA ONLY: the logical schema loses the field;
+   * the physical bytes stay in the files (reads simply never request
+   * them — column pruning makes them free) until the next full
+   * rewrite. The dropped column's PHYSICAL name is retained in the
+   * mapping under a reserved tombstone key so a later `mergeSchema`
+   * append re-adding the same logical name gets a FRESH physical name
+   * instead of silently resurrecting the dropped column's old bytes.
+   */
   def dropColumn(name: String): Commit = synchronized {
     val c = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
@@ -2212,14 +1973,8 @@ final class ManagedTable(spark: SparkSession, root: String) {
       s"__graft_dropped_${UUID.randomUUID().toString.take(8)}" -> c.physicalOf(name)
     val newMap = (c.columnMap - name) + tombstone
     val newStats = c.dirStats.view.mapValues(_ - name).toMap
-    val commit = Commit(c.version + 1L, s"DROP COLUMN($name)",
-      System.currentTimeMillis(), c.dirs, Map("droppedColumn" -> name),
-      None, newSchema.toDDL, c.version, partitionBy = c.partitionBy,
-      dirStats = newStats, txn = c.txn, dvDirs = c.dvDirs, columnMap = newMap,
-      constraints = c.constraints,
-      properties = c.properties)
-    writeCommit(commit, Some(c))
-    commit
+    commitNext(c, s"DROP COLUMN($name)", Map("droppedColumn" -> name))(
+      _.copy(schemaDdl = newSchema.toDDL, dirStats = newStats, columnMap = newMap))
   }
 
   /**
@@ -2458,6 +2213,12 @@ final class ManagedTable(spark: SparkSession, root: String) {
     else None
   }
 
+  /** Age of the FLOOR (earliest retained) commit — the age policy's
+    * quiet-path evidence; pointer reads plus one entry read. None when
+    * the table does not exist. */
+  def floorAgeMs(nowMs: Long = System.currentTimeMillis()): Option[Long] =
+    earliestVersion.map(v => nowMs - readEntry(v)._1.timestampMs)
+
   /**
    * Age-based retention as POLICY — [[vacuumOlderThan]]'s WHEN, the
    * time-denominated twin of [[vacuumIfNeeded]] (Delta's operator
@@ -2480,12 +2241,6 @@ final class ManagedTable(spark: SparkSession, root: String) {
    * with [[vacuumIfNeeded]] to keep the retained window — and with it
    * this path's worst-case ask — bounded.
    */
-  /** Age of the FLOOR (earliest retained) commit — the age policy's
-    * quiet-path evidence; pointer reads plus one entry read. None when
-    * the table does not exist. */
-  def floorAgeMs(nowMs: Long = System.currentTimeMillis()): Option[Long] =
-    earliestVersion.map(v => nowMs - readEntry(v)._1.timestampMs)
-
   def vacuumOlderThanIfNeeded(maxAgeMs: Long,
                               slackMs: Long = 6L * 3600 * 1000,
                               dryRun: Boolean = false,
@@ -3190,63 +2945,26 @@ final class ManagedTable(spark: SparkSession, root: String) {
                                   operation: String,
                                   carriedDirs: Seq[String] = Nil,
                                   extraProps: Map[String, String] = Map.empty): Commit = {
-    import org.apache.spark.sql.functions.{col, count, lit}
-    val schema = StructType.fromDDL(c.schemaDdl)
-    val aggs = count(lit(1)).as("rows") +: DataSkipping.statAggs(schema)
-    val perBucket: Map[Int, (Long, Map[String, DataSkipping.ColMinMax])] =
-      clustered.groupBy(col(CLUSTER_COL)).agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val vals = r.getValuesMap[Any](r.schema.fieldNames)
-          r.getInt(r.fieldIndex(CLUSTER_COL)) ->
-            (r.getLong(r.fieldIndex("rows")), DataSkipping.statsOf(schema, vals))
-        }.toMap
-
-    val version = c.version + 1L
     val tsMs = System.currentTimeMillis()
-    val dataDir = new Path(new Path(rootPath, "data"),
-      f"$version%012d-${UUID.randomUUID().toString.take(8)}").toString
     // a FULL re-cluster rewrites every file under the logical names (the
     // column mapping resets, like any replace); an incremental pass
     // carries physical-named clustered dirs, so its new files must keep
-    // writing the SAME physical names for the one global mapping to fit
-    val commitMap: Map[String, String] =
-      if (carriedDirs.nonEmpty) c.columnMap else Map.empty[String, String]
-    toPhysical(clustered, commitMap).write.mode("overwrite")
-      .options(ManagedTable.bloomWriteOptions(c.properties, commitMap))
-      .partitionBy(CLUSTER_COL).parquet(dataDir)
-
-    val newDirs = perBucket.keys.toSeq.sorted.map(b => s"$dataDir/$CLUSTER_COL=$b")
-    val dirs = carriedDirs ++ newDirs
-    val dirStats = c.dirStats.view.filterKeys(carriedDirs.contains).toMap ++
-      perBucket.map { case (b, (_, stats)) =>
-        s"$dataDir/$CLUSTER_COL=$b" -> stats
-      }
-    val commit = Commit(version, operation, tsMs, dirs,
-      Map("numOutputRows" -> perBucket.values.map(_._1).sum.toString,
-        "buckets" -> perBucket.size.toString),
-      None, c.schemaDdl, c.version, dirStats = dirStats, txn = c.txn,
-      // tombstones for rewritten tail files go inert (the files leave
-      // the composition); carried clustered dirs keep theirs live
-      dvDirs = if (carriedDirs.nonEmpty) c.dvDirs else Nil,
-      columnMap = commitMap,
-      constraints = c.constraints,
-      properties = c.properties ++ extraProps)
-    writeCommit(commit, Some(c))
-    commit
+    // writing the SAME physical names for the one global mapping to fit.
+    // Tombstones for rewritten tail files go inert (the files leave the
+    // composition); carried clustered dirs keep theirs live
+    def build(b: Commit, metrics: Map[String, String]): Commit =
+      b.next(operation, tsMs, metrics).copy(partitionBy = Nil,
+        dvDirs = if (carriedDirs.nonEmpty) b.dvDirs else Nil,
+        columnMap = if (carriedDirs.nonEmpty) b.columnMap else Map.empty,
+        properties = b.properties ++ extraProps)
+    val (dataDir, rows, added) =
+      writeDataDir(clustered, build(c, Map.empty), grouped = true)
+    publish(c, Seq(dataDir)) { (b, _) =>
+      composed(build(b, Map("numOutputRows" -> rows.toString,
+        "buckets" -> added.size.toString)), carriedDirs, added)
+    }
   }
 
-  /** Test-visible so specs can fabricate large commit logs without paying
-    * a Spark write job per version.
-    *
-    * Steady-state commits are DELTA-ENCODED against their parent (added /
-    * removed dirs + added stats, Delta-log style) with a full snapshot
-    * forced every [[ManagedTable.LogSnapshotInterval]] versions — so a
-    * continuous-ingest commit costs O(changed dirs) log bytes, not
-    * O(table dirs), and chain resolution stays bounded. `parent` (when it
-    * is version−1, as every commit path's composition base is) avoids
-    * re-reading the log to diff; encoding falls back to a full snapshot
-    * whenever the delta would not reconstruct the commit byte-exactly or
-    * would not be smaller. */
   /** Payload bytes of one immutable data dir, by recursive listing —
     * the write-time measurement behind `Commit.dirBytes`, and the
     * read-side fallback for dirs committed before bytes were recorded.
@@ -3269,6 +2987,18 @@ final class ManagedTable(spark: SparkSession, root: String) {
     n
   }
 
+  /** Test-visible so specs can fabricate large commit logs without paying
+    * a Spark write job per version.
+    *
+    * Steady-state commits are DELTA-ENCODED against their parent (added /
+    * removed dirs + added stats, Delta-log style) with a full snapshot
+    * forced every [[ManagedTable.LogSnapshotInterval]] versions — so a
+    * continuous-ingest commit costs O(changed dirs) log bytes, not
+    * O(table dirs), and chain resolution stays bounded. `parent` (when it
+    * is version−1, as every commit path's composition base is) avoids
+    * re-reading the log to diff; encoding falls back to a full snapshot
+    * whenever the delta would not reconstruct the commit byte-exactly or
+    * would not be smaller. */
   private[graft] def writeCommit(c0: Commit, parent: Option[Commit] = None): Unit = {
     // Record every dir's byte size in the entry. Carried dirs inherit
     // the parent's recorded size (dirs are immutable); only dirs new to
@@ -3298,37 +3028,43 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // and drop the tmp name. Elsewhere keep exists-probe + rename.
     val scheme = Option(finalPath.toUri.getScheme)
       .getOrElse(Option(fs.getUri.getScheme).getOrElse(""))
+    val linked = scheme == "" || scheme == "file"
     val published =
-      if (scheme == "" || scheme == "file") {
+      if (linked)
         try {
           java.nio.file.Files.createLink(
             java.nio.file.Paths.get(finalPath.toUri.getPath),
             java.nio.file.Paths.get(tmp.toUri.getPath))
-          fs.delete(tmp, false)
           true
         } catch {
           case _: java.nio.file.FileAlreadyExistsException => false
         }
-      } else !fs.exists(finalPath) && fs.rename(tmp, finalPath)
+      else !fs.exists(finalPath) && fs.rename(tmp, finalPath)
     if (!published) {
       fs.delete(tmp, false)
       throw new ConcurrentCommitException(
         s"concurrent commit detected for version ${c.version} of $root")
     }
-    // advance the advisory head pointer (readers heal a lost race by
+    // The entry is published. What follows is housekeeping and, like
+    // writePtr, best-effort: an exception escaping writeCommit must mean
+    // the entry did NOT publish, so callers may delete what it references.
+    // Advance the advisory head pointer (readers heal a lost race by
     // probing up, so last-write-wins between concurrent committers is
     // fine); seed the floor pointer once — for version 0 it IS 0, for a
     // pre-pointer table the one-time listing here retires every future
-    // walk's listing
-    writePtr(ManagedTable.HeadPtrFile, c.version)
-    if (readPtr(ManagedTable.FloorPtrFile).isEmpty) {
-      val floor =
-        if (c.version == 0L) 0L
-        else fs.listStatus(logPath).toSeq.map(_.getPath.getName)
-          .collect { case CommitFile(v) => v.toLong }
-          .minOption.getOrElse(c.version)
-      writePtr(ManagedTable.FloorPtrFile, floor)
-    }
+    // walk's listing (a failed listing leaves it for the next commit).
+    try {
+      if (linked) fs.delete(tmp, false)
+      writePtr(ManagedTable.HeadPtrFile, c.version)
+      if (readPtr(ManagedTable.FloorPtrFile).isEmpty) {
+        val floor =
+          if (c.version == 0L) 0L
+          else fs.listStatus(logPath).toSeq.map(_.getPath.getName)
+            .collect { case CommitFile(v) => v.toLong }
+            .minOption.getOrElse(c.version)
+        writePtr(ManagedTable.FloorPtrFile, floor)
+      }
+    } catch { case scala.util.control.NonFatal(_) => () }
   }
 }
 
@@ -3537,6 +3273,20 @@ object ManagedTable {
     def physicalOf(logical: String): String =
       columnMap.getOrElse(logical, logical)
 
+    /** This commit's successor: version + 1, read at this version, with
+      * every inheritable field carried forward (composition, stats,
+      * schema, partitioning, txn high-waters, deletion vectors, column
+      * mapping, constraints, properties) and the per-commit fields reset
+      * (change data, user metadata, recorded dir bytes, which
+      * `writeCommit` re-derives). Every commit path builds its entry
+      * this way and `.copy`s only the fields it changes. */
+    private[table] def next(operation: String, timestampMs: Long,
+                            operationMetrics: Map[String, String]): Commit =
+      copy(version = version + 1L, operation = operation,
+        timestampMs = timestampMs, operationMetrics = operationMetrics,
+        userMetadata = None, readVersion = version, changeDir = None,
+        changeFormat = 0, dirBytes = Map.empty)
+
     /** Common log-entry node: `dirsKey`/`statsKey`/`bytesKey` name the
       * composition fields ("dirs"/"dirStats"/"dirBytes" for full
       * snapshots, "addDirs"/"addDirStats"/"addDirBytes" for delta
@@ -3616,6 +3366,11 @@ object ManagedTable {
   }
 
   object Commit {
+    /** The parent of version 0: a table with no commit yet, so every
+      * first commit is a [[Commit.next]] like any other. */
+    private[table] val Genesis: Commit =
+      Commit(-1L, "", 0L, Nil, Map.empty, None, "", -1L)
+
     private[table] def fromNode(n: com.fasterxml.jackson.databind.JsonNode,
         dirsKey: String, statsKey: String, bytesKey: String): Commit = {
       import scala.jdk.CollectionConverters._

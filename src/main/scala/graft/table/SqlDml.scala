@@ -188,7 +188,8 @@ final case class GraftUpdateCommand(root: String,
 
 /** `MERGE INTO graft.t USING src ON ...` compiled to the single
   * full-outer-join [[graft.write.MergeEmulator]] plan; the result
-  * replaces the snapshot in one commit. */
+  * replaces the snapshot in one commit, fenced on the version the
+  * target was read at. */
 final case class GraftMergeCommand(root: String,
                                    source: LogicalPlan,
                                    targetAliases: Seq[String],
@@ -227,17 +228,20 @@ final case class GraftMergeCommand(root: String,
       case SqlDml.MatchedStarSpec(condOpt) =>
         MergeEmulator.MatchedUpdate(condOpt.map(cc), starSet)
     }
-    val insertValues: Map[String, Column] = notMatched match {
-      case None => Map.empty
-      case Some(SqlDml.InsertValuesSpec(set)) =>
-        set.map { case (n, b) => n -> cc(b) }.toMap
-      case Some(SqlDml.InsertStarSpec) => starSet
+    val insertValues: Option[Map[String, Column]] = notMatched.map {
+      case SqlDml.InsertValuesSpec(set) => set.map { case (n, b) => n -> cc(b) }.toMap
+      case SqlDml.InsertStarSpec => starSet
     }
-    val target = t.read
+    // the target is read AT the version the commit is fenced on: a
+    // commit landing mid-MERGE surfaces as a conflict instead of being
+    // replaced away
+    val target = t.readDirsAsDv(c.dirs, targetSchema, c.partitionBy.nonEmpty,
+        c.dvDirs, c.columnMap)
       .select(targetSchema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*)
     val merged = MergeEmulator.merge(target, sourceDf, cc(mergeCond),
       matchedUpdates, insertValues)
-    t.write(merged, "MERGE INTO", "replace", None, c.partitionBy)
+    t.write(merged, "MERGE INTO", "replace", None, c.partitionBy,
+      expectedPrevVersion = Some(c.version))
     Nil
   }
 }

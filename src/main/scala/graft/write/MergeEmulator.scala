@@ -155,9 +155,12 @@ object MergeEmulator {
    * @param condition    join condition; reference columns as
    *                     `col("target.x")` / `col("source.x")`
    * @param matched      WHEN MATCHED UPDATE branches (first match wins)
-   * @param insertValues WHEN NOT MATCHED INSERT values keyed by target
-   *                     column name; target columns absent from the map
-   *                     become NULL of the target type
+   * @param insertValues the WHEN NOT MATCHED INSERT clause: values keyed
+   *                     by target column name, target columns absent from
+   *                     the map become NULL of the target type. None = the
+   *                     statement has no insert clause, so source-only
+   *                     rows are dropped (Delta's semantics) — in the
+   *                     output's filter, at no extra job
    * @param trackChanges when true, append [[ChangeMark]] (which change the
    *                     merge made to this row, NULL if untouched) and
    *                     [[PreMark]] (the pre-update target row as a struct)
@@ -180,7 +183,7 @@ object MergeEmulator {
       source: DataFrame,
       condition: Column,
       matched: Seq[MatchedUpdate],
-      insertValues: Map[String, Column],
+      insertValues: Option[Map[String, Column]],
       trackChanges: Boolean = false,
       failOnMultipleMatches: Boolean = true): DataFrame = {
 
@@ -223,20 +226,18 @@ object MergeEmulator {
 
     val out0 = target.schema.fields.map { f =>
       val keep = col(s"target.${f.name}")
-      val insertExpr =
-        insertValues.getOrElse(f.name, lit(null)).cast(f.dataType)
       val branches: Seq[(Column, Column)] =
         matched.map { m =>
           val cond = m.condition.map(bothPresent && _).getOrElse(bothPresent)
           cond -> m.set.getOrElse(f.name, keep).cast(f.dataType)
-        } :+ (insertOnly -> insertExpr)
+        } ++ insertValues.map(iv =>
+          insertOnly -> iv.getOrElse(f.name, lit(null)).cast(f.dataType))
       branches
         .foldLeft(Option.empty[Column]) {
           case (None, (c, v))      => Some(when(c, v))
           case (Some(acc), (c, v)) => Some(acc.when(c, v))
         }
-        .get
-        .otherwise(keep)
+        .fold(keep)(_.otherwise(keep))
         .as(f.name)
     }
 
@@ -257,15 +258,18 @@ object MergeEmulator {
         out0.toIndexedSeq :+ mark.as(ChangeMark) :+ pre.as(PreMark)
       }
 
+    // no insert clause: source-only rows leave in the output's filter
+    val sourceOnlyDropped = if (insertValues.isEmpty) Some(insertOnly) else None
     check match {
-      case None => joined.select(base: _*)
+      case None => sourceOnlyDropped.fold(joined)(d => joined.where(!d)).select(base: _*)
       case Some((violated, detail)) =>
         // the raise lives in a FILTER, so no downstream column pruning
         // can drop it
-        val guarded = when(bothPresent && violated, raise_error(concat(
+        val raise = when(bothPresent && violated, raise_error(concat(
           lit("MERGE cardinality violation: a target row matched multiple source rows ("),
           detail, lit("); deduplicate the source (deduplicate_onkeys) " +
             "or set allow_duplicate_matches"))))
+        val guarded = sourceOnlyDropped.fold(raise)(d => raise.when(d, lit(false)))
           .otherwise(lit(true))
         joined.select((base :+ guarded.as(GuardCol)): _*)
           .where(col(GuardCol))

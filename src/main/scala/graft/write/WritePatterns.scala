@@ -201,7 +201,7 @@ object WritePatterns {
 
     MergeEmulator.merge(target, prepped, cond,
       Seq(MatchedUpdate(Some(tgt(n.dataHash) =!= src(n.dataHash)), updateSet)),
-      insertValues, trackChanges = opts.enableChangeDataFeed,
+      Some(insertValues), trackChanges = opts.enableChangeDataFeed,
       failOnMultipleMatches = !opts.allowDuplicateMatches)
   }
 
@@ -334,7 +334,7 @@ object WritePatterns {
     val insertValues = insertCols.map(c => c -> src(c)).toMap
 
     MergeEmulator.merge(target, mergeSource, mergeCond,
-      Seq(MatchedUpdate(None, updateSet)), insertValues,
+      Seq(MatchedUpdate(None, updateSet)), Some(insertValues),
       trackChanges = opts.enableChangeDataFeed,
       failOnMultipleMatches = !opts.allowDuplicateMatches)
   }
@@ -408,7 +408,7 @@ object WritePatterns {
           tgt(n.columnKeyHash) === src(n.columnKeyHash)), updateSet),
         MatchedUpdate(Some(tgt(n.columnKeyHash) =!= src(n.columnKeyHash)),
           updateChangeSet)),
-      insertValues, trackChanges = opts.enableChangeDataFeed,
+      Some(insertValues), trackChanges = opts.enableChangeDataFeed,
       failOnMultipleMatches = !opts.allowDuplicateMatches)
   }
 

@@ -107,6 +107,7 @@ class ConcurrentMergeSpec extends SparkSpec {
     assert(!c.operationMetrics.contains("numCommitRetries"),
       "entry-time rebase resolves before any publication attempt")
     assert(t.read.count() === carriedRows + 5)
+    assertNoOrphanDirs(path)
   }
 
   test("publication-race rebase: a commit landing mid-write is absorbed, data dir reused") {
@@ -146,6 +147,7 @@ class ConcurrentMergeSpec extends SparkSpec {
       assert(c.dirs.toSet === (racer.dirs :+ c.dirs.last).toSet)
       assert(t.read.count() === carriedRows + 5)
     } finally MergeGate.disarm()
+    assertNoOrphanDirs(path)
   }
 
   test("scd1 racing a non-matching append rebases: both commit, no recompute") {
@@ -177,6 +179,7 @@ class ConcurrentMergeSpec extends SparkSpec {
       assert(now.filter($"id" === 15).select("v").as[String].head() === "B15")
       assert(now.filter($"id" === 5000).select("v").as[String].head() === "x")
     } finally MergeGate.disarm()
+    assertNoOrphanDirs(path)
   }
 
   test("scd1 racing a MATCHING append re-merges: the late row is merged, not left stale") {
@@ -208,6 +211,7 @@ class ConcurrentMergeSpec extends SparkSpec {
       // the re-merge read BOTH the bucket and the appended dir
       assert(t.lastCommit.get.operationMetrics("numRewrittenDirs") === "2")
     } finally MergeGate.disarm()
+    assertNoOrphanDirs(path)
   }
 
   test("continuous ingest and merge maintenance interleave: ingest writers always commit") {
@@ -237,6 +241,7 @@ class ConcurrentMergeSpec extends SparkSpec {
     assert(now.filter($"id" === 15).select("v").as[String].head() === "m415",
       "the merger's last update wins on its own keys")
     assert(now.filter($"id" >= 10000).count() === 5, "every append survived")
+    assertNoOrphanDirs(path)
   }
 
   test("rebase works past the exact-probe cap: >512-dir tables use the stats walk") {
@@ -277,6 +282,7 @@ class ConcurrentMergeSpec extends SparkSpec {
       assert(c.operationMetrics("numCarriedDirs") === "514")
       assert(fakes.forall(c.dirs.contains), "fabricated dirs carried by reference")
     } finally MergeGate.disarm()
+    assertNoOrphanDirs(path)
   }
 
   test("compactDirs rebase composition carries a racer's append (writeCarried-level)") {
@@ -296,5 +302,55 @@ class ConcurrentMergeSpec extends SparkSpec {
     assert(t.read.count() === 401)
     assert(t.read.filter($"id" === 7777).count() === 1,
       "the racer's append must survive the compaction")
+    assertNoOrphanDirs(path)
+  }
+
+  /** Runs `work` on its own thread, lands `racer` once `work`'s data
+    * write reached the gate, and returns what `work` threw. */
+  private def raced(work: => Unit)(racer: => Unit): Throwable = {
+    MergeGate.arm()
+    try {
+      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val th = new Thread(() => try work catch { case e: Throwable => err.set(e) })
+      th.start()
+      MergeGate.awaitReached()
+      racer
+      MergeGate.release()
+      th.join(120000)
+      err.get()
+    } finally MergeGate.disarm()
+  }
+
+  test("a writeCarried whose rebase declines deletes the data dir it wrote") {
+    val path = tmpDir("cms_leak_carried")
+    val t = clusteredTable(path)
+    val cur = t.lastCommit.get
+    val frame = appendFrame(t, 9000, "x")
+    val err = raced {
+      t.writeCarried(rows(0 until 5, "y").withColumn("v", gateUdf($"v")),
+        cur.dirs.tail, "MERGE(scd1)", expectedPrevVersion = Some(cur.version),
+        rebase = Some(_ => None))
+      ()
+    } { ManagedTable(spark, path).write(frame, "APPEND", "append"); () }
+    assert(err.isInstanceOf[ManagedTable.ConcurrentCommitException],
+      s"expected a surfaced conflict, got $err")
+    assert(t.read.count() === 401, "the racer's append stands")
+    assertNoOrphanDirs(path)
+  }
+
+  test("a fenced replace that loses its publish race deletes the data dir it wrote") {
+    val path = tmpDir("cms_leak_replace")
+    val t = clusteredTable(path)
+    val cur = t.lastCommit.get
+    val frame = appendFrame(t, 9000, "x")
+    val err = raced {
+      t.write(t.read.withColumn("v", gateUdf($"v")), "MERGE(scd1)", "replace",
+        expectedPrevVersion = Some(cur.version))
+      ()
+    } { ManagedTable(spark, path).write(frame, "APPEND", "append"); () }
+    assert(err.isInstanceOf[ManagedTable.ConcurrentCommitException],
+      s"expected a surfaced conflict, got $err")
+    assert(t.read.count() === 401, "the racer's append stands")
+    assertNoOrphanDirs(path)
   }
 }

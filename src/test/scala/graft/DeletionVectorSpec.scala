@@ -225,6 +225,25 @@ class DeletionVectorSpec extends SparkSpec {
         s"expected a surfaced conflict, got ${err.get()}")
       assert(t.read.count() === 1, "the replace's snapshot stands untouched")
     } finally MergeGate.disarm()
+    assertNoOrphanDirs(path)
+  }
+
+  test("a DV delete whose post-publication housekeeping fails stays published " +
+      "with its dv and change dirs") {
+    spark.sparkContext.hadoopConfiguration.set(
+      s"fs.${FaultFs.Scheme}.impl", classOf[FaultFs].getName)
+    val path = s"${FaultFs.Scheme}://" + tmpDir("dv_postlink")
+    val t = ManagedTable(spark, path)
+    t.write((1 to 10).map(i => (i, s"v$i")).toDF("id", "v"), "APPEND", "append")
+    // the floor pointer is gone and the log listing fails once the delete
+    // links its entry — writeCommit's housekeeping after publication
+    FaultFs.armed = true
+    val c = try t.deleteVectors(col("id") <= 3)
+      finally { FaultFs.armed = false; FaultFs.tripped = false }
+    assert(t.lastCommit.get.version === c.version)
+    assert(t.read.select("id").as[Int].collect().sorted.toSeq === (4 to 10))
+    assert(t.readChangeFeed(c.version, Some(c.version)).count() === 3)
+    assertNoOrphanDirs(path)
   }
 
   test("deleteVectorsMatching: frame-keyed tombstones — distributed key " +

@@ -235,6 +235,7 @@ class FileScopedMergeSpec extends SparkSpec {
     // the concurrent commit's snapshot is intact and still latest-minus-none
     assert(t.latestVersion.get === resolvedAt + 1)
     assert(t.read.count() === 400)
+    assertNoOrphanDirs(path)
   }
 
   test("vacuum after a file-scoped merge keeps carried dirs readable") {

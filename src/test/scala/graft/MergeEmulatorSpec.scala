@@ -21,7 +21,7 @@ class MergeEmulatorSpec extends SparkSpec {
       target, source,
       col("target.id") === col("source.id"),
       Seq(MatchedUpdate(None, Map("v" -> col("source.v"), "x" -> col("source.x")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x")))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x"))))
     val got = out.as[(Int, String, Int)].collect().toSet
     assert(got === Set((1, "a", 10), (2, "B", 200), (3, "c", 30), (4, "d", 40)))
   }
@@ -33,7 +33,7 @@ class MergeEmulatorSpec extends SparkSpec {
       col("target.id") === col("source.id"),
       Seq(MatchedUpdate(Some(col("target.v") =!= col("source.v")),
         Map("v" -> col("source.v")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x")))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x"))))
     val got = out.as[(Int, String, Int)].collect().toSet
     assert(got === Set((1, "A", 10), (2, "b", 20), (3, "c", 30)))
   }
@@ -46,7 +46,7 @@ class MergeEmulatorSpec extends SparkSpec {
       Seq(
         MatchedUpdate(Some(lit(true)), Map("v" -> lit("first"))),
         MatchedUpdate(Some(lit(true)), Map("v" -> lit("second")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x")))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x"))))
     assert(out.filter($"id" === 1).select("v").as[String].head() === "first")
   }
 
@@ -56,7 +56,7 @@ class MergeEmulatorSpec extends SparkSpec {
       target, source,
       col("target.id") === col("source.id"),
       Nil,
-      Map("id" -> col("source.id"), "v" -> col("source.v")))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"))))
     val r = out.filter($"id" === 9).collect()(0)
     assert(r.isNullAt(r.fieldIndex("x")))
     // names+types preserved; nullability widens (an unmatched insert can
@@ -71,7 +71,7 @@ class MergeEmulatorSpec extends SparkSpec {
       target, source,
       col("target.id") === col("source.id"),
       Seq(MatchedUpdate(None, Map("v" -> col("source.v")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x")))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x"))))
     val e = intercept[Exception](out.collect())
     def msgs(t: Throwable): Seq[String] =
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
@@ -84,7 +84,7 @@ class MergeEmulatorSpec extends SparkSpec {
       target, source,
       col("target.id") === col("source.id"),
       Seq(MatchedUpdate(None, Map("v" -> col("source.v")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x")))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x"))))
     // consumer prunes down to one column — the guard is a filter, not a
     // rider on a data column, so it must still raise
     val e = intercept[Exception](out.select("x").collect())
@@ -103,7 +103,7 @@ class MergeEmulatorSpec extends SparkSpec {
       dupTarget, source,
       col("target.id") === col("source.id"),
       Seq(MatchedUpdate(None, Map("v" -> col("source.v"), "x" -> col("source.x")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x")))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x"))))
     val got = out.as[(Int, String, Int)].collect().toSeq.sorted
     assert(got === Seq((2, "B", 200), (2, "B", 200), (3, "c", 30)))
   }
@@ -114,7 +114,7 @@ class MergeEmulatorSpec extends SparkSpec {
       target, source,
       col("target.id") === col("source.id"),
       Seq(MatchedUpdate(None, Map("v" -> col("source.v"), "x" -> col("source.x")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x")),
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x"))),
       failOnMultipleMatches = false)
     assert(out.filter($"id" === 2).count() === 2)
   }
@@ -127,7 +127,7 @@ class MergeEmulatorSpec extends SparkSpec {
       target, source,
       col("target.id") === col("source.id"),
       Seq(MatchedUpdate(None, Map("v" -> col("source.v")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x")))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"), "x" -> col("source.x"))))
     assert(out.count() === 103)
   }
 
@@ -137,7 +137,7 @@ class MergeEmulatorSpec extends SparkSpec {
       target, source,
       col("target.id") === col("source.id"),
       Seq(MatchedUpdate(None, Map("v" -> col("source.v")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v")))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v"))))
     assert(out.schema.fields.map(f => (f.name, f.dataType)).toSeq ===
       target.schema.fields.map(f => (f.name, f.dataType)).toSeq)
   }
@@ -182,7 +182,7 @@ class MergeEmulatorSpec extends SparkSpec {
       val src = sr.toDF("id", "v", "x")
       def run(c: Column) = MergeEmulator.merge(tgt, src, c,
         Seq(MatchedUpdate(Some(t("v") =!= s("v")), Map("v" -> s("v"), "act" -> lit("U")))),
-        Map("id" -> s("id"), "v" -> s("v"), "act" -> lit("I")))
+        Some(Map("id" -> s("id"), "v" -> s("v"), "act" -> lit("I"))))
       val keyed = run(cond)
       val general = run(cond && mixedTrue)
       // each side really took its path
@@ -201,7 +201,7 @@ class MergeEmulatorSpec extends SparkSpec {
     val src = Seq((Option.empty[Int], "x"), (Option.empty[Int], "y")).toDF("id", "v")
     def run(c: Column) = outcome(MergeEmulator.merge(tgt, src, c,
       Seq(MatchedUpdate(None, Map("v" -> col("source.v")))),
-      Map("id" -> col("source.id"), "v" -> col("source.v"))))
+      Some(Map("id" -> col("source.id"), "v" -> col("source.v")))))
     assert(run(col("target.id") <=> col("source.id")).isEmpty)
     // under `=` NULL keys never match: both source rows insert
     assert(run(col("target.id") === col("source.id")).exists(_.size == 4))

@@ -27,6 +27,34 @@ trait SparkSpec extends AnyFunSuite {
   }
 
   def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  /** Fails when a dir under the table's `data/` or `_change_data/` is
+    * referenced by no retained commit (as a data dir, a partition or
+    * cluster subdir of one, a deletion-vector dir or a change dir) — what
+    * a losing or failed commit attempt leaves behind when it does not
+    * delete what it wrote. Vacuum never reclaims such a dir. */
+  def assertNoOrphanDirs(root: String): Unit = {
+    import org.apache.hadoop.fs.Path
+    val history = graft.table.ManagedTable(spark, root).history
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def children(area: String): Set[String] = {
+      val p = new Path(root, area)
+      if (!fs.exists(p)) Set.empty
+      else fs.listStatus(p).filter(_.isDirectory).map(_.getPath.getName).toSet
+    }
+    // the entry's dir directly under data/ (entries may be subdirs)
+    def underData(d: String): String = {
+      var p = new Path(d)
+      while (p.getParent != null && p.getParent.getName != "data") p = p.getParent
+      p.getName
+    }
+    val data = history.flatMap(c => c.dirs ++ c.dvDirs).map(underData).toSet
+    val change = history.flatMap(_.changeDir).map(d => new Path(d).getName).toSet
+    val orphans = (children("data") -- data).map("data/" + _) ++
+      (children("_change_data") -- change).map("_change_data/" + _)
+    assert(orphans.isEmpty,
+      s"dirs of $root referenced by no retained commit: ${orphans.toSeq.sorted.mkString(", ")}")
+  }
 }
 
 object SparkSpec {

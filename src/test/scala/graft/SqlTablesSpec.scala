@@ -261,6 +261,58 @@ class SqlTablesSpec extends SparkSpec {
       Seq((1L, 5), (1L, 15), (2L, 20)))
   }
 
+  test("MERGE INTO with only WHEN MATCHED drops source-only rows") {
+    val path = tmpDir("sqlmerge_matched_only")
+    val t = ManagedTable(spark, path)
+    import spark.implicits._
+    t.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), "APPEND", "append")
+    Seq((2L, "B"), (3L, "c")).toDF("id", "name")
+      .createOrReplaceTempView("merge_src_matched_only")
+    spark.sql(
+      s"""MERGE INTO ${quoted(path)} tgt USING merge_src_matched_only s
+         |ON tgt.id = s.id
+         |WHEN MATCHED THEN UPDATE SET name = s.name""".stripMargin)
+    assert(t.read.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a"), (2L, "B")))
+  }
+
+  test("MERGE INTO fenced on its read version: an append landing mid-MERGE survives") {
+    val path = tmpDir("sqlmerge_race")
+    val t = ManagedTable(spark, path)
+    import spark.implicits._
+    t.write(Seq((1L, "a"), (2L, "b")).toDF("id", "name"), "APPEND", "append")
+    Seq((2L, "B"), (3L, "c")).toDF("id", "name")
+      .withColumn("name", udf(MergeGate.pass _).apply($"name"))
+      .createOrReplaceTempView("merge_src_race")
+    MergeGate.arm()
+    try {
+      val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val th = new Thread(() =>
+        try {
+          spark.sql(
+            s"""MERGE INTO ${quoted(path)} tgt USING merge_src_race s
+               |ON tgt.id = s.id
+               |WHEN MATCHED THEN UPDATE SET name = s.name
+               |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+          ()
+        } catch { case e: Throwable => err.set(e) })
+      th.start()
+      MergeGate.awaitReached()
+      // a second handle appends while the MERGE evaluates its source
+      ManagedTable(spark, path)
+        .write(Seq((7L, "racer")).toDF("id", "name"), "APPEND", "append")
+      MergeGate.release()
+      th.join(120000)
+      def chain(x: Throwable): Seq[Throwable] =
+        if (x == null) Nil else x +: chain(x.getCause)
+      assert(chain(err.get()).exists(_.isInstanceOf[ManagedTable.ConcurrentCommitException]),
+        s"expected the MERGE to surface a conflict, got ${err.get()}")
+    } finally MergeGate.disarm()
+    assert(t.read.orderBy("id").as[(Long, String)].collect().toSeq ==
+      Seq((1L, "a"), (2L, "b"), (7L, "racer")))
+    assertNoOrphanDirs(path)
+  }
+
   test("MERGE rejects unsupported clauses loudly") {
     val path = tmpDir("sqlmerge3")
     val t = ManagedTable(spark, path)
