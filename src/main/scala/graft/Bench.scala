@@ -20,10 +20,13 @@ object Bench {
   /** Driver-side IO counters attributed per run: commit-log entry
     * reads, full log listings, advisory-pointer reads + healing
     * probes, change-feed reads, and DV tombstone-scan dirs. Emitted
-    * with every scale probe so a fixed-cost regression on a
+    * with every query and scale probe so a fixed-cost regression on a
     * many-small-commit query (e.g. pointer IO growing with commit
-    * count) is attributable from BENCH_r{N}.json instead of guessed. */
-  private def counterSnapshot(): Map[String, Long] = {
+    * count) is attributable from BENCH_r{N}.json instead of guessed.
+    * Also the JVM's codegen compiles and their Janino time
+    * (`codegen_compiles`, `codegen_compile_ms`): a plan shape that misses
+    * the generated-class cache shows up as compiles, not as a guess. */
+  private[graft] def counterSnapshot(): Map[String, Long] = {
     import graft.table.ManagedTable
     Map(
       "log_entry_reads" -> ManagedTable.logEntryReads.get,
@@ -31,7 +34,11 @@ object Bench {
       "ptr_reads" -> ManagedTable.ptrReads.get,
       "ptr_probes" -> ManagedTable.ptrProbes.get,
       "change_feed_reads" -> ManagedTable.changeFeedReads.get,
-      "dv_scan_dirs" -> ManagedTable.dvScanDirs.get)
+      "dv_scan_dirs" -> ManagedTable.dvScanDirs.get,
+      "codegen_compiles" ->
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      "codegen_compile_ms" ->
+        org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L)
   }
 
   private def counterJson(before: Map[String, Long],
@@ -89,8 +96,8 @@ object Bench {
         (name, sec, ok1 || ok2, s1, s2, staging, ctr)
     }
     val qs = results
-      .map { case (k, sec, ok, s1, s2, staging, _) =>
-        s""""$k":{"sec":$sec,"ok":$ok,"staging_sec":$staging,"runs":[$s1,$s2]}"""
+      .map { case (k, sec, ok, s1, s2, staging, ctr) =>
+        s""""$k":{"sec":$sec,"ok":$ok,"staging_sec":$staging,"runs":[$s1,$s2],"counters":$ctr}"""
       }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, true, _, _, _, _) => v }.sum

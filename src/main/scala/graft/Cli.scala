@@ -32,12 +32,11 @@ object Cli {
         else { errs.foreach(e => System.err.println(s"INVALID: $e")); sys.exit(1) }
 
       case "run" =>
-        val spark = SparkSession.builder()
+        val spark = Harness.withGraftConf(SparkSession.builder()
           .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
           .appName(conf.name)
           .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.extensions", "graft.GraftExtensions")
+            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
           .config(conf.sparkConf)
           .getOrCreate()
         try {
@@ -73,12 +72,11 @@ object PipelineCli {
         else { errs.foreach(e => System.err.println(s"INVALID: $e")); sys.exit(1) }
       case "run" =>
         val pipeline = opts.getOrElse("n", { System.err.println("-n pipeline required"); sys.exit(2); "" })
-        val spark = SparkSession.builder()
+        val spark = Harness.withGraftConf(SparkSession.builder()
           .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
           .appName(s"${project.name}/$pipeline")
           .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .config("spark.sql.extensions", "graft.GraftExtensions")
+            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")))
           .getOrCreate()
         try {
           val statuses = graft.contract.ProjectContract.runPipeline(spark, project, pipeline)

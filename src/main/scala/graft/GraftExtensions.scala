@@ -37,6 +37,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    shareTaskClassLoader()
     ext.injectFunction((
       new FunctionIdentifier("graft_cosine"),
       new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
@@ -69,6 +70,29 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+
+  @volatile private var taskLoader: ClassLoader = null
+
+  /**
+   * Local mode only: gives the calling thread — the one building the
+   * session, since Spark applies extensions inside `getOrCreate` before
+   * the first query — the executor's default task class loader. Threads
+   * it starts later inherit it (AQE query-stage threads, graft's pools),
+   * so the whole-stage class the driver compiles while planning is the
+   * very cache entry the tasks look up: Spark keys generated classes by
+   * (context class loader, source), and with the app loader on the
+   * driver and the task loader on executor threads every class compiled
+   * twice. Costs one one-task job per session. Needs
+   * `spark.sql.artifact.isolation.enabled=false` ([[Harness.graftConf]]),
+   * or SQL tasks run under a per-session loader instead. A cluster's
+   * executors are other JVMs with their own cache: nothing to align.
+   */
+  private def shareTaskClassLoader(): Unit =
+    org.apache.spark.sql.classic.GraftShims.activeContext.filter(_.isLocal).foreach { sc =>
+      sc.runJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) =>
+        taskLoader = Thread.currentThread().getContextClassLoader)
+      Thread.currentThread().setContextClassLoader(taskLoader)
+    }
 
   private def strArg(e: Expression, what: String): String = {
     require(e.foldable && e.dataType == StringType,

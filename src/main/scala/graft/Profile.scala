@@ -113,18 +113,22 @@ object Profile {
       // spanning passes isn't misattributed to the next pass
       listener.synchronized { finished.clear(); running.clear() }
       samples.clear()
+      val c0 = Bench.counterSnapshot()
       sampling = true
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       sampling = false
       val wallSec = (System.nanoTime() - t0) / 1e9
+      val c1 = Bench.counterSnapshot()
       // listener events are async; give the bus a moment to drain
       Thread.sleep(300)
       val jobs = listener.synchronized(finished.toVector)
       val jobSec = jobs.map(_._2).sum / 1e9
       println(f"== $name pass $pass: wall $wallSec%.2f s, " +
         f"${jobs.size} jobs totalling $jobSec%.2f s, " +
-        f"driver gap ${wallSec - jobSec}%.2f s ==")
+        f"driver gap ${wallSec - jobSec}%.2f s, " +
+        s"${c1("codegen_compiles") - c0("codegen_compiles")} codegen compiles " +
+        s"totalling ${c1("codegen_compile_ms") - c0("codegen_compile_ms")} ms ==")
       val bySite = jobs.groupBy(_._1.site).map { case (site, js) =>
         (site, js.size, js.map(_._2).sum / 1e9, js.map(_._1.tasks).sum)
       }.toSeq.sortBy(-_._3)

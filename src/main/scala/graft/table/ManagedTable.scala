@@ -963,10 +963,10 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val dvDir = freshDir("data", version, "dv-")
     val obs = org.apache.spark.sql.Observation(
       s"graft_dv_$version-${UUID.randomUUID()}")
-    matched.select(col("__graft_dv_file__").as("file"),
+    writingTo(dvDir)(matched.select(col("__graft_dv_file__").as("file"),
         col("__graft_dv_pos__").as("pos"))
       .observe(obs, count(lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(dvDir)
+      .write.mode("overwrite").parquet(dvDir))
     val n = obs.get("rows").asInstanceOf[Long]
     if (n == 0L) { fs.delete(new Path(dvDir), true); return noop() }
     val changeRows =
@@ -1453,12 +1453,19 @@ final class ManagedTable(spark: SparkSession, root: String) {
       else df.repartitionByRange(clusterCols.map(c => col(s"`$c`")): _*)
         .sortWithinPartitions(clusterCols.map(c => col(s"`$c`")): _*)
     val (dataDir, numRows, added) = writeDataDir(df1, layout)
-    // optimistic retry, Delta-style: an APPEND is commutative with any
-    // concurrent commit — recompose against the new head and re-publish
-    // the already-written data dir (the dir name keeps the first
-    // attempt's version stamp; only the log matters). A replace/merge
-    // must surface the conflict.
-    publish(base, Seq(dataDir), changeData, (_, n) => append && n <= 10) { (b, _) =>
+    // optimistic retry, Delta-style: an APPEND is commutative with a
+    // concurrent commit that leaves the table's definition alone —
+    // recompose against the new head and re-publish the already-written
+    // data dir (the dir name keeps the first attempt's version stamp;
+    // only the log matters). A racer that changed the schema, column
+    // mapping, constraints or partitioning surfaces the conflict: the
+    // dir was written (and checked) under the base's, and republishing
+    // would revert the racer's change. A replace/merge must surface
+    // every conflict.
+    publish(base, Seq(dataDir), changeData, (head, n) =>
+      append && n <= 10 &&
+        head.schemaDdl == base.schemaDdl && head.columnMap == base.columnMap &&
+        head.constraints == base.constraints && head.partitionBy == base.partitionBy) { (b, _) =>
       val c = build(b, Map("numOutputRows" -> numRows.toString))
       if (append) c.copy(dirs = b.dirs :+ dataDir, dirStats = b.dirStats ++ added)
       else composed(c, Nil, added)
@@ -1521,7 +1528,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
         layout.columnMap).write.mode("overwrite")
       .options(ManagedTable.bloomWriteOptions(layout.properties, layout.columnMap))
     val parts = if (grouped) Seq(CLUSTER_COL) else layout.partitionBy
-    (if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer).parquet(dir)
+    writingTo(dir)((if (parts.nonEmpty) writer.partitionBy(parts: _*) else writer).parquet(dir))
     val observed = if (grouped) groups else Seq(dir -> obs.get)
     // empty batches observe NULL sums (no rows → no violations)
     layout.constraints.toSeq.sortBy(_._1).foreach { case (name, dsl) =>
@@ -1609,10 +1616,27 @@ final class ManagedTable(spark: SparkSession, root: String) {
   private def writeChangeData(version: Long, tsMs: Long, cd: DataFrame): String = {
     import org.apache.spark.sql.functions.lit
     val dir = freshDir("_change_data", version)
-    cd.withColumn("_commit_version", lit(version))
+    writingTo(dir)(cd.withColumn("_commit_version", lit(version))
       .withColumn("_commit_timestamp", lit(new java.sql.Timestamp(tsMs)))
-      .write.mode("overwrite").parquet(dir)
+      .write.mode("overwrite").parquet(dir))
     dir
+  }
+
+  /** Runs `write`, which fills the fresh `dir`; a write that throws
+    * deletes `dir` before rethrowing: a failed Spark job leaves a partial
+    * dir that no commit will ever reference, so vacuum would never
+    * reclaim it. The job's tasks that were still running when it failed
+    * write under `dir` too, so the delete waits for them to end. */
+  private def writingTo(dir: String)(write: => Unit): Unit = {
+    val sc = spark.sparkContext
+    val tag = s"graft-write-${UUID.randomUUID()}"
+    sc.addJobTag(tag)
+    try write catch {
+      case e: Throwable =>
+        org.apache.spark.sql.classic.GraftShims.awaitTasksOf(sc, tag, 60000L)
+        fs.delete(new Path(dir), true)
+        throw e
+    } finally sc.removeJobTag(tag)
   }
 
   /**

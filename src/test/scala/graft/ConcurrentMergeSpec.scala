@@ -305,6 +305,41 @@ class ConcurrentMergeSpec extends SparkSpec {
     assertNoOrphanDirs(path)
   }
 
+  /** An append into `path` whose data write blocks at the gate while
+    * `racer` lands a metadata commit: retrying over that head would
+    * republish the base's schema, mapping and constraints and revert
+    * the racer, so the append must surface the conflict and leave no
+    * dir behind. Returns the racer's version. */
+  private def appendRacing(path: String)(racer: ManagedTable => Unit): Long = {
+    val t = clusteredTable(path)
+    val frame = appendFrame(t, 9000, "x")
+    val err = raced {
+      t.write(frame.filter(gateUdf($"v") === $"v"), "APPEND", "append"); ()
+    } { racer(ManagedTable(spark, path)) }
+    assert(err.isInstanceOf[ManagedTable.ConcurrentCommitException],
+      s"expected a surfaced conflict, got $err")
+    assert(t.read.filter($"id" === 9000).count() === 0)
+    assertNoOrphanDirs(path)
+    t.lastCommit.get.version
+  }
+
+  test("an append racing ADD CONSTRAINT surfaces the conflict, never drops the constraint") {
+    val path = tmpDir("cms_append_constraint")
+    val added = appendRacing(path)(_.addConstraint("v_present", "not_null:v"))
+    val after = ManagedTable(spark, path).history.filter(_.version >= added)
+    assert(after.forall(_.constraints.contains("v_present")),
+      after.map(c => s"v${c.version} ${c.operation}: ${c.constraints}").mkString("; "))
+  }
+
+  test("an append racing RENAME COLUMN surfaces the conflict, never reverts the rename") {
+    val path = tmpDir("cms_append_rename")
+    val renamed = appendRacing(path)(_.renameColumn("v", "w"))
+    val after = ManagedTable(spark, path).history.filter(_.version >= renamed)
+    assert(after.forall(c => StructType.fromDDL(c.schemaDdl).fieldNames.contains("w") &&
+      c.columnMap.get("w").contains("v")),
+      after.map(c => s"v${c.version} ${c.operation}: ${c.schemaDdl} ${c.columnMap}").mkString("; "))
+  }
+
   /** Runs `work` on its own thread, lands `racer` once `work`'s data
     * write reached the gate, and returns what `work` threw. */
   private def raced(work: => Unit)(racer: => Unit): Throwable = {

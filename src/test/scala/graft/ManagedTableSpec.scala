@@ -643,6 +643,25 @@ class ManagedTableSpec extends SparkSpec {
     assert(fs.listStatus(changeRoot).length === n)
   }
 
+  test("a write job that fails part-way deletes the partial data or change dir") {
+    import org.apache.spark.sql.functions.{lit, raise_error, when}
+    val path = tmpDir("mt_failed_write")
+    def batch(lo: Long, hi: Long) =
+      spark.range(lo, hi, 1, 2).select($"id", $"id".cast("string").as("v"))
+    // raises in a task once the write job is under way
+    val failing = batch(10, 20)
+      .filter(when($"id" === 15, raise_error(lit("boom"))).otherwise(lit(true)))
+    val t = ManagedTable(spark, path)
+    t.write(batch(0, 10), "APPEND", "append")
+    intercept[Exception](t.write(failing, "APPEND", "append"))
+    assertNoOrphanDirs(path)
+    intercept[Exception](t.write(batch(10, 20), "APPEND", "append",
+      changeData = Some(failing.withColumn("_change_type", lit("insert")))))
+    assertNoOrphanDirs(path)
+    assert(t.read.count() === 10)
+    assert(t.latestVersion === Some(0L))
+  }
+
   test("replace conflicts surface instead of retrying (non-commutative)") {
     val path = tmpDir("mt_conflict")
     val t = ManagedTable(spark, path)
