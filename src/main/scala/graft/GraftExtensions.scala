@@ -77,7 +77,8 @@ object GraftExtensions {
    * Local mode only: gives the calling thread — the one building the
    * session, since Spark applies extensions inside `getOrCreate` before
    * the first query — the executor's default task class loader. Threads
-   * it starts later inherit it (AQE query-stage threads, graft's pools),
+   * it starts later inherit it (AQE query-stage threads), and
+   * [[DriverPool]] hands its submitter's loader to each pooled task,
    * so the whole-stage class the driver compiles while planning is the
    * very cache entry the tasks look up: Spark keys generated classes by
    * (context class loader, source), and with the app loader on the

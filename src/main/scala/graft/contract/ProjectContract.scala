@@ -210,10 +210,10 @@ object ProjectContract {
     } yield err
 
   /** Run one pipeline of the project locally. */
-  def runPipeline(spark: SparkSession, p: Project, pipelineName: String,
-                  parallelism: Int = 4): Map[String, PipelineRunner.Status] = {
+  def runPipeline(spark: SparkSession, p: Project,
+                  pipelineName: String): Map[String, PipelineRunner.Status] = {
     val pl = p.pipelines.find(_.name == pipelineName).getOrElse(
       throw new IllegalArgumentException(s"pipeline $pipelineName not in project ${p.name}"))
-    PipelineRunner.run(spark, pl.tasks, parallelism = parallelism)
+    PipelineRunner.run(spark, pl.tasks)
   }
 }

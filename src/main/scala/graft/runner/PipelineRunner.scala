@@ -4,15 +4,15 @@ import graft.config.Config.TaskConf
 import graft.secrets.SecretBackend
 import graft.task.SparkTask
 import org.apache.spark.sql.SparkSession
-import java.util.concurrent.{ConcurrentHashMap, Executors, TimeUnit}
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 /**
  * Local pipeline DAG runner (reference:
  * projectoneflow-framework/.../runner/local.py:101-150, 242-442):
- * tasks execute in topological batches on a thread pool (threads instead
- * of subprocesses — same fail-fast dependency semantics, one shared
- * SparkSession, which is the natural Spark deployment shape); a failed
+ * tasks execute in topological batches on [[graft.DriverPool]] (threads
+ * instead of subprocesses — same fail-fast dependency semantics, one
+ * shared SparkSession, which is the natural Spark deployment shape); a failed
  * task marks every transitive dependent SKIPPED.
  */
 object PipelineRunner {
@@ -52,31 +52,21 @@ object PipelineRunner {
 
   /**
    * Run the pipeline; returns terminal status per task. Tasks within a
-   * batch run concurrently (`parallelism` threads); any failure marks
+   * batch run concurrently on [[graft.DriverPool]]; any failure marks
    * transitive dependents Skipped without cancelling unrelated tasks.
    */
   def run(spark: SparkSession, tasks: Seq[PipelineTask],
-          secrets: Option[SecretBackend] = None,
-          parallelism: Int = 4): Map[String, Status] = {
+          secrets: Option[SecretBackend] = None): Map[String, Status] = {
     val statuses = new ConcurrentHashMap[String, Status]()
-    val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
-    try {
-      topoBatches(tasks).foreach { batch =>
-        val runnable = batch.filter(_.dependsOn.forall(d =>
-          statuses.get(d) == Succeeded))
-        batch.diff(runnable).foreach(t => statuses.put(t.name, Skipped))
-        val futures = runnable.map { t =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            override def call(): Unit =
-              try { SparkTask.run(spark, t.conf, secrets); statuses.put(t.name, Succeeded); () }
-              catch { case e: Throwable => statuses.put(t.name, Failed(e)); () }
-          })
-        }
-        futures.foreach(_.get())
-      }
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(60, TimeUnit.SECONDS)
+    topoBatches(tasks).foreach { batch =>
+      val runnable = batch.filter(_.dependsOn.forall(d =>
+        statuses.get(d) == Succeeded))
+      batch.diff(runnable).foreach(t => statuses.put(t.name, Skipped))
+      graft.DriverPool.map(spark, runnable.map { t => () =>
+        try { SparkTask.run(spark, t.conf, secrets); statuses.put(t.name, Succeeded) }
+        catch { case e: Throwable => statuses.put(t.name, Failed(e)) }
+        ()
+      })
     }
     statuses.asScala.toMap
   }

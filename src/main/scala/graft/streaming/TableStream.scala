@@ -386,12 +386,12 @@ final class TableStreamSource(
     // reference at admission time → plain read
     val parts = Seq(
       if (backfillDirs.isEmpty) None
-      else Some(table.readDirsAsDv(backfillDirs.distinct, schema, partitioned,
+      else Some(table.readDirs(backfillDirs.distinct, schema, partitioned,
         backfillDv, snapshotCommit.columnMap)),
       if (tailDirsSeq.isEmpty) None
-      else Some(table.readDirsAs(
+      else Some(table.readDirs(
         tailDirsSeq.distinct.filterNot(backfillDirs.toSet), schema, partitioned,
-        currentHead.columnMap)))
+        Nil, currentHead.columnMap)))
       .flatten
     val batch = parts
       .reduceOption(_.unionByName(_))

@@ -885,7 +885,7 @@ object StandingViews {
     // disjoint slices) — run them concurrently too, so a pipeline that
     // maintains views over a corpus AND a dimension table overlaps the
     // two sources' fold chains (guide §2.6)
-    inParallel(views.groupBy(_.sourceTablePath).toSeq.map {
+    graft.DriverPool.map(spark, views.groupBy(_.sourceTablePath).toSeq.map {
       case (srcPath, group) => () =>
       // each view's position, after finishing any half-applied DV
       // slice (its pending range is already tombstoned; the watermark
@@ -914,7 +914,8 @@ object StandingViews {
           // Per-view choreography, fences, and watermarks are untouched
           // — only the cross-VIEW ordering (which nothing observes:
           // each state table is independent and exactly-once on its own
-          // fence) becomes concurrent.
+          // fence) becomes concurrent. A failing fold surfaces only
+          // after its siblings landed.
           val netFolds = g.collect { case (v: CdfMaintainedView, p) => (v, p) }
             .groupBy(vp => (vp._1.netIdCol, vp._1.netPayloadCols)).toSeq.flatMap {
               case ((id, pay), vs) =>
@@ -924,7 +925,7 @@ object StandingViews {
             }
           val rawFolds = g.collect { case (v: SignedSliceView, p) =>
             () => v.foldRawSlice(slice, p, latest, None) }
-          StandingViews.inParallel(netFolds ++ rawFolds)
+          graft.DriverPool.map(spark, netFolds ++ rawFolds)
         }
       }
       // marts whose DIMENSION side moved while the fact source was
@@ -942,31 +943,6 @@ object StandingViews {
       if (autoMaintain) group.foreach(_.maintainIfNeeded())
       srcPath -> latest
     }).toMap
-  }
-
-  /** Run independent per-view fold tasks concurrently on a bounded
-    * driver pool and surface the FIRST failure (matching the sequential
-    * loop's exception type). Spark's scheduler runs concurrent jobs
-    * FIFO, so a fold's small jobs back-fill executor slots another
-    * fold's driver round-trips leave idle. Views commit to their OWN
-    * state tables under their own fences, so cross-view ordering was
-    * never observable — a task that fails cannot corrupt a sibling
-    * (each landed fold is independently exactly-once). */
-  private[table] def inParallel[A](tasks: Seq[() => A]): Seq[A] = {
-    if (tasks.sizeIs <= 1) return tasks.map(_())
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(tasks.size, 6))
-    try {
-      import scala.jdk.CollectionConverters._
-      val callables: Seq[java.util.concurrent.Callable[A]] =
-        tasks.map(t => () => t())
-      pool.invokeAll(callables.asJava).asScala.map { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
-        }
-      }.toSeq
-    } finally pool.shutdown()
   }
 
   /** Run an aux-triggered fold, retrying the typed fence conflict a

@@ -153,16 +153,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // alone the old per-call pool create/shutdown) for a 2-entry read
     // costs more than the reads
     if (versions.size <= 4) return versions.map(readEntry)
-    import scala.jdk.CollectionConverters._
-    val tasks: Seq[java.util.concurrent.Callable[(Commit, Option[ManagedTable.DeltaPart])]] =
-      versions.map(v => () => readEntry(v))
-    // shared daemon pool (one per JVM, not per call) — bounded driver IO
-    ManagedTable.logIoPool.invokeAll(tasks.asJava).asScala.map { f =>
-      // surface the underlying IO/parse exception, not Future.get's wrapper,
-      // so callers see the same exception type as the sequential path
-      try f.get()
-      catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-    }.toSeq
+    graft.DriverPool.map(spark, versions.map(v => () => readEntry(v)))
   }
 
   /** Resolve log entries to full snapshot commits. Delta entries chain to
@@ -261,7 +252,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
   def read: DataFrame = {
     val c = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
-    readDirsDv(c.dirs, StructType.fromDDL(c.schemaDdl), c.partitionBy.nonEmpty,
+    readDirs(c.dirs, StructType.fromDDL(c.schemaDdl), c.partitionBy.nonEmpty,
       c.dvDirs, c.columnMap)
   }
 
@@ -279,7 +270,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val c = commitAt(version)
     // the commit's own cumulative DV list — time travel sees exactly the
     // tombstones that existed as of that version
-    readDirsDv(c.dirs, StructType.fromDDL(c.schemaDdl), c.partitionBy.nonEmpty,
+    readDirs(c.dirs, StructType.fromDDL(c.schemaDdl), c.partitionBy.nonEmpty,
       c.dvDirs, c.columnMap)
   }
 
@@ -477,23 +468,6 @@ final class ManagedTable(spark: SparkSession, root: String) {
       org.apache.spark.sql.functions.col(s"`$n`")
         .as(cmap.getOrElse(n, n))).toIndexedSeq: _*)
 
-  private def readDirs(dirs: Seq[String], schema: StructType,
-                       partitioned: Boolean = false,
-                       cmap: Map[String, String] = Map.empty): DataFrame =
-    if (dirs.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      // restrict to the commit's schema: partition discovery may append
-      // dir-derived columns the schema doesn't declare (e.g. the synthetic
-      // [[clusterBy]] bucket column) — they are storage layout, not data.
-      // allowMissingColumns: a composition may MIX layouts (carried
-      // cluster-bucket subdirs + a file-scoped merge's plain dir), so a
-      // layout column present in one frame and absent in another must not
-      // fail the union — it is dropped by the select either way
-      dirFrames(dirs, physicalSchema(schema, cmap), partitioned)
-        .reduce(_.unionByName(_, allowMissingColumns = true))
-        .select(logicalCols(schema, cmap): _*)
-
   /** The tombstone rows of a snapshot's deletion-vector dirs. */
   private def dvFrame(dvDirs: Seq[String]): DataFrame =
     spark.read.schema(ManagedTable.DvSchema).parquet(dvDirs: _*)
@@ -508,17 +482,33 @@ final class ManagedTable(spark: SparkSession, root: String) {
   private def dvKeyOf(fileCol: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     org.apache.spark.sql.functions.regexp_replace(fileCol, "^.*/data/", "")
 
-  /** [[readDirs]] with the snapshot's deletion vectors applied: each
-    * scan keeps its file identity (`_metadata.file_path` canonicalized
-    * + `_metadata.row_index`) and the union anti-joins the tombstone
-    * set on (file key, row position). The DV relation is a parquet
-    * scan Spark can size, so a typical (small) tombstone set broadcasts
+  /** The one dir reader: `dirs` under the commit's `schema` and column
+    * mapping, with the snapshot's deletion vectors applied. Each scan
+    * keeps its file identity (`_metadata.file_path` canonicalized +
+    * `_metadata.row_index`) and the union anti-joins the tombstone set
+    * on (file key, row position). The DV relation is a parquet scan
+    * Spark can size, so a typical (small) tombstone set broadcasts
     * under `autoBroadcastJoinThreshold` — the read tax is one
-    * broadcast-hash anti-join, cleared entirely by [[purgeDeletes]]. */
-  private def readDirsDv(dirs: Seq[String], schema: StructType,
-                         partitioned: Boolean, dvDirs: Seq[String],
-                         cmap: Map[String, String] = Map.empty): DataFrame =
-    if (dvDirs.isEmpty || dirs.isEmpty) readDirs(dirs, schema, partitioned, cmap)
+    * broadcast-hash anti-join, cleared entirely by [[purgeDeletes]].
+    * With no deletion vectors the union is read plainly. A stream reads
+    * dirs under its own fixed schema this way too: dirs committed after
+    * a schema evolution are projected onto it (missing columns → NULL). */
+  private[graft] def readDirs(dirs: Seq[String], schema: StructType,
+                              partitioned: Boolean, dvDirs: Seq[String],
+                              cmap: Map[String, String] = Map.empty): DataFrame =
+    if (dirs.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else if (dvDirs.isEmpty)
+      // restrict to the commit's schema: partition discovery may append
+      // dir-derived columns the schema doesn't declare (e.g. the synthetic
+      // [[clusterBy]] bucket column) — they are storage layout, not data.
+      // allowMissingColumns: a composition may MIX layouts (carried
+      // cluster-bucket subdirs + a file-scoped merge's plain dir), so a
+      // layout column present in one frame and absent in another must not
+      // fail the union — it is dropped by the select either way
+      dirFrames(dirs, physicalSchema(schema, cmap), partitioned)
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+        .select(logicalCols(schema, cmap): _*)
     else {
       import org.apache.spark.sql.functions.col
       val cols = logicalCols(schema, cmap)
@@ -728,7 +718,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
   def readWhere(predicate: org.apache.spark.sql.Column): DataFrame = {
     val c = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
-    readDirsDv(splitDirsMayMatch(c, predicate)._1, StructType.fromDDL(c.schemaDdl),
+    readDirs(splitDirsMayMatch(c, predicate)._1, StructType.fromDDL(c.schemaDdl),
         c.partitionBy.nonEmpty, c.dvDirs, c.columnMap)
       .filter(predicate)
   }
@@ -985,8 +975,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     publish(c, Seq(dvDir), changeRows, retry = (head, attempts) =>
       attempts < 10 &&
         c.dirs.forall(head.dirs.contains) && head.dvDirs == c.dvDirs &&
-        head.schemaDdl == c.schemaDdl && head.columnMap == c.columnMap &&
-        head.constraints == c.constraints && head.properties == c.properties) {
+        head.sameDefinition(c) && head.properties == c.properties) {
       (b, attempt) =>
         b.next("DELETE VECTORS", tsMs, Map("numDeletedRows" -> n.toString,
             "numDeletionVectors" -> (b.dvDirs.size + 1).toString,
@@ -1027,7 +1016,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     if (affected.isEmpty)
       return Some(commitNext(c, "PURGE DELETES", metrics)(_.copy(dvDirs = Nil)))
     val (dataDir, outRows, added) = writeDataDir(
-      readDirsDv(affected, StructType.fromDDL(c.schemaDdl), c.partitionBy.nonEmpty,
+      readDirs(affected, StructType.fromDDL(c.schemaDdl), c.partitionBy.nonEmpty,
         c.dvDirs, c.columnMap),
       c.next("PURGE DELETES", tsMs, Map.empty))
     Some(publish(c, Seq(dataDir)) { (b, _) =>
@@ -1062,7 +1051,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
       // DV-aware source read: a rewrite of a dir with live tombstones
       // must not resurrect its deleted rows (the rewrite MATERIALIZES
       // those deletes — tombstones for rewritten files go inert)
-      def src = readDirsDv(affected, schema, c.partitionBy.nonEmpty, c.dvDirs,
+      def src = readDirs(affected, schema, c.partitionBy.nonEmpty, c.dvDirs,
         c.columnMap)
       // affected-row count observed above the transform, output rows +
       // skipping stats below it — one write job, no extra passes
@@ -1179,7 +1168,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
   private[graft] def readDirsSubset(dirs: Seq[String]): DataFrame = {
     val c = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
-    readDirsDv(dirs, StructType.fromDDL(c.schemaDdl), c.partitionBy.nonEmpty,
+    readDirs(dirs, StructType.fromDDL(c.schemaDdl), c.partitionBy.nonEmpty,
       c.dvDirs, c.columnMap)
   }
 
@@ -1189,15 +1178,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
   def commitsBetween(fromV: Long, toV: Long): Seq[Commit] =
     readCommits(listVersions.filter(v => v >= fromV && v <= toV).sorted)
 
-  /** Read stored dirs under an EXPLICIT schema — the streaming-tail read:
-    * a stream's schema is fixed at start, so dirs committed after a
-    * schema evolution are projected onto it (missing columns → NULL). */
-  private[graft] def readDirsAs(dirs: Seq[String], schema: StructType,
-                                partitioned: Boolean,
-                                cmap: Map[String, String] = Map.empty): DataFrame =
-    readDirs(dirs, schema, partitioned, cmap)
-
-  /** [[readDirsDv]] keeping each row's source file path (full URI) as
+  /** [[readDirs]] keeping each row's source file path (full URI) as
     * `fileCol` — change-feed synthesis stamps commit version/timestamp
     * from the file's containing dir, and `input_file_name()` is
     * unusable once the DV anti-join makes the plan multi-source
@@ -1221,16 +1202,6 @@ final class ManagedTable(spark: SparkSession, root: String) {
     alive.drop("__graft_dv_pos__")
   }
 
-  /** [[readDirsAs]] with an explicit deletion-vector set — the
-    * streaming BACKFILL read: the backfill serves the pinned snapshot,
-    * so it must apply that snapshot's tombstones (tail reads serve
-    * per-version ADDED dirs, whose files no tombstone can reference at
-    * admission time, and stay on the plain path). */
-  private[graft] def readDirsAsDv(dirs: Seq[String], schema: StructType,
-                                  partitioned: Boolean, dvDirs: Seq[String],
-                                  cmap: Map[String, String] = Map.empty): DataFrame =
-    readDirsDv(dirs, schema, partitioned, dvDirs, cmap)
-
   /**
    * Commit `df` as one new data dir PLUS `carried` dirs of the previous
    * version by reference — the file-scoped merge commit: prevDirs −
@@ -1253,7 +1224,11 @@ final class ManagedTable(spark: SparkSession, root: String) {
    *    across publication retries); `None` means the conflicting commit
    *    overlaps the result (it touched a rewritten dir, or added rows
    *    the merge should have seen), so the conflict surfaces for the
-   *    caller to re-merge.
+   *    caller to re-merge. The callback answers only that dir question:
+   *    a head whose definition ([[Commit.sameDefinition]]) or deletion
+   *    vectors differ from the commit the result was read at
+   *    (`expectedPrevVersion`, else the entry-time head) surfaces the
+   *    conflict without asking it.
    *  - no `rebase`: refuse with [[ManagedTable.ConcurrentCommitException]],
    *    exactly like Delta's conflict detection — a commit landing in the
    *    resolution window must never be silently dropped.
@@ -1272,9 +1247,17 @@ final class ManagedTable(spark: SparkSession, root: String) {
       groupedLayout: Boolean = false): Commit = synchronized {
     val entry = lastCommit.getOrElse(
       throw new IllegalStateException(s"managed table $root does not exist"))
+    // the rebase's layout half, against the commit the result was read
+    // at: a head with another definition would be reverted, and a head
+    // with other deletion vectors may tombstone a row the result
+    // rewrote into its new dir, which would resurrect it
+    lazy val readAt = expectedPrevVersion.filter(_ != entry.version).fold(entry)(commitAt)
+    def rebased(head: Commit): Option[Seq[String]] =
+      rebase.filter(_ => head.sameDefinition(readAt) && head.dvDirs == readAt.dvDirs)
+        .flatMap(_(head))
     // entry-time staleness: resolve BEFORE paying the data write
     var carry = fence(expectedPrevVersion, Some(entry), "a scoped merge")
-      .fold(carried)(e => rebase.flatMap(_(entry)).getOrElse(throw e))
+      .fold(carried)(e => rebased(entry).getOrElse(throw e))
     val stale = carry.filterNot(entry.dirs.contains)
     require(stale.isEmpty,
       s"carried dirs are not part of the current version of $root: ${stale.mkString(", ")}")
@@ -1293,7 +1276,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val (dataDir, numRows, added) =
       writeDataDir(df, entry.next(operation, tsMs, Map.empty), groupedLayout)
     publish(entry, Seq(dataDir), changeData, retry = (head, n) =>
-      n < 10 && rebase.flatMap(_(head)).filter(_.forall(head.dirs.contains))
+      n < 10 && rebased(head).filter(_.forall(head.dirs.contains))
         .map(c2 => carry = c2).isDefined) { (b, n) =>
       // rebase can change the carried count — keep the caller's metric honest
       val metrics = Map("numOutputRows" -> numRows.toString) ++ extraMetrics ++
@@ -1463,9 +1446,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // would revert the racer's change. A replace/merge must surface
     // every conflict.
     publish(base, Seq(dataDir), changeData, (head, n) =>
-      append && n <= 10 &&
-        head.schemaDdl == base.schemaDdl && head.columnMap == base.columnMap &&
-        head.constraints == base.constraints && head.partitionBy == base.partitionBy) { (b, _) =>
+      append && n <= 10 && head.sameDefinition(base)) { (b, _) =>
       val c = build(b, Map("numOutputRows" -> numRows.toString))
       if (append) c.copy(dirs = b.dirs :+ dataDir, dirStats = b.dirStats ++ added)
       else composed(c, Nil, added)
@@ -2032,48 +2013,36 @@ final class ManagedTable(spark: SparkSession, root: String) {
         "(replace/clusterBy) to materialize the logical names first")
     // (file URI, partition rel path or "") per data file, listed with
     // bounded driver concurrency (30k dirs = 30k × RTT if sequential)
-    val listed: Seq[(String, String)] = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(16, c.dirs.size)))
-      try {
-        import scala.jdk.CollectionConverters._
-        val nParts = c.partitionBy.size
-        val tasks: Seq[java.util.concurrent.Callable[Seq[(String, String)]]] =
-          c.dirs.map { d => () =>
-            val dp = new Path(d)
-            val dfs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-            val qd = dfs.makeQualified(dp)
-            val out = Seq.newBuilder[(String, String)]
-            val it = dfs.listFiles(qd, true)
-            while (it.hasNext) {
-              val st = it.next()
-              val name = st.getPath.getName
-              if (!name.startsWith("_") && !name.startsWith(".")) {
-                // partition rel path = the col=val segments between the
-                // data-dir ROOT and the file (robust to subdir-scoped
-                // compositions: segments counted from the root, not `d`)
-                val rel =
-                  if (nParts == 0) ""
-                  else {
-                    var segs = List.empty[String]
-                    var p = st.getPath.getParent
-                    val rootName = new Path(ManagedTable.dataDirRoot(d)).getName
-                    while (p != null && p.getName != rootName) {
-                      segs = p.getName :: segs; p = p.getParent
-                    }
-                    segs.mkString("/")
-                  }
-                out += (st.getPath.toUri.toString -> rel)
+    val nParts = c.partitionBy.size
+    val listed: Seq[(String, String)] = graft.DriverPool.map(spark, c.dirs.map { d => () =>
+      val dp = new Path(d)
+      val dfs = dp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val qd = dfs.makeQualified(dp)
+      val out = Seq.newBuilder[(String, String)]
+      val it = dfs.listFiles(qd, true)
+      while (it.hasNext) {
+        val st = it.next()
+        val name = st.getPath.getName
+        if (!name.startsWith("_") && !name.startsWith(".")) {
+          // partition rel path = the col=val segments between the
+          // data-dir ROOT and the file (robust to subdir-scoped
+          // compositions: segments counted from the root, not `d`)
+          val rel =
+            if (nParts == 0) ""
+            else {
+              var segs = List.empty[String]
+              var p = st.getPath.getParent
+              val rootName = new Path(ManagedTable.dataDirRoot(d)).getName
+              while (p != null && p.getName != rootName) {
+                segs = p.getName :: segs; p = p.getParent
               }
+              segs.mkString("/")
             }
-            out.result()
-          }
-        pool.invokeAll(tasks.asJava).asScala.flatMap { f =>
-          try f.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }.toSeq
-      } finally { pool.shutdown(); () }
-    }
+          out += (st.getPath.toUri.toString -> rel)
+        }
+      }
+      out.result()
+    }).flatten
     val outPath = new Path(outDir)
     val ofs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (ofs.exists(outPath)) ofs.delete(outPath, true)
@@ -2519,7 +2488,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val schema = StructType.fromDDL(c.schemaDdl)
     // DV-aware: compaction MATERIALIZES the tombstoned deletes for the
     // partitions it rewrites (their old files leave the composition)
-    val frag0 = readDirsDv(fragmented.values.flatten.toSeq, schema,
+    val frag0 = readDirs(fragmented.values.flatten.toSeq, schema,
         partitioned = false, c.dvDirs, c.columnMap)
       .repartition(partitionBy.map(org.apache.spark.sql.functions.col): _*)
     // optional intra-file clustering: sorted rows give parquet tight
@@ -2572,9 +2541,9 @@ final class ManagedTable(spark: SparkSession, root: String) {
     val groups = compactionGroups(c, small, maxDirBytes, sizes)
     val merged =
       if (groups.size <= 1)
-        readDirsDv(small, schema, partitioned = false, c.dvDirs, c.columnMap)
+        readDirs(small, schema, partitioned = false, c.dvDirs, c.columnMap)
       else groups.zipWithIndex.map { case (ds, g) =>
-        readDirsDv(ds, schema, partitioned = false, c.dvDirs, c.columnMap)
+        readDirs(ds, schema, partitioned = false, c.dvDirs, c.columnMap)
           .withColumn(CLUSTER_COL, org.apache.spark.sql.functions.lit(g))
       }.reduce(_.unionByName(_))
     Some(writeCarried(merged, big,
@@ -2589,9 +2558,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
       // A racer that rewrote/removed a folded dir made the compacted
       // bytes stale — give up and surface (maintenance just re-runs).
       rebase = Some(head =>
-        if (head.schemaDdl == c.schemaDdl && head.partitionBy == c.partitionBy &&
-            small.forall(head.dirs.contains)) Some(head.dirs.diff(small))
-        else None),
+        if (small.forall(head.dirs.contains)) Some(head.dirs.diff(small)) else None),
       groupedLayout = groups.size > 1))
   }
 
@@ -3137,23 +3104,6 @@ object ManagedTable {
     * ([[ManagedTable.pointerRange]]). Diagnostic, bench-visible. */
   private[graft] val ptrProbes = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Shared bounded pool for driver-side commit-log entry IO — one per
-    * JVM (daemon threads), never per call: metaHistory batches run on
-    * every view refresh, search, and streaming micro-batch, and a
-    * create/shutdown per 16-entry batch was measurable on those hot
-    * serving paths. */
-  private[table] lazy val logIoPool: java.util.concurrent.ExecutorService = {
-    val tf = new java.util.concurrent.ThreadFactory {
-      private val n = new java.util.concurrent.atomic.AtomicInteger(0)
-      override def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"graft-log-io-${n.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      }
-    }
-    java.util.concurrent.Executors.newFixedThreadPool(16, tf)
-  }
-
   /** Count of read-side dir-size FS walks — the legacy fallback when a
     * commit predates `Commit.dirBytes`. On a new-format table every
     * read path (stream admission, compaction sizing) must leave this
@@ -3296,6 +3246,14 @@ object ManagedTable {
     /** Physical parquet name of a logical column under this commit. */
     def physicalOf(logical: String): String =
       columnMap.getOrElse(logical, logical)
+
+    /** Whether `o` defines the table as this commit does: schema, column
+      * mapping, constraints and partitioning. Data written under one
+      * definition republishes over a head with another only by reverting
+      * the head's change. */
+    def sameDefinition(o: Commit): Boolean =
+      schemaDdl == o.schemaDdl && columnMap == o.columnMap &&
+        constraints == o.constraints && partitionBy == o.partitionBy
 
     /** This commit's successor: version + 1, read at this version, with
       * every inheritable field carried forward (composition, stats,

@@ -235,7 +235,7 @@ final case class GraftMergeCommand(root: String,
     // the target is read AT the version the commit is fenced on: a
     // commit landing mid-MERGE surfaces as a conflict instead of being
     // replaced away
-    val target = t.readDirsAsDv(c.dirs, targetSchema, c.partitionBy.nonEmpty,
+    val target = t.readDirs(c.dirs, targetSchema, c.partitionBy.nonEmpty,
         c.dvDirs, c.columnMap)
       .select(targetSchema.fieldNames.map(n => col(s"`$n`")).toIndexedSeq: _*)
     val merged = MergeEmulator.merge(target, sourceDf, cc(mergeCond),

@@ -407,9 +407,9 @@ object Writers {
    *     racer was an append of non-matching keys, or a compaction /
    *     merge of carried dirs — the already-computed result is still
    *     exactly right, and only the carried composition is recomposed
-   *     to `headDirs − rewritten`. Schema or partition-layout drift
-   *     disqualifies the rebase (the result was computed and written in
-   *     the old layout).
+   *     to `headDirs − rewritten`. A head with another definition or
+   *     other deletion vectors disqualifies the rebase
+   *     ([[ManagedTable.writeCarried]] decides that half).
    *  2. Otherwise (overlapping racer, partition/full scope) the merge
    *     RE-RESOLVES scope against the new head and recomputes — bounded
    *     by [[MaxMergeAttempts]], then the conflict surfaces.
@@ -444,27 +444,23 @@ object Writers {
         val result = pattern(
           evolveTarget(mergeTarget(table, s, partitionBy, scope), s, opts), s)
         val rebase: Option[Commit => Option[Seq[String]]] = scope match {
-          case FileScope(rewritten, _) =>
-            val read = readCommit.get // FileScope implies a commit exists
-            Some(head =>
-              if (head.schemaDdl != read.schemaDdl ||
-                  head.partitionBy != read.partitionBy) None
-              else probeAffectedDirs(head, s, keys) match {
-                case ProbeSplit(affected, carried)
-                  if affected.toSet == rewritten.toSet => Some(carried)
-                case ProbeTooMany =>
-                  // >DirProbeCap-dir tables — the ones whose re-merges
-                  // are most expensive — rebase through the same
-                  // conservative stats walk their scope resolution used,
-                  // evaluated against the NEW head's composition
-                  sourceKeyRange(s, keys) match {
-                    case Some(pred) =>
-                      val (affected, carried) = table.splitDirsMayMatch(head, pred)
-                      if (affected.toSet == rewritten.toSet) Some(carried) else None
-                    case None => None
-                  }
-                case _ => None
-              })
+          case FileScope(rewritten, _) => Some(head =>
+            probeAffectedDirs(head, s, keys) match {
+              case ProbeSplit(affected, carried)
+                if affected.toSet == rewritten.toSet => Some(carried)
+              case ProbeTooMany =>
+                // >DirProbeCap-dir tables — the ones whose re-merges
+                // are most expensive — rebase through the same
+                // conservative stats walk their scope resolution used,
+                // evaluated against the NEW head's composition
+                sourceKeyRange(s, keys) match {
+                  case Some(pred) =>
+                    val (affected, carried) = table.splitDirsMayMatch(head, pred)
+                    if (affected.toSet == rewritten.toSet) Some(carried) else None
+                  case None => None
+                }
+              case _ => None
+            })
           case _ => None
         }
         try {

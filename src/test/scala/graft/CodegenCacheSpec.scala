@@ -29,6 +29,14 @@ class CodegenCacheSpec extends SparkSpec {
     assert(compilesOf(base + 1) === 0L)
   }
 
+  test("a shape compiled on the caller is the cache entry a pooled task hits") {
+    compilesOf(base + 2000)
+    val before = compiles
+    compilesOf(base + 2001)
+    DriverPoolSpec.onPoolThread(spark)(compilesOf(base + 2001))
+    assert(compiles - before === 1L)
+  }
+
   test("the generated-class cache holds more than Spark's default 100 classes") {
     assert(Harness.graftConf.toMap.get("spark.sql.codegen.cache.maxEntries").contains("1000"))
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")

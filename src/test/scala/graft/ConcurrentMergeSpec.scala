@@ -356,6 +356,47 @@ class ConcurrentMergeSpec extends SparkSpec {
     } finally MergeGate.disarm()
   }
 
+  /** A file-scoped merge result rewriting the table's first dir (`f`
+    * shapes its rows), gated in its data write while `racer` lands on
+    * another handle. The rebase answers the dir question only, and
+    * says yes: the racer keeps every dir. Returns what the merge threw. */
+  private def carriedRacing(path: String, t: ManagedTable)(f: DataFrame => DataFrame)(
+      racer: ManagedTable => Unit): Throwable = {
+    val cur = t.lastCommit.get
+    val rewritten = cur.dirs.head
+    raced {
+      t.writeCarried(f(t.readDirsSubset(Seq(rewritten))).withColumn("v", gateUdf($"v")),
+        cur.dirs.tail, "MERGE(scd1)", expectedPrevVersion = Some(cur.version),
+        rebase = Some(head => Some(head.dirs.filterNot(_ == rewritten))))
+      ()
+    } { racer(ManagedTable(spark, path)) }
+  }
+
+  test("a rebase declines over a racing deletion-vector delete: the deleted row stays deleted") {
+    val path = tmpDir("cms_carried_dv")
+    val t = clusteredTable(path)
+    val gone = t.readDirsSubset(Seq(t.lastCommit.get.dirs.head))
+      .select("id").as[Int].head()
+    val err = carriedRacing(path, t)(identity)(_.deleteVectors(col("id") === gone))
+    assert(err.isInstanceOf[ManagedTable.ConcurrentCommitException],
+      s"expected a surfaced conflict, got $err")
+    assert(t.read.filter($"id" === gone).count() === 0, "the deleted row came back")
+    assert(t.read.count() === 399)
+    assertNoOrphanDirs(path)
+  }
+
+  test("a rebase declines over a racing ADD CONSTRAINT: no violating row lands") {
+    val path = tmpDir("cms_carried_constraint")
+    val t = clusteredTable(path)
+    val err = carriedRacing(path, t)(_.withColumn("v", lit(null).cast("string")))(
+      _.addConstraint("v_present", "not_null:v"))
+    assert(err.isInstanceOf[ManagedTable.ConcurrentCommitException],
+      s"expected a surfaced conflict, got $err")
+    assert(t.lastCommit.get.constraints.contains("v_present"))
+    assert(t.read.filter($"v".isNull).count() === 0, "a row violating the constraint landed")
+    assertNoOrphanDirs(path)
+  }
+
   test("a writeCarried whose rebase declines deletes the data dir it wrote") {
     val path = tmpDir("cms_leak_carried")
     val t = clusteredTable(path)

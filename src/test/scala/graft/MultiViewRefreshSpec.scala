@@ -195,6 +195,41 @@ class MultiViewRefreshSpec extends SparkSpec {
       rebuiltP.exceptAll(phrase.read).isEmpty)
   }
 
+  test("refreshAll with failing views: siblings land once, the first " +
+      "failure in task order surfaces, a rerun converges") {
+    import MultiViewRefreshSpec.FlakyView
+    val src = tmpDir("mvf_src")
+    val t = ManagedTable(spark, src)
+    t.write(docs(0 until 16), "APPEND", "append")
+    val bmSt = tmpDir("mvf_bm25"); val okSt = tmpDir("mvf_ok")
+    val bm25 = new Bm25IndexView(spark, src, bmSt, expectedDocs = 1000)
+    val a = new FlakyView(spark, src, tmpDir("mvf_a"))
+    val ok = new FlakyView(spark, src, okSt)
+    val b = new FlakyView(spark, src, tmpDir("mvf_b"))
+    val views = Seq(bm25, a, ok, b)
+    views.foreach(_.initialize())
+    t.write(docs(16 until 24), "APPEND", "append")
+    val latest = t.latestVersion.get
+    def commits = Seq(bmSt, okSt).map(ManagedTable(spark, _).history.size)
+    val before = commits
+    a.fail = Some("view a"); b.fail = Some("view b")
+    val e = intercept[IllegalStateException](StandingViews.refreshAll(spark, views))
+    assert(e.getMessage === "view a", "the first failure in task order surfaces")
+    assert(bm25.sourceVersion === latest && ok.sourceVersion === latest)
+    assert(a.sourceVersion < latest && b.sourceVersion < latest)
+    val landed = commits
+    assert(landed.zip(before).forall { case (l, b0) => l > b0 })
+    a.fail = None; b.fail = None
+    assert(StandingViews.refreshAll(spark, views) === Map(src -> latest))
+    assert(commits === landed, "a sibling that landed folded again")
+    views.foreach(v => assert(v.sourceVersion === latest))
+    val want = t.read.select(col("doc_id"), length(col("text")).as("len"))
+    Seq(a, ok, b).foreach(v =>
+      assert(v.read.exceptAll(want).isEmpty && want.exceptAll(v.read).isEmpty))
+    val rebuilt = Retrieval.bm25Postings(t.read, "text", "doc_id")
+    assert(bm25.read.exceptAll(rebuilt).isEmpty && rebuilt.exceptAll(bm25.read).isEmpty)
+  }
+
   test("refreshStreamAll: ONE CDF stream drives every view's fold per " +
       "micro-batch; a resumed checkpoint folds only the new slice") {
     val src = tmpDir("mvs_src")
@@ -358,5 +393,24 @@ class MultiViewRefreshSpec extends SparkSpec {
     assert(dimAgg.sourceVersion === dimT.latestVersion.get)
     val want = joinRecompute(t, dimT)
     assert(jv.read.exceptAll(want).isEmpty && want.exceptAll(jv.read).isEmpty)
+  }
+}
+
+object MultiViewRefreshSpec {
+  /** A minimal row-local view, one `(doc_id, len)` row per document,
+    * whose slice folds throw `fail` before they commit while it is set. */
+  final class FlakyView(spark: org.apache.spark.sql.SparkSession,
+                        src: String, st: String)
+    extends RowLocalIndexView(spark, src, st, "doc_id", Seq("text"),
+      "flaky view", "FLAKY", 1000L) {
+    @volatile var fail: Option[String] = None
+    override protected def buildRows(docs: org.apache.spark.sql.DataFrame) =
+      docs.select(col("doc_id"), length(col("text")).as("len"))
+    override protected def refreshMeta(v: Long,
+                                       ins: org.apache.spark.sql.DataFrame,
+                                       del: org.apache.spark.sql.DataFrame) = {
+      fail.foreach(m => throw new IllegalStateException(m))
+      super.refreshMeta(v, ins, del)
+    }
   }
 }

@@ -174,7 +174,7 @@ class OrchestrationSpec extends SparkSpec {
           options = Map("now" -> "2026-01-01 00:00:00")))))
     // both tasks in one topo batch -> run concurrently on the shared context
     val statuses = PipelineRunner.run(spark,
-      Seq(mk("ta", srcA, sinkA), mk("tb", srcB, sinkB)), parallelism = 2)
+      Seq(mk("ta", srcA, sinkA), mk("tb", srcB, sinkB)))
     assert(statuses("ta") === Succeeded && statuses("tb") === Succeeded)
     import spark.implicits._
     assert(ManagedTable(spark, sinkA).read.select("tag").as[String].head() === "A")
