@@ -64,6 +64,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // (graft.table.SqlTables); DDL goes through the Hints batch, ahead
     // of ResolveSessionCatalog's v1-command conversion
     ext.injectResolutionRule(graft.table.SqlTableResolution(_))
+    ext.injectResolutionRule(_ => TaskLoaderRule)
     ext.injectParser((_, delegate) => new graft.table.GraftSqlParser(delegate))
     ext.injectHintResolutionRule(graft.table.SqlTableDdl(_))
   }
@@ -74,16 +75,16 @@ object GraftExtensions {
   @volatile private var taskLoader: ClassLoader = null
 
   /**
-   * Local mode only: gives the calling thread — the one building the
-   * session, since Spark applies extensions inside `getOrCreate` before
-   * the first query — the executor's default task class loader. Threads
-   * it starts later inherit it (AQE query-stage threads), and
-   * [[DriverPool]] hands its submitter's loader to each pooled task,
-   * so the whole-stage class the driver compiles while planning is the
-   * very cache entry the tasks look up: Spark keys generated classes by
-   * (context class loader, source), and with the app loader on the
-   * driver and the task loader on executor threads every class compiled
-   * twice. Costs one one-task job per session. Needs
+   * Local mode only: finds the executor's default task class loader
+   * (one one-task job per session) and gives it to every thread that
+   * plans a query — the one building the session here, any other
+   * through [[TaskLoaderRule]]. Threads started later inherit it (AQE
+   * query-stage threads), and [[DriverPool]] hands its submitter's
+   * loader to each pooled task, so the whole-stage class the driver
+   * compiles while planning is the very cache entry the tasks look up:
+   * Spark keys generated classes by (context class loader, source), and
+   * with the app loader on the driver and the task loader on executor
+   * threads every class compiled twice. Needs
    * `spark.sql.artifact.isolation.enabled=false` ([[Harness.graftConf]]),
    * or SQL tasks run under a per-session loader instead. A cluster's
    * executors are other JVMs with their own cache: nothing to align.
@@ -92,8 +93,26 @@ object GraftExtensions {
     org.apache.spark.sql.classic.GraftShims.activeContext.filter(_.isLocal).foreach { sc =>
       sc.runJob(sc.parallelize(Seq(0), 1), (_: Iterator[Int]) =>
         taskLoader = Thread.currentThread().getContextClassLoader)
-      Thread.currentThread().setContextClassLoader(taskLoader)
+      useTaskLoader()
     }
+
+  /** Switch the calling thread to the task loader, when that loader
+    * delegates to the thread's own (it then loses no class): a thread
+    * that predates the session — a notebook's or a server's request
+    * thread — still holds the app loader. */
+  private def useTaskLoader(): Unit = {
+    val (task, th) = (taskLoader, Thread.currentThread())
+    val own = th.getContextClassLoader
+    if (task != null && (own ne task) &&
+        Iterator.iterate(task)(_.getParent).takeWhile(_ != null).contains(own))
+      th.setContextClassLoader(task)
+  }
+
+  /** Changes no plan: runs on each query's analyzing thread, which is
+    * the thread that then compiles the query's classes. */
+  private object TaskLoaderRule extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
+    override def apply(plan: LogicalPlan): LogicalPlan = { useTaskLoader(); plan }
+  }
 
   private def strArg(e: Expression, what: String): String = {
     require(e.foldable && e.dataType == StringType,

@@ -1,8 +1,11 @@
 package graft.table
 
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.functions.{col, count, lit, max, min, sum, unix_micros, when}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /**
  * File-level data skipping for [[ManagedTable]] — the Delta data-skipping
@@ -51,8 +54,7 @@ object DataSkipping {
 
   /** Aggregate columns for the write job's Observation: min+max per
     * eligible field, aliased `min:name` / `max:name`. */
-  def statAggs(schema: StructType): Seq[org.apache.spark.sql.Column] = {
-    import org.apache.spark.sql.functions._
+  def statAggs(schema: StructType): Seq[Column] = {
     schema.fields.filter(f => eligible(f.dataType)).toSeq.flatMap { f =>
       val c = col(s"`${f.name}`") // quoted: field names may contain dots
       val (mn, mx) = f.dataType match {
@@ -115,16 +117,17 @@ object DataSkipping {
       case _ => None
     } catch { case _: Exception => None }
 
-  private def lte(a: Ord, b: Ord): Option[Boolean] = (a, b) match {
-    case (NumOrd(x), NumOrd(y)) => Some(x <= y)
-    case (StrOrd(x), StrOrd(y)) => Some(x <= y)
+  /** Strings compare as Spark compares them (and as the min/max stats
+    * were taken): by UTF-8 bytes, i.e. by code point. Java's UTF-16
+    * order puts a supplementary character before U+E000..U+FFFF. */
+  private def compare(a: Ord, b: Ord): Option[Int] = (a, b) match {
+    case (NumOrd(x), NumOrd(y)) => Some(x.compare(y))
+    case (StrOrd(x), StrOrd(y)) =>
+      Some(UTF8String.fromString(x).compareTo(UTF8String.fromString(y)))
     case _ => None
   }
-  private def lt(a: Ord, b: Ord): Option[Boolean] = (a, b) match {
-    case (NumOrd(x), NumOrd(y)) => Some(x < y)
-    case (StrOrd(x), StrOrd(y)) => Some(x < y)
-    case _ => None
-  }
+  private def lte(a: Ord, b: Ord): Option[Boolean] = compare(a, b).map(_ <= 0)
+  private def lt(a: Ord, b: Ord): Option[Boolean] = compare(a, b).map(_ < 0)
 
   private def attrName(e: Expression): Option[String] = e match {
     case u: UnresolvedAttribute => Some(u.name)
@@ -199,6 +202,7 @@ object DataSkipping {
             .exists(v => cmp(stats, schema, n, v.asInstanceOf[Literal], "="))
           case None => true
         }
+      case Literal(false, BooleanType) => false // an empty key set's exact
       case IsNull(a) => nullMayMatch(stats, a, wantNull = true)
       case IsNotNull(a) => nullMayMatch(stats, a, wantNull = false)
       case _ if unresolvedFn(e, "isnull").exists(_.size == 1) =>
@@ -222,13 +226,14 @@ object DataSkipping {
                              a: Expression, l: Literal): Boolean =
     attrName(a) match {
       case Some(n) =>
-        // rows matching prefix p lie in [p, p + U+FFFF); overlap check
+        // the strings starting with p are one run that begins at p, so
+        // [mn, mx] meets it iff p <= mx and mn is below p or inside it
         val p = l.value.toString
-        interval(stats, schema, n).forall { case (mn, mx) =>
-          (for {
-            a1 <- lte(StrOrd(p), mx)
-            a2 <- lt(mn, StrOrd(p + "\uffff"))
-          } yield a1 && a2).getOrElse(true)
+        interval(stats, schema, n).forall {
+          case (mn @ StrOrd(m), mx @ StrOrd(_)) =>
+            lte(StrOrd(p), mx).contains(true) &&
+              (lt(mn, StrOrd(p)).contains(true) || m.startsWith(p))
+          case _ => true
         }
       case None => true
     }
@@ -281,12 +286,9 @@ object DataSkipping {
       case Some(ColMinMax(None, None, _)) =>
         // dir is all NULL for this column: no comparison can match
         false
-      case Some(mm) =>
-        val r = for {
-          f <- schema.fields.find(_.name == name)
-          mnS <- mm.min; mxS <- mm.max
-          mn <- statOrd(f.dataType, mnS)
-          mx <- statOrd(f.dataType, mxS)
+      case _ =>
+        (for {
+          (mn, mx) <- interval(stats, schema, name)
           v <- litOrd(l)
           keep <- op match {
             case "=" => for (a <- lte(mn, v); b <- lte(v, mx)) yield a && b
@@ -296,9 +298,96 @@ object DataSkipping {
             case ">=" => lte(v, mx)
             case _ => Some(true)
           }
-        } yield keep
-        r.getOrElse(true)
-      case None => true
+        } yield keep).getOrElse(true)
     }
   }
+}
+
+/**
+ * A key set and the one bound graft draws from it: which dirs and rows
+ * can these keys touch? File-scoped merges, the standing views'
+ * touched-group reads and tombstones, the join view's pruned snapshots
+ * and frame-keyed deletion vectors all ask it here.
+ *
+ *  - [[exact]]: up to [[KeySet.Cap]] key rows, a null-safe IN-list —
+ *    `k IN (...) [OR k IS NULL]` for one column, an OR of per-row
+ *    conjunctions for several (NULL is a legal key, and predicate
+ *    consumers keep only TRUE). None past the cap.
+ *  - [[bound]]: a conservative superset filter — [[exact]] under the
+ *    cap, past it each eligible column's `min..max [OR IS NULL]` AND-ed
+ *    (None when no column has orderable stats). Strictly a superset:
+ *    consumers always follow it with their exact join.
+ *  - [[size]] / [[isEmpty]].
+ *
+ * Costs are lazy and paid once: one `limit(Cap + 1)` collect of the
+ * frame as given and, past the cap only, one aggregate. Nothing here
+ * adds a `distinct` or a shuffle — callers pass distinct frames where
+ * they have them; duplicates only count toward the cap.
+ */
+final case class KeySet(frame: DataFrame, cols: Seq[String]) {
+  private def kc(c: String): Column = col(s"`$c`")
+
+  private lazy val rows: Option[Array[Row]] =
+    graft.llm.Similarity.collectUpTo(frame.select(cols.map(kc): _*), KeySet.Cap)
+
+  private lazy val ranged: Seq[String] =
+    cols.filter(c => DataSkipping.eligible(frame.schema(c).dataType))
+
+  /** count, then min, max and null count per [[ranged]] column. */
+  private lazy val stats: Row = {
+    val aggs = count(lit(1)) +: ranged.flatMap(c => Seq(min(kc(c)), max(kc(c)),
+      sum(when(kc(c).isNull, 1L).otherwise(0L))))
+    frame.agg(aggs.head, aggs.tail: _*).head()
+  }
+
+  def size: Long = rows.fold(stats.getLong(0))(_.length.toLong)
+
+  def isEmpty: Boolean = rows.exists(_.isEmpty)
+
+  def exact: Option[Column] = exact(cols)
+
+  /** Nested and map keys have no literal spelling here. */
+  private def exact(on: Seq[String]): Option[Column] =
+    rows.filter(_ => on.forall(c => frame.schema(c).dataType match {
+      case _: ArrayType | _: MapType | _: StructType => false
+      case _ => true
+    })).map { rs =>
+      val idx = on.map(cols.indexOf)
+      val tuples = rs.toSeq.map(r => idx.map(r.get)).distinct
+      val arms =
+        if (on.size == 1) {
+          val (nulls, vals) = tuples.map(_.head).partition(_ == null)
+          (if (vals.isEmpty) Nil else Seq(kc(on.head).isin(vals: _*))) ++
+            (if (nulls.isEmpty) Nil else Seq(kc(on.head).isNull))
+        } else tuples.map(_.zip(on).map {
+          case (null, c) => kc(c).isNull
+          case (v, c) => kc(c) === lit(v)
+        }.reduce(_ && _))
+      arms.reduceOption(_ || _).getOrElse(lit(false))
+    }
+
+  def bound: Option[Column] = bound(cols)
+
+  /** [[bound]] on a subset of the key columns. */
+  def bound(on: Seq[String]): Option[Column] = exact(on).orElse {
+    val preds = ranged.zipWithIndex.filter(p => on.contains(p._1)).map {
+      case (c, i) =>
+        val (mn, mx) = (stats.get(1 + 3 * i), stats.get(2 + 3 * i))
+        val hasNull = stats.getLong(3 + 3 * i) > 0L
+        // no bare-literal arms: the stats walker reads an unknown shape
+        // as may-match, which would defeat the prune under an OR
+        if (mn == null) kc(c).isNull // every key is NULL here
+        else {
+          val range = kc(c) >= lit(mn) && kc(c) <= lit(mx)
+          if (hasNull) range || kc(c).isNull else range
+        }
+    }
+    preds.reduceOption(_ && _)
+  }
+}
+
+object KeySet {
+  /** The one IN-list cap: past it a literal predicate stops paying (and
+    * the driver collect stops being free) — the range bound takes over. */
+  val Cap = 1000
 }

@@ -172,10 +172,10 @@ final class IncrementalJoinAggView(spark: SparkSession,
       if (graft.llm.Similarity.fitsDriver(keys, CdfNetting.MaxBroadcastIds))
         broadcast(keys)
       else keys
-    // key-range pre-filter ahead of the semi join — Catalyst pushes it
+    // key-bound pre-filter ahead of the semi join — Catalyst pushes it
     // into the snapshot's parquet scan (row-group pruning on a
     // key-clustered side), the join then narrows the superset
-    val base = IncrementalAggView.keyRangePredicate(keys, joinKeys)
+    val base = KeySet(keys, joinKeys).bound
       .map(t.readAt(version).filter).getOrElse(t.readAt(version))
     base.join(gated, joinKeys, "left_semi")
   }
@@ -231,7 +231,7 @@ final class IncrementalJoinAggView(spark: SparkSession,
     * the superset a partial-side prune admits. Sound against the new
     * snapshots for the same reason as the single-table view: a group
     * changed later is re-touched by those commits. */
-  private def recomputeMinMax(touched: DataFrame, vl1: Long,
+  private def recomputeMinMax(touched: KeySet, vl1: Long,
                               vr1: Long): DataFrame = {
     val lCols = left.read.columns.toSet
     val rCols = right.read.columns.toSet
@@ -248,7 +248,7 @@ final class IncrementalJoinAggView(spark: SparkSession,
   /** Recomputed rows for EXACTLY the touched groups — the delta fold's
     * append payload. `cur` is the state the fold nets against (live
     * head, or the pre-delete snapshot on crash resume). */
-  private def touchedRows(delta: DataFrame, touched: DataFrame,
+  private def touchedRows(delta: DataFrame, touched: KeySet,
                           cur: DataFrame, vl1: Long,
                           vr1: Long): DataFrame =
     alg.touchedRows(alg.semiOn(touched, groupCols, cur.filter, cur), delta,
@@ -264,7 +264,8 @@ final class IncrementalJoinAggView(spark: SparkSession,
       throw new IllegalStateException(
         "join view: a pending delete commit exists but the source " +
           "ranges are empty — was a source table recreated?"))
-    val touched = delta.select(alg.gCols: _*).distinct().localCheckpoint()
+    val touched = KeySet(delta.select(alg.gCols: _*).distinct()
+      .localCheckpoint(), groupCols)
     val newRows = touchedRows(delta, touched, state.readAt(dvc.version - 1),
       to(0), to(1)).localCheckpoint()
     (newRows, kernel.markRows(to, pos.stateRows, dvc, newRows.count()))
@@ -322,8 +323,9 @@ final class IncrementalJoinAggView(spark: SparkSession,
     }
     checkDisjointColumns()
     val delta = groupedDelta(vl0, vr0, vl1, vr1, leftSlice.map(_._1)).get
-    val touched = delta.select(alg.gCols: _*).distinct().localCheckpoint()
-    val touchedN = touched.count()
+    val touched = KeySet(delta.select(alg.gCols: _*).distinct()
+      .localCheckpoint(), groupCols)
+    val touchedN = touched.size
     val oldRows = pos.stateRows
     val to = Seq(vl1, vr1)
     if (touchedN == 0L)
@@ -332,7 +334,7 @@ final class IncrementalJoinAggView(spark: SparkSession,
         pos.head, txn)
     else if (touchedN * 100L >= oldRows * RowLocalIndexView.RewriteFractionPct)
       // full-churn fold (or tiny/empty state): one replace
-      kernel.replace(alg.mergedState(state.read, delta, touched,
+      kernel.replace(alg.mergedState(state.read, delta, touched.frame,
         recomputeMinMax(touched, vl1, vr1)), to, kernel.mark(to), pos.head, txn)
     else {
       // O(touched groups): recompute first (against the pre-tombstone

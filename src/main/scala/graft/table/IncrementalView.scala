@@ -24,8 +24,8 @@ import org.apache.spark.sql.functions._
  * They maintain by TOUCHED-GROUP recompute instead: each refresh
  * recomputes min/max for exactly the groups present in the change-feed
  * slice, reading those groups back from the fact — via
- * [[ManagedTable.readWhere]] dir-stat skipping when the (single) group
- * key's touched set fits an IN-list, else a semi-join — and merges them
+ * [[ManagedTable.readWhere]] dir-stat skipping when the touched set
+ * fits the [[KeySet]] IN-list, else a semi-join — and merges them
  * with untouched state rows, whose min/max carry over unread. Cost is
  * O(changed groups' rows), not O(table); a change feed is COMPLETE by
  * construction, so any later change to a group re-touches it — which is
@@ -98,28 +98,29 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
     v
   }
 
-  /** `reader` restricted to the touched groups: the IN-list predicate
-    * (dir-stat skipping via the caller's readWhere) when
-    * [[GroupAlgebra.touchedPredicate]] has one, else the null-safe
-    * range-pruned semi join ([[GroupAlgebra.semiOn]]). */
-  private def touchedSlice(touched: DataFrame,
+  /** `reader` restricted to the touched groups: the exact IN-list
+    * (dir-stat skipping via the caller's readWhere) under the
+    * [[KeySet]] cap, else the null-safe range-pruned semi join
+    * ([[GroupAlgebra.semiOn]]). */
+  private def touchedSlice(touched: KeySet,
                            readWhere: Column => DataFrame,
                            readAll: => DataFrame): DataFrame =
-    alg.touchedPredicate(touched) match {
+    touched.exact match {
       case Some(pred) => readWhere(pred)
       case None => alg.semiOn(touched, groupCols, readWhere, readAll)
     }
 
   /** MIN/MAX recomputed over the touched groups' fact rows. */
-  private def recomputeMinMax(touched: DataFrame): DataFrame =
+  private def recomputeMinMax(touched: KeySet): DataFrame =
     touchedSlice(touched, source.readWhere, source.read)
       .groupBy(alg.gCols: _*).agg(alg.mmAggs.head, alg.mmAggs.tail: _*)
 
   /** The grouped signed delta of a raw slice and its touched groups. */
-  private def deltaOf(cdf: DataFrame): (DataFrame, DataFrame) = {
+  private def deltaOf(cdf: DataFrame): (DataFrame, KeySet) = {
     val delta = alg.dropZeroNet(alg.grouped(cdf, CdfNetting.sign))
       .localCheckpoint()
-    (delta, delta.select(alg.gCols: _*).distinct().localCheckpoint())
+    (delta, KeySet(delta.select(alg.gCols: _*).distinct().localCheckpoint(),
+      groupCols))
   }
 
   /** Fold a change-feed slice into the state and advance the watermark
@@ -130,7 +131,7 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
   private def foldDelta(cdf: DataFrame, pos: FoldCommit.Pos, to: Long,
                         txn: Option[(String, Long)]): Unit = {
     val (delta, touched) = deltaOf(cdf)
-    val touchedN = touched.count()
+    val touchedN = touched.size
     val oldRows = pos.stateRows
     val w = Seq(to)
     if (touchedN == 0L)
@@ -139,7 +140,7 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
         pos.head, txn)
     else if (touchedN * 100L >= oldRows * RowLocalIndexView.RewriteFractionPct)
       // full-churn fold (or tiny/empty state): its numOutputRows is the count
-      kernel.replace(alg.mergedState(state.read, delta, touched,
+      kernel.replace(alg.mergedState(state.read, delta, touched.frame,
         recomputeMinMax(touched)), w, kernel.mark(w), pos.head, txn)
     else {
       // O(touched groups): recompute the touched rows FIRST (against the
@@ -240,10 +241,6 @@ private[table] final class GroupAlgebra(groupCols: Seq[String],
                                         minMaxCols: Seq[String],
                                         captureStateChangeData: Boolean) {
   private val Dec = "decimal(28,6)"
-  /** IN-list cap for the touched-group predicate: past this the
-    * predicate stops paying (and the driver collect stops being free) —
-    * the frame forms take over. */
-  private val MaxInList = 1000
 
   def gCols: Seq[Column] = groupCols.map(c => col(s"`$c`"))
   private def addCols: Seq[Column] =
@@ -282,61 +279,39 @@ private[table] final class GroupAlgebra(groupCols: Seq[String],
       .map(c => coalesce(col(s"`sum_$c`"), lit(0).cast(Dec)) =!= lit(0).cast(Dec))
       .foldLeft(col("cnt") =!= 0L)(_ || _))
 
-  /** The touched-group set as a driver-side IN-list predicate, when it
-    * HAS a driver-safe spelling: a single group key with at most
-    * [[MaxInList]] distinct values (the common case — a daily load
-    * touches few groups of a well-clustered fact/state). NULL is a
-    * legal group key and rides as an explicit `IS NULL` arm (predicate
-    * consumers use SQL match semantics — only TRUE matches — so the
-    * IN-list alone would silently skip the NULL group). None past the
-    * cap or for composite keys — consumers fall to frame form. */
-  def touchedPredicate(touched: DataFrame): Option[Column] = {
-    if (groupCols.size != 1) return None
-    val g = groupCols.head
-    val vals = touched.limit(MaxInList + 1).collect().map(_.get(0))
-    if (vals.length > MaxInList) return None
-    val nonNull = vals.filter(_ != null)
-    val base: Column =
-      if (nonNull.isEmpty) lit(false)
-      else col(s"`$g`").isin(nonNull.toIndexedSeq: _*)
-    Some(if (vals.contains(null)) base || col(s"`$g`").isNull else base)
-  }
-
-  /** A read restricted to the rows whose `cols` match a touched group:
-    * a null-safe LEFT SEMI join (NULL is a legal group key; a plain equi
-    * join would silently drop its rows) over a scan PRE-FILTERED by the
-    * touched keys' min/max range
-    * ([[IncrementalAggView.keyRangePredicate]] — dir-stat skipping
-    * through `readWhere`, so the read is O(touched range), not O(table)). */
-  def semiOn(touched: DataFrame, cols: Seq[String],
+  /** A read restricted to the rows whose `cols` (a subset of the
+    * touched set's columns) match a touched group: a null-safe LEFT SEMI
+    * join (NULL is a legal group key; a plain equi join would silently
+    * drop its rows) over a scan PRE-FILTERED by the touched set's
+    * [[KeySet.bound]] — dir-stat skipping through `readWhere`, so the
+    * read is O(touched range), not O(table). */
+  def semiOn(touched: KeySet, cols: Seq[String],
              readWhere: Column => DataFrame,
              readAll: => DataFrame): DataFrame = {
-    val t = touched.select(cols.map(c => col(s"`$c`").as(s"__t_$c")): _*)
+    val t = touched.frame.select(cols.map(c => col(s"`$c`").as(s"__t_$c")): _*)
     val cond = cols.map(c => col(s"`$c`") <=> col(s"`__t_$c`")).reduce(_ && _)
-    IncrementalAggView.keyRangePredicate(touched, cols)
-      .map(readWhere).getOrElse(readAll)
+    touched.bound(cols).map(readWhere).getOrElse(readAll)
       .join(t, cond, "left_semi")
   }
 
   /** Tombstone the touched groups' current state rows: predicate-form
     * deletion vectors (per-VALUE dir-stat pruning —
-    * [[ManagedTable.deleteVectors]]) under the IN-list cap, frame-keyed
-    * ones (key-RANGE dir pruning, the key frame never driver state —
-    * [[ManagedTable.deleteVectorsMatching]]) past it. Change capture on
+    * [[ManagedTable.deleteVectors]]) under the [[KeySet]] cap,
+    * frame-keyed ones (key-RANGE dir pruning, the key frame never driver
+    * state — [[ManagedTable.deleteVectorsMatching]]) past it. Change capture on
     * the STATE table is a deliberate choice (`captureStateChangeData`,
     * default off): nothing consumes the state's own change feed unless
     * the caller chains views, and capture forces the tombstone scan to
     * full row width. */
-  def tombstone(state: ManagedTable, touched: DataFrame, meta: Option[String],
+  def tombstone(state: ManagedTable, touched: KeySet, meta: Option[String],
                 fence: Option[Long]): ManagedTable.Commit =
-    touchedPredicate(touched) match {
+    touched.exact match {
       case Some(pred) =>
         state.deleteVectors(pred, captureChangeData = captureStateChangeData,
           userMetadata = meta, expectedPrevVersion = fence)
       case None =>
-        state.deleteVectorsMatching(touched, groupCols,
-          captureChangeData = captureStateChangeData, userMetadata = meta,
-          expectedPrevVersion = fence)
+        state.deleteVectorsMatching(touched, captureStateChangeData, meta,
+          fence, None)
     }
 
   /** The recomputed state rows for EXACTLY the touched groups — the
@@ -409,51 +384,5 @@ private[table] final class GroupAlgebra(groupCols: Seq[String],
               pick(s"min_$c", min), pick(s"max_$c", max)))): _*)
         .filter(col("cnt") > 0)
     }
-  }
-}
-
-object IncrementalAggView {
-  /** Conservative range predicate covering every touched key — the
-    * frame-DV dir prune's READ-side twin: the touched set itself is
-    * data-scaled, but each eligible key column's min/max + has-null
-    * (two scalars and a flag per column at any cardinality, one small
-    * job over the already-checkpointed touched frame) spell a
-    * predicate that provably admits every touched group, so the exact
-    * null-safe semi join can run over a readWhere-pruned scan instead
-    * of the whole state. None when no key column has orderable stats.
-    * Strictly a superset filter — consumers ALWAYS follow with the
-    * exact join. */
-  private[table] def keyRangePredicate(touched: DataFrame,
-                                       cols: Seq[String]): Option[Column] = {
-    val fields = cols.flatMap(c => touched.schema.fields.find(_.name == c))
-      .filter(f => DataSkipping.eligible(f.dataType))
-    if (fields.isEmpty) return None
-    val aggs = fields.flatMap { f =>
-      val kc = col(s"`${f.name}`")
-      Seq(min(kc).as(s"mn:${f.name}"), max(kc).as(s"mx:${f.name}"),
-        sum(when(kc.isNull, 1L).otherwise(0L)).as(s"nl:${f.name}"))
-    }
-    val row = touched.agg(aggs.head, aggs.tail: _*).head()
-    val preds = fields.map { f =>
-      val mn = Option(row.get(row.fieldIndex(s"mn:${f.name}")))
-      val mx = Option(row.get(row.fieldIndex(s"mx:${f.name}")))
-      val hasNull = Option(row.get(row.fieldIndex(s"nl:${f.name}")))
-        .exists(_.asInstanceOf[Long] > 0L)
-      val kc = col(s"`${f.name}`")
-      val range = (mn, mx) match {
-        case (Some(a), Some(b)) => Some(kc >= lit(a) && kc <= lit(b))
-        case _ => None
-      }
-      // no bare-literal arms — the stats walker treats a lone lit() as
-      // may-match, defeating the prune under an OR (an EMPTY touched
-      // frame lands here too: all stats NULL → IS NULL matches nothing
-      // extra, and the exact join returns empty regardless)
-      (range, hasNull) match {
-        case (Some(r), true) => r || kc.isNull
-        case (Some(r), false) => r
-        case (None, _) => kc.isNull
-      }
-    }
-    Some(preds.reduce(_ && _))
   }
 }

@@ -585,17 +585,18 @@ abstract class RowLocalIndexView(
     val (bloomBytes, _, _) = Retrieval.bm25BloomFrom(bloomTable.read)
     val insIds = ins.select(col(s"`$idCol`").as("doc_id"))
     val delIds = del.select(col(s"`$idCol`").as("doc_id"))
-    // collision gate's state scan, range-pruned: a state row colliding
-    // with an entering id has its id inside the batch's [min,max] — on
-    // an id-clustered state the exact re-check of bloom positives then
-    // scans O(batch range), not every id (ascending-id ingest makes the
-    // batch range disjoint from most of the state)
-    val insGateIds = graft.table.IncrementalAggView
-      .keyRangePredicate(insIds.select(col("doc_id").as(stateIdColumn)),
-        Seq(stateIdColumn))
-      .map(p => state.readWhere(p)
-        .select(col(s"`$stateIdColumn`").as("doc_id")))
-      .getOrElse(stateIds)
+    // collision gate's state scan, pruned to the batch's ids
+    // ([[KeySet.bound]]): a state row colliding with an entering id
+    // holds one of them — on an id-clustered state the exact re-check
+    // of bloom positives then scans O(batch range), not every id
+    // (ascending-id ingest makes the batch disjoint from most of the
+    // state)
+    def stateIdsOf(ids: DataFrame): DataFrame =
+      KeySet(ids.select(col("doc_id").as(stateIdColumn)), Seq(stateIdColumn))
+        .bound.map(p => state.readWhere(p)
+          .select(col(s"`$stateIdColumn`").as("doc_id")))
+        .getOrElse(stateIds)
+    val insGateIds = stateIdsOf(insIds)
     CdfNetting.requireNewIds(spark, insGateIds, insIds, delIds,
       Some(bloomBytes), what, maxBroadcastIds)
     // bloom BEFORE the state commits (its replace is atomic through its
@@ -616,19 +617,11 @@ abstract class RowLocalIndexView(
       val delStateIds = delRows
         .select(col(s"`$stateIdColumn`").as("doc_id"))
         .distinct().localCheckpoint()
-      // the exists gate over ids the state holds, range-pruned: any
-      // state row matching a deleted id has its id inside the deleted
-      // set's [min,max] (the frame-DV prune's read-side twin), so the
-      // gate's semi join scans O(touched range) of a key-clustered
-      // state instead of every id
-      val gateIds = graft.table.IncrementalAggView
-        .keyRangePredicate(delStateIds.select(
-          col("doc_id").as(stateIdColumn)), Seq(stateIdColumn))
-        .map(p => state.readWhere(p)
-          .select(col(s"`$stateIdColumn`").as("doc_id")))
-        .getOrElse(stateIds)
-      CdfNetting.requireExistingIds(gateIds, delStateIds, what,
-        maxBroadcastIds)
+      // the exists gate over ids the state holds, pruned the same way
+      // (the frame-DV prune's read-side twin): the gate's semi join
+      // scans O(touched range) of a key-clustered state, not every id
+      CdfNetting.requireExistingIds(stateIdsOf(delStateIds), delStateIds,
+        what, maxBroadcastIds)
       // how the delete lands, decided by SIZE then FRACTION:
       //   - id set under the broadcast gate → predicate DVs (the ids may
       //     collect into a driver-side IN-list);
@@ -651,27 +644,28 @@ abstract class RowLocalIndexView(
       type Tombstone = (Option[String], Option[(String, Long)]) =>
         ManagedTable.Commit
       val dvDelete: Option[Tombstone] =
-        if (Similarity.fitsDriver(delStateIds, maxBroadcastIds)) {
-          val ids = delStateIds.collect().map(r => String.valueOf(r.get(0)))
-          val pred = col(s"`$stateIdColumn`").cast("string")
-            .isin(ids.toIndexedSeq: _*)
-          Some((meta, t) => state.deleteVectors(pred,
-            captureChangeData = captureStateChangeData, userMetadata = meta,
-            expectedPrevVersion = Some(fence), txnUpdate = t))
-        } else {
-          val old = liveStateRows.getOrElse {
-            RowLocalIndexView.tierCountScans.incrementAndGet()
-            state.read.count()
-          }
-          walkedOld = Some(old)
-          if (delRows.count() * 100L <
-              old * RowLocalIndexView.RewriteFractionPct) {
-            val keys = delRows.select(col(s"`$stateIdColumn`")).distinct()
-            Some((meta, t) => state.deleteVectorsMatching(keys,
-              Seq(stateIdColumn), captureChangeData = captureStateChangeData,
-              userMetadata = meta,
+        Similarity.collectUpTo(delStateIds, maxBroadcastIds) match {
+          case Some(rows) =>
+            val ids = rows.map(r => String.valueOf(r.get(0)))
+            val pred = col(s"`$stateIdColumn`").cast("string")
+              .isin(ids.toIndexedSeq: _*)
+            Some((meta, t) => state.deleteVectors(pred,
+              captureChangeData = captureStateChangeData, userMetadata = meta,
               expectedPrevVersion = Some(fence), txnUpdate = t))
-          } else None
+          case None =>
+            val old = liveStateRows.getOrElse {
+              RowLocalIndexView.tierCountScans.incrementAndGet()
+              state.read.count()
+            }
+            walkedOld = Some(old)
+            if (delRows.count() * 100L <
+                old * RowLocalIndexView.RewriteFractionPct) {
+              val keys = delRows.select(col(s"`$stateIdColumn`")).distinct()
+              Some((meta, t) => state.deleteVectorsMatching(keys,
+                Seq(stateIdColumn), captureChangeData = captureStateChangeData,
+                userMetadata = meta,
+                expectedPrevVersion = Some(fence), txnUpdate = t))
+            } else None
         }
       dvDelete match {
         case Some(tombstone) =>

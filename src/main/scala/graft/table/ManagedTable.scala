@@ -826,13 +826,14 @@ final class ManagedTable(spark: SparkSession, root: String) {
    * match NULL-valued rows (`<=>` — a NULL group key is a legal key for
    * the view family's touched-group tombstones).
    *
-   * The READ side dir-prunes too: full key values can't come to the
-   * driver (that is the point of the frame form), but each key column's
-   * MIN/MAX + has-null — two scalars and a flag per column at ANY key
-   * cardinality — can, so the scan drops every dir whose commit-log
-   * stats provably cannot overlap the key set's range (the same
-   * conservative [[DataSkipping]] walk the predicate form uses) BEFORE
-   * the per-dir join. A small fold against a range-clustered state
+   * The READ side dir-prunes too, on the key set's [[KeySet.bound]]:
+   * the keys themselves up to the IN-list cap, past it each key
+   * column's MIN/MAX + has-null (two scalars and a flag per column at
+   * ANY key cardinality — the key frame never comes to the driver). The
+   * scan drops every dir whose commit-log stats provably cannot meet
+   * the bound (the same conservative [[DataSkipping]] walk the
+   * predicate form uses) BEFORE the per-dir join; an empty key set
+   * prunes every dir. A small fold against a range-clustered state
    * scans O(touched dirs), not O(state dirs); a key set spanning the
    * whole key space honestly degrades to every dir. With
    * `captureChangeData=false` the surviving dirs are also scanned at
@@ -846,11 +847,21 @@ final class ManagedTable(spark: SparkSession, root: String) {
                             userMetadata: Option[String] = None,
                             expectedPrevVersion: Option[Long] = None,
                             txnUpdate: Option[(String, Long)] = None): Commit =
-    deleteVectorsCore(Right((keys, keyCols)), captureChangeData, userMetadata,
+    deleteVectorsMatching(KeySet(keys, keyCols), captureChangeData,
+      userMetadata, expectedPrevVersion, txnUpdate)
+
+  /** [[deleteVectorsMatching]] over a key set the caller already holds
+    * (its collect or aggregate may already be paid). */
+  private[table] def deleteVectorsMatching(keys: KeySet,
+                                           captureChangeData: Boolean,
+                                           userMetadata: Option[String],
+                                           expectedPrevVersion: Option[Long],
+                                           txnUpdate: Option[(String, Long)]): Commit =
+    deleteVectorsCore(Right(keys), captureChangeData, userMetadata,
       expectedPrevVersion, txnUpdate)
 
   private def deleteVectorsCore(
-      sel: Either[org.apache.spark.sql.Column, (DataFrame, Seq[String])],
+      sel: Either[org.apache.spark.sql.Column, KeySet],
       captureChangeData: Boolean,
       userMetadata: Option[String],
       expectedPrevVersion: Option[Long],
@@ -864,21 +875,21 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // deleting rows the intervening commit may have re-shaped
     fence(expectedPrevVersion, Some(c), "a delete").foreach(e => throw e)
     val schema = StructType.fromDDL(c.schemaDdl)
-    sel.foreach { case (_, kcols) =>
-      require(kcols.nonEmpty, "deleteVectorsMatching needs key columns")
-      kcols.foreach(k => require(schema.fieldNames.contains(k),
+    sel.foreach { keys =>
+      require(keys.cols.nonEmpty, "deleteVectorsMatching needs key columns")
+      keys.cols.foreach(k => require(schema.fieldNames.contains(k),
         s"deleteVectorsMatching key column $k is not in the table schema"))
     }
-    // `frameRange` is the frame form's conservative key-range predicate:
-    // it prunes DIRS here and is re-applied to the surviving dirs' scan
-    // below, where Catalyst pushes it into the parquet read (row-group
-    // pruning INSIDE a dir whose stats span the range) — the exact
-    // null-safe semi join then narrows the superset, so it can only
-    // shrink the scan, never change the matched set
-    val (affected, frameRange) = sel match {
-      case Left(p) => (splitDirsMayMatch(c, p)._1, None)
-      case Right((keys, kcols)) => frameDirsMayMatch(c, schema, keys, kcols)
-    }
+    // `frameBound` is the frame form's conservative key bound: it prunes
+    // DIRS here and is re-applied to the surviving dirs' scan below,
+    // where Catalyst pushes it into the parquet read (row-group pruning
+    // INSIDE a dir whose stats span it) — the exact null-safe semi join
+    // then narrows the superset, so it can only shrink the scan, never
+    // change the matched set. An empty key set's bound is FALSE, which
+    // prunes every dir
+    val frameBound = sel.toOption.flatMap(_.bound)
+    val affected = sel.left.toOption.orElse(frameBound)
+      .fold(c.dirs)(splitDirsMayMatch(c, _)._1)
     ManagedTable.dvScanDirs.addAndGet(affected.size.toLong)
     ManagedTable.dvLiveDirs.addAndGet(c.dirs.size.toLong)
     val version = c.version + 1L
@@ -895,7 +906,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
       if (captureChangeData) schema
       else {
         val keep: Option[Seq[String]] = sel match {
-          case Right((_, kcols)) => Some(kcols)
+          case Right(keys) => Some(keys.cols)
           case Left(p) =>
             // conservative reference extraction: any shape that could
             // name columns beyond plain attributes keeps full width
@@ -938,15 +949,15 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // names the NULL group).
     val matched = (sel match {
       case Left(predicate) => alive.filter(coalesce(predicate, lit(false)))
-      case Right((keys, kcols)) =>
-        val k = keys
-          .select(kcols.map(kc => col(s"`$kc`").as(s"__graft_k_$kc")): _*)
+      case Right(keys) =>
+        val k = keys.frame
+          .select(keys.cols.map(kc => col(s"`$kc`").as(s"__graft_k_$kc")): _*)
           .distinct()
-        val cond = kcols.map(kc => col(s"`$kc`") <=> col(s"`__graft_k_$kc`"))
+        val cond = keys.cols.map(kc => col(s"`$kc`") <=> col(s"`__graft_k_$kc`"))
           .reduce(_ && _)
-        // range pre-filter pushed into the scan (row-group pruning);
+        // bound pre-filter pushed into the scan (row-group pruning);
         // the exact semi join below narrows the superset
-        val base = frameRange
+        val base = frameBound
           .map(r => alive.filter(coalesce(r, lit(false)))).getOrElse(alive)
         base.join(k, cond, "left_semi")
     }).localCheckpoint()
@@ -1076,19 +1087,12 @@ final class ManagedTable(spark: SparkSession, root: String) {
       }
     }
 
-  /** Stats-based dir split for merge file-skipping: dirs that MAY
-    * contain a row matching `predicate` vs dirs that provably cannot —
-    * the same conservative [[DataSkipping]] walk [[readWhere]] and the
-    * DML rewrites use, metadata-only. Dirs without stats (or predicates
-    * the walker can't interpret) land on the "may match" side. */
-  private[graft] def splitDirsMayMatch(
-      predicate: org.apache.spark.sql.Column): (Seq[String], Seq[String]) =
-    splitDirsMayMatch(lastCommit.getOrElse(
-      throw new IllegalStateException(s"managed table $root does not exist")),
-      predicate)
-
-  /** [[splitDirsMayMatch]] against an explicit commit — the rebase path
-    * walks the NEW head's composition, not whatever is latest. */
+  /** Stats-based dir split of commit `c`: dirs that MAY contain a row
+    * matching `predicate` vs dirs that provably cannot — the
+    * conservative [[DataSkipping]] walk [[readWhere]], the DML rewrites
+    * and deletion vectors use, metadata-only. Dirs without stats (or
+    * predicates the walker can't interpret) land on the "may match"
+    * side. */
   private[graft] def splitDirsMayMatch(c: Commit,
       predicate: org.apache.spark.sql.Column): (Seq[String], Seq[String]) = {
     val schema = StructType.fromDDL(c.schemaDdl)
@@ -1109,59 +1113,6 @@ final class ManagedTable(spark: SparkSession, root: String) {
       .collectFirst {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }
-
-  /** Dirs that MAY hold a row matching the frame-keyed delete's key set
-    * — the frame form's analogue of [[splitDirsMayMatch]]. The keys
-    * themselves are data-scaled and never come to the driver; what does
-    * is each eligible key column's MIN/MAX + has-null (2 scalars and a
-    * flag per column at ANY key cardinality, one small agg job over the
-    * key frame), rendered as the conservative range predicate
-    * `(k BETWEEN min AND max)[ OR k IS NULL]` AND-ed across columns and
-    * handed to the same stats walk. Strictly conservative: a row
-    * matching some key tuple has every key column inside that column's
-    * overall [min,max] (or NULL when the key set holds one), so a dir
-    * the walk prunes provably holds no match; columns without eligible
-    * stats constrain nothing. An EMPTY key frame prunes every dir (the
-    * caller no-ops). Also returns the range predicate itself so the
-    * caller can push it into the surviving dirs' scan (row-group
-    * pruning inside dirs whose stats span the range). */
-  private def frameDirsMayMatch(c: Commit, schema: StructType,
-                                keys: DataFrame, kcols: Seq[String])
-      : (Seq[String], Option[org.apache.spark.sql.Column]) = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min, sum, when}
-    val fields = kcols.flatMap(k => schema.fields.find(_.name == k))
-      .filter(f => DataSkipping.eligible(f.dataType))
-    val aggs = count(lit(1)).as("__n__") +: fields.flatMap { f =>
-      val kc = col(s"`${f.name}`")
-      Seq(min(kc).as(s"mn:${f.name}"), max(kc).as(s"mx:${f.name}"),
-        sum(when(kc.isNull, 1L).otherwise(0L)).as(s"nl:${f.name}"))
-    }
-    val row = keys.agg(aggs.head, aggs.tail: _*).head()
-    if (row.getLong(row.fieldIndex("__n__")) == 0L) return (Nil, None)
-    val preds = fields.map { f =>
-      val mn = Option(row.get(row.fieldIndex(s"mn:${f.name}")))
-      val mx = Option(row.get(row.fieldIndex(s"mx:${f.name}")))
-      val hasNull = row.getLong(row.fieldIndex(s"nl:${f.name}")) > 0L
-      val kc = col(s"`${f.name}`")
-      val range = (mn, mx) match {
-        case (Some(a), Some(b)) => Some(kc >= lit(a) && kc <= lit(b))
-        case _ => None // every key is NULL for this column
-      }
-      // NO bare-literal arms: the stats walker treats shapes it can't
-      // interpret (a lone `lit(false)`) as may-match, which would
-      // defeat the whole prune under an OR
-      (range, hasNull) match {
-        case (Some(r), true) => r || kc.isNull
-        case (Some(r), false) => r
-        case (None, _) => kc.isNull // the key set is exactly {NULL}
-      }
-    }
-    if (preds.isEmpty) (c.dirs, None)
-    else {
-      val pred = preds.reduce(_ && _)
-      (splitDirsMayMatch(c, pred)._1, Some(pred))
-    }
-  }
 
   /** Read a subset of the CURRENT snapshot's dirs (same read mechanics
     * as [[read]]; `dirs` must come from the latest commit). */
@@ -2942,12 +2893,17 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // carries physical-named clustered dirs, so its new files must keep
     // writing the SAME physical names for the one global mapping to fit.
     // Tombstones for rewritten tail files go inert (the files leave the
-    // composition); carried clustered dirs keep theirs live
+    // composition); carried clustered dirs keep theirs live. A full
+    // re-cluster also drops every earlier layout's grid, so
+    // [[clusterAppend]] folds onto this layout's grid or refuses
     def build(b: Commit, metrics: Map[String, String]): Commit =
       b.next(operation, tsMs, metrics).copy(partitionBy = Nil,
         dvDirs = if (carriedDirs.nonEmpty) b.dvDirs else Nil,
         columnMap = if (carriedDirs.nonEmpty) b.columnMap else Map.empty,
-        properties = b.properties ++ extraProps)
+        properties = (if (carriedDirs.nonEmpty) b.properties
+          else b.properties.filter { case (k, _) =>
+            !k.startsWith("cluster.by.") && !k.startsWith("cluster.hilbert.")
+          }) ++ extraProps)
     val (dataDir, rows, added) =
       writeDataDir(clustered, build(c, Map.empty), grouped = true)
     publish(c, Seq(dataDir)) { (b, _) =>

@@ -1,6 +1,6 @@
 package graft.write
 
-import graft.table.ManagedTable
+import graft.table.{KeySet, ManagedTable}
 import graft.table.ManagedTable.Commit
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -22,7 +22,7 @@ object Writers {
 
   import MergeEmulator.{ChangeMark, PreMark}
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, min, when}
+  import org.apache.spark.sql.functions.{coalesce, col, count, lit, max, when}
 
   /** How a merge's target read and commit are scoped. */
   private sealed trait MergeScope
@@ -47,71 +47,25 @@ object Writers {
     partitionBy.nonEmpty && partitionBy.forall(opts.usePartitionColumnInMerge.contains)
 
   /** Restrict the merge target to the partitions present in the source
-    * batch. The distinct source partition tuples (one small job over the
-    * already-staged source — O(touched partitions) rows on the driver)
-    * become a literal predicate, so the target scan prunes untouched
-    * partitions at PLANNING time: a one-partition merge into a 100 TB
-    * table reads one partition, not 100 TB.
-    *
-    * The tuple list is CAPPED at [[FileScopeInListCap]]: a backfill
-    * touching 10⁴–10⁵ partitions would otherwise collect that many rows
-    * and hand Catalyst a pathological OR tree. Past the cap the predicate
-    * falls back to per-column [min,max] ranges (one aggregate, O(columns)
-    * driver data) — conservative: extra partitions read pass through the
-    * merge unmatched and are replaced with identical content by
+    * batch: the distinct source partition tuples' [[KeySet.bound]] (one
+    * small job over the already-staged source) becomes a literal
+    * predicate, so the target scan prunes untouched partitions at
+    * PLANNING time: a one-partition merge into a 100 TB table reads one
+    * partition, not 100 TB. A backfill touching more tuples than the
+    * IN-list cap gets the per-column [min,max] bound instead —
+    * conservative: extra partitions read pass through the merge
+    * unmatched and are replaced with identical content by
     * [[ManagedTable.selectiveOverwrite]], which keys the replacement off
     * the partitions PRESENT in the result, so correctness never depends
     * on the predicate being tight. */
   private[graft] def scopedTarget(table: ManagedTable, source: DataFrame,
-                           partitionBy: Seq[String]): DataFrame = {
-    val full = table.read
-    val touched = source.select(partitionBy.map(col): _*).distinct()
-      .limit(FileScopeInListCap + 1).collect()
-    val pred =
-      if (touched.length > FileScopeInListCap) {
-        val aggs = partitionBy.zipWithIndex.flatMap { case (c, i) =>
-          Seq(min(col(s"`$c`")).as(s"mn$i"), max(col(s"`$c`")).as(s"mx$i"),
-            count(when(col(s"`$c`").isNull, 1)).as(s"nl$i"))
-        }
-        val r = source.agg(aggs.head, aggs.tail: _*).head()
-        partitionBy.zipWithIndex.map { case (c, i) =>
-          val hasNull = r.getAs[Long](s"nl$i") > 0
-          if (r.isNullAt(r.fieldIndex(s"mn$i"))) col(c).isNull // all-NULL col
-          else {
-            val range = col(c) >= lit(r.get(r.fieldIndex(s"mn$i"))) &&
-              col(c) <= lit(r.get(r.fieldIndex(s"mx$i")))
-            if (hasNull) col(c).isNull || range else range
-          }
-        }.reduce(_ && _)
-      } else touched.toSeq
-        .map { r =>
-          partitionBy.zipWithIndex.map { case (c, i) =>
-            if (r.isNullAt(i)) col(c).isNull else col(c) === lit(r.get(i))
-          }.reduce(_ && _)
-        }
-        .reduceOption(_ || _)
-        .getOrElse(lit(false))
-    full.filter(pred)
-  }
+                                  partitionBy: Seq[String]): DataFrame =
+    KeySet(source.select(partitionBy.map(c => col(s"`$c`")): _*).distinct(),
+      partitionBy).bound.fold(table.read)(table.read.filter)
 
-  /** Small batches prune per-dir EXACTLY via an IN-list of their keys. */
-  private val FileScopeInListCap = 1000
-
-  /** Fallback only: batches against >[[DirProbeCap]]-dir tables prune
-    * via this many range-partitioned key intervals. */
-  private val FileScopeIntervals = 32
-
-  /** Max dirs the exact per-dir probe handles in one aggregate pass
-    * (the probe builds one conjunction per dir into the agg). */
+  /** Max dirs one exact probe aggregate covers (the probe builds one
+    * conjunction per dir into the agg); larger tables probe in chunks. */
   private val DirProbeCap = 512
-
-  private sealed trait ProbeResult
-  /** NULL merge keys: range logic unsound → full-table merge. */
-  private case object ProbeNulls extends ProbeResult
-  /** Too many dirs for one agg: use the predicate/interval fallback. */
-  private case object ProbeTooMany extends ProbeResult
-  private final case class ProbeSplit(affected: Seq[String],
-                                      carried: Seq[String]) extends ProbeResult
 
   /** The batch-side column and a stat-string parser, in the same domain
     * [[graft.table.DataSkipping]] renders that type's stats in. None =
@@ -138,22 +92,24 @@ object Writers {
   }
 
   /**
-   * EXACT per-dir affected/carried split: one aggregate pass over the
-   * batch evaluates, for every dir, "does any batch key fall inside this
-   * dir's per-key [min,max] box?" — no IN-list cap, no interval
-   * coarseness, any stats-eligible key type. This is what kills the
-   * bimodal-batch false positive: an interval union must span the gap
-   * between the update range and the new-id range, but the per-dir box
-   * test never conflates them. NULL counts ride the same pass. Dirs
+   * EXACT per-dir (affected, carried) split: one aggregate pass over
+   * the batch per [[DirProbeCap]] dirs evaluates, for every dir, "does
+   * any batch key fall inside this dir's per-key [min,max] box?" — no
+   * IN-list cap, no interval coarseness, any stats-eligible key type,
+   * any table size. This is what kills the bimodal-batch false
+   * positive: a range bound must span the gap between the update range
+   * and the new-id range, but the per-dir box test never conflates
+   * them. NULL counts ride the first pass; None when a key is NULL (a
+   * NULL key's null-safe match can't be boxed → full-table merge). Dirs
    * whose stats are absent/uninterpretable count as affected; dirs
    * all-NULL for a key can never match a (non-null-keyed) batch and are
    * carried.
    */
   private def probeAffectedDirs(c: Commit, source: DataFrame,
-                                keys: Seq[String]): ProbeResult = {
+                                keys: Seq[String])
+      : Option[(Seq[String], Seq[String])] = {
     import graft.table.DataSkipping.ColMinMax
     import org.apache.spark.sql.types.StructType
-    if (c.dirs.size > DirProbeCap) return ProbeTooMany
     val schema = StructType.fromDDL(c.schemaDdl)
     // the probe domain is the TABLE column's type — that is what
     // DataSkipping rendered the stat strings from, so stat values always
@@ -196,87 +152,29 @@ object Writers {
     val nullAggs = keys.zipWithIndex.map { case (k, i) =>
       count(when(col(s"`$k`").isNull, 1)).as(s"__nl$i")
     }
-    // unknown → affected, mirroring DataSkipping.mayMatch: a probe can
-    // still go NULL at runtime (decimal overflow on the batch-side cast),
-    // and when(NULL, 1).otherwise(0) would read as "carried" — exactly
-    // the false carry this probe exists to prevent
-    val probeAggs = probes.zipWithIndex.map { case ((_, p), i) =>
-      max(when(coalesce(p, lit(true)), 1).otherwise(0)).as(s"__d$i")
-    }
-    val aggs = nullAggs ++ probeAggs
-    val row = source.agg(aggs.head, aggs.tail: _*).head()
-    if (keys.indices.exists(i => row.getAs[Long](s"__nl$i") > 0)) return ProbeNulls
-    val hit = probes.zipWithIndex.collect {
-      case ((d, _), i) if !row.isNullAt(row.fieldIndex(s"__d$i")) &&
-        row.getAs[Int](s"__d$i") == 1 => d
+    val chunks = if (probes.isEmpty) Seq(Nil) else probes.grouped(DirProbeCap).toSeq
+    val hit = chunks.zipWithIndex.flatMap { case (chunk, ci) =>
+      // unknown → affected, mirroring DataSkipping.mayMatch: a probe can
+      // still go NULL at runtime (decimal overflow on the batch-side
+      // cast), and when(NULL, 1).otherwise(0) would read as "carried" —
+      // exactly the false carry this probe exists to prevent
+      val probeAggs = chunk.zipWithIndex.map { case ((_, p), i) =>
+        max(when(coalesce(p, lit(true)), 1).otherwise(0)).as(s"__d$i")
+      }
+      val aggs = (if (ci == 0) nullAggs else Nil) ++ probeAggs
+      val row = source.agg(aggs.head, aggs.tail: _*).head()
+      if (ci == 0 && keys.indices.exists(i => row.getAs[Long](s"__nl$i") > 0))
+        return None
+      chunk.zipWithIndex.collect {
+        case ((d, _), i) if !row.isNullAt(row.fieldIndex(s"__d$i")) &&
+          row.getAs[Int](s"__d$i") == 1 => d
+      }
     }.toSet
     val (affected, carried) = triaged.partition {
       case (_, Left(a)) => a
       case (d, Right(_)) => hit.contains(d)
     }
-    ProbeSplit(affected.map(_._1), carried.map(_._1))
-  }
-
-  /**
-   * Conservative key predicate of the source batch, fed ONLY to
-   * [[ManagedTable.splitDirsMayMatch]]'s stats walk (never executed as a
-   * row filter). Shapes, cheapest sufficient first:
-   *
-   *  - single key, ≤ [[FileScopeInListCap]] distinct values: `k IN
-   *    (...)` — exact per-dir decisions;
-   *  - single orderable key, larger batches: an OR of up to
-   *    [[FileScopeIntervals]] intervals from range-partitioning the
-   *    batch keys (`repartitionByRange` — works for strings/uuids, not
-   *    just numerics) and taking each partition's ACTUAL min/max. The
-   *    interval union covers every batch key whatever boundaries the
-   *    range sampler picks, so pruning stays conservative; a plain
-   *    `[min,max]` would be defeated by the most common incremental
-   *    shape — low-range updates plus new monotonically-increasing ids
-   *    — where one batch spans the entire table;
-   *  - otherwise: per-key `[min,max]` conjunction.
-   *
-   * Driver data is O(intervals + keys) regardless of batch size. None
-   * (→ full-table merge) when the batch is empty or a key carries NULLs
-   * (a NULL key's null-safe match can't be range-bounded).
-   */
-  private[graft] def sourceKeyRange(source: DataFrame, keys: Seq[String]): Option[Column] = {
-    import org.apache.spark.sql.functions.spark_partition_id
-    val aggs = keys.zipWithIndex.flatMap { case (k, i) =>
-      Seq(min(col(s"`$k`")).as(s"mn$i"), max(col(s"`$k`")).as(s"mx$i"),
-        count(when(col(s"`$k`").isNull, 1)).as(s"nl$i"))
-    }
-    val r = source.agg(aggs.head, aggs.tail: _*).head()
-    val unusable = keys.indices.exists { i =>
-      r.getAs[Long](s"nl$i") > 0 || r.isNullAt(r.fieldIndex(s"mn$i"))
-    }
-    if (unusable) return None
-    def minMaxOf(i: Int): Column = {
-      val k = keys(i)
-      col(s"`$k`") >= lit(r.get(r.fieldIndex(s"mn$i"))) &&
-        col(s"`$k`") <= lit(r.get(r.fieldIndex(s"mx$i")))
-    }
-    if (keys.size != 1) return Some(keys.indices.map(minMaxOf).reduce(_ && _))
-    val k = keys.head
-    val distinctKeys = source.select(col(s"`$k`")).distinct()
-      .limit(FileScopeInListCap + 1).collect()
-    if (distinctKeys.length <= FileScopeInListCap)
-      Some(col(s"`$k`").isin(distinctKeys.toSeq.map(_.get(0)): _*))
-    else
-      try {
-        val mm = source.select(col(s"`$k`").as("__graft_k__"))
-          .repartitionByRange(FileScopeIntervals, col("__graft_k__"))
-          .groupBy(spark_partition_id().as("__graft_p__"))
-          .agg(min(col("__graft_k__")).as("mn"), max(col("__graft_k__")).as("mx"))
-          .collect()
-        if (mm.isEmpty) Some(minMaxOf(0))
-        else Some(mm.toSeq
-          .map(b => col(s"`$k`") >= lit(b.get(1)) && col(s"`$k`") <= lit(b.get(2)))
-          .reduce(_ || _))
-      } catch {
-        // exotic non-range-partitionable key type: one interval is still
-        // a valid (if coarse) conservative predicate
-        case _: org.apache.spark.sql.AnalysisException => Some(minMaxOf(0))
-      }
+    Some((affected.map(_._1), carried.map(_._1)))
   }
 
   /**
@@ -288,11 +186,10 @@ object Writers {
    * split the dirs into "may contain a source key" vs "provably cannot"
    * — the merge then reads only the former and commits the latter by
    * reference. The split comes from [[probeAffectedDirs]] (exact, one
-   * batch pass) for ≤ [[DirProbeCap]]-dir tables, else from the
-   * [[sourceKeyRange]] predicate walk. Matching is on the key hash, but
-   * key-hash equality implies raw-key equality, so a dir whose raw-key
-   * box misses every source key can hold no matched row; both paths are
-   * conservative (stat-less dirs rewrite).
+   * batch pass per [[DirProbeCap]] dirs). Matching is on the key hash,
+   * but key-hash equality implies raw-key equality, so a dir whose
+   * raw-key box misses every source key can hold no matched row; the
+   * probe is conservative (stat-less dirs rewrite).
    */
   private def resolveScope(table: ManagedTable, readCommit: Option[Commit],
                            source: DataFrame,
@@ -303,16 +200,9 @@ object Writers {
       // 1 dir: file scope degenerates to replace
       case Some(c) if c.dirs.size > 1 =>
         probeAffectedDirs(c, source, keys) match {
-          case ProbeNulls => FullScope
-          case ProbeSplit(_, carried) if carried.isEmpty => FullScope
-          case ProbeSplit(rewritten, carried) => FileScope(rewritten, carried)
-          case ProbeTooMany =>
-            sourceKeyRange(source, keys) match {
-              case Some(pred) =>
-                val (rewritten, carried) = table.splitDirsMayMatch(pred)
-                if (carried.isEmpty) FullScope else FileScope(rewritten, carried)
-              case None => FullScope
-            }
+          case Some((rewritten, carried)) if carried.nonEmpty =>
+            FileScope(rewritten, carried)
+          case _ => FullScope
         }
       case _ => FullScope
     }
@@ -445,21 +335,9 @@ object Writers {
           evolveTarget(mergeTarget(table, s, partitionBy, scope), s, opts), s)
         val rebase: Option[Commit => Option[Seq[String]]] = scope match {
           case FileScope(rewritten, _) => Some(head =>
-            probeAffectedDirs(head, s, keys) match {
-              case ProbeSplit(affected, carried)
-                if affected.toSet == rewritten.toSet => Some(carried)
-              case ProbeTooMany =>
-                // >DirProbeCap-dir tables — the ones whose re-merges
-                // are most expensive — rebase through the same
-                // conservative stats walk their scope resolution used,
-                // evaluated against the NEW head's composition
-                sourceKeyRange(s, keys) match {
-                  case Some(pred) =>
-                    val (affected, carried) = table.splitDirsMayMatch(head, pred)
-                    if (affected.toSet == rewritten.toSet) Some(carried) else None
-                  case None => None
-                }
-              case _ => None
+            probeAffectedDirs(head, s, keys).collect {
+              case (affected, carried) if affected.toSet == rewritten.toSet =>
+                carried
             })
           case _ => None
         }

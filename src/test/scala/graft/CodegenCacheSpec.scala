@@ -37,6 +37,18 @@ class CodegenCacheSpec extends SparkSpec {
     assert(compiles - before === 1L)
   }
 
+  test("a thread started before the session compiles a fresh shape once") {
+    // it keeps the loader it started with — the app loader, as a
+    // notebook's or a server's request thread that predates getOrCreate
+    val appLoader = classOf[CodegenCacheSpec].getClassLoader
+    compilesOf(base + 3000)
+    var n = -1L
+    val th = new Thread(() => n = compilesOf(base + 3001))
+    th.setContextClassLoader(appLoader)
+    th.start(); th.join()
+    assert(n === 1L)
+  }
+
   test("the generated-class cache holds more than Spark's default 100 classes") {
     assert(Harness.graftConf.toMap.get("spark.sql.codegen.cache.maxEntries").contains("1000"))
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") === "1000")

@@ -253,8 +253,8 @@ class ConcurrentMergeSpec extends SparkSpec {
     // reads them) and a table read would trip on them
     val frame = appendFrame(t, 5000, "x")
     // fabricate a head with 510 extra far-away dirs: 514 total exceeds
-    // DirProbeCap, forcing scope resolution AND the rebase re-probe
-    // through the conservative sourceKeyRange/splitDirsMayMatch path
+    // DirProbeCap, so scope resolution AND the rebase re-probe run the
+    // exact probe in more than one chunk
     import graft.table.DataSkipping.ColMinMax
     val fakes = (0 until 510).map(i => s"$path/data/fake-$i")
     val fakeStats = fakes.map(d => d -> Map(

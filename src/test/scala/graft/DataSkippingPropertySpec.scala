@@ -1,6 +1,6 @@
 package graft
 
-import graft.table.DataSkipping
+import graft.table.{DataSkipping, KeySet}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -149,4 +149,88 @@ class DataSkippingPropertySpec extends SparkSpec {
     val legacy = noNulls.view.mapValues(_.copy(nulls = None)).toMap
     assert(DataSkipping.mayMatch(legacy, sc, e(col("id").isNull)))
   }
+
+  // ---- KeySet: the one key-set bound -----------------------------------
+
+  private val keyTypes: Seq[(org.apache.spark.sql.types.DataType, Gen[Any])] = {
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    Seq(
+      IntegerType -> Gen.frequency(9 -> Gen.chooseNum(-6, 6),
+        1 -> Gen.oneOf(Int.MinValue, Int.MaxValue)),
+      LongType -> Gen.frequency(9 -> Gen.chooseNum(-6L, 6L),
+        1 -> Gen.oneOf(Long.MinValue, Long.MaxValue)),
+      // supplementary characters sort after U+E000..U+FFFF by code point
+      // (Spark's order) but before them in UTF-16 (Java's)
+      StringType -> Gen.oneOf("", "a", "ab", "b", "zz", "\uE000", "\uFFFF",
+        "\uD83D\uDE00", "a\uD83D\uDE00", "\uD834\uDD1E"))
+  }
+
+  private case class KeyCase(schema: StructType,
+                             keys: Seq[org.apache.spark.sql.Row],
+                             table: Seq[org.apache.spark.sql.Row])
+
+  private val keyCaseGen: Gen[KeyCase] = for {
+    n <- Gen.chooseNum(1, 3)
+    types <- Gen.listOfN(n, Gen.oneOf(keyTypes))
+    cell = Gen.sequence[Seq[Any], Any](types.map { case (_, g) =>
+      Gen.frequency(5 -> g, 1 -> Gen.const(null)) })
+    size <- Gen.frequency(2 -> Gen.const(0), 10 -> Gen.chooseNum(1, 12),
+      1 -> Gen.const(KeySet.Cap), 4 -> Gen.chooseNum(KeySet.Cap + 1, KeySet.Cap + 40))
+    keys <- Gen.listOfN(size, cell)
+    table <- Gen.listOfN(24, for (c <- cell; d <- Gen.chooseNum(0, 3))
+      yield c :+ d)
+  } yield KeyCase(
+    StructType(types.zipWithIndex.map { case ((t, _), i) =>
+      org.apache.spark.sql.types.StructField(s"k$i", t) }),
+    keys.map(org.apache.spark.sql.Row.fromSeq),
+    table.map(org.apache.spark.sql.Row.fromSeq))
+
+  test("KeySet: every key satisfies bound; exact selects exactly the " +
+      "null-safe key matches; no dir pruned under bound holds a key") {
+    import org.apache.spark.sql.types.IntegerType
+    var pruned = 0
+    var pastCap = 0
+    val prop = Prop.forAll(keyCaseGen) { kc =>
+      val cols = kc.schema.fieldNames.toSeq
+      def frame(rows: Seq[org.apache.spark.sql.Row], sc: StructType) =
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), sc)
+      val keys = frame(kc.keys, kc.schema)
+      val table = frame(kc.table, kc.schema.add("dir", IntegerType))
+      val ks = KeySet(keys, cols)
+      val bound = ks.bound.getOrElse(fail("every key type here has stats"))
+      if (kc.keys.size > KeySet.Cap) pastCap += 1
+      // the key rows a table row null-safely matches
+      val t = keys.select(cols.map(c => col(c).as(s"t_$c")): _*)
+      val hits = table.join(t, cols.map(c => col(c) <=> col(s"t_$c"))
+        .reduce(_ && _), "left_semi")
+      def canon(df: DataFrame) =
+        df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+      // directory stats of the table, rendered as the write path does
+      val aggs = DataSkipping.statAggs(kc.schema)
+      val hitDirs = hits.select("dir").distinct().collect().map(_.getInt(0)).toSet
+      val prunedDirs = table.groupBy("dir").agg(aggs.head, aggs.tail: _*)
+        .collect().filterNot { r =>
+          val stats = DataSkipping.statsOf(kc.schema,
+            r.getValuesMap[Any](r.schema.fieldNames))
+          DataSkipping.mayMatch(stats, kc.schema, keyExpr(kc.schema, bound))
+        }.map(_.getAs[Int]("dir")).toSet
+      pruned += prunedDirs.size
+      ks.size == kc.keys.size && ks.isEmpty == kc.keys.isEmpty &&
+        keys.filter(!coalesce(bound, lit(false))).isEmpty &&
+        ks.exact.isDefined == (kc.keys.size <= KeySet.Cap) &&
+        ks.exact.forall(e => canon(table.filter(e)) == canon(hits)) &&
+        (prunedDirs intersect hitDirs).isEmpty
+    }
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(r.passed, s"KeySet bound violated: ${r.status}")
+    assert(pruned > 0 && pastCap > 0,
+      s"vacuous: $pruned dirs pruned, $pastCap cases past the cap")
+  }
+
+  private def keyExpr(sc: StructType, predicate: Column) =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
+      .filter(predicate).queryExecution.logical
+      .collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
+      }.get
 }

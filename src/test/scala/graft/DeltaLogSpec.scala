@@ -195,12 +195,12 @@ class DeltaLogSpec extends SparkSpec {
     t.writeCommit(orig.copy(version = orig.version + 1,
       readVersion = orig.version, dirStats = Map.empty))
     val pred = org.apache.spark.sql.functions.col("id") <= 5
-    assert(t.splitDirsMayMatch(pred)._1.size === 2,
+    assert(t.splitDirsMayMatch(t.lastCommit.get, pred)._1.size === 2,
       "without stats every dir must be a may-match")
     val c = t.recomputeStats()
     assert(c.operation === "ANALYZE")
     assert(c.dirs === orig.dirs, "analyze must be metadata-only")
-    assert(t.splitDirsMayMatch(pred)._1.size === 1,
+    assert(t.splitDirsMayMatch(t.lastCommit.get, pred)._1.size === 1,
       "recomputed stats must restore dir pruning")
     // recomputed stats agree with the write-path observation's rendering
     orig.dirs.foreach { d =>

@@ -1,6 +1,6 @@
 package graft
 
-import graft.table.ManagedTable
+import graft.table.{KeySet, ManagedTable}
 import graft.write.{WriteOptions, Writers}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -167,9 +167,9 @@ class FileScopedMergeSpec extends SparkSpec {
     val path = tmpDir("fsm_scan")
     val t = clusteredTable(path)
     val batch = rows(10 until 20, "B")
-    val pred = Writers.sourceKeyRange(batch.toDF, Seq("id")).getOrElse(
+    val pred = KeySet(batch.toDF, Seq("id")).bound.getOrElse(
       fail("expected a key predicate for a small non-null batch"))
-    val (affected, carried) = t.splitDirsMayMatch(pred)
+    val (affected, carried) = t.splitDirsMayMatch(t.lastCommit.get, pred)
     assert(affected.nonEmpty && carried.nonEmpty)
     val target = t.readDirsSubset(affected)
     // every file the scan can possibly read lives under an affected dir —
@@ -184,6 +184,39 @@ class FileScopedMergeSpec extends SparkSpec {
       dirs.exists(d => f.startsWith(d) || new Path(f).toUri.getPath
         .startsWith(new Path(d).toUri.getPath))
     files.foreach(f => assert(under(f, affected), s"scan reads carried file $f"))
+  }
+
+  test("a >512-dir table and a >1000-key bimodal batch rewrite only the may-match dirs") {
+    import graft.table.DataSkipping.ColMinMax
+    val path = tmpDir("fsm_wide")
+    val t = clusteredTable(path)
+    val real = t.lastCommit.get
+    val top = real.dirs.maxBy(d => real.dirStats(d)("id").max.get.toInt)
+    val before = fileStamps(top)
+    // 510 metadata-only dirs whose key boxes sit in the batch's gap: one
+    // range over the batch spans them all, the per-dir probe carries them
+    val fakes = (0 until 510).map(i => s"$path/data/fake-$i")
+    val fakeStats = fakes.zipWithIndex.map { case (d, i) =>
+      d -> Map("id" -> ColMinMax(Some(s"${10000 + 100 * i}"),
+        Some(s"${10050 + 100 * i}")))
+    }.toMap
+    t.writeCommit(real.copy(version = real.version + 1, operation = "APPEND",
+      dirs = real.dirs ++ fakes, dirStats = real.dirStats ++ fakeStats))
+    // updates of ids 0..249, 1000 new low ids, 20 new far ids
+    val batch = rows(-1000 until 250, "B").unionByName(rows(200000 until 200020, "n"))
+    Writers.scd1(spark, path, batch, Seq("id"), opts(T1))
+    val c = t.lastCommit.get
+    assert(c.operationMetrics("numRewrittenDirs") === "3",
+      s"only the three buckets holding ids 0..249 may match: ${c.operationMetrics}")
+    assert(c.operationMetrics("numCarriedDirs") === "511")
+    assert(fakes.forall(c.dirs.contains))
+    assert(fileStamps(top) === before, "the untouched bucket is carried byte-identical")
+    // the fakes hold no files: read around them through their stats
+    val now = t.readWhere($"id" < 10000 || $"id" >= 200000)
+    assert(now.count() === 1420)
+    assert(now.filter($"id" === 15).select("v").as[String].head() === "B15")
+    assert(now.filter($"id" === 300).select("v").as[String].head() === "a300")
+    assert(now.filter($"id" === 200007).select("v").as[String].head() === "n200007")
   }
 
   test("property: file-scoped scd1 equals full-rewrite scd1 on random batches") {

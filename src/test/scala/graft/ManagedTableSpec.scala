@@ -1016,4 +1016,41 @@ class ManagedTableSpec extends SparkSpec {
     assert(t.read.filter(col("value") === 7L).count() ==
       (0L until 2500L).count(_ % 13 == 7))
   }
+
+  test("a full re-cluster drops the previous layout's grid: clusterAppend " +
+      "folds on the new one, or refuses") {
+    import org.apache.spark.sql.functions.col
+    val path = tmpDir("recluster_grid")
+    val t = graft.table.ManagedTable(spark, path)
+    val mk = (lo: Long, hi: Long) => spark.range(lo, hi)
+      .select(col("id").as("a"), ((col("id") * 7919L) % 20011L).as("b"))
+    t.write(mk(0L, 2000L), "APPEND", "append")
+    t.clusterByHilbert(Seq("a", "b"), buckets = 4)
+    val full = t.clusterBy("b", buckets = 4)
+    assert(!full.properties.keys.exists(_.startsWith("cluster.hilbert.")))
+    t.write(mk(2000L, 2500L), "APPEND", "append")
+    assert(t.clusterAppend().get.operation == "CLUSTER APPEND (b)")
+    assert(t.read.count() == 2500L)
+    // a layout that persists no grid leaves none behind
+    t.clusterByRange("a", buckets = 4)
+    t.write(mk(2500L, 2600L), "APPEND", "append")
+    intercept[IllegalStateException](t.clusterAppend())
+  }
+
+  test("re-clustering a string grid on a numeric column folds appends on the numeric grid") {
+    import org.apache.spark.sql.functions.{col, concat, format_string, lit}
+    val path = tmpDir("recluster_kind")
+    val t = graft.table.ManagedTable(spark, path)
+    val mk = (lo: Long, hi: Long) => spark.range(lo, hi)
+      .select(concat(lit("user-"), format_string("%06d", col("id"))).as("uid"),
+        (col("id") * 1.5).as("x"))
+    t.write(mk(0L, 2000L), "APPEND", "append")
+    t.clusterBy("uid", buckets = 4)
+    val full = t.clusterBy("x", buckets = 4)
+    assert(!full.properties.contains(graft.table.ManagedTable.ClusterByKindProp))
+    t.write(mk(2000L, 2500L), "APPEND", "append")
+    assert(t.clusterAppend().get.operation == "CLUSTER APPEND (x)")
+    assert(t.read.count() == 2500L)
+    assert(t.readWhere(col("x") >= 3000.0).count() == 500L)
+  }
 }

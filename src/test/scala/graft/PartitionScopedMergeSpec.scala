@@ -151,7 +151,7 @@ class PartitionScopedMergeSpec extends SparkSpec {
     val table = day("m0500", 1 -> "in").unionByName(day("a0000", 2 -> "below"))
       .unionByName(day("z9999", 3 -> "above"))
     Writers.scd1(spark, path, table, Seq("id"), scoped(T0), partitionBy = Seq("dt"))
-    // backfill source touching 1500 distinct partitions (> FileScopeInListCap):
+    // backfill source touching 1500 distinct partitions (> KeySet.Cap):
     // a literal OR would put 1500 conjunctions in the plan
     val wide = spark.range(1500).select(($"id" + 10).cast("int").as("id"),
       format_string("m%04d", $"id").as("dt"), lit("w").as("v"))
