@@ -3087,8 +3087,8 @@ object Queries {
       |FROM orders WHERE o_orderkey <= 2000""".stripMargin
 
   /** STREAMING maintenance of the join-aggregate view
-    * ([[graft.table.IncrementalJoinAggView.refreshStream]] — the fact
-    * side's CDF stream triggers idempotent both-sides folds): appends
+    * ([[graft.table.StandingViews.refreshStreamAll]] — the fact side's
+    * CDF stream drives ledgered both-sides folds): appends
     * on BOTH sides, a fact delete, and a group-moving dimension update
     * drain through ONE checkpoint; the resumed checkpoint folds exactly
     * the new fact slice; a batch refresh after the stream is a
@@ -7773,7 +7773,7 @@ object Queries {
       |FROM r WHERE "rank" <= 7""".stripMargin
 
   /** STREAMING maintenance of the BM25 view
-    * ([[graft.table.RowLocalIndexView#refreshStream]]): the corpus
+    * ([[graft.table.StandingViews.refreshStreamAll]]): the corpus
     * table's CDF STREAM drives the index instead of batch CALLs — a
     * streaming curation pipeline's index stays current through the
     * same netting, gates, and write choreography (appends APPEND,
@@ -8129,7 +8129,7 @@ object Queries {
       |FROM r WHERE "rank" <= 7""".stripMargin
 
   /** The corpus LM view under STREAMING maintenance
-    * ([[graft.table.CorpusLmView.refreshStream]]): the corpus table's
+    * ([[graft.table.StandingViews.refreshStreamAll]]): the corpus table's
     * CDF stream folds into the standing model per micro-batch,
     * exactly-once via the (checkpoint, epoch) txn high-water — a
     * streaming curation pipeline's ingest-gate model stays current

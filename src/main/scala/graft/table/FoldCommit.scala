@@ -51,7 +51,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * the tombstoned rows stay readable one version below the tombstone,
  * so the family recomputes the identical append.
  */
-private[table] final class FoldCommit(spark: SparkSession, statePath: String,
+private[table] final class FoldCommit(val spark: SparkSession, statePath: String,
                                       val what: String,
                                       val sources: Seq[String],
                                       prefix: String,
@@ -189,23 +189,6 @@ private[table] final class FoldCommit(spark: SparkSession, statePath: String,
       .map(p => math.max(keepLast.toLong, p.head - p.at.version + 1).toInt)
       .getOrElse(keepLast)
     state.vacuum(keep)
-  }
-
-  /** The batch refresh of a single-source view: fold the unprocessed
-    * range `(position, latest]` of the source's change feed with
-    * `fold(slice, position, latest)`. No-op (no commit) when current.
-    * Returns the new watermark. */
-  def refresh(pos: Pos)(fold: (DataFrame, Pos, Long) => Unit): Long = {
-    val last = pos.version
-    val source = ManagedTable(spark, sources.head)
-    val latest = source.latestVersion.getOrElse(throw new IllegalStateException(
-      s"source table ${sources.head} does not exist"))
-    require(latest >= last,
-      s"source went backwards: watermark $last, latest $latest — was the " +
-        "source table recreated? Re-initialize the view.")
-    if (latest != last)
-      fold(CdfNetting.cdfSlice(source, last, latest, what), pos, latest)
-    latest
   }
 }
 

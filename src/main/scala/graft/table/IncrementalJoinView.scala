@@ -87,9 +87,8 @@ final class IncrementalJoinAggView(spark: SparkSession,
     kernel.resume(kernel.walk())(finish)
   private[table] def foldRawSlice(slice: DataFrame, from: FoldCommit.Pos,
                                   latest: Long,
-                                  txn: Option[(String, Long)]): Unit = {
-    refreshImpl(Some((slice, from.version, latest)), txn); ()
-  }
+                                  txn: Option[(String, Long)]): Unit =
+    refreshImpl(Some((slice, from.version, latest)), txn)
   // the DIMENSION side is an aux source: the orchestrator folds this
   // mart when only the right table moved (batch) and can open a
   // dimension-trigger stream (refreshStreamAllMulti(dimTriggers)) —
@@ -104,7 +103,7 @@ final class IncrementalJoinAggView(spark: SparkSession,
     // watermark — the fact stream's epoch slices are cut against it,
     // and folding the left range here would invalidate a slice already
     // in flight on the other stream
-    refreshImpl(None, None, rightOnly = true); ()
+    refreshImpl(None, None)
   }
 
   private def left = ManagedTable(spark, leftPath)
@@ -271,26 +270,29 @@ final class IncrementalJoinAggView(spark: SparkSession,
     (newRows, kernel.markRows(to, pos.stateRows, dvc, newRows.count()))
   }
 
-  /** Fold both unprocessed ranges into the state. No-op (no commit)
-    * when both sides are current. Returns the new watermark pair. */
-  def refresh(): (Long, Long) = refreshImpl(None, None)
+  /** Fold both unprocessed ranges into the state
+    * ([[StandingViews.refreshAll]] of this view alone: the left slice
+    * through the driver, a right-only change through [[foldPending]]).
+    * No-op (no commit) when both sides are current. Returns the new
+    * watermark pair. */
+  def refresh(): (Long, Long) = {
+    StandingViews.refreshAll(spark, Seq(this))
+    sourceVersions
+  }
 
-  /** The fold behind [[refresh]] (reads both feeds itself),
-    * [[foldRawSlice]] (the left range arrives pre-read as
-    * `(slice, from, latest)` — the one-pass orchestrator's shared
-    * read), and [[foldPending]] (`rightOnly` — a dimension trigger
-    * folds ONLY the right range so the left watermark never moves
-    * under a concurrently-streamed fact slice). `txn` rides the fold's
-    * FINAL commit for the streaming orchestrator's exactly-once
-    * ledger. Synchronized, and re-walking its own position under the
-    * lock: the dimension-trigger stream and the fact stream share this
-    * view instance in one driver, so a position read before the lock
-    * may be stale — cross-driver racers still surface as typed
+  /** The fold behind [[foldRawSlice]] (the left range arrives pre-read
+    * as `(slice, from, latest)` — the driver's shared read) and
+    * [[foldPending]] (`leftSlice` None — a dimension trigger folds ONLY
+    * the right range, so the left watermark never moves under a
+    * concurrently-streamed fact slice). `txn` rides the fold's FINAL
+    * commit for the streaming driver's exactly-once ledger.
+    * Synchronized, and re-walking its own position under the lock: the
+    * dimension-trigger stream and the fact stream share this view
+    * instance in one driver, so a position read before the lock may be
+    * stale — cross-driver racers still surface as typed
     * [[ManagedTable.ConcurrentCommitException]] fence conflicts. */
   private def refreshImpl(leftSlice: Option[(DataFrame, Long, Long)],
-                          txn: Option[(String, Long)],
-                          rightOnly: Boolean = false): (Long, Long) =
-    synchronized {
+                          txn: Option[(String, Long)]): Unit = synchronized {
     val pos = position()
     val (vl0, vr0) = pair(pos)
     leftSlice.foreach { case (_, from, _) =>
@@ -298,17 +300,13 @@ final class IncrementalJoinAggView(spark: SparkSession,
         s"join view state advanced from $from to $vl0 while the shared " +
           "slice was read — a concurrent refresh interleaved; re-run")
     }
-    val vl1 =
-      if (rightOnly) vl0
-      else leftSlice.map(_._3).getOrElse(
-        left.latestVersion.getOrElse(throw new IllegalStateException(
-          s"left table $leftPath does not exist")))
+    val vl1 = leftSlice.fold(vl0)(_._3)
     val vr1 = right.latestVersion.getOrElse(throw new IllegalStateException(
       s"right table $rightPath does not exist"))
     require(vl1 >= vl0 && vr1 >= vr0,
       s"a source went backwards (left $vl0→$vl1, right $vr0→$vr1) — was a " +
         "table recreated? Re-initialize the view.")
-    if (vl1 == vl0 && vr1 == vr0) return (vl0, vr0)
+    if (vl1 == vl0 && vr1 == vr0) return
     // retention seam, stricter than the slice alone: the delta-join
     // identity reads the OTHER side's WATERMARK snapshot (readAt(v0)),
     // so a side with unprocessed commits must still retain its
@@ -347,32 +345,6 @@ final class IncrementalJoinAggView(spark: SparkSession,
         (newRows, kernel.markRows(to, oldRows, dv, newN))
       }
     }
-    (vl1, vr1)
-  }
-
-  /** STREAMING maintenance — the LEFT (fact) side's CDF stream is the
-    * TRIGGER: each micro-batch runs one [[refresh]] fold, which
-    * re-derives BOTH sides' unprocessed ranges itself, so right-side
-    * (dimension) changes fold on the next left epoch — the fact ⋈ dim
-    * cadence of a streaming mart (a dimension-only change between left
-    * commits waits for the next epoch or a batch CALL). Exactly-once
-    * needs no txn ledger here: the fold is idempotent by construction —
-    * the watermark pair re-reads per call, both-current epochs no-op
-    * without a commit, a half-applied delta fold resumes through its
-    * pending marker, and a replayed or racing epoch either re-derives
-    * an empty range or fails its fence loudly. Caller drains/stops the
-    * returned query. */
-  def refreshStream(checkpoint: String,
-                    trigger: org.apache.spark.sql.streaming.Trigger =
-                      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val stream = graft.streaming.StreamOps.streamTable(spark, leftPath,
-      startingVersion = Some(sourceVersion + 1), readChangeFeed = true)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (_: DataFrame, _: Long) => refresh(); () }
-      .trigger(trigger)
-      .start()
   }
 
   /** ROUTINE state maintenance, O(tombstones + append tail): purge the

@@ -77,10 +77,6 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
     (groupCols ++ sumCols ++ minMaxCols).distinct
   private[table] override def position(): FoldCommit.Pos =
     kernel.resume(kernel.walk())(finish)
-  private[table] def foldRawSlice(slice: DataFrame, from: FoldCommit.Pos,
-                                  latest: Long,
-                                  txn: Option[(String, Long)]): Unit =
-    foldDelta(slice, from, latest, txn)
 
   private def source = ManagedTable(spark, sourcePath)
   private def state = kernel.state
@@ -124,12 +120,13 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
   }
 
   /** Fold a change-feed slice into the state and advance the watermark
-    * to `to` — the delta algebra behind [[refresh]], [[refreshStream]]
-    * and the orchestrator. `pos` is where the slice was cut from; every
+    * to `to` — the delta algebra behind every refresh
+    * ([[StandingViews]]). `pos` is where the slice was cut from; every
     * shape fences on its head ([[FoldCommit]]), so the additive fold can
     * never double-apply a slice. */
-  private def foldDelta(cdf: DataFrame, pos: FoldCommit.Pos, to: Long,
-                        txn: Option[(String, Long)]): Unit = {
+  private[table] def foldRawSlice(cdf: DataFrame, pos: FoldCommit.Pos,
+                                  to: Long,
+                                  txn: Option[(String, Long)]): Unit = {
     val (delta, touched) = deltaOf(cdf)
     val touchedN = touched.size
     val oldRows = pos.stateRows
@@ -170,27 +167,10 @@ final class IncrementalAggView(spark: SparkSession, sourcePath: String,
     (newRows, kernel.markRows(to, pos.stateRows, dvc, newRows.count()))
   }
 
-  /** Fold the unprocessed change-feed range into the state. No-op (and
-    * no new commit) when already current. Returns the new watermark. */
-  def refresh(): Long =
-    kernel.refresh(position())((cdf, pos, latest) =>
-      foldDelta(cdf, pos, latest, None))
-
-  /** STREAMING maintenance: the source's CDF stream folds into the
-    * state per micro-batch with the SAME delta algebra as [[refresh]],
-    * exactly-once through [[CdfNetting.startStream]] — the fold's FINAL
-    * commit carries the (checkpoint, epoch) transaction high-water, a
-    * half-applied fold resumes at the next epoch, and batch rows at or
-    * below the watermark drop, so batch [[refresh]] calls interleave
-    * safely with resumed and re-created checkpoints. Caller
-    * drains/stops the returned query. */
-  def refreshStream(checkpoint: String,
-                    trigger: org.apache.spark.sql.streaming.Trigger =
-                      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    CdfNetting.startStream(spark, this, checkpoint, trigger) {
-      (fresh, pos, maxV, txn) => foldDelta(fresh, pos, maxV, Some(txn))
-    }
+  /** Fold the unprocessed change-feed range into the state
+    * ([[StandingViews.refreshAll]] of this view alone). No-op (and no
+    * new commit) when already current. Returns the new watermark. */
+  def refresh(): Long = StandingViews.refreshAll(spark, Seq(this))(sourcePath)
 
   /** ROUTINE state maintenance, O(tombstones + append tail): purge the
     * deletion vectors delta folds accumulate and fold the append tail

@@ -121,55 +121,6 @@ private[table] object CdfNetting {
         "inserts must be new or paired with a delete")
   }
 
-  /** The shared `foreachBatch` choreography of every view's
-    * `refreshStream` — exactly-once via a (checkpoint, epoch)
-    * transaction high-water on each fold's final commit, watermark
-    * filtering so batch refreshes and resumed checkpoints interleave
-    * safely, and a loud refusal when a checkpoint path is deleted and
-    * reused (replayed epoch numbers with commits BEYOND the watermark).
-    * Every live epoch first takes the view's [[StandingView.position]]
-    * (finishing a half-applied fold), then `fold` applies the raw slice
-    * above it `(slice, position, maxVersion, txn)` and must land the
-    * txn on its final commit. */
-  def startStream(spark: SparkSession, view: StandingView, checkpoint: String,
-                  trigger: org.apache.spark.sql.streaming.Trigger)(
-      fold: (DataFrame, FoldCommit.Pos, Long, (String, Long)) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val appId = s"graft-view:$checkpoint"
-    val stream = graft.streaming.StreamOps.streamTable(spark,
-      view.sourceTablePath, startingVersion = Some(view.sourceVersion + 1),
-      readChangeFeed = true)
-    stream.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (view.stateTxnVersion(appId).exists(_ >= epochId)) {
-          // A genuinely replayed epoch re-delivers only commits the
-          // watermark already covers; if it holds NEWER commits the
-          // checkpoint path was deleted and reused — refuse instead of
-          // silently dropping unseen data (epochs restarted at 0)
-          val last = view.sourceVersion
-          if (!batch.filter(col("_commit_version") > last).isEmpty)
-            throw new IllegalStateException(
-              s"view stream checkpoint '$checkpoint' was re-created: " +
-                s"epoch $epochId is at or below the recorded high-water " +
-                "but carries commits beyond the watermark. Use a FRESH " +
-                "checkpoint path (epoch high-waters are keyed by path).")
-        } else {
-          val pos = view.position()
-          // localCheckpoint so the slice is read once (max + fold are
-          // two actions)
-          val fresh = batch.filter(col("_commit_version") > pos.version)
-            .localCheckpoint()
-          val maxV = fresh.agg(max(col("_commit_version"))).head()
-          if (!maxV.isNullAt(0))
-            fold(fresh, pos, maxV.getLong(0), (appId, epochId))
-        }
-        ()
-      }
-      .trigger(trigger)
-      .start()
-  }
-
   /** The unprocessed change-feed range `from+1..to` of a view's SOURCE,
     * with the retention seam made loud: if the source was vacuumed PAST
     * the view's watermark, the range's early commits (and their change
@@ -201,7 +152,8 @@ private[table] object CdfNetting {
  * would be wrong, and they need none). The orchestrator groups views by
  * source table, reads each (source, watermark) group's slice exactly
  * once (column-pruned to the union of the group's [[neededSliceCols]],
- * localCheckpoint'd), and fans it out to both shapes.
+ * localCheckpoint'd when more than one fold reads it), and fans it out
+ * to both shapes.
  */
 trait StandingView {
   /** The fold-commit kernel of the view's state table. */
@@ -257,6 +209,18 @@ trait StandingView {
     * retries). No-op for single-source views. */
   private[table] def foldPending(): Unit = ()
 
+  /** STREAMING maintenance: the source's change-feed stream folds into
+    * this view per micro-batch through [[StandingViews.refreshStreamAll]]
+    * — the one driver of every refresh, so the delta math, gates and
+    * commit shapes are the batch refresh's, and exactly-once is that
+    * driver's (checkpoint, epoch) ledger. Caller drains/stops the
+    * returned query. */
+  final def refreshStream(checkpoint: String,
+                          trigger: org.apache.spark.sql.streaming.Trigger =
+                            org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    StandingViews.refreshStreamAll(kernel.spark, Seq(this), checkpoint, trigger)
+
   /** Retention policy for the view's STATE history
     * ([[ManagedTable.vacuumIfNeeded]]): every fold commits a version,
     * so a continuously-maintained view's state accretes history without
@@ -305,27 +269,15 @@ trait CdfMaintainedView extends StandingView {
                                 from: FoldCommit.Pos, latest: Long,
                                 txn: Option[(String, Long)]): Unit
 
-  /** Batch refresh through the kernel's template: net the unprocessed
-    * range and fold it. */
-  private[table] final def refreshNetted(): Long =
-    kernel.refresh(position()) { (cdf, pos, latest) =>
-      val (ins, del) = CdfNetting.net(cdf, netIdCol, netPayloadCols, viewKind)
-      foldNetted(ins, del, pos, latest, None)
-    }
-
-  /** Streaming refresh ([[CdfNetting.startStream]]) of a netted view: a
-    * slice netting to nothing lands no commit — a replay nets to
-    * nothing again, so skipping stays idempotent. */
-  private[table] final def streamNetted(spark: SparkSession,
-                                        checkpoint: String,
-                                        trigger: org.apache.spark.sql.streaming.Trigger)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    CdfNetting.startStream(spark, this, checkpoint, trigger) {
-      (fresh, pos, maxV, txn) =>
-        val (ins, del) = CdfNetting.net(fresh, netIdCol, netPayloadCols, viewKind)
-        if (!ins.isEmpty || !del.isEmpty)
-          foldNetted(ins, del, pos, maxV, Some(txn))
-    }
+  /** Fold the unprocessed change-feed range ([[StandingViews.refreshAll]]
+    * of this view alone). A range netting to NOTHING (pure source
+    * compaction: coarse add/remove feeds that cancel) still advances the
+    * watermark with an empty commit, so the retention hold slides —
+    * otherwise a source that only ever compacts pins its whole history
+    * against vacuum forever. No-op (no commit) when already current.
+    * Returns the new watermark. */
+  final def refresh(): Long =
+    StandingViews.refreshAll(kernel.spark, Seq(this))(sourceTablePath)
 }
 
 /**
@@ -566,17 +518,8 @@ abstract class RowLocalIndexView(
     } finally afterInitialize()
   }
 
-  /** Fold the unprocessed change-feed range. A range netting to NOTHING
-    * (pure source compaction: coarse add/remove feeds that cancel)
-    * still advances the watermark with an empty commit, so the
-    * retention hold slides — otherwise a source that only ever compacts
-    * pins its whole history against vacuum forever. No-op (no commit)
-    * when already current. */
-  final def refresh(): Long = refreshNetted()
-
   /** Apply one netted slice and advance the watermark to `latest` —
-    * the shared write choreography behind [[refresh]] (batch range)
-    * and [[refreshStream]] (micro-batch), fenced on `fence`. The
+    * the write choreography behind [[foldNetted]], fenced on `fence`. The
     * slice's FINAL commit carries the watermark (and the stream's txn
     * high-water). */
   private def foldSlice(ins: DataFrame, del: DataFrame, fence: Long,
@@ -704,20 +647,6 @@ abstract class RowLocalIndexView(
     }
   }
 
-  /** STREAMING maintenance: the source's CDF stream folds into the
-    * index per micro-batch with the SAME netting, gates, and write
-    * choreography as [[refresh]] — a streaming curation pipeline's
-    * indexes stay current without a batch CALL. Exactly-once is
-    * [[CdfNetting.startStream]]'s: the slice's final commit carries the
-    * (checkpoint, epoch) transaction high-water, batch rows at or below
-    * the watermark drop, and a half-applied DV slice resumes first.
-    * Caller drains/stops the returned query. */
-  final def refreshStream(checkpoint: String,
-                          trigger: org.apache.spark.sql.streaming.Trigger =
-                            org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamNetted(spark, checkpoint, trigger)
-
   /** Materialize the deletion vectors the DV refresh path accumulates
     * — [[ManagedTable.purgeDeletes]] as the view's own maintenance
     * procedure; the commit carries no watermark and is transparent to
@@ -833,22 +762,27 @@ abstract class RowLocalIndexView(
 }
 
 /**
- * ONE-PASS maintenance for MANY standing views over one corpus — the
- * flagship curation pipeline keeps BM25 + positional + near-dup +
+ * The ONE refresh driver of every standing view — batch or stream, one
+ * view or many: a view's own `refresh()` is [[refreshAll]] of that view
+ * alone and its `refreshStream` is [[refreshStreamAll]] of that view
+ * alone, so the netting, the commit shapes, the empty-netting rule and
+ * the exactly-once ledger are one code path.
+ *
+ * The flagship curation pipeline keeps BM25 + positional + near-dup +
  * semantic + ANN + benchmark views of the same documents table, and
- * refreshing them one by one re-reads and re-nets the identical
- * change-feed slice once per view (and re-tokenizes it for every text
+ * refreshing them one by one would re-read and re-net the identical
+ * change-feed slice once per view (and re-tokenize it for every text
  * view). At 100 TB the daily slice is TB-scale; N scans of it is real
  * money. [[refreshAll]] reads the slice ONCE per (watermark) group
- * (column-pruned to the union of the views' id/payload columns,
- * localCheckpoint'd), nets it once per payload SIGNATURE (text views
- * share one netting, embedding views another), and hands each view its
- * pre-netted `(ins, del)` — per-view gates, bloom folds, write
- * choreography, and watermarks unchanged, so the result is
- * commit-for-commit what individual refreshes would build.
- * [[refreshStreamAll]] is the streaming form: ONE CDF stream, N folds
- * per micro-batch, exactly-once per view via (checkpoint, epoch)
- * transaction high-waters on each view's own state.
+ * (column-pruned to the union of the views' id/payload columns), nets
+ * it once per payload SIGNATURE (text views share one netting,
+ * embedding views another), and hands each view its pre-netted
+ * `(ins, del)` — per-view gates, bloom folds, write choreography, and
+ * watermarks unchanged, so the result is commit-for-commit what
+ * individual refreshes would build. [[refreshStreamAll]] is the
+ * streaming form: ONE CDF stream, N folds per micro-batch, exactly-once
+ * per view via (checkpoint, epoch) transaction high-waters on each
+ * view's own state.
  */
 object StandingViews {
 
@@ -858,10 +792,12 @@ object StandingViews {
     * views over the corpus AND the benchmark table; one CALL, one
     * slice read per source, pinned by [[ManagedTable.changeFeedReads]]).
     * Within a group the slice is column-pruned to the union of the
-    * group's needed columns and fanned out to both contract shapes:
-    * netted views once per payload signature, signed views raw.
-    * Returns the source version each source's views are current to,
-    * keyed by source path.
+    * group's needed columns and handed to [[foldAt]]. It is
+    * localCheckpoint'd only when more than one reader shares it
+    * ([[readers]]): every family materializes its own input once
+    * (the netting, the grouped delta), so a lone reader reads it once
+    * either way. Returns the source version each source's views are
+    * current to, keyed by source path.
     *
     * `autoMaintain` folds each view state's accumulated layout debt
     * (small fold dirs + deletion vectors) right after its fold whenever
@@ -894,32 +830,12 @@ object StandingViews {
           s"source went backwards: watermark $wm, latest $latest — was " +
             "the source table recreated? Re-initialize the views.")
         if (latest != wm) {
-          val needed = g.flatMap(_._1.neededSliceCols).distinct
-          val slice = CdfNetting
-            .cdfSlice(source, wm, latest, "multi-view refresh")
-            .select((needed.map(c => col(s"`$c`")) :+ col("_change_type")): _*)
-            .localCheckpoint()
-          // nettings run sequentially (each is one shared checkpointed
-          // frame per payload signature), then EVERY view's fold runs
-          // CONCURRENTLY (guide §2.6 — overlap independent jobs): a
-          // fold is a chain of small driver-latency-bound actions on
-          // its OWN state table, so sequential folds leave the
-          // executors idle between commits; concurrent folds back-fill.
-          // Per-view choreography, fences, and watermarks are untouched
-          // — only the cross-VIEW ordering (which nothing observes:
-          // each state table is independent and exactly-once on its own
-          // fence) becomes concurrent. A failing fold surfaces only
-          // after its siblings landed.
-          val netFolds = g.collect { case (v: CdfMaintainedView, p) => (v, p) }
-            .groupBy(vp => (vp._1.netIdCol, vp._1.netPayloadCols)).toSeq.flatMap {
-              case ((id, pay), vs) =>
-                val (ins, del) = CdfNetting.net(slice, id, pay,
-                  s"multi-view refresh (${vs.map(_._1.viewKind).mkString(", ")})")
-                vs.map { case (v, p) => () => v.foldNetted(ins, del, p, latest, None) }
-            }
-          val rawFolds = g.collect { case (v: SignedSliceView, p) =>
-            () => v.foldRawSlice(slice, p, latest, None) }
-          graft.DriverPool.map(spark, netFolds ++ rawFolds)
+          val vs = g.map(_._1)
+          val slice = CdfNetting.cdfSlice(source, wm, latest, kinds(vs))
+            .select((vs.flatMap(_.neededSliceCols).distinct
+              .map(c => col(s"`$c`")) :+ col("_change_type")): _*)
+          foldAt(spark, if (readers(vs) > 1) slice.localCheckpoint() else slice,
+            g, latest, None)
         }
       }
       // marts whose DIMENSION side moved while the fact source was
@@ -927,7 +843,7 @@ object StandingViews {
       // the primary watermark), so without this a dimension-only load
       // leaves the mart stale until the next fact commit. The ask is
       // pointer reads per aux source; the fold is the view's own
-      // both-sides refresh and no-ops when the slice fold above already
+      // right-only fold and no-ops when the slice fold above already
       // carried the dimension range
       group.foreach { v =>
         if (v.auxSourcePaths.exists(p => ManagedTable(spark, p)
@@ -937,6 +853,50 @@ object StandingViews {
       if (autoMaintain) group.foreach(_.maintainIfNeeded())
       srcPath -> latest
     }).toMap
+  }
+
+  /** The views' kinds, naming a shared slice's refusals. */
+  private def kinds(views: Seq[StandingView]): String =
+    views.map(_.viewKind).distinct.mkString(", ")
+
+  /** How many folds read one shared slice: one per netting signature
+    * (netted views sharing an id and payload columns share one
+    * netting), one per raw-slice view. */
+  private def readers(views: Seq[StandingView]): Int =
+    views.collect { case v: CdfMaintainedView => (v.netIdCol, v.netPayloadCols) }
+      .distinct.size + views.count(_.isInstanceOf[SignedSliceView])
+
+  /** The one per-watermark dispatch of [[refreshAll]] and
+    * [[refreshStreamAll]]: fold `slice` — the source's change rows in
+    * `(wm, latest]`, where `wm` is the watermark every view of `at`
+    * stands at — into each view, `txn` riding each fold's final commit.
+    * Netted views ([[CdfMaintainedView]]) get their signature's
+    * `(ins, del)`, netted once per signature; raw-slice views
+    * ([[SignedSliceView]]) get the slice itself. A slice that nets to
+    * nothing still folds: each family lands its empty append, so the
+    * watermark and the retention hold slide.
+    *
+    * Nettings run in turn, then EVERY view's fold runs CONCURRENTLY on
+    * [[graft.DriverPool]] (guide §2.6 — overlap independent jobs): a
+    * fold is a chain of small driver-latency-bound actions on its OWN
+    * state table, so sequential folds leave the executors idle between
+    * commits. Per-view choreography, fences, and watermarks are
+    * untouched — only the cross-VIEW ordering (which nothing observes:
+    * each state table is independent and exactly-once on its own fence)
+    * becomes concurrent. A failing fold surfaces only after its
+    * siblings landed. */
+  private def foldAt(spark: SparkSession, slice: DataFrame,
+                     at: Seq[(StandingView, FoldCommit.Pos)], latest: Long,
+                     txn: Option[(String, Long)]): Unit = {
+    val netFolds = at.collect { case (v: CdfMaintainedView, p) => (v, p) }
+      .groupBy(vp => (vp._1.netIdCol, vp._1.netPayloadCols)).toSeq.flatMap {
+        case ((id, pay), vs) =>
+          val (ins, del) = CdfNetting.net(slice, id, pay, kinds(vs.map(_._1)))
+          vs.map { case (v, p) => () => v.foldNetted(ins, del, p, latest, txn) }
+      }
+    val rawFolds = at.collect { case (v: SignedSliceView, p) =>
+      () => v.foldRawSlice(slice, p, latest, txn) }
+    graft.DriverPool.map(spark, netFolds ++ rawFolds); ()
   }
 
   /** Run an aux-triggered fold, retrying the typed fence conflict a
@@ -1017,13 +977,28 @@ object StandingViews {
     base ++ auxOnly
   }
 
-  /** STREAMING form: ONE CDF stream over the shared source drives every
-    * view's fold per micro-batch — netted once per (watermark, payload
-    * signature) from the checkpointed batch. Exactly-once PER VIEW: each
-    * fold's final commit carries the (checkpoint, epoch) transaction
-    * high-water on that view's own state, so a crash after view k folded
-    * but view k+1 did not replays the epoch folding only the k+1 tail;
-    * the re-created-checkpoint refusal is per view too. Caller
+  /** STREAMING form, and every view's `refreshStream`: ONE CDF stream
+    * over the shared source drives every view's fold per micro-batch
+    * through [[foldAt]] — the batch refresh's netting, gates, write
+    * choreography and empty-netting rule (a micro-batch that nets to
+    * nothing lands the family's empty append, so the watermark and the
+    * retention hold slide) — and a streaming pipeline's views stay
+    * current without a batch CALL. Each epoch first takes every view's
+    * position (finishing a half-applied fold), and batch rows at or
+    * below a view's watermark drop, so batch refreshes and resumed
+    * checkpoints interleave safely.
+    *
+    * Exactly-once PER VIEW: each fold's final commit carries the
+    * (checkpoint, epoch) transaction high-water (appId
+    * `graft-view:<checkpoint>`) on that view's own state, so a crash
+    * after view k folded but view k+1 did not replays the epoch folding
+    * only the k+1 tail. An epoch every view already recorded that
+    * carries commits BEYOND the watermark means the checkpoint path was
+    * deleted and reused — refused loudly instead of silently dropping
+    * unseen data. A join mart streams its LEFT (fact) side; each fold
+    * also carries the right (dimension) side's pending range, so
+    * dimension changes fold on the next fact epoch (or on their own
+    * cadence via [[refreshStreamAllMulti]]'s `dimTriggers`). Caller
     * drains/stops the returned query. */
   def refreshStreamAll(spark: SparkSession, views: Seq[StandingView],
                        checkpoint: String,
@@ -1055,32 +1030,24 @@ object StandingViews {
           val maxWm = views.map(_.sourceVersion).max
           if (!batch.filter(col("_commit_version") > maxWm).isEmpty)
             throw new IllegalStateException(
-              s"multi-view stream checkpoint '$checkpoint' was re-created: " +
+              s"view stream checkpoint '$checkpoint' was re-created: " +
                 s"epoch $epochId is at or below every view's recorded " +
                 "high-water but carries commits beyond the watermark. Use " +
-                "a FRESH checkpoint path.")
+                "a FRESH checkpoint path (epoch high-waters are keyed by " +
+                "path).")
         } else {
           val at = live.map(v => v -> v.position())
           val needed = live.flatMap(_.neededSliceCols).distinct
+          // always materialized: each watermark group's max below is a
+          // second read of the batch
           val slice = batch.select((needed.map(c => col(s"`$c`")) :+
             col("_change_type") :+ col("_commit_version")): _*)
             .localCheckpoint()
-          val txn = Some((appId, epochId))
-          at.groupBy(_._2.version).foreach { case (wm, group) =>
+          at.groupBy(_._2.version).foreach { case (wm, g) =>
             val fresh = slice.filter(col("_commit_version") > wm)
             val maxV = fresh.agg(max(col("_commit_version"))).head()
-            if (!maxV.isNullAt(0)) {
-              group.collect { case (v: CdfMaintainedView, p) => (v, p) }
-                .groupBy(vp => (vp._1.netIdCol, vp._1.netPayloadCols)).foreach {
-                  case ((id, pay), vs) =>
-                    val (ins, del) = CdfNetting.net(fresh, id, pay,
-                      s"multi-view stream (${vs.map(_._1.viewKind).mkString(", ")})")
-                    vs.foreach { case (v, p) =>
-                      v.foldNetted(ins, del, p, maxV.getLong(0), txn) }
-                }
-              group.collect { case (v: SignedSliceView, p) =>
-                v.foldRawSlice(fresh, p, maxV.getLong(0), txn) }
-            }
+            if (!maxV.isNullAt(0))
+              foldAt(spark, fresh, g, maxV.getLong(0), Some((appId, epochId)))
           }
           // continuous pipelines accrue ~2 read-overhead dirs per fold;
           // the zero-IO debt check makes per-epoch maintenance free to
@@ -1669,23 +1636,6 @@ final class CorpusLmView(spark: SparkSession, sourcePath: String,
     v
   }
 
-  /** Fold the unprocessed change-feed range. No-op (no commit) when
-    * already current. */
-  def refresh(): Long = refreshNetted()
-
-  /** STREAMING maintenance — the corpus's CDF stream folds into the
-    * standing model per micro-batch with the same netting and
-    * choreography as [[refresh]] ([[CdfNetting.startStream]]):
-    * exactly-once via the (checkpoint, epoch) txn high-water riding
-    * the replace commit, watermark filtering so batch refreshes and
-    * resumed checkpoints interleave safely. Caller drains/stops the
-    * returned query. */
-  def refreshStream(checkpoint: String,
-                    trigger: org.apache.spark.sql.streaming.Trigger =
-                      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamNetted(spark, checkpoint, trigger)
-
   /** The maintained `(tok, freq)` model — feed straight into
     * [[graft.llm.TextOps.rareTokenScoreWith]] /
     * `tfidfKeywordsWith`-style standing-model scorers. */
@@ -1765,10 +1715,6 @@ final class ClassifierModelView(spark: SparkSession, sourcePath: String,
     v
   }
 
-  /** Fold the unprocessed change-feed range. No-op (no commit) when
-    * already current. */
-  def refresh(): Long = refreshNetted()
-
   /** Apply one netted slice onto the standing model and advance the
     * watermark to `latest` — the same contract as [[CorpusLmView]]'s
     * fold (a double-fold would silently double the slice's counts AND
@@ -1801,18 +1747,6 @@ final class ClassifierModelView(spark: SparkSession, sourcePath: String,
         meta(latest, dp0 + dpi - dpd, dn0 + dni - dnd), from.head, txn)
     }
   }
-
-  /** STREAMING maintenance — the labeled corpus's CDF stream folds
-    * into the standing model per micro-batch, exactly-once via the
-    * (checkpoint, epoch) txn high-water ([[CdfNetting.startStream]]);
-    * the learned ingest gate stays current through a streaming
-    * curation pipeline without a batch CALL. Caller drains/stops the
-    * returned query. */
-  def refreshStream(checkpoint: String,
-                    trigger: org.apache.spark.sql.streaming.Trigger =
-                      org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    streamNetted(spark, checkpoint, trigger)
 
   /** The maintained `(token, n_pos, n_neg)` model. */
   def read: DataFrame = state.read

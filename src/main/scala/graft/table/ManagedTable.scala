@@ -2200,14 +2200,27 @@ final class ManagedTable(spark: SparkSession, root: String) {
         val entries = readEntries(versions).map(_._1)
         val firstKeep = entries.filter(_.timestampMs >= cutoff).map(_.version)
           .minOption.getOrElse(versions.last)
-        var base = firstKeep
-        var link = readEntry(base)._2
-        while (link.isDefined) { base = link.get.baseVersion
-          link = readEntry(base)._2 }
-        if (base <= floor) None
+        if (chainBase(firstKeep) <= floor) None
         else Some(vacuumOlderThan(cutoff, dryRun))
       }
     }
+  }
+
+  /** The full-snapshot base of `version`'s delta chain: delta-encoded
+    * entries chain to earlier versions, so vacuum keeps from here
+    * (≤ LogSnapshotInterval−1 extra versions, conservative like Delta's
+    * checkpoint retention). A link that does not point strictly back
+    * is a corrupt log, refused rather than walked forever. */
+  private def chainBase(version: Long): Long = {
+    var base = version
+    var link = readEntry(base)._2
+    while (link.isDefined) {
+      require(link.get.baseVersion < base,
+        s"corrupt commit log for $root: version $base chains to ${link.get.baseVersion}")
+      base = link.get.baseVersion
+      link = readEntry(base)._2
+    }
+    base
   }
 
   /** Shared vacuum core: keep `firstKeep` and everything after it
@@ -2228,20 +2241,10 @@ final class ManagedTable(spark: SparkSession, root: String) {
       .filter { case (_, v) =>
         firstKeepRaw - v > ManagedTable.StaleHoldWarnVersions.toLong }
       .sortBy(_._1)
-    // delta-encoded entries chain to earlier versions; the earliest kept
-    // commit's whole chain must survive or retained versions become
-    // unresolvable. Walk it to its full-snapshot base and keep from there
-    // (≤ LogSnapshotInterval−1 extra versions, conservative like Delta's
-    // checkpoint retention).
-    var chainBase = firstKeep
-    var link = readEntry(chainBase)._2
-    while (link.isDefined) {
-      require(link.get.baseVersion < chainBase,
-        s"corrupt commit log for $root: version $chainBase chains to ${link.get.baseVersion}")
-      chainBase = link.get.baseVersion
-      link = readEntry(chainBase)._2
-    }
-    val (drop, keep) = versions.partition(_ < chainBase)
+    // the earliest kept commit's whole delta chain must survive or
+    // retained versions become unresolvable
+    val base = chainBase(firstKeep)
+    val (drop, keep) = versions.partition(_ < base)
     if (drop.isEmpty) return VacuumStats(0, 0, 0, 0, stale)
     val keepCommits = readCommits(keep)
     val dropCommits = readCommits(drop)
@@ -2287,7 +2290,7 @@ final class ManagedTable(spark: SparkSession, root: String) {
     // the floor update leaves the pointer stale-LOW, which the read-side
     // probe heals).
     drop.foreach(v => fs.delete(new Path(logPath, f"$v%012d.json"), false))
-    writePtr(ManagedTable.FloorPtrFile, chainBase)
+    writePtr(ManagedTable.FloorPtrFile, base)
     (deadRoots ++ deadChange ++ deadDv).foreach(d => fs.delete(new Path(d), true))
     VacuumStats(drop.size, deadRoots.size, deadChange.size, deadDv.size,
       stale)
@@ -2580,10 +2583,11 @@ final class ManagedTable(spark: SparkSession, root: String) {
   }
 
   /**
-   * Range-cluster the table on a numeric column — the OPTIMIZE ZORDER
-   * analogue for the 1-D case, and the operation that makes
-   * [[readWhere]]'s data skipping SELECTIVE: bucket boundaries come from
-   * an approximate-quantile sample (one column-pruned pass, no global
+   * Range-cluster the table on a numeric or string column — the
+   * OPTIMIZE ZORDER analogue for the 1-D case, and the operation that
+   * makes [[readWhere]]'s data skipping SELECTIVE: bucket boundaries
+   * come from an approximate-quantile sample for a number, or from a
+   * sorted 5% sample for a string (one column-pruned pass, no global
    * sort), every row maps to its range bucket map-side, the rewrite
    * lands one directory per bucket, and the commit records each bucket's
    * own min/max stats. After clustering, a point/range query on the
@@ -2713,16 +2717,17 @@ final class ManagedTable(spark: SparkSession, root: String) {
   }
 
   /**
-   * Range-cluster the table on ANY orderable column — the string-key
-   * sibling of [[clusterBy]] (merge keys are very often uuids/natural
-   * strings, and [[clusterBy]]'s quantile expression is numeric-only).
-   * The rewrite is `repartitionByRange(buckets, col)` — Spark's sampled
-   * range partitioner, the same machinery a global sort uses — with the
+   * Range-cluster the table on ANY orderable column — the sibling of
+   * [[clusterBy]], whose persisted bucket grid covers numeric and string
+   * columns only (dates, timestamps and other orderable types cluster
+   * here, with no grid for [[clusterAppend]] to extend). The rewrite is
+   * `repartitionByRange(buckets, col)` — Spark's sampled range
+   * partitioner, the same machinery a global sort uses — with the
    * resulting partition id as the bucket. The frame is localCheckpointed
    * so the stats pass and the write pass see the IDENTICAL assignment
    * (range boundaries come from sampling; two executions could differ).
    * Per-bucket min/max stats then make merges on the cluster column
-   * file-scoped, exactly as with the numeric path.
+   * file-scoped, exactly as with [[clusterBy]].
    */
   def clusterByRange(column: String, buckets: Int): Commit = {
     import org.apache.spark.sql.functions.{col, spark_partition_id}

@@ -115,6 +115,28 @@ class AutoVacuumSpec extends SparkSpec {
     assert(freed.nonEmpty && freed.get.prunedVersions === 10)
   }
 
+  test("age policy: a delta entry chaining to itself is refused as a " +
+      "corrupt log, not walked forever") {
+    val (path, t) = versioned("avc_agecorrupt", 14)
+    // v13 is a delta entry on v12 (full snapshots every 10 versions):
+    // point its chain link at itself
+    val entry = java.nio.file.Paths.get(path, "_graft_log", "000000000013.json")
+    val json = new String(java.nio.file.Files.readAllBytes(entry), "UTF-8")
+    val link = "\"baseVersion\"\\s*:\\s*\\d+"
+    assert(link.r.findFirstIn(json).isDefined, "v13 must be a delta entry")
+    java.nio.file.Files.write(entry,
+      json.replaceFirst(link, "\"baseVersion\" : 13").getBytes("UTF-8"))
+    val future = System.currentTimeMillis() + 30L * 24 * 3600 * 1000
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val ask = Future(scala.util.Try(
+      t.vacuumOlderThanIfNeeded(maxAgeMs = 1000, nowMs = future)))
+    val e = Await.result(ask, 60.seconds).failed.get
+    assert(e.isInstanceOf[IllegalArgumentException] &&
+      e.getMessage.contains("corrupt commit log"), e.toString)
+  }
+
   test("CALL graft.vacuum_older_auto fires on real elapsed time and " +
       "reports the floor age") {
     val (path, t) = versioned("avc_agesql", 14)

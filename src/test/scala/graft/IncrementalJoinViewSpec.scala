@@ -311,6 +311,19 @@ class IncrementalJoinViewSpec extends SparkSpec {
     val vBefore = ManagedTable(spark, sp).latestVersion
     view.refresh()
     assert(ManagedTable(spark, sp).latestVersion === vBefore)
+    // the checkpoint deleted and reused: its epochs restart at 0, at or
+    // below the ledger's high-water, while carrying a commit past the
+    // watermark — refused instead of silently dropped
+    l.write(Seq((2L, 1.0)).toDF("k", "x"), "APPEND", "append")
+    val ckPath = new org.apache.hadoop.fs.Path(ck)
+    ckPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(ckPath, true)
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      view.refreshStream(ck).awaitTermination(120000)
+    }
+    assert(e.getMessage.contains("re-created"), e.getMessage)
+    assert(ManagedTable(spark, sp).latestVersion === vBefore,
+      "the refused epoch must not fold")
   }
 
   test("a maintenance commit on top of a pending tombstone does not hide " +

@@ -199,6 +199,34 @@ class IndexViewsSpec extends SparkSpec {
     assert(t.earliestVersion.get > 0L)
   }
 
+  test("refreshStream: a micro-batch that nets to NOTHING (pure source " +
+      "compaction) advances the watermark and slides the retention hold, " +
+      "as batch refresh does") {
+    val src = tmpDir("pv_snet0_src"); val st = tmpDir("pv_snet0_st")
+    val ck = tmpDir("pv_snet0_ck")
+    val t = ManagedTable(spark, src)
+    t.write(corpus, "APPEND", "append")
+    (0 until 3).foreach { i =>
+      t.write(Seq((100L + i, s"extra doc number$i")).toDF("doc_id", "text"),
+        "APPEND", "append")
+    }
+    val view = new PositionalIndexView(spark, src, st, expectedDocs = 100)
+    view.initialize()
+    val before = view.read.localCheckpoint()
+    // the only pending source commit: a compaction, whose coarse
+    // add/remove feed nets to nothing
+    assert(t.compactDirs().isDefined, "compaction must land a commit here")
+    val compacted = t.latestVersion.get
+    assert(view.refreshStream(ck).awaitTermination(120000),
+      "view stream did not drain")
+    assert(view.sourceVersion === compacted,
+      "the nothing-net micro-batch must still advance the watermark")
+    assert(t.retentionHolds.get(st).contains(compacted),
+      "the hold must slide with the watermark")
+    assert(view.read.exceptAll(before).isEmpty &&
+      before.exceptAll(view.read).isEmpty)
+  }
+
   test("a source vacuumed past the watermark refuses refresh with the " +
       "re-initialize remediation, not a missing-file error") {
     val src = tmpDir("pv_ret_src"); val st = tmpDir("pv_ret_st")
